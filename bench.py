@@ -214,8 +214,12 @@ def _registry_file_metric(spark, clips_path: str, n_batches: int = 12) -> int | 
             "b", F.pmod(F.xxhash64("clip_id"), F.lit(n_batches)).cast("int")
         )
         for bid in range(n_batches):
-            inc.process_increment(
-                spark, clips.where(F.col("b") == bid).drop("b"), state, bid
+            inc.process_and_write(
+                spark,
+                clips.where(F.col("b") == bid).drop("b"),
+                bid,
+                state,
+                os.path.join(state, "decisions"),
             )
         worst = 0
         reg_root = os.path.join(state, "sha_registry")

@@ -51,17 +51,16 @@ def keepers_by_sha(
     return phase1.groupBy(sha_col).agg(F.min("_local_min").alias("keeper_clip_id"))
 
 
-def with_duplicate_flag(
-    hashed: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
+def flag_duplicates(
+    df: DataFrame,
+    keepers: DataFrame,
     sha_col: str = "sha",
     id_col: str = "clip_id",
 ) -> DataFrame:
-    """Add ``is_duplicate`` — true for every row whose payload SHA-1 was
-    seen on a smaller clip_id. Null-payload rows are never duplicates
-    (they fail the missing-bytes rule instead)."""
-    keepers = keepers_by_sha(hashed, cfg, sha_col, id_col)
-    joined = hashed.join(keepers, on=sha_col, how="left")
+    """Add ``is_duplicate`` against (sha, keeper_clip_id) keepers — true
+    for every row whose SHA-1 has a different keeper. Null-payload rows
+    are never duplicates (they fail the missing-bytes rule instead)."""
+    joined = df.join(keepers.select(sha_col, "keeper_clip_id"), on=sha_col, how="left")
     return joined.withColumn(
         "is_duplicate",
         F.when(
@@ -69,3 +68,4 @@ def with_duplicate_flag(
             F.lit(True),
         ).otherwise(F.lit(False)),
     ).drop("keeper_clip_id")
+

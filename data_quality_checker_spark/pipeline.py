@@ -1,13 +1,27 @@
-"""Pipeline assembly — one lazy DataFrame DAG from clips to decisions.
+"""Pipeline assembly — one stage graph from clips to decisions.
 
-Shape (scale rationale inline):
+``stage_graph`` builds it; ``run_pipeline`` (in-session), ``run/job.run_job``
+(spark-submit job with lineage/resume), the streaming tick
+(``streaming/incremental.process_and_write``) and
+``run/rescore.write_metrics`` all call it. Shape (scale rationale inline):
 
-  clips ──(scan A: clip_id+bytes → sha1, JVM only)──► hashed (slim, CACHED)
-        ──(scan B: transcript cols only → langid/ppl/scrub UDFs)──► text
-        ──(scan C: bytes of REPRESENTATIVE rows only → audio-stats UDF)──►
+  clips ──(scan A: clip_id+bytes → sha1, JVM only)──► hashed (slim, CACHED,
+        │                                              full input)
+        ├─(scan B: transcript cols of the SCOPE rows → langid/ppl/scrub)──► text
+        └─(scan C: bytes of REPRESENTATIVE scope rows → audio-stats UDF)──►
                                                         stats (per distinct key)
-  hashed ──► dedup keepers (salted agg)   ─┐
-  text ⋈ hashed (sha) ⋈ stats (key)       ─┴─► rules ──► decisions/findings
+  hashed ──► KEEPERS (sha → keeper clip_id)                    ─┐
+  text ⋈ hashed (sha) ⋈ stats (key) ⋈ keepers (sha) ──► rules ──┴─► decisions
+
+The callers differ in three inputs only:
+  * scope — the rows to decide: every row (pipeline, tick, write_metrics)
+    or the job's remaining lineage buckets on resume;
+  * keepers — ``keepers_by_sha`` over ``hashed`` (pipeline, job: the
+    full input, so a resumed bucket's duplicate still loses to a keeper
+    in a completed bucket), or the tick's SHA-registry keepers plus the
+    batch's new ones;
+  * with_fingerprints — the content-dedup tick decodes fingerprints in
+    the same pass as the audio stats.
 
 Why this shape survives 100 TB:
   * the heavy ``bytes`` column is scanned exactly twice (sha pass +
@@ -21,7 +35,10 @@ Why this shape survives 100 TB:
     (measured 0.87 scaling efficiency 8→32 cores, BENCH/BASELINE.md);
   * ``hashed`` is a few dozen bytes/row — cacheable at any scale — and
     feeds every consumer that needs (clip_id → sha): dedup keepers, the
-    text join, lineage bucketing.
+    representative selection, the text join, lineage bucketing;
+  * the representative broadcast is size-gated: the cache fill's row
+    count bounds the number of representatives, and only above
+    ``REPS_BROADCAST_MAX`` does a probe decide (shuffled semi join).
 
 The reference runs ~10 sequential full scans over one in-memory frame
 (src/core/validator.py:62-82); here Catalyst fuses every rule into one
@@ -31,15 +48,16 @@ whole-stage-codegen pass over the joined slim frames.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .functions.udfs import get_udfs
 from .operators import metrics as metrics_ops
-from .operators.dedup import keepers_by_sha, sha1_expr, with_duplicate_flag
+from .operators.dedup import flag_duplicates, keepers_by_sha, sha1_expr
 from .operators.outliers import iqr_bounds
 from .operators.rules import build_rules, keep_expr, rules_fired_expr, severity_map_expr
 
@@ -80,12 +98,13 @@ REPS_BROADCAST_MAX = 1_000_000
 def audio_stats_table(
     clips: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    hashed: DataFrame | None = None,
+    *,
+    hashed: DataFrame,
     broadcast_reps: bool | None = None,
     with_fingerprints: bool = False,
 ) -> DataFrame:
     """Scan C → (sha, codec, sr_hz, audio struct): decoded stats per
-    DISTINCT payload-decode key.
+    DISTINCT payload-decode key of the ``hashed`` rows.
 
     Audio stats are a pure function of (bytes, codec, sr_hz), and a
     dedup-heavy corpus repeats payloads — so decode each distinct key
@@ -99,18 +118,17 @@ def audio_stats_table(
 
     ``broadcast_reps`` — SIZE-GATED, not unconditional: on a dup-free
     10^12-clip corpus reps has one row per distinct payload — billions
-    of rows, not broadcastable. None (default) counts the reps aggregate
-    when the ``hashed`` frame passed in is CACHED (one cheap job over
-    the slim cache — run_pipeline's normal path) and broadcasts only
-    under REPS_BROADCAST_MAX; above it, the hint is omitted and the
-    semi join plans as a shuffle on clip_id — and when the corpus table
-    is bucketed by clip_id (run/layout.write_bucketed, the sandbox
-    analog of the BASELINE ``bucket(N, clip_id)`` Iceberg DDL), the
-    payload side of that shuffle is pre-placed: only the slim reps side
-    moves (tests/test_bucketed_layout.py::test_stats_reps_join_paths).
-    On an UNCACHED hashed frame the count would cost a full payload sha
-    scan, so the broadcast default is kept there (ad-hoc call sites);
-    pass ``broadcast_reps=False`` explicitly to force the shuffled plan.
+    of rows, not broadcastable. None (default) runs a short-circuiting
+    probe over the reps aggregate and broadcasts only under
+    REPS_BROADCAST_MAX; above it, the hint is omitted and the semi join
+    plans as a shuffle on clip_id — and when the corpus table is
+    bucketed by clip_id (run/layout.write_bucketed, the sandbox analog
+    of the BASELINE ``bucket(N, clip_id)`` Iceberg DDL), the payload
+    side of that shuffle is pre-placed: only the slim reps side moves
+    (tests/test_bucketed_layout.py::test_stats_reps_join_paths). Pass a
+    CACHED ``hashed`` so the probe reads the slim cache, not the
+    payload; ``stage_graph`` skips the probe when its cache-fill count
+    already bounds the reps under the threshold.
 
     ``with_fingerprints`` — compute the Philips content fingerprint
     (operators/audiofp) in the SAME decode pass and emit it alongside:
@@ -118,11 +136,9 @@ def audio_stats_table(
     and ``fp`` top-level columns while ``audio`` keeps its exact
     AUDIO_STATS_SCHEMA shape, so every stats consumer is unchanged and
     the content-dedup tier reads its fingerprints from here instead of
-    paying a second full payload decode (the streaming tick's fix).
+    paying a second full payload decode.
     """
     udfs = get_udfs()
-    if hashed is None:
-        hashed = hashed_frame(clips)
     reps = (
         hashed.where(F.col("sha").isNotNull())
         .groupBy("sha", "codec", "sr_hz")
@@ -134,11 +150,8 @@ def audio_stats_table(
         # after MAX+1 groups, so on the 10^12-row corpus the gate itself
         # never materializes the full reps aggregate it is guarding
         # against broadcasting
-        if hashed.is_cached:
-            probe = reps.select("rep_id").limit(REPS_BROADCAST_MAX + 1).count()
-            broadcast_reps = probe <= REPS_BROADCAST_MAX
-        else:
-            broadcast_reps = True
+        probe = reps.select("rep_id").limit(REPS_BROADCAST_MAX + 1).count()
+        broadcast_reps = probe <= REPS_BROADCAST_MAX
     rep_ids = reps.select("rep_id")
     if broadcast_reps:
         rep_ids = F.broadcast(rep_ids)
@@ -185,7 +198,8 @@ def audio_stats_table(
 def enrich(
     clips: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    hashed: DataFrame | None = None,
+    *,
+    hashed: DataFrame,
     stats: DataFrame | None = None,
 ) -> DataFrame:
     """Full enrichment: text pass ⋈ hashed (sha) ⋈ per-distinct-payload
@@ -198,16 +212,12 @@ def enrich(
 
     ``stats`` — a precomputed audio_stats_table frame (possibly the
     with_fingerprints=True variant; only (sha, codec, sr_hz, audio) are
-    read). Pass it when another consumer shares the decode pass — the
-    streaming content-dedup tick decodes once for stats AND fingerprints.
+    read); built from ``hashed`` when omitted.
     """
-    if hashed is None:
-        hashed = hashed_frame(clips)
     text = enrich_text(clips, cfg)
     if stats is None:
-        stats = audio_stats_table(clips, cfg, hashed)
-    else:
-        stats = stats.select("sha", "codec", "sr_hz", "audio")
+        stats = audio_stats_table(clips, cfg, hashed=hashed)
+    stats = stats.select("sha", "codec", "sr_hz", "audio")
     # both sides descend from `clips`, so raw df["col"] refs would carry
     # the SAME attribute id (Spark resolves them via dataset-id metadata
     # but warns "trivially true equals predicate") — explicit aliases
@@ -237,36 +247,25 @@ def decide(
     enriched: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     dur_bounds: tuple[float, float] | None = None,
-    clips: DataFrame | None = None,
     hashed: DataFrame | None = None,
 ) -> DataFrame:
     """Rules over the enriched frame → per-clip decisions.
 
-    Keeper sourcing, in preference order:
-      * a frame already carrying ``is_duplicate`` (the streaming path
-        flags against its cross-batch SHA registry) is used as-is;
-      * ``hashed`` (the cached slim frame) — keepers cost one slim agg;
-      * ``clips`` — keepers from a fresh JVM-only (clip_id, sha) scan
-        (never from ``enriched``: an unpersisted enriched lineage would
-        re-run the Arrow UDF passes just to find keepers);
-      * fallback: the enriched frame itself (call sites that persist it).
+    The duplicate flag comes from a frame already carrying
+    ``is_duplicate`` (``stage_graph`` joins its keepers in), or else
+    from keepers over ``hashed`` — a slim (clip_id, sha) frame, e.g. the
+    cached sha pass or a metrics table's own columns (never the enriched
+    frame: an unpersisted enriched lineage would re-run the Arrow UDF
+    passes just to find keepers).
     """
-    if "is_duplicate" in enriched.columns:
-        flagged = enriched
-    elif hashed is not None or clips is not None:
-        src = hashed if hashed is not None else hashed_frame(clips)
-        keepers = keepers_by_sha(src.select("clip_id", "sha"), cfg)
-        flagged = enriched.join(keepers, on="sha", how="left").withColumn(
-            "is_duplicate",
-            F.when(
-                F.col("sha").isNotNull() & (F.col("clip_id") != F.col("keeper_clip_id")),
-                F.lit(True),
-            ).otherwise(F.lit(False)),
-        ).drop("keeper_clip_id")
-    else:
-        flagged = with_duplicate_flag(enriched, cfg)
+    if "is_duplicate" not in enriched.columns:
+        if hashed is None:
+            raise ValueError("decide needs an is_duplicate column or hashed=")
+        enriched = flag_duplicates(
+            enriched, keepers_by_sha(hashed.select("clip_id", "sha"), cfg)
+        )
     rules = build_rules(cfg, dur_bounds)
-    return flagged.select(
+    return enriched.select(
         "clip_id",
         keep_expr(rules).alias("keep"),
         rules_fired_expr(rules).alias("rules_fired"),
@@ -278,6 +277,71 @@ def decide(
         F.col("ppl").alias("perplexity"),
         F.col("audio")["clip_ratio"].alias("clip_ratio"),
     )
+
+
+@dataclass
+class StageGraph:
+    """One build of the stage graph. Every frame is lazy except
+    ``hashed``, which is cached and filled; ``n_rows`` is that fill's
+    count (the full input's rows). The caller owns the cache: call
+    ``hashed.unpersist()`` once the consumers have run."""
+
+    hashed: DataFrame
+    n_rows: int
+    stats: DataFrame
+    enriched: DataFrame
+    decisions: DataFrame
+
+
+def stage_graph(
+    clips: DataFrame,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    dur_bounds: tuple[float, float] | None = None,
+    scope: Column | None = None,
+    keepers: Callable[[DataFrame], DataFrame] | None = None,
+    with_fingerprints: bool = False,
+) -> StageGraph:
+    """Build hashed → keepers → enrichment → decode → decisions from the
+    FULL input ``clips``.
+
+    ``scope`` — a predicate over clip_id selecting the rows to decide
+    (None: every row); the text pass and the representative decode see
+    only those rows, while ``hashed`` and the keepers span the full input.
+    ``keepers`` — maps the cached ``hashed`` frame to (sha,
+    keeper_clip_id); default ``keepers_by_sha`` over it.
+    ``with_fingerprints`` — the stats frame also carries the content
+    fingerprints (see ``audio_stats_table``).
+
+    The cache is filled EAGERLY: two consumers in one action would
+    otherwise race to fill it and run the sha scan twice. The fill is a
+    noop write that observes the row count — one Spark job, where
+    ``count()`` over a cache runs three. That count bounds the
+    representatives, so the reps broadcast gate needs no probe of its
+    own under ``REPS_BROADCAST_MAX`` rows.
+    """
+    hashed = hashed_frame(clips).persist(StorageLevel.MEMORY_AND_DISK)
+    fill = Observation()
+    hashed.observe(fill, F.count(F.lit(1)).alias("rows")).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    n_rows = fill.get["rows"]
+    if keepers is None:
+        keeper_rows = keepers_by_sha(hashed.select("clip_id", "sha"), cfg)
+    else:
+        keeper_rows = keepers(hashed)
+    todo, todo_hashed = clips, hashed
+    if scope is not None:
+        todo, todo_hashed = clips.where(scope), hashed.where(scope)
+    stats = audio_stats_table(
+        todo,
+        cfg,
+        hashed=todo_hashed,
+        broadcast_reps=True if n_rows <= REPS_BROADCAST_MAX else None,
+        with_fingerprints=with_fingerprints,
+    )
+    enriched = enrich(todo, cfg, hashed=todo_hashed, stats=stats)
+    decisions = decide(flag_duplicates(enriched, keeper_rows), cfg, dur_bounds)
+    return StageGraph(hashed, n_rows, stats, enriched, decisions)
 
 
 def findings_from_decisions(
@@ -325,16 +389,11 @@ def run_pipeline(
     spark: SparkSession,
     clips: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    persist: bool = True,
     with_column_findings: bool = False,
 ) -> PipelineResult:
-    """End-to-end in-session run (tests / entry point). The spark-submit
-    job with lineage/resume lives in run/job.py and shares these stages.
-
-    ``persist`` caches the slim ``hashed`` frame (clip_id→sha — a few
-    dozen bytes/row, cacheable at any corpus scale) so the sha pass runs
-    once; the cache is materialized EAGERLY because two consumers in one
-    action would otherwise race to fill it and run the sha scan twice.
+    """End-to-end in-session run (tests / entry point): the IQR fence over
+    ``clips`` plus ``stage_graph`` over every row. The spark-submit job
+    with lineage/resume (run/job.py) builds the same graph.
 
     ``with_column_findings`` triggers two extra eager aggregate passes
     (the reference's dataset-level issue records) — off by default.
@@ -343,12 +402,7 @@ def run_pipeline(
     bounds = iqr_bounds(
         clips, "dur_ms", cfg.outlier_iqr_mult, cfg.outlier_min_rows
     )
-    hashed = hashed_frame(clips)
-    if persist:
-        hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
-        hashed.count()
-    enriched = enrich(clips, cfg, hashed)
-    decisions = decide(enriched, cfg, bounds, hashed=hashed)
+    decisions = stage_graph(clips, cfg, bounds).decisions
     findings = findings_from_decisions(decisions, cfg)
     summ = metrics_ops.summary(findings)
     col_findings = (

@@ -10,7 +10,8 @@ Resume protocol (exactly-once per bucket):
 
 1. read lineage table → set of completed buckets for this run_id;
 2. anti-filter the input to the remaining buckets only;
-3. run the pipeline on the remainder; write decisions/findings
+3. build the stage graph (pipeline.stage_graph) over the full input,
+   scoped to the remainder; write decisions/findings
    partitioned by ``bucket`` with **dynamic partition overwrite** — a
    re-run of a half-written bucket atomically replaces its partition;
 4. append lineage rows LAST, one per bucket actually completed, with row
@@ -42,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..operators import metrics as metrics_ops
-from ..pipeline import decide, enrich, findings_from_decisions
+from ..pipeline import findings_from_decisions, stage_graph
 from ..operators.outliers import iqr_bounds
 from ..schema import LINEAGE_SCHEMA
 
@@ -75,36 +76,31 @@ def run_job(
     clips = spark.read.parquet(input_path)
 
     done = completed_buckets(spark, output, run_id)
-    todo = clips.withColumn("bucket", bucket_expr(cfg))
-    if done:
-        todo = todo.where(~F.col("bucket").isin(*sorted(done)))
+    scope = ~bucket_expr(cfg).isin(*sorted(done)) if done else None
 
-    n_todo = todo.count()
-    if n_todo == 0:
-        return {"run_id": run_id, "buckets_done": len(done), "rows_processed": 0}
-
-    # Global calibration (IQR fence) is computed over the FULL input, not
-    # the remainder — resume must not change rule thresholds (determinism
-    # across resumes; validator.py:270-294 semantics are whole-dataset).
+    # Global calibration is whole-dataset state, computed over the FULL
+    # input, not the remainder — resume must not change rule thresholds
+    # (validator.py:270-294 semantics are whole-dataset): the IQR fence
+    # here, the dedup keepers inside stage_graph (a duplicate in a
+    # remaining bucket must still lose to a keeper in a completed one).
     bounds = iqr_bounds(clips, "dur_ms", cfg.outlier_iqr_mult, cfg.outlier_min_rows)
-
-    # bucket is a pure function of clip_id — recomputed in each projection,
-    # never joined (no extra shuffle). Dedup keepers come from the FULL
-    # input (clips, not todo): like the IQR fence, the keeper-per-SHA
-    # decision is whole-dataset state — a duplicate in a remaining bucket
-    # must still lose to a keeper that lives in a completed bucket.
-    enriched = enrich(todo, cfg)
-    decisions = (
-        decide(enriched, cfg, bounds, clips=clips)
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("bucket", bucket_expr(cfg))
-    )
-    # partitioned (run_id, bucket): dynamic overwrite only ever touches
-    # THIS run's incomplete buckets, and findings stay attributable per
-    # run for the history/compare analytics
-    decisions.write.mode("overwrite").partitionBy("run_id", "bucket").parquet(
-        os.path.join(output, "decisions")
-    )
+    graph = stage_graph(clips, cfg, bounds, scope=scope)
+    try:
+        n_todo = graph.n_rows if scope is None else graph.hashed.where(scope).count()
+        if n_todo == 0:
+            return {"run_id": run_id, "buckets_done": len(done), "rows_processed": 0}
+        # bucket is a pure function of clip_id — recomputed in each
+        # projection, never joined (no extra shuffle); partitioned
+        # (run_id, bucket): dynamic overwrite only ever touches THIS
+        # run's incomplete buckets, and findings stay attributable per
+        # run for the history/compare analytics
+        graph.decisions.withColumn("run_id", F.lit(run_id)).withColumn(
+            "bucket", bucket_expr(cfg)
+        ).write.mode("overwrite").partitionBy("run_id", "bucket").parquet(
+            os.path.join(output, "decisions")
+        )
+    finally:
+        graph.hashed.unpersist()
 
     fresh = (
         spark.read.parquet(os.path.join(output, "decisions"))

@@ -13,9 +13,10 @@ an exabyte-scale payload column to move one threshold.
 
 This module splits them at a storage boundary:
 
-  * ``write_metrics``: persist the enriched frame once per corpus
-    version. It is slim (no bytes — a few hundred bytes/row of scores,
-    structs and transcript), partitioned by the SAME lineage-bucket
+  * ``write_metrics``: persist the enriched frame of the stage graph
+    (pipeline.stage_graph) once per corpus version. It is slim (no
+    bytes — a few hundred bytes/row of scores, structs and transcript),
+    partitioned by the SAME lineage-bucket
     expression as run/job.py so a later re-score prunes like the job;
   * ``rescore_decisions``: ``decide()`` over the loaded metrics under a
     NEW config. Dedup keepers are re-derived from the metrics table's
@@ -38,11 +39,11 @@ BatchEvalPython nodes, and the clips payload column is never read.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..operators.outliers import iqr_bounds
-from ..pipeline import decide, enrich, hashed_frame
+from ..pipeline import decide, stage_graph
+from .job import bucket_expr
 
 
 def write_metrics(
@@ -54,18 +55,13 @@ def write_metrics(
     """One enrichment pass → metrics parquet at ``path``, partitioned by
     the run/job.py lineage-bucket expression (pure function of clip_id,
     so re-scores and point lookups prune identically to the job)."""
-    hashed = hashed_frame(clips).persist()
-    hashed.count()
+    graph = stage_graph(clips, cfg)
     try:
-        enriched = enrich(clips, cfg, hashed).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col("clip_id")), F.lit(cfg.n_lineage_buckets)).cast(
-                "int"
-            ),
-        )
-        enriched.write.mode("overwrite").partitionBy("bucket").parquet(path)
+        graph.enriched.withColumn("bucket", bucket_expr(cfg)).write.mode(
+            "overwrite"
+        ).partitionBy("bucket").parquet(path)
     finally:
-        hashed.unpersist()
+        graph.hashed.unpersist()
 
 
 def rescore_decisions(

@@ -8,8 +8,8 @@ land continuously, each micro-batch must be scored once, and exact
 dedup must hold ACROSS batches (a clip seen last week is still a
 duplicate today).
 
-Design — ``readStream`` file source → ``foreachBatch`` → the SAME batch
-stages (enrich/decide) + a persistent SHA registry:
+Design — ``readStream`` file source → ``foreachBatch`` → the SAME stage
+graph as the batch job (pipeline.stage_graph) + a persistent SHA registry:
 
 * within a micro-batch: the salted keeper aggregation (operators/dedup);
 * across batches: an append-only ``sha_registry`` parquet table of
@@ -19,6 +19,8 @@ stages (enrich/decide) + a persistent SHA registry:
   is bounded by batch size × registry density per bucket, not by total
   registry size (at 10^9 registered shas a batch touching 40 buckets
   reads ~40/256 of the table, and the bucket count can be raised);
+  the registry keepers plus the batch's new keepers are the graph's
+  keeper source;
 * a new row is a duplicate if its sha is already registered
   (first-seen-batch wins; within the first batch, min clip_id wins —
   deterministic given ordered arrival);
@@ -27,16 +29,29 @@ stages (enrich/decide) + a persistent SHA registry:
   small files over B batches — after the append, any touched bucket
   holding more than ``MAX_BUCKET_FILES`` parquet files is rewritten to
   a single file (tmp dir + two renames, with a leftover-dir recovery
-  sweep at the next tick for the crash window between the renames);
-* ``foreachBatch`` is at-least-once, so BOTH persistent effects are
-  idempotent per batch_id: the registry append is gated on an O(1)
-  per-batch marker file (an existence probe — NOT a collect of an
-  ever-growing marker table), and the decisions output is written
-  partitioned by batch_id with dynamic partition overwrite — a replayed
-  batch atomically replaces its own partition instead of appending
-  duplicate rows. Decisions are recomputed deterministically on replay
-  (the registry already contains the batch's keepers; the keeper for
-  every sha is unchanged), so the overwrite converges.
+  sweep at the next tick for the crash window between the renames).
+
+Commit order of one tick (``process_and_write``):
+
+1. decisions — written partitioned by batch_id with dynamic partition
+   overwrite, while the registry still holds exactly the files the
+   decisions plan listed;
+2. the registry append of the batch's new keepers;
+3. the per-batch marker file;
+4. compaction of the touched buckets (it deletes registry files, so it
+   must follow every read of them).
+
+With ``content_dedup`` the fingerprint tier registers inside its own
+step before step 1, after freezing its verdicts (streaming/contentfp.py).
+
+``foreachBatch`` is at-least-once, so every step is idempotent per
+batch_id. A replay after a crash anywhere recomputes the decisions
+deterministically: before step 2 the registry does not hold the batch,
+after it the registry already holds the batch's own keepers, and in
+both cases the keeper of every sha is unchanged, so the overwrite of
+step 1 converges. The append is gated on the marker (an O(1) existence
+probe — NOT a collect of an ever-growing marker table); a replay
+between steps 2 and 3 finds its keepers registered and appends nothing.
 
 The global IQR duration fence is whole-dataset state and cannot be
 "streamed" — it is calibrated once from a static sample (or a previous
@@ -56,12 +71,12 @@ import os
 import shutil
 import threading
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
-from ..operators.dedup import keepers_by_sha, sha1_expr
-from ..pipeline import decide, enrich
+from ..operators.dedup import keepers_by_sha
+from ..pipeline import stage_graph
 from ..schema import CLIPS_SCHEMA
 
 # Registry bucket fan-out UPPER BOUND. Sized so one bucket of a 10^9-sha
@@ -139,10 +154,10 @@ def pin_bucket_count(
     production tick gets the full ``upper`` fan-out.
 
     Single-writer ACROSS PROCESSES (the stream checkpoint enforces one
-    owner per state_dir), but the sha and content ticks pin DIFFERENT
-    keys into the same meta file and may run on two threads of one tick
-    (process_and_write) — the module lock makes the read-modify-write
-    atomic within the process so neither thread's key is lost."""
+    owner per state_dir), but the sha and content tiers pin DIFFERENT
+    keys into the same meta file, and a caller may pin them from two
+    threads — the module lock makes the read-modify-write atomic within
+    the process so neither thread's key is lost."""
     with _META_LOCK:
         return _pin_bucket_count_locked(
             state_dir, key, table, batch_rows, upper, explicit
@@ -284,11 +299,6 @@ def compact_table_buckets(
     shutil.rmtree(tmproot, ignore_errors=True)
 
 
-# original (sha-specific) names, kept for call sites and tests
-_recover_compaction = recover_table_compaction
-_compact_buckets = compact_table_buckets
-
-
 def read_registry(
     spark: SparkSession, state_dir: str, buckets: list[int] | None = None
 ) -> DataFrame | None:
@@ -315,99 +325,69 @@ def read_registry(
     return reg.select("sha", "keeper_clip_id")
 
 
-def process_increment(
-    spark: SparkSession,
-    new_clips: DataFrame,
-    state_dir: str,
-    batch_id: int,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    dur_bounds: tuple[float, float] | None = None,
-    hashed: DataFrame | None = None,
-    stats: DataFrame | None = None,
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Score one micro-batch against (and then update) the SHA registry.
-    Returns the decisions frame for the batch. Idempotent per batch_id
-    (an O(1) marker-file probe — the batch count grows without bound, so
-    collecting a marker table each tick would too).
+class _RegistryTick:
+    """One tick's side of the SHA registry: ``keepers`` is the keeper
+    source handed to pipeline.stage_graph, ``commit`` the append after
+    the tick's decisions are written. Idempotent per batch_id (an O(1)
+    marker-file probe — the batch count grows without bound, so
+    collecting a marker table each tick would too)."""
 
-    ``hashed`` / ``stats`` — precomputed pipeline.hashed_frame /
-    pipeline.audio_stats_table frames; pass them when another tier in
-    the same tick shares the sha pass / decode pass (process_and_write's
-    content_dedup path computes both ONCE for the base and content
-    tiers). ``n_buckets`` overrides the registry bucket fan-out on the
-    FIRST tick only (pinned in registry_meta.json thereafter)."""
-    _recover_compaction(state_dir)
-    batch_seen = os.path.exists(_batch_marker(state_dir, batch_id))
+    def __init__(
+        self, spark: SparkSession, state_dir: str, batch_id: int, cfg: PipelineConfig
+    ):
+        self.spark, self.state_dir, self.batch_id, self.cfg = spark, state_dir, batch_id, cfg
+        recover_table_compaction(state_dir)
+        self.seen = os.path.exists(_batch_marker(state_dir, batch_id))
 
-    full_hashed = hashed  # 4-col pipeline.hashed_frame form, for enrich
-    if hashed is None:
-        hashed = new_clips.select("clip_id", sha1_expr("bytes").alias("sha"))
-    else:
-        hashed = hashed.select("clip_id", "sha")
-    n_bkt = pin_bucket_count(
-        state_dir,
-        "n_sha_buckets",
-        "sha_registry",
-        new_clips.count,
-        N_SHA_BUCKETS,
-        explicit=n_buckets,
-    )
-    # the registry buckets this batch can possibly collide with — a tiny
-    # distinct-agg (≤ n_bkt values) over the slim hashed frame
-    batch_buckets = sorted(
-        r["b"]
-        for r in hashed.where(F.col("sha").isNotNull())
-        .select(sha_bucket_expr("sha", n_bkt).alias("b"))
-        .distinct()
-        .collect()
-    )
-    # a batch of only null-payload clips touches no registry bucket (an
-    # empty isin() would also be malformed)
-    registered = (
-        read_registry(spark, state_dir, buckets=batch_buckets)
-        if batch_buckets
-        else None
-    )
-
-    local_keepers = keepers_by_sha(hashed, cfg)
-    if registered is not None:
-        # a sha already in the registry belongs to an earlier batch — the
-        # local candidate keeper loses (anti-join keeps only new shas)
-        new_keepers = local_keepers.join(
-            registered.select("sha"), "sha", "left_anti"
+    def keepers(self, hashed: DataFrame) -> DataFrame:
+        """Registry keepers for the batch's shas plus the batch's new
+        keepers (a sha already registered belongs to an earlier batch —
+        the local candidate keeper loses)."""
+        self.n_bkt = pin_bucket_count(
+            self.state_dir, "n_sha_buckets", "sha_registry", hashed.count, N_SHA_BUCKETS
         )
-        all_keepers = registered.unionByName(new_keepers)
-    else:
-        new_keepers = local_keepers
-        all_keepers = local_keepers
+        # the registry buckets this batch can possibly collide with (≤ n_bkt
+        # values), observed on a noop pass over the cached slim frame: the
+        # set merges on the driver, so the pass runs no shuffle
+        touched = Observation()
+        hashed.observe(
+            touched,
+            F.collect_set(
+                F.when(F.col("sha").isNotNull(), sha_bucket_expr("sha", self.n_bkt))
+            ).alias("b"),
+        ).write.format("noop").mode("overwrite").save()
+        self.buckets = sorted(touched.get["b"])
+        # a batch of only null-payload clips touches no registry bucket
+        # (an empty isin() would also be malformed)
+        registered = (
+            read_registry(self.spark, self.state_dir, buckets=self.buckets)
+            if self.buckets
+            else None
+        )
+        self.new = keepers_by_sha(hashed.select("clip_id", "sha"), self.cfg)
+        if registered is None:
+            return self.new
+        self.new = self.new.join(registered.select("sha"), "sha", "left_anti")
+        return registered.unionByName(self.new)
 
-    enriched = enrich(new_clips, cfg, hashed=full_hashed, stats=stats)
-    flagged = enriched.join(all_keepers, "sha", "left").withColumn(
-        "is_duplicate",
-        F.when(
-            F.col("sha").isNotNull() & (F.col("clip_id") != F.col("keeper_clip_id")),
-            F.lit(True),
-        ).otherwise(F.lit(False)),
-    ).drop("keeper_clip_id")
-    decisions = decide(flagged, cfg, dur_bounds)
-
-    if not batch_seen:
+    def commit(self) -> None:
+        """Append the batch's new keepers, write the marker, compact."""
+        if self.seen:
+            return
         # repartition by the partition column: exactly ONE parquet file
         # per touched bucket per tick, whatever the upstream task count
         # (W write tasks would otherwise append up to W files per bucket
         # per tick and trip the compaction bound W× sooner — at cluster
         # scale, every tick)
-        new_keepers.withColumn("sbkt", sha_bucket_expr("sha", n_bkt)).repartition(
+        self.new.withColumn("sbkt", sha_bucket_expr("sha", self.n_bkt)).repartition(
             F.col("sbkt")
         ).write.mode("append").partitionBy("sbkt").parquet(
-            _registry_path(state_dir)
+            _registry_path(self.state_dir)
         )
-        os.makedirs(_batches_path(state_dir), exist_ok=True)
-        with open(_batch_marker(state_dir, batch_id), "w"):
+        os.makedirs(_batches_path(self.state_dir), exist_ok=True)
+        with open(_batch_marker(self.state_dir, self.batch_id), "w"):
             pass
-        _compact_buckets(spark, state_dir, batch_buckets)
-    return decisions
+        compact_table_buckets(self.spark, self.state_dir, self.buckets)
 
 
 def process_and_write(
@@ -420,16 +400,19 @@ def process_and_write(
     dur_bounds: tuple[float, float] | None = None,
     content_dedup: bool = False,
 ) -> None:
-    """One foreachBatch tick: score + idempotently persist. The decisions
-    land partitioned by batch_id with dynamic partition overwrite, so an
-    at-least-once replay of a micro-batch replaces its own partition
-    instead of appending duplicates.
+    """One foreachBatch tick: pipeline.stage_graph over the batch with the
+    SHA registry as keeper source, then the commit sequence of the module
+    docstring. The decisions land partitioned by batch_id with dynamic
+    partition overwrite, so an at-least-once replay of a micro-batch
+    replaces its own partition instead of appending duplicates.
 
     ``content_dedup=True`` additionally probes/updates the cross-batch
     fingerprint registry (streaming/contentfp.py): clips whose CONTENT
     matches any earlier batch's keeper (or a within-batch cluster
     keeper) flip to keep=false with ``content_duplicate`` appended —
-    the streaming form of audiofp.content_dedup_decisions. Both
+    the streaming form of audiofp.content_dedup_decisions. The graph's
+    one decode pass emits the fingerprints too (with_fingerprints), and
+    its cached sha pass feeds the content tier's key map. Both
     registries share the marker-file idempotence, so replays converge.
 
     CRITICAL: the overwrite mode must be set on the session that executes
@@ -438,101 +421,38 @@ def process_and_write(
     start — setting it only on the outer session leaves the clone in
     STATIC overwrite mode and every batch then truncates all previous
     batches' output (found via a 24-file multi-batch run; single-batch
-    tests could not see it).
-
-    With ``content_dedup`` the tick decodes each distinct payload ONCE:
-    the combined stats+fingerprint UDF pass (pipeline.audio_stats_table
-    with_fingerprints=True) feeds the base tier's rules AND the content
-    tier's token/BER pipeline, and one cached sha pass feeds the SHA
-    registry, the stats-rep selection, and the content tier's key map —
-    the pre-r5 shape paid the payload decode and the sha scan twice per
-    tick."""
+    tests could not see it)."""
     for sess in {spark, batch_df.sparkSession}:
         sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    # single writer shared by both paths (the content path must write
-    # BEFORE its finally releases the frames the plan depends on, so a
-    # tail-only write can't serve it — a helper keeps the layout/mode
-    # from diverging between the two call sites)
-    def _write(d: DataFrame) -> None:
-        d.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).partitionBy("batch_id").parquet(output_dir)
+    registry = _RegistryTick(spark, state_dir, batch_id, cfg)
+    graph = stage_graph(
+        batch_df, cfg, dur_bounds, keepers=registry.keepers, with_fingerprints=content_dedup
+    )
+    owned = [graph.hashed]
+    try:
+        decisions = graph.decisions
+        if content_dedup:
+            from ..operators.audiofp import CONTENT_DUP_RULE, payload_reps
+            from .contentfp import process_content_increment
 
-    flags = None
-    if not content_dedup:
-        decisions = process_increment(
-            spark, batch_df, state_dir, batch_id, cfg, dur_bounds
-        )
-    else:
-        from ..operators.audiofp import CONTENT_DUP_RULE, payload_reps
-        from ..pipeline import audio_stats_table, hashed_frame
-        from .contentfp import process_content_increment
-
-        hashed = hashed_frame(batch_df).persist()
-        hashed.count()
-        stats = audio_stats_table(
-            batch_df, cfg, hashed, with_fingerprints=True
-        ).persist()
-        stats.count()
-        try:
-            # The sha tick and the content tick touch DISJOINT registry
-            # tables (sha_registry vs fp_tokens/fp_store), share only the
-            # persisted hashed/stats frames, and are each dominated by
-            # driver-paced fixed cost (probe collects, appends,
-            # compaction checks) — submitting them from two threads
-            # overlaps those job floors, turning the per-tick fixed cost
-            # from SUM into ~MAX (same discipline as the threaded dual
-            # registry append inside the content tick). The shared
-            # registry_meta.json pin is lock-protected (pin_bucket_count).
-            results: dict[str, DataFrame] = {}
-            _errs: list[BaseException] = []
-
-            def _sha_tick() -> None:
-                results["decisions"] = process_increment(
-                    spark,
-                    batch_df,
-                    state_dir,
-                    batch_id,
-                    cfg,
-                    dur_bounds,
-                    hashed=hashed,
-                    stats=stats,
-                )
-
-            def _content_tick() -> None:
-                keys = payload_reps(batch_df, hashed=hashed)
-                fps = stats.select(
-                    F.col("rep_id").alias("clip_id"), "n_subfp", "fp"
-                )
-                results["flags"] = process_content_increment(
-                    spark, batch_df, state_dir, batch_id, keys=keys, fps=fps
-                )
-
-            def _guard(fn):
-                try:
-                    fn()
-                except BaseException as exc:  # noqa: BLE001 - re-raised
-                    _errs.append(exc)
-
-            threads = [
-                threading.Thread(target=_guard, args=(fn,), daemon=True)
-                for fn in (_sha_tick, _content_tick)
-            ]
-            for th in threads:
-                th.start()
-            for th in threads:
-                th.join()
-            if _errs:
-                raise _errs[0]
-            decisions = results["decisions"]
-            flags = results["flags"]
+            # the stats frame feeds the base rules AND the content tier
+            stats = graph.stats.persist()
+            owned.append(stats)
+            stats.count()
+            flags = process_content_increment(
+                spark,
+                batch_df,
+                state_dir,
+                batch_id,
+                keys=payload_reps(batch_df, hashed=graph.hashed),
+                fps=stats.select(F.col("rep_id").alias("clip_id"), "n_subfp", "fp"),
+            )
+            owned.append(flags)
             dup = F.coalesce(F.col("is_content_dup"), F.lit(False))
             decisions = (
                 decisions.join(
-                    flags.where(F.col("is_content_dup")).select(
-                        "clip_id", "is_content_dup"
-                    ),
+                    flags.where(F.col("is_content_dup")).select("clip_id", "is_content_dup"),
                     "clip_id",
                     "left",
                 )
@@ -545,14 +465,13 @@ def process_and_write(
                 .withColumn("keep", F.col("keep") & ~dup)
                 .drop("is_content_dup")
             )
-            _write(decisions)
-        finally:
-            stats.unpersist()
-            hashed.unpersist()
-            if flags is not None:
-                flags.unpersist()
-        return
-    _write(decisions)
+        decisions.withColumn("batch_id", F.lit(batch_id)).write.mode(
+            "overwrite"
+        ).partitionBy("batch_id").parquet(output_dir)
+        registry.commit()
+    finally:
+        for df in owned:
+            df.unpersist()
 
 
 def stream_quality_filter(

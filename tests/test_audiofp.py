@@ -186,7 +186,7 @@ def test_content_dedup_decisions_post_pass(spark):
         pdf,
         "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string",
     )
-    base_dec = run_pipeline(spark, clips, persist=False).decisions
+    base_dec = run_pipeline(spark, clips).decisions
     out = FP.content_dedup_decisions(clips, base_dec)
     got = {r.clip_id: (r.keep, tuple(r.rules_fired)) for r in out.collect()}
 
@@ -241,7 +241,7 @@ def test_content_dedup_zero_token_group_unflagged(spark):
     # sanity: the silent clip really is token-free at the spec level
     assert len(O._subfps_for_clip(silent.astype(np.int64))) >= FP.TOKEN_LEN
     assert not _tokens_nondegenerate(silent)
-    dec = run_pipeline(spark, clips, persist=False).decisions
+    dec = run_pipeline(spark, clips).decisions
     out = FP.content_dedup_decisions(clips, dec)
     got = {r.clip_id: set(r.rules_fired) for r in out.collect()}
     # the silent dup is (correctly) a byte-SHA duplicate but must NOT

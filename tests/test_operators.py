@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_quality_checker_spark.config import DEFAULT_CONFIG
-from data_quality_checker_spark.operators.dedup import sha1_expr, with_duplicate_flag
+from data_quality_checker_spark.operators.dedup import flag_duplicates, keepers_by_sha, sha1_expr
 from data_quality_checker_spark.operators.outliers import iqr_bounds
 from data_quality_checker_spark.operators.rules import build_rules
 from data_quality_checker_spark.oracle.pandas_oracle import RULES as ORACLE_RULES
@@ -38,7 +38,7 @@ def test_dedup_keeps_min_clip_id(spark):
     )
     out = {
         r["clip_id"]: r["is_duplicate"]
-        for r in with_duplicate_flag(df).collect()
+        for r in flag_duplicates(df, keepers_by_sha(df)).collect()
     }
     assert out == {"c1": False, "c2": True, "c3": True, "c9": False, "c0": False}
 
@@ -49,7 +49,7 @@ def test_dedup_skewed_hot_key(spark):
     hot = [(f"h{i:05d}", "HOTSHA") for i in range(10_000)]
     cold = [(f"z{i:03d}", f"sha{i}") for i in range(50)]
     df = spark.createDataFrame(hot + cold, "clip_id string, sha string")
-    out = with_duplicate_flag(df)
+    out = flag_duplicates(df, keepers_by_sha(df))
     kept = out.filter(~F.col("is_duplicate")).select("clip_id").collect()
     kept_ids = {r["clip_id"] for r in kept}
     assert "h00000" in kept_ids

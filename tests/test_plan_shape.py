@@ -6,36 +6,137 @@ Found-the-hard-way catalog:
 * deterministic pandas UDFs get PRUNED under a bare count() — so a
   "benchmark" that counts measures nothing (tools/_scale_worker.py);
 * an unpersisted enriched frame consumed by two branches runs the whole
-  Arrow UDF pass twice (pipeline.decide's clips= parameter);
+  Arrow UDF pass twice;
 * a not-yet-materialized cache consumed by two branches in one action
-  races both branches into computing it concurrently.
+  races both branches into computing it concurrently;
+* a caller that assembles its own stages drifts from the stage graph:
+  the batch job once read the payload four times and broadcast one
+  representative row per clip without a size gate.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
-from data_quality_checker_spark.pipeline import decide, enrich
+from data_quality_checker_spark import pipeline
+from data_quality_checker_spark.run import job
+from data_quality_checker_spark.streaming import incremental
 
 
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_decisions_plan_has_two_udf_passes(spark, clips_df):
-    """The decisions DAG must contain exactly TWO ArrowEvalPython nodes:
-    the per-clip text pass and the per-distinct-payload audio pass. The
-    dedup keeper branch must come from the raw JVM sha scan — a third
-    Arrow node means some branch re-evaluates a UDF projection."""
+def _nodes(plan) -> list:
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def _payload_reads(plan) -> int:
+    """Scan leaves whose schema holds the payload, plus one fill per
+    distinct cached relation that reads it (an InMemoryRelation repeats
+    its cached scan's text, so the plan string would double-count)."""
+    reads, fills = 0, {}
+    for leaf in _nodes(plan):
+        if leaf.children().size():
+            continue
+        if leaf.nodeName() == "InMemoryTableScan":
+            inner = leaf.relation().cachedPlan()
+            fills[inner.toString()] = _payload_reads(inner)
+        elif "bytes:binary" in leaf.schema().simpleString():
+            reads += 1
+    return reads + sum(fills.values())
+
+
+class _Built(Exception):
+    """Stops a caller once its stage graph has been measured."""
+
+
+def _caller_graph_shape(spark, monkeypatch, caller: str, clips_path: str, work: str) -> dict:
+    """Run ``caller`` up to its stage_graph call and measure the AQE
+    input plan of the decisions it built."""
+    shape: dict = {}
+    clips = spark.read.parquet(clips_path)
+    first = F.pmod(F.xxhash64("clip_id"), F.lit(2)) == 0
+    if caller == "tick":
+        # a registry to read: the spied tick is the stream's second
+        state = os.path.join(work, "state")
+        incremental.process_and_write(
+            spark, clips.where(first), 0, state, os.path.join(work, "warm")
+        )
+    module = {"pipeline": pipeline, "job": job, "tick": incremental}[caller]
+    real = module.stage_graph
+
+    def spy(*args, **kwargs):
+        graph = real(*args, **kwargs)
+        plan = graph.decisions._jdf.queryExecution().executedPlan().inputPlan()
+        nodes = _nodes(plan)
+        shape["arrow"] = sum(n.nodeName() == "ArrowEvalPython" for n in nodes)
+        shape["payload_reads"] = _payload_reads(plan)
+        shape["reps_broadcast"] = any(
+            n.nodeName() == "BroadcastHashJoin" and "LeftSemi" in n.simpleString(50)
+            for n in nodes
+        )
+        graph.hashed.unpersist()
+        raise _Built
+
+    monkeypatch.setattr(module, "stage_graph", spy)
+    try:
+        if caller == "pipeline":
+            pipeline.run_pipeline(spark, clips)
+        elif caller == "job":
+            job.run_job(spark, clips_path, os.path.join(work, "job"), "plan")
+        else:
+            incremental.process_and_write(
+                spark, clips.where(~first), 1, state, os.path.join(work, "out")
+            )
+    except _Built:
+        pass
+    monkeypatch.setattr(module, "stage_graph", real)
+    return shape
+
+
+def test_decisions_plan_has_two_udf_passes(spark, clips_df, tmp_path, monkeypatch):
+    """Every caller of the stage graph — the in-session pipeline, the
+    batch job and the default streaming tick — decides from a plan with
+    exactly TWO ArrowEvalPython nodes (the per-clip text pass and the
+    per-distinct-payload audio pass) and at most TWO payload reads (the
+    cached sha pass and the representative decode). The reps broadcast
+    is size-gated on every path: with REPS_BROADCAST_MAX at 0 the
+    representative semi join is not broadcast."""
     # other tests may have left persisted frames; the cache manager would
     # substitute InMemoryRelation into matching subtrees and change the
     # node count
     spark.catalog.clearCache()
-    enriched = enrich(clips_df)
-    decisions = decide(enriched, dur_bounds=(0.0, 1.0), clips=clips_df)
-    plan = _executed_plan(decisions)
-    n_arrow = plan.count("ArrowEvalPython")
-    assert n_arrow == 2, f"expected 2 ArrowEvalPython nodes, got {n_arrow}:\n{plan[:2000]}"
+    clips_path = clips_df.inputFiles()[0]
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        for caller in ("pipeline", "job", "tick"):
+            shape = _caller_graph_shape(
+                spark, monkeypatch, caller, clips_path, str(tmp_path / caller)
+            )
+            assert shape["arrow"] == 2, (caller, shape)
+            assert shape["payload_reads"] <= 2, (caller, shape)
+            assert shape["reps_broadcast"], (caller, shape)
+
+            # the size gate alone decides: no size-based broadcast either
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            with monkeypatch.context() as m:
+                m.setattr(pipeline, "REPS_BROADCAST_MAX", 0)
+                gated = _caller_graph_shape(
+                    spark, m, caller, clips_path, str(tmp_path / f"{caller}_gated")
+                )
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+            assert not gated["reps_broadcast"], (caller, gated)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_text_rules_prune_bytes_from_scan(spark, clips_df):

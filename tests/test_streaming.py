@@ -10,9 +10,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from data_quality_checker_spark.pipeline import run_pipeline
 from data_quality_checker_spark.streaming.incremental import (
-    process_increment,
+    process_and_write,
     read_registry,
     stream_quality_filter,
 )
@@ -39,21 +38,21 @@ def halves(spark, clips_pdf, tmp_path_factory):
 def _batch_decisions_no_outlier(spark, clips_df):
     """Batch reference: same pipeline with dur_bounds=None (streaming has
     no global fence; dur_outlier is advisory so keep/drop is unaffected)."""
-    from data_quality_checker_spark.pipeline import decide, enrich
+    from data_quality_checker_spark.pipeline import stage_graph
 
-    enriched = enrich(clips_df)
-    return decide(enriched, dur_bounds=None, clips=clips_df)
+    return stage_graph(clips_df).decisions
 
 
 def test_incremental_matches_batch(spark, clips_df, halves, tmp_path_factory):
     state = str(tmp_path_factory.mktemp("stream_state"))
+    out = str(tmp_path_factory.mktemp("stream_out0"))
     files = sorted(glob.glob(os.path.join(halves, "*.parquet")))
-    got = {}
     for bid, f in enumerate(files):
-        batch = spark.read.parquet(f)
-        dec = process_increment(spark, batch, state, bid)
-        for r in dec.collect():
-            got[r["clip_id"]] = (r["keep"], tuple(r["rules_fired"]))
+        process_and_write(spark, spark.read.parquet(f), bid, state, out)
+    got = {
+        r["clip_id"]: (r["keep"], tuple(r["rules_fired"]))
+        for r in spark.read.parquet(out).collect()
+    }
 
     expected = {
         r["clip_id"]: (r["keep"], tuple(r["rules_fired"]))
@@ -64,12 +63,13 @@ def test_incremental_matches_batch(spark, clips_df, halves, tmp_path_factory):
 
 def test_increment_idempotent_per_batch(spark, halves, tmp_path_factory):
     state = str(tmp_path_factory.mktemp("stream_state2"))
+    out = str(tmp_path_factory.mktemp("stream_out2"))
     f = sorted(glob.glob(os.path.join(halves, "*.parquet")))[0]
     batch = spark.read.parquet(f)
-    process_increment(spark, batch, state, 0).count()
+    process_and_write(spark, batch, 0, state, out)
     n1 = read_registry(spark, state).count()
     # replay of the same batch_id must not grow the registry
-    process_increment(spark, batch, state, 0).count()
+    process_and_write(spark, batch, 0, state, out)
     n2 = read_registry(spark, state).count()
     assert n1 == n2
 
@@ -95,22 +95,24 @@ def test_registry_read_is_bucket_pruned(spark, halves, tmp_path_factory):
     a CORRUPT parquet file in a registry bucket the second batch's shas do
     not hash into — if the read were unbounded it would crash on it."""
     from data_quality_checker_spark.operators.dedup import sha1_expr
-    from data_quality_checker_spark.streaming.incremental import sha_bucket_expr
-
-    state = str(tmp_path_factory.mktemp("stream_state4"))
-    files = sorted(glob.glob(os.path.join(halves, "*.parquet")))
-    b0 = spark.read.parquet(files[0])
-    # explicit fan-out override (first tick pins it): with the derived
-    # sandbox-sized count every bucket would be occupied and no foreign
-    # bucket would exist to plant the corrupt file in
-    process_increment(spark, b0, state, 0, n_buckets=256).count()
-
     from data_quality_checker_spark.streaming.incremental import (
         load_registry_meta,
+        pin_bucket_count,
+        sha_bucket_expr,
     )
 
+    state = str(tmp_path_factory.mktemp("stream_state4"))
+    out = str(tmp_path_factory.mktemp("stream_out4"))
+    files = sorted(glob.glob(os.path.join(halves, "*.parquet")))
+    b0 = spark.read.parquet(files[0])
+    # explicit fan-out override, pinned before the first tick: with the
+    # derived sandbox-sized count every bucket would be occupied and no
+    # foreign bucket would exist to plant the corrupt file in
+    pin_bucket_count(state, "n_sha_buckets", "sha_registry", 0, 256, explicit=256)
+    process_and_write(spark, b0, 0, state, out)
+
     n_bkt = load_registry_meta(state)["n_sha_buckets"]
-    assert n_bkt == 256  # the explicit override was pinned
+    assert n_bkt == 256  # the tick kept the pinned override
     b1 = spark.read.parquet(files[1])
     used = {
         r["b"]
@@ -127,15 +129,14 @@ def test_registry_read_is_bucket_pruned(spark, halves, tmp_path_factory):
         f.write(b"this is not a parquet file")
 
     # would raise on an unpruned scan; must succeed on a pruned one
-    process_increment(spark, b1, state, 1).count()
+    process_and_write(spark, b1, 1, state, out)
+    assert spark.read.parquet(out).count() == b0.count() + b1.count()
 
 
 def test_output_replay_is_idempotent(spark, halves, tmp_path_factory):
     """foreachBatch is at-least-once: replaying a batch (crash between the
     output write and the checkpoint commit) must not duplicate decision
     rows (ADVICE r1)."""
-    from data_quality_checker_spark.streaming.incremental import process_and_write
-
     state = str(tmp_path_factory.mktemp("stream_state5"))
     out = str(tmp_path_factory.mktemp("stream_out5"))
     f = sorted(glob.glob(os.path.join(halves, "*.parquet")))[0]
@@ -153,8 +154,11 @@ def test_registry_compaction_bounds_file_count(
 ):
     """VERDICT r2 item 3: per-batch appends must NOT grow a registry
     bucket's file count O(batches). Force every sha into ONE bucket
-    (N_SHA_BUCKETS=1), run 24 micro-batches, and require the hot bucket
-    to end bounded by MAX_BUCKET_FILES — with no registered sha lost."""
+    (N_SHA_BUCKETS=1), run 24 micro-batch ticks, and require the hot
+    bucket to end bounded by MAX_BUCKET_FILES — with no registered sha
+    lost. Every tick's decisions must be readable: compaction deletes
+    registry files, so it may only run after the tick's decisions plan
+    (which lists them) has been written."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -162,6 +166,7 @@ def test_registry_compaction_bounds_file_count(
 
     monkeypatch.setattr(inc, "N_SHA_BUCKETS", 1)
     state = str(tmp_path_factory.mktemp("compact_state"))
+    out = str(tmp_path_factory.mktemp("compact_out"))
     src = tmp_path_factory.mktemp("compact_in")
 
     pdf = (
@@ -177,8 +182,9 @@ def test_registry_compaction_bounds_file_count(
             break
         f = str(src / f"b{bid}.parquet")
         pq.write_table(pa.Table.from_pandas(part, preserve_index=False), f)
-        # not consuming decisions: only the registry append is eager
-        inc.process_increment(spark, spark.read.parquet(f), state, bid)
+        inc.process_and_write(spark, spark.read.parquet(f), bid, state, out)
+        got = spark.read.parquet(out).where(F.col("batch_id") == bid)
+        assert got.count() == len(part), bid
 
     bucket = os.path.join(state, "sha_registry", "sbkt=0")
     n_files = sum(1 for f in os.listdir(bucket) if f.endswith(".parquet"))

@@ -32,7 +32,7 @@ def main():
     from pyspark.sql import functions as F
 
     from data_quality_checker_spark.functions.udfs import get_udfs
-    from data_quality_checker_spark.pipeline import enrich, run_pipeline
+    from data_quality_checker_spark.pipeline import run_pipeline
     from data_quality_checker_spark.session import get_spark
 
     batch = os.environ.get("DQC_ARROW_BATCH")
@@ -58,15 +58,16 @@ def main():
 
     # warm up JVM + python workers (imports, lazy model build)
     warm = clips.limit(32 * cores).repartition(cores)
-    enrich(warm).select("ppl", "langid", "audio", "scrub").collect()
+    run_pipeline(spark, warm).decisions.collect()
+    spark.catalog.clearCache()
 
     t0 = time.time()
     if workload == "text":
         text_scores.write.format("noop").mode("overwrite").save()
     else:
-        # persist=True caches the slim (clip_id, sha) frame — the only
+        # the stage graph caches the slim (clip_id, sha) frame — the only
         # full-payload sha scan runs once and every consumer reuses it
-        res = run_pipeline(spark, clips, persist=True)
+        res = run_pipeline(spark, clips)
         res.decisions.write.format("noop").mode("overwrite").save()
     dt = time.time() - t0
     n = clips.count()
