@@ -96,6 +96,23 @@ LINE_EXTRAS = [
 MAX_LINE_BYTES = 1900
 
 
+def timed_query(spark, fn, sf_dir: str) -> tuple[float, int]:
+    """Build and run one registry query → (wall seconds, output rows).
+
+    The noop sink materializes every column; a bare count() would let
+    Catalyst prune deterministic UDF/computed columns from the plan. The
+    row count is observed on that same write, so the query runs once."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    rows = Observation()
+    t0 = time.time()
+    fn(spark, sf_dir).observe(rows, F.count(F.lit(1)).alias("n")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    return time.time() - t0, rows.get["n"]
+
+
 def _cpu_calibration(spark, cpus: int) -> tuple[float, float]:
     """Fixed-size host-speed yardstick, reported so cross-round deltas can
     be normalized for host noise (this sandbox's identical single-thread
@@ -295,14 +312,7 @@ def main():
     }
     total = 0.0
     for name in BENCH_QUERIES:
-        fn = qs[name]
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        # noop sink materializes every column; a bare count() would let
-        # Catalyst prune deterministic UDF/computed columns from the plan
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        n = df.count()  # row count for reporting — outside the timed window
+        dt, n = timed_query(spark, qs[name], sf_dir)
         # DataFrame.persist() registers in the JVM CacheManager, whose
         # entries outlive the Python objects — without this, every query's
         # internal persist barrier accumulates in the one shared local JVM
@@ -340,9 +350,7 @@ def main():
     for _ in range(2):
         w: dict[str, float] = {}
         for name in BENCH_QUERIES:
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            w[name] = round(time.time() - t0, 3)
+            w[name] = round(timed_query(spark, qs[name], sf_dir)[0], 3)
             spark.catalog.clearCache()
             spark._jvm.System.gc()  # same per-job isolation as the cold pass
         warm_passes.append(w)

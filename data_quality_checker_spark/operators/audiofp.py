@@ -169,7 +169,7 @@ def audio_fingerprints(clips: DataFrame) -> DataFrame:
     return clips.select("clip_id", f.alias("f")).select("clip_id", "f.*")
 
 
-def payload_reps(clips: DataFrame, hashed: DataFrame | None = None) -> DataFrame:
+def payload_reps(clips: DataFrame | None, hashed: DataFrame | None = None) -> DataFrame:
     """→ (clip_id, rep_id): every clip mapped to the representative
     (min clip_id) of its distinct (sha1(bytes), codec, sr_hz) decode
     key — the decode-once-per-distinct-payload discipline's key map.
@@ -177,8 +177,8 @@ def payload_reps(clips: DataFrame, hashed: DataFrame | None = None) -> DataFrame
     shuffles. Null key components group null-safely (matching groupBy
     semantics), so byte-identical exact duplicates always share one
     representative. ``hashed`` — a precomputed (clip_id, sha, codec,
-    sr_hz) frame (pipeline.hashed_frame); pass it to skip the sha pass
-    when the pipeline already hashed the batch."""
+    sr_hz) frame (pipeline.hashed_frame); pass it (and ``clips=None``)
+    to skip the sha pass when the pipeline already hashed the batch."""
     if hashed is not None:
         keyed = hashed.select(
             "clip_id", F.col("sha").alias("_k"), "codec", "sr_hz"

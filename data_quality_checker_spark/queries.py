@@ -23,6 +23,7 @@ the operator modules' docstrings.
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -296,21 +297,26 @@ def q_orders_profile(spark, sf_dir):
     raw exact-percentile aggregate buffers EVERY value in one task —
     the single-buffer scale-killer summary_stats already moved off, and
     the sf10 sweep's slowest Spark-only row (94.7 s over 15M orders →
-    ~7 s; OOM at 10^12)."""
+    ~7 s; OOM at 10^12).
+
+    The quantile pre-pass runs its Spark jobs while the query is BUILT
+    (the fence reaches the plan as literals). An empty or all-null price
+    column has no quartiles: the fence is then null and no row is an
+    outlier, as in the oracle."""
     from .operators.outliers import exact_quantiles_scalable
 
     o = _t(spark, sf_dir, "orders")
-    q1, q3 = exact_quantiles_scalable(o, "o_totalprice", [0.25, 0.75])
-    lo, hi = q1 - 1.5 * (q3 - q1), q3 + 1.5 * (q3 - q1)
+    quartiles = exact_quantiles_scalable(o, "o_totalprice", [0.25, 0.75])
+    if quartiles is None:
+        lo = hi = F.lit(None).cast("double")
+    else:
+        q1, q3 = quartiles
+        lo, hi = F.lit(q1 - 1.5 * (q3 - q1)), F.lit(q3 + 1.5 * (q3 - q1))
+    price = F.col("o_totalprice")
     return o.agg(
-        F.round(F.lit(lo), 4).alias("lo"),
-        F.round(F.lit(hi), 4).alias("hi"),
-        F.sum(
-            (
-                (F.col("o_totalprice") < F.lit(lo))
-                | (F.col("o_totalprice") > F.lit(hi))
-            ).cast("bigint")
-        ).alias("n_outliers"),
+        F.round(lo, 4).alias("lo"),
+        F.round(hi, 4).alias("hi"),
+        F.count(F.when((price < lo) | (price > hi), 1)).alias("n_outliers"),
         F.round(F.min("o_totalprice"), 4).alias("price_min"),
         F.round(F.max("o_totalprice"), 4).alias("price_max"),
         F.round(F.avg("o_totalprice"), 4).alias("price_avg"),
@@ -1406,6 +1412,24 @@ def _sf_of(sf_dir: str) -> tuple[str, float]:
     return base, (float(base[2:]) if base.startswith("sf") else 0.01)
 
 
+def _publish(path: str, build: Callable[[str], object], marker: str = "") -> str:
+    """Build a /tmp fixture once and publish it whole: ``build(tmp)``
+    writes a file or directory at a pid-suffixed tmp path (two concurrent
+    generators, e.g. a driver smoke check racing the bench, never share
+    one), then a rename puts it at ``path``, so a crash never leaves a
+    half-written fixture there. A fixture counts as built when
+    ``path/marker`` exists (``marker=""``: ``path`` itself). Deterministic
+    builders make a lost race harmless: both renames publish the same
+    rows. Returns ``path``."""
+    if not os.path.exists(os.path.join(path, marker) if marker else path):
+        tmp = f"{path}.tmp.{os.getpid()}"
+        shutil.rmtree(tmp, ignore_errors=True)
+        build(tmp)
+        shutil.rmtree(path, ignore_errors=True)
+        os.replace(tmp, path)
+    return path
+
+
 def _clips_path(sf_dir: str) -> str:
     """Deterministic synthetic clips corpus cached per sf (TESTDATA has no
     clips table; BASELINE.json directs us to synthesize the input_hint
@@ -1428,21 +1452,17 @@ def _fps_table(spark, sf_dir: str) -> DataFrame:
     audio_neardup_clusters / clips_content_decisions; at 10^12 clips it
     runs once per ingest, never per query. tmp+rename publish, same
     crash discipline as every other /tmp fixture here."""
-    import shutil
-
     from .operators.audiofp import fingerprint_table
 
     base, _sf = _sf_of(sf_dir)
     # t2: table format gained the rep_id column (payload_reps map) —
     # readers fall back gracefully on old tables, but the zero-payload
     # fast path of content_dedup_decisions deserves the rebuild
-    path = f"/tmp/dqc_fps_{_FP_V}t2_{base}{_TAG}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        fingerprint_table(spark.read.parquet(_clips_path(sf_dir)), tmp)
-        shutil.rmtree(path, ignore_errors=True)
-        os.replace(tmp, path)
+    path = _publish(
+        f"/tmp/dqc_fps_{_FP_V}t2_{base}{_TAG}",
+        lambda tmp: fingerprint_table(spark.read.parquet(_clips_path(sf_dir)), tmp),
+        marker="_SUCCESS",
+    )
     return spark.read.parquet(path)
 
 
@@ -1483,12 +1503,7 @@ def ensure_expected_fixtures(sf_dir: str) -> tuple[str, str]:
         columns=["clip_id", "rule", "severity"],
     )
     for pdf, path in ((out, labels_path), (findings, findings_path)):
-        # pid-suffixed tmp: two concurrent generators (driver smoke-check
-        # racing the bench) must not share a tmp name; both renames
-        # publish identical bytes (deterministic labels)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        pdf.to_parquet(tmp, index=False)
-        os.replace(tmp, path)
+        _publish(path, lambda tmp, pdf=pdf: pdf.to_parquet(tmp, index=False))
     return labels_path, findings_path
 
 
@@ -1510,22 +1525,19 @@ def ensure_rescore_fixture(sf_dir: str) -> str:
     metrics-table re-score must reproduce without re-reading any audio."""
     import dataclasses
 
-    base, sf = _sf_of(sf_dir)
-    path = f"/tmp/dqc_expected_rescore_{base}{_TAG}.parquet"
-    if os.path.exists(path):
-        return path
     from .config import DEFAULT_CONFIG
     from .corpus.generator import generate_clips
     from .oracle.pandas_oracle import label_clips
 
-    cfg2 = dataclasses.replace(DEFAULT_CONFIG, **RESCORE_DELTA)
-    labels = label_clips(generate_clips(sf), cfg2)
-    out = labels.copy()
-    out["rules_fired"] = out["rules_fired"].map(lambda r: ",".join(sorted(r)))
-    tmp = f"{path}.tmp.{os.getpid()}"
-    out.to_parquet(tmp, index=False)
-    os.replace(tmp, path)
-    return path
+    base, sf = _sf_of(sf_dir)
+
+    def build(tmp: str) -> None:
+        cfg2 = dataclasses.replace(DEFAULT_CONFIG, **RESCORE_DELTA)
+        out = label_clips(generate_clips(sf), cfg2)
+        out["rules_fired"] = out["rules_fired"].map(lambda r: ",".join(sorted(r)))
+        out.to_parquet(tmp, index=False)
+
+    return _publish(f"/tmp/dqc_expected_rescore_{base}{_TAG}.parquet", build)
 
 
 @register(
@@ -1544,19 +1556,16 @@ def q_clips_rescored_decisions(spark, sf_dir):
     eager pipeline under the same delta config. Green means the
     metrics-table split loses no rule semantics."""
     import dataclasses
-    import shutil
 
     from .config import DEFAULT_CONFIG
     from .run.rescore import rescore_decisions, write_metrics
 
     base, _sf = _sf_of(sf_dir)
-    mpath = f"/tmp/dqc_metrics_{base}{_TAG}"
-    if not os.path.exists(os.path.join(mpath, "_SUCCESS")):
-        tmp = f"{mpath}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        write_metrics(spark, spark.read.parquet(_clips_path(sf_dir)), tmp)
-        shutil.rmtree(mpath, ignore_errors=True)
-        os.replace(tmp, mpath)
+    mpath = _publish(
+        f"/tmp/dqc_metrics_{base}{_TAG}",
+        lambda tmp: write_metrics(spark, spark.read.parquet(_clips_path(sf_dir)), tmp),
+        marker="_SUCCESS",
+    )
     cfg2 = dataclasses.replace(DEFAULT_CONFIG, **RESCORE_DELTA)
     out = rescore_decisions(spark.read.parquet(mpath), cfg2)
     return out.select(
@@ -1685,9 +1694,7 @@ def ensure_audio_fixtures(sf_dir: str) -> dict[str, str]:
         ),
     }
     for k, pdf in outs.items():
-        tmp = f"{paths[k]}.tmp.{os.getpid()}"
-        pdf.to_parquet(tmp, index=False)
-        os.replace(tmp, paths[k])
+        _publish(paths[k], lambda tmp, pdf=pdf: pdf.to_parquet(tmp, index=False))
     return paths
 
 
@@ -1913,9 +1920,6 @@ def q_ann_ivfpq_topk(spark, sf_dir):
     reports measured recall vs ann_topk (`ann_ivfpq_recall`). The index
     is built once per (sf, spec) into a deterministic /tmp path and
     probed thereafter — the Faiss build-once/search-many shape."""
-    import os
-    import shutil
-
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 10)
     base, _sf = _sf_of(sf_dir)
@@ -1928,13 +1932,11 @@ def q_ann_ivfpq_topk(spark, sf_dir):
     # top-40 pool thins as distractor density grows (recall 0.94 at 2k
     # vectors → 0.88 at 20k with refine_mult=8); 120 candidates restores
     # 0.94 at 20k and leaves sf0.1 recall and wall time unchanged.
-    path = f"/tmp/dqc_ivfpq16_{base}{_TAG}"
-    if not os.path.exists(f"{path}/codebooks.parquet"):
-        tmp = f"{path}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        ann.build_ivfpq_index(e, tmp, pq_m=16)
-        shutil.rmtree(path, ignore_errors=True)
-        os.replace(tmp, path)
+    path = _publish(
+        f"/tmp/dqc_ivfpq16_{base}{_TAG}",
+        lambda tmp: ann.build_ivfpq_index(e, tmp, pq_m=16),
+        marker="codebooks.parquet",
+    )
     out = ann.ivfpq_topk_from_index(
         spark, path, q, k=5, nprobe=64, refine_emb=e, refine_mult=24
     )
@@ -1952,15 +1954,13 @@ _MV = f"mv{_MEDIA_V}"
 def _media_path(sf_dir: str) -> str:
     """Deterministic synthetic media corpus cached per sf (image modality
     analog of _clips_path; corpus/media.py)."""
-    base, sf = _sf_of(sf_dir)
-    path = f"/tmp/dqc_media_{_MV}_{base}{_TAG}.parquet"
-    if not os.path.exists(path):
-        from .corpus.media import write_media_parquet
+    from .corpus.media import write_media_parquet
 
-        tmp = f"{path}.tmp.{os.getpid()}"
-        write_media_parquet(tmp, sf)
-        os.replace(tmp, path)
-    return path
+    base, sf = _sf_of(sf_dir)
+    return _publish(
+        f"/tmp/dqc_media_{_MV}_{base}{_TAG}.parquet",
+        lambda tmp: write_media_parquet(tmp, sf),
+    )
 
 
 def ensure_image_fixtures(sf_dir: str) -> str:
@@ -1968,20 +1968,17 @@ def ensure_image_fixtures(sf_dir: str) -> str:
     for the synthetic media corpus at this sf —
     oracle/image_oracle.label_image_features, the image analog of
     ensure_audio_fixtures. tmp+rename publish."""
-    base, _sf = _sf_of(sf_dir)
-    path = f"/tmp/dqc_expected_imgfeat_{_MV}_{base}{_TAG}.parquet"
-    if os.path.exists(path):
-        return path
     import pandas as pd
 
     from .oracle.image_oracle import label_image_features
 
-    media = pd.read_parquet(_media_path(sf_dir))
-    out = label_image_features(media)
-    tmp = f"{path}.tmp.{os.getpid()}"
-    out.to_parquet(tmp, index=False)
-    os.replace(tmp, path)
-    return path
+    base, _sf = _sf_of(sf_dir)
+    return _publish(
+        f"/tmp/dqc_expected_imgfeat_{_MV}_{base}{_TAG}.parquet",
+        lambda tmp: label_image_features(
+            pd.read_parquet(_media_path(sf_dir))
+        ).to_parquet(tmp, index=False),
+    )
 
 
 @register(
@@ -2013,20 +2010,17 @@ def ensure_video_fixtures(sf_dir: str) -> str:
     frames for the synthetic media corpus at this sf —
     oracle/video_oracle.label_frame_samples, the video analog of
     ensure_image_fixtures. tmp+rename publish."""
-    base, _sf = _sf_of(sf_dir)
-    path = f"/tmp/dqc_expected_vidframes_{_MV}_{base}{_TAG}.parquet"
-    if os.path.exists(path):
-        return path
     import pandas as pd
 
     from .oracle.video_oracle import label_frame_samples
 
-    media = pd.read_parquet(_media_path(sf_dir))
-    out = label_frame_samples(media, n_frames=4)
-    tmp = f"{path}.tmp.{os.getpid()}"
-    out.to_parquet(tmp, index=False)
-    os.replace(tmp, path)
-    return path
+    base, _sf = _sf_of(sf_dir)
+    return _publish(
+        f"/tmp/dqc_expected_vidframes_{_MV}_{base}{_TAG}.parquet",
+        lambda tmp: label_frame_samples(
+            pd.read_parquet(_media_path(sf_dir)), n_frames=4
+        ).to_parquet(tmp, index=False),
+    )
 
 
 @register(

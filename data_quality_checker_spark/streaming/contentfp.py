@@ -17,7 +17,10 @@ seen CONTENT:
 
 Per micro-batch:
 
-1. fingerprint the batch (one map-only Arrow pass);
+1. take the batch's rep-level fingerprints from the tick's stage graph
+   (pipeline.stage_graph with_fingerprints: the same decode pass as the
+   audio stats, once per distinct payload) and its (clip → rep) key map
+   from the graph's cached sha pass;
 2. WITHIN-batch near-dups: token pairing + BER verify + connected
    components (the batch operators, reused verbatim);
 3. ACROSS batches: batch tokens ⋈ pruned ``fp_tokens`` buckets →
@@ -39,7 +42,7 @@ Per micro-batch:
 Scale shape: every cross-table touch is an equi-join on a
 hash-partitioned key with the partition list pruned to the batch's own
 keys; fingerprints (hundreds of bytes) ship only for verified
-candidates; audio bytes never leave stage 1.
+candidates; audio bytes never reach this module.
 """
 
 from __future__ import annotations
@@ -54,13 +57,13 @@ from ..operators.audiofp import (
     MIN_SHARED_TOKENS,
     TOKEN_LEN,
     _token_expr,
-    audio_fingerprints,
     fingerprint_candidate_pairs,
     fingerprint_tokens,
     payload_reps,
     with_ber,
 )
 from ..operators.simdedup import neardup_components
+from ..pipeline import StageGraph
 from .incremental import (
     MAX_BUCKET_FILES,  # noqa: F401  (re-exported for tests/docs)
     compact_table_buckets,
@@ -73,22 +76,8 @@ from .incremental import (
 # 256-dir append per tick — see the N_SHA_BUCKETS comment.
 N_FP_BUCKETS = 256
 
-# DQC_TIMING=1 prints per-section wall times between the tick's eager
-# actions ("[fp-tick] <label>: <sec>") — the observability that found the
-# round-5 fixed-cost regression; zero overhead when unset.
-_TIMING = os.environ.get("DQC_TIMING") == "1"
-_t_prev: list[float] = []
-
-
-def _t(label: str) -> None:
-    if not _TIMING:
-        return
-    import time
-
-    now = time.time()
-    if _t_prev and label != "start":
-        print(f"[fp-tick] {label}: {now - _t_prev[0]:.1f}s", flush=True)
-    _t_prev[:] = [now]
+# BER bound of a verified content match (the batch tier's default).
+MAX_BER = 0.1
 
 
 def _tokens_path(state_dir: str) -> str:
@@ -134,14 +123,9 @@ def _read_bucketed(
 
 def process_content_increment(
     spark: SparkSession,
-    new_clips: DataFrame,
+    graph: StageGraph,
     state_dir: str,
     batch_id: int,
-    max_ber: float = 0.1,
-    token_stride: int = 1,
-    max_token_df: int | str | None = "auto",
-    keys: DataFrame | None = None,
-    fps: DataFrame | None = None,
 ) -> DataFrame:
     """Score one micro-batch for content duplicates within AND across
     batches → (clip_id, content_keeper_id, is_content_dup) for every
@@ -150,6 +134,14 @@ def process_content_increment(
     every token df-capped) groups are absent, since no token can ever
     pair them (callers must left-join, as process_and_write does).
     Idempotent per batch_id.
+
+    ``graph`` — the tick's pipeline.stage_graph over the batch, built
+    with ``with_fingerprints=True``: its cached ``hashed`` frame gives
+    the (clip_id, rep_id) key map and its ``stats`` frame the rep-level
+    fingerprints, so the tier adds no sha pass and no decode of its own.
+    Cache ``graph.stats`` before the call (process_and_write does): the
+    probe, the within-batch pairing and the registration each read it.
+    The graph's frames stay the caller's to unpersist.
 
     The whole tier runs at REPRESENTATIVE level (payload_reps: one rep
     per distinct (sha1, codec, sr_hz) key — the same collapse as
@@ -162,57 +154,28 @@ def process_content_increment(
     design regime — costs one decode per distinct payload and zero
     intra-group pair rows.
 
-    ``max_token_df`` — hub-token df cap (spec v5, ON by default): the
-    "auto" cap derives from THIS batch's distinct-fingerprint token
-    stats (derive_max_token_df) and thins the batch-side token stream,
-    which bounds BOTH the within-batch self-join fan-out and the
-    registry-probe fan-out (a stop-token the batch side dropped never
-    joins any registry posting list); registration stores only surviving
-    tokens, so the registry never accumulates a hub posting list either.
-
-    ``keys`` / ``fps`` — precomputed (clip_id, rep_id) map and rep-level
-    (clip_id, n_subfp, fp) fingerprints (audio_stats_table
-    with_fingerprints=True → rep_id/n_subfp/fp). Pass BOTH to reuse the
-    base tier's single decode + sha pass; when omitted the tick computes
-    them itself (one sha pass, one rep-level decode pass). Caller-owned
-    frames are never unpersisted here."""
-    _t("start")
+    Hub tokens are capped (spec v5): the "auto" df cap derives from THIS
+    batch's distinct-fingerprint token stats (derive_max_token_df) and
+    thins the batch-side token stream, which bounds BOTH the
+    within-batch self-join fan-out and the registry-probe fan-out (a
+    stop-token the batch side dropped never joins any registry posting
+    list); registration stores only surviving tokens, so the registry
+    never accumulates a hub posting list either."""
     recover_table_compaction(state_dir, "fp_tokens", "tbkt", "fptok")
     recover_table_compaction(state_dir, "fp_store", "cbkt", "fpstore")
     # effective bucket fan-out, pinned per state_dir at first tick (both
-    # fp tables share it; the sha tick usually pinned the sha count from
-    # the same batch already, so the meta file is just extended here)
+    # fp tables share it; the sha tick pinned the sha count from the
+    # same batch already, so the meta file is just extended here)
     n_bkt = pin_bucket_count(
-        state_dir, "n_fp_buckets", "fp_tokens", new_clips.count, N_FP_BUCKETS
+        state_dir, "n_fp_buckets", "fp_tokens", graph.n_rows, N_FP_BUCKETS
     )
-    _t("recover")
     batch_seen = os.path.exists(_marker(state_dir, batch_id))
 
+    keys = payload_reps(None, hashed=graph.hashed)
+    fps = graph.stats.select(
+        F.col("rep_id").alias("clip_id"), "n_subfp", "fp"
+    ).where(F.col("fp").isNotNull() & (F.col("n_subfp") >= TOKEN_LEN))
     owned: list[DataFrame] = []
-    if keys is None:
-        # persisted: the slim (clip → rep) map is read by the rep-row
-        # semi join here AND by the final expansion — without the barrier
-        # the second evaluation would re-hash every payload byte
-        keys = payload_reps(new_clips).persist()
-        keys.count()
-        owned.append(keys)
-    if fps is None:
-        rep_rows = new_clips.join(
-            keys.select(F.col("rep_id").alias("clip_id")).distinct(),
-            "clip_id",
-            "left_semi",
-        )
-        fps = (
-            audio_fingerprints(rep_rows)
-            .where(F.col("fp").isNotNull() & (F.col("n_subfp") >= TOKEN_LEN))
-            .persist()
-        )
-        fps.count()
-        owned.append(fps)
-    else:
-        fps = fps.where(
-            F.col("fp").isNotNull() & (F.col("n_subfp") >= TOKEN_LEN)
-        )
     try:
         # The probe, the within-batch pairing, and the registration all
         # consume THIS persisted frame, so they drop the same stop-tokens
@@ -220,7 +183,7 @@ def process_content_increment(
         # fingerprint_tokens, which derives the cap INSIDE the toks plan
         # (1-row broadcast scalar join, exchange-reused): one fewer eager
         # job per tick than the old pre-resolved derive_max_token_df.
-        toks = fingerprint_tokens(fps, token_stride, max_token_df).persist()
+        toks = fingerprint_tokens(fps).persist()
         owned.append(toks)
 
         # --- across batches: probe the token index, verify vs the store
@@ -233,11 +196,9 @@ def process_content_increment(
             .distinct()
             .collect()
         )
-        _t("cap+toks+probe_buckets")
         reg_toks = _read_bucketed(
             spark, _tokens_path(state_dir), "tbkt", probe_buckets
         )
-        _t("regtoks_listing")
         cross = None
         if reg_toks is not None:
             # same candidate discipline as the batch operator: shared
@@ -275,7 +236,6 @@ def process_content_increment(
             store = _read_bucketed(
                 spark, _store_path(state_dir), "cbkt", keeper_buckets
             )
-            _t("cand+keeper_buckets+store_listing")
             if store is not None:
                 # reg_batch: the batch that registered each keeper.
                 # Registries written before the columns existed read as
@@ -304,7 +264,7 @@ def process_content_increment(
                     F.col("clip_id").alias("clip_a"),
                     F.coalesce(
                         F.col("n_tok"),
-                        F.size(F.array_distinct(_token_expr(token_stride))).cast(
+                        F.size(F.array_distinct(_token_expr(1))).cast(
                             "long"
                         ),
                     ).alias("n_tok_a"),
@@ -334,7 +294,7 @@ def process_content_increment(
                     F.col("n_subfp").alias("n_b"),
                 )
                 verified = with_ber(
-                    pruned.join(a_fp, "clip_a").join(b, "clip_b"), max_ber
+                    pruned.join(a_fp, "clip_a").join(b, "clip_b"), MAX_BER
                 )
                 # earliest registry match wins — FIRST-SEEN-BATCH, tie-broken
                 # by min keeper id (min over (reg_batch, clip_a); a bare
@@ -348,7 +308,7 @@ def process_content_increment(
 
         # --- within the batch: pairs → components (keeper = min clip_id)
         # (toks passed through: same capped stream as the probe above)
-        local_pairs = fingerprint_candidate_pairs(fps, token_stride, toks=toks)
+        local_pairs = fingerprint_candidate_pairs(fps, toks=toks)
         lv = with_ber(
             local_pairs.join(
                 fps.select(
@@ -365,7 +325,7 @@ def process_content_increment(
                 ),
                 "clip_b",
             ),
-            max_ber,
+            MAX_BER,
         ).select(F.col("clip_a").alias("doc_a"), F.col("clip_b").alias("doc_b"))
         local = neardup_components(lv).select(
             F.col("doc_id").alias("clip_id"),
@@ -419,9 +379,7 @@ def process_content_increment(
         # the file-listing snapshot racing the self-append. The persist
         # freezes the probe-join results first.
         rows = out.persist()
-        _t("plan_build")
         rows.count()
-        _t("rows_count")
 
         if not batch_seen:
             # register the batch's NEW keepers: not a dup of anything.
@@ -489,7 +447,6 @@ def process_content_increment(
                 th.join()
             if _errs:
                 raise _errs[0]
-            _t("ktoks+store_write")
             os.makedirs(os.path.dirname(_marker(state_dir, batch_id)), exist_ok=True)
             with open(_marker(state_dir, batch_id), "w"):
                 pass
@@ -506,7 +463,6 @@ def process_content_increment(
             compact_table_buckets(
                 spark, state_dir, all_buckets, "fp_store", "cbkt", "fpstore"
             )
-            _t("compaction")
         return rows
     finally:
         for frame in owned:

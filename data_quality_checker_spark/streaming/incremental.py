@@ -58,10 +58,9 @@ The global IQR duration fence is whole-dataset state and cannot be
 batch run) and passed in; the dur_outlier flag is advisory (non-drop),
 so keep/drop parity with the batch pipeline is exact.
 
-``applyInPandasWithState`` would express the registry as managed state;
-a parquet side-table is used instead so state survives independently of
-the checkpoint and stays queryable (the lineage-table philosophy of
-run/job.py).
+The registry is a parquet table, not engine-managed state, so it
+survives the loss of the stream checkpoint and can be queried (the
+lineage-table philosophy of run/job.py).
 """
 
 from __future__ import annotations
@@ -433,21 +432,14 @@ def process_and_write(
     try:
         decisions = graph.decisions
         if content_dedup:
-            from ..operators.audiofp import CONTENT_DUP_RULE, payload_reps
+            from ..operators.audiofp import CONTENT_DUP_RULE
             from .contentfp import process_content_increment
 
             # the stats frame feeds the base rules AND the content tier
             stats = graph.stats.persist()
             owned.append(stats)
             stats.count()
-            flags = process_content_increment(
-                spark,
-                batch_df,
-                state_dir,
-                batch_id,
-                keys=payload_reps(batch_df, hashed=graph.hashed),
-                fps=stats.select(F.col("rep_id").alias("clip_id"), "n_subfp", "fp"),
-            )
+            flags = process_content_increment(spark, graph, state_dir, batch_id)
             owned.append(flags)
             dup = F.coalesce(F.col("is_content_dup"), F.lit(False))
             decisions = (

@@ -42,7 +42,6 @@ _EXECUTES_ON_BUILD = {
 _NLJ_ALLOWED = {
     "ann_topk",
     "embed_neardup",
-    "orders_profile",      # broadcast (q1, q3) fence row
     "documents_profile",   # broadcast dominant-class row
     "trend_daily",         # broadcast last_day row
     "set_ops_users",       # broadcast per-branch count rows
@@ -65,3 +64,34 @@ def test_no_scale_killer_joins(spark, name):
 
         for m in re.finditer(r"BroadcastNestedLoopJoin[^\n]*", plan):
             assert "_cap#" in m.group(0), f"{name}:\n{m.group(0)}"
+
+
+@pytest.mark.parametrize("price", ["empty", "all_null"])
+def test_orders_profile_degenerate_column_matches_oracle(spark, tmp_path, price):
+    """An orders table with no rows, or with a price column of only
+    nulls, has no quartiles: orders_profile must return the oracle's one
+    row (null fence, zero outliers, null moments), not raise."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    duckdb = pytest.importorskip("duckdb")
+    orders = pq.read_table(f"{SF_DIR}/orders.parquet")
+    if price == "empty":
+        orders = orders.slice(0, 0)
+    else:
+        i = orders.schema.get_field_index("o_totalprice")
+        orders = orders.set_column(
+            i, "o_totalprice", pa.nulls(len(orders), pa.float64())
+        )
+    sf = tmp_path / "sf_degenerate"
+    sf.mkdir()
+    pq.write_table(orders, str(sf / "orders.parquet"))
+
+    got = registry.queries()["orders_profile"](spark, str(sf)).collect()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW orders AS SELECT * FROM read_parquet('{sf}/orders.parquet')"
+    )
+    res = con.execute(registry._ORACLES["orders_profile"])
+    want = [dict(zip([d[0] for d in res.description], r)) for r in res.fetchall()]
+    assert [r.asDict() for r in got] == want

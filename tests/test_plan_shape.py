@@ -65,13 +65,14 @@ def _caller_graph_shape(spark, monkeypatch, caller: str, clips_path: str, work: 
     shape: dict = {}
     clips = spark.read.parquet(clips_path)
     first = F.pmod(F.xxhash64("clip_id"), F.lit(2)) == 0
-    if caller == "tick":
+    tick = caller in ("tick", "content_tick")
+    if tick:
         # a registry to read: the spied tick is the stream's second
         state = os.path.join(work, "state")
         incremental.process_and_write(
             spark, clips.where(first), 0, state, os.path.join(work, "warm")
         )
-    module = {"pipeline": pipeline, "job": job, "tick": incremental}[caller]
+    module = incremental if tick else {"pipeline": pipeline, "job": job}[caller]
     real = module.stage_graph
 
     def spy(*args, **kwargs):
@@ -95,7 +96,12 @@ def _caller_graph_shape(spark, monkeypatch, caller: str, clips_path: str, work: 
             job.run_job(spark, clips_path, os.path.join(work, "job"), "plan")
         else:
             incremental.process_and_write(
-                spark, clips.where(~first), 1, state, os.path.join(work, "out")
+                spark,
+                clips.where(~first),
+                1,
+                state,
+                os.path.join(work, "out"),
+                content_dedup=caller == "content_tick",
             )
     except _Built:
         pass
@@ -105,12 +111,13 @@ def _caller_graph_shape(spark, monkeypatch, caller: str, clips_path: str, work: 
 
 def test_decisions_plan_has_two_udf_passes(spark, clips_df, tmp_path, monkeypatch):
     """Every caller of the stage graph — the in-session pipeline, the
-    batch job and the default streaming tick — decides from a plan with
-    exactly TWO ArrowEvalPython nodes (the per-clip text pass and the
-    per-distinct-payload audio pass) and at most TWO payload reads (the
-    cached sha pass and the representative decode). The reps broadcast
-    is size-gated on every path: with REPS_BROADCAST_MAX at 0 the
-    representative semi join is not broadcast."""
+    batch job, the default streaming tick and the content-dedup tick
+    (whose one decode pass also emits the fingerprints) — decides from a
+    plan with exactly TWO ArrowEvalPython nodes (the per-clip text pass
+    and the per-distinct-payload audio pass) and at most TWO payload
+    reads (the cached sha pass and the representative decode). The reps
+    broadcast is size-gated on every path: with REPS_BROADCAST_MAX at 0
+    the representative semi join is not broadcast."""
     # other tests may have left persisted frames; the cache manager would
     # substitute InMemoryRelation into matching subtrees and change the
     # node count
@@ -118,7 +125,7 @@ def test_decisions_plan_has_two_udf_passes(spark, clips_df, tmp_path, monkeypatc
     clips_path = clips_df.inputFiles()[0]
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        for caller in ("pipeline", "job", "tick"):
+        for caller in ("pipeline", "job", "tick", "content_tick"):
             shape = _caller_graph_shape(
                 spark, monkeypatch, caller, clips_path, str(tmp_path / caller)
             )

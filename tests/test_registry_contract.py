@@ -6,6 +6,8 @@ contract so a registry addition that would cross the cap fails CI
 instead of dropping green rows on the floor.
 """
 
+import os
+
 from data_quality_checker_spark import queries as qreg
 
 DRIVER_QUERY_CAP = 50
@@ -46,3 +48,26 @@ def test_ordered_names_stable_and_complete():
         n for n in qreg._FIRST if n in qreg._QUERIES
     ]
     assert set(names) == set(qreg._QUERIES)
+
+
+def test_publish_builds_each_fixture_once(tmp_path):
+    # a published file or directory fixture is reused, never rebuilt, and
+    # no tmp path survives the publish
+    built = []
+
+    def build_file(tmp):
+        built.append(tmp)
+        with open(tmp, "w") as fh:
+            fh.write("rows")
+
+    def build_dir(tmp):
+        built.append(tmp)
+        os.makedirs(tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    f, d = str(tmp_path / "f.parquet"), str(tmp_path / "d")
+    for _ in range(2):
+        assert qreg._publish(f, build_file) == f
+        assert qreg._publish(d, build_dir, marker="_SUCCESS") == d
+    assert len(built) == 2
+    assert sorted(os.listdir(tmp_path)) == ["d", "f.parquet"]

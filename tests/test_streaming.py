@@ -206,110 +206,6 @@ def test_registry_compaction_bounds_file_count(
     assert reg.select("sha").distinct().count() == n_shas
 
 
-def test_stateful_dedup_matches_registry_semantics(spark, clips_df, halves, tmp_path_factory):
-    """applyInPandasWithState dedup (engine-managed state) must agree
-    with the registry-based path: first-seen batch wins, min clip_id
-    within a batch, null-sha rows pass through unflagged."""
-    from data_quality_checker_spark.operators.dedup import sha1_expr
-    from data_quality_checker_spark.streaming.stateful import stream_dedup_flags
-
-    out = str(tmp_path_factory.mktemp("state_out"))
-    ckpt = str(tmp_path_factory.mktemp("state_ckpt"))
-    q = stream_dedup_flags(spark, halves, out, ckpt)
-    q.awaitTermination(300)
-
-    got = {r["clip_id"]: (r["is_duplicate"], r["keeper_clip_id"])
-           for r in spark.read.parquet(out).collect()}
-    assert len(got) == clips_df.count()
-
-    # batch expectation: files arrive in clip_id order, so global keeper
-    # = min clip_id per sha — identical to the batch pipeline's keepers
-    hashed = clips_df.select("clip_id", sha1_expr("bytes").alias("sha"))
-    expected = {}
-    keepers = {r["sha"]: r["k"] for r in
-               hashed.where(F.col("sha").isNotNull())
-               .groupBy("sha").agg(F.min("clip_id").alias("k")).collect()}
-    for r in hashed.collect():
-        if r["sha"] is None:
-            expected[r["clip_id"]] = (False, None)
-        else:
-            k = keepers[r["sha"]]
-            expected[r["clip_id"]] = (r["clip_id"] != k, k)
-    assert got == expected
-
-
-def test_pure_streaming_decisions_match_batch(spark, clips_df, halves, tmp_path_factory):
-    """The no-foreachBatch pipeline (UDF enrich -> flattened predicates ->
-    applyInPandasWithState duplicate flag -> assembly) must reproduce the
-    batch pipeline's keep + rules_fired + scrubbed transcript exactly."""
-    from data_quality_checker_spark.streaming.stateful import stream_decisions_stateful
-
-    out = str(tmp_path_factory.mktemp("pure_out"))
-    ckpt = str(tmp_path_factory.mktemp("pure_ckpt"))
-    q = stream_decisions_stateful(spark, halves, out, ckpt)
-    q.awaitTermination(300)
-
-    got = {
-        r["clip_id"]: (r["keep"], tuple(r["rules_fired"]), r["scrubbed_transcript"])
-        for r in spark.read.parquet(out).collect()
-    }
-    expected = {
-        r["clip_id"]: (r["keep"], tuple(r["rules_fired"]), r["scrubbed_transcript"])
-        for r in _batch_decisions_no_outlier(spark, clips_df).collect()
-    }
-    assert got == expected
-
-
-def test_watermarked_window_counts_match_batch(spark, tmp_path_factory):
-    """Watermark + event-time window over a file stream: with all data
-    within the watermark, the streamed windowed counts equal the batch
-    windowed counts (append mode emits each window once it is final)."""
-    import datetime as dt
-
-    from data_quality_checker_spark.streaming.stateful import windowed_event_counts
-
-    base = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows = [
-        (base + dt.timedelta(minutes=m), "click" if m % 2 == 0 else "view")
-        for m in range(0, 45)
-    ]
-    d = tmp_path_factory.mktemp("ev_in")
-    bdf = spark.createDataFrame(rows, "ts timestamp, event_type string")
-    bdf.coalesce(2).write.parquet(str(d / "events"))
-
-    stream = spark.readStream.schema("ts timestamp, event_type string").parquet(
-        str(d / "events")
-    )
-    out = str(tmp_path_factory.mktemp("ev_out"))
-    ckpt = str(tmp_path_factory.mktemp("ev_ckpt"))
-    q = (
-        windowed_event_counts(stream, window="10 minutes", watermark="5 minutes")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        (r["window_start"], r["event_type"]): r["n"]
-        for r in spark.read.parquet(out).collect()
-    }
-    expected = {
-        (r["window_start"], r["event_type"]): r["n"]
-        for r in windowed_event_counts(bdf, window="10 minutes").collect()
-    }
-    # append mode withholds windows not yet closed by the watermark: every
-    # emitted window must match batch, and most windows must have emitted
-    assert got
-    for k, v in got.items():
-        assert expected[k] == v
-    closed = {k for k in expected if k[0] < rows[-1][0] - dt.timedelta(minutes=15)}
-    assert closed <= set(got)
-
-
 def test_multi_batch_streaming_keeps_all_batches(spark, clips_df, tmp_path_factory):
     """Regression: with >maxFilesPerTrigger input files the stream runs
     MULTIPLE micro-batches; every batch's decisions partition must
@@ -340,36 +236,6 @@ def test_multi_batch_streaming_keeps_all_batches(spark, clips_df, tmp_path_facto
     expected_dups = sum(r["count"] - 1 for r in groups.collect())
     n_dup_flagged = dec.where(F.array_contains("rules_fired", "duplicate")).count()
     assert n_dup_flagged == expected_dups > 0
-
-
-def test_pure_streaming_multi_batch_dedup_consistency(spark, clips_df, tmp_path_factory):
-    """Across MULTIPLE micro-batches with arbitrary file order, the
-    managed-state dedup must flag exactly (group_size - 1) duplicates per
-    sha group — one keeper each, regardless of which batch saw the group
-    first (the keeper identity is batch-order-dependent; the count is
-    not)."""
-    from data_quality_checker_spark.operators.dedup import sha1_expr
-    from data_quality_checker_spark.streaming.stateful import stream_decisions_stateful
-
-    src = str(tmp_path_factory.mktemp("pure_many_in") / "clips")
-    clips_df.repartition(24).write.parquet(src)
-    out = str(tmp_path_factory.mktemp("pure_many_out"))
-    ckpt = str(tmp_path_factory.mktemp("pure_many_ckpt"))
-    q = stream_decisions_stateful(spark, src, out, ckpt)
-    q.awaitTermination(300)
-
-    dec = spark.read.parquet(out)
-    assert dec.count() == clips_df.count()
-    n_dup_flagged = dec.where(F.array_contains("rules_fired", "duplicate")).count()
-    groups = (
-        clips_df.select(sha1_expr("bytes").alias("sha"))
-        .where(F.col("sha").isNotNull())
-        .groupBy("sha")
-        .count()
-    )
-    expected_dups = sum(r["count"] - 1 for r in groups.collect())
-    assert n_dup_flagged == expected_dups
-    assert expected_dups > 0
 
 
 def test_bucket_count_pinning(tmp_path):

@@ -11,6 +11,7 @@ import pytest
 
 from data_quality_checker_spark.corpus.audio import encode_wav
 from data_quality_checker_spark.operators import audiofp as FP
+from data_quality_checker_spark.pipeline import stage_graph
 from data_quality_checker_spark.streaming.contentfp import (
     process_content_increment,
 )
@@ -40,6 +41,18 @@ def _df(spark, rows):
     return spark.createDataFrame(pdf, SCHEMA)
 
 
+def _increment(spark, batch, state_dir, batch_id):
+    """process_content_increment fed as the streaming tick feeds it: the
+    batch's stage graph with fingerprints, its stats frame cached."""
+    graph = stage_graph(batch, with_fingerprints=True)
+    graph.stats.persist()
+    try:
+        return process_content_increment(spark, graph, state_dir, batch_id)
+    finally:
+        graph.stats.unpersist()
+        graph.hashed.unpersist()
+
+
 @pytest.fixture()
 def state_dir(tmp_path):
     return str(tmp_path / "state")
@@ -61,7 +74,7 @@ def test_cross_batch_and_within_batch(spark, state_dir):
             ("b1_other", encode_wav(_speechlike(32, 2.5), SR), SR, 2500, "wav", "t"),
         ],
     )
-    out1 = process_content_increment(spark, batch1, state_dir, 0)
+    out1 = _increment(spark, batch1, state_dir, 0)
     f1 = _flags(out1)
     out1.unpersist()
     assert f1 == {
@@ -80,7 +93,7 @@ def test_cross_batch_and_within_batch(spark, state_dir):
             ("b2_new", encode_wav(_speechlike(33, 2.5), SR), SR, 2500, "wav", "t"),
         ],
     )
-    out2 = process_content_increment(spark, batch2, state_dir, 1)
+    out2 = _increment(spark, batch2, state_dir, 1)
     f2 = _flags(out2)
     out2.unpersist()
     assert f2["b2_gaincopy"] == ("b1_orig", True)  # earlier batch's keeper wins
@@ -89,7 +102,7 @@ def test_cross_batch_and_within_batch(spark, state_dir):
     assert f2["b2_new"] == ("b2_new", False)
 
     # replay of batch 1 (at-least-once): same answers, no re-registration
-    replay = process_content_increment(spark, batch1, state_dir, 0)
+    replay = _increment(spark, batch1, state_dir, 0)
     fr = _flags(replay)
     replay.unpersist()
     # b1_orig is already IN the registry from the first run of batch 0 —
@@ -103,7 +116,7 @@ def test_cross_batch_and_within_batch(spark, state_dir):
         spark,
         [("b3_v3", encode_wav(base2 * 0.85, SR), SR, 2500, "wav", "t")],
     )
-    out3 = process_content_increment(spark, batch3, state_dir, 2)
+    out3 = _increment(spark, batch3, state_dir, 2)
     f3 = _flags(out3)
     out3.unpersist()
     assert f3["b3_v3"] == ("b2_v1", True)  # b2_v2 was never registered
@@ -117,7 +130,7 @@ def test_unrelated_clips_never_flagged(spark, state_dir):
             for i in range(4)
         ],
     )
-    out = process_content_increment(spark, b, state_dir, 0)
+    out = _increment(spark, b, state_dir, 0)
     flags = _flags(out)
     out.unpersist()
     assert all(not dup for _, dup in flags.values())
@@ -225,7 +238,7 @@ def test_content_registry_compaction_bounds_file_count(
             )
             for j in range(2)
         ]
-        out = process_content_increment(spark, _df(spark, rows), state, bid)
+        out = _increment(spark, _df(spark, rows), state, bid)
         assert out.where("is_content_dup").count() == 0, bid  # all-new content
         out.unpersist()
 
@@ -240,7 +253,7 @@ def test_content_registry_compaction_bounds_file_count(
         spark,
         [("z_copy", enc(_speechlike(100, secs=1.2) * 0.6), SR, 1200, "wav", "tx")],
     )
-    out = process_content_increment(spark, probe, state, n_batches)
+    out = _increment(spark, probe, state, n_batches)
     flags = _flags(out)
     assert flags["z_copy"] == ("b00_c0", True), flags
     out.unpersist()

@@ -76,12 +76,7 @@ def main() -> None:
     for name in bench.BENCH_QUERIES:
         if name in skip:
             continue
-        fn = qs[name]
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        n = df.count()
+        dt, n = bench.timed_query(spark, qs[name], sf_dir)
         spark.catalog.clearCache()
         spark._jvm.System.gc()
         timings[name] = round(dt, 3)
