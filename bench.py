@@ -3,18 +3,27 @@
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
 line: {"metric", "value", "unit": "sec", "queries": {...}, "sf": ...}.
+``value`` is the cold-pass total; two warm passes (per-query min) and
+the ANN-recall regimes follow it.
+
+Usage: python bench.py [--cold-only] [--skip q1,q2]
+  --cold-only  the cold pass only (scale sweeps past sf1, where the warm
+               passes and recall regimes would multiply an hour-long
+               cold pass for no extra scaling signal)
+  --skip       leave named BENCH_QUERIES out (e.g. an infeasible one)
 
 CONTRACT NOTE (learned from round 2): the driver records only the tail
 of bench stdout and parses the last line — a line over ~2000 bytes gets
 truncated at the FRONT and fails to parse (BENCH_r02.json came back
 ``"parsed": null``). The printed line therefore carries the contract
 keys plus SCALAR extras only, with a hard length guard; the full detail
-(warm-pass timings, per-query deltas, regime recalls, registry metrics)
-goes to ``BENCH/bench_detail.json``.
+(warm-pass timings, per-query deltas, regime recalls, skipped queries)
+goes to ``BENCH/bench_detail.json`` and ``BENCH/detail_rNN[_sfX].json``.
 """
 
 from __future__ import annotations
 
+import argparse
 import glob
 import json
 import os
@@ -91,7 +100,6 @@ LINE_EXTRAS = [
     "ann_lsh_recall_mid_h2",
     "ann_ivf_recall_mid",
     "ann_lsh_recall_neardup",
-    "registry_max_bucket_files",
 ]
 MAX_LINE_BYTES = 1900
 
@@ -210,161 +218,66 @@ def _planted_recall(spark, emb, topk_fn, sigma: float, n_queries: int = 50) -> f
     return round(sum(1 for s in src if (s, s) in hits) / len(src), 3)
 
 
-def _registry_file_metric(spark, clips_path: str, n_batches: int = 12) -> int | None:
-    """Measurable proof of the streaming-registry compaction bound: run
-    ``n_batches`` micro-batch registry ticks over the bench corpus with a
-    deliberately tiny bucket fan-out (forcing every batch onto few hot
-    buckets) and report the max parquet-file count any bucket ends with.
-    Without compaction this is ~n_batches; with it, ≤ MAX_BUCKET_FILES."""
-    import shutil
-    import tempfile
+def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    """Usage errors (an unknown ``--skip`` name, a missing value) exit
+    with status 2 here, before any Spark session starts."""
 
-    from pyspark.sql import functions as F
+    def query_list(value: str) -> list[str]:
+        names = [n for n in value.split(",") if n]
+        unknown = [n for n in names if n not in BENCH_QUERIES]
+        if unknown or not names:
+            raise argparse.ArgumentTypeError(f"not in BENCH_QUERIES: {value!r}")
+        return names
 
-    from data_quality_checker_spark.streaming import incremental as inc
-
-    state = tempfile.mkdtemp(prefix="dqc_bench_registry_")
-    saved = inc.N_SHA_BUCKETS
-    try:
-        inc.N_SHA_BUCKETS = 4
-        clips = spark.read.parquet(clips_path).withColumn(
-            "b", F.pmod(F.xxhash64("clip_id"), F.lit(n_batches)).cast("int")
-        )
-        for bid in range(n_batches):
-            inc.process_and_write(
-                spark,
-                clips.where(F.col("b") == bid).drop("b"),
-                bid,
-                state,
-                os.path.join(state, "decisions"),
-            )
-        worst = 0
-        reg_root = os.path.join(state, "sha_registry")
-        for d in glob.glob(os.path.join(reg_root, "sbkt=*")):
-            worst = max(worst, sum(1 for f in os.listdir(d) if f.endswith(".parquet")))
-        return worst
-    except Exception:
-        return None
-    finally:
-        inc.N_SHA_BUCKETS = saved
-        shutil.rmtree(state, ignore_errors=True)
-
-
-def main():
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    base = os.path.basename(os.path.normpath(sf_dir))
-    sf = float(base[2:]) if base.startswith("sf") else 0.1
-
-    from data_quality_checker_spark import queries as registry
-    from data_quality_checker_spark.session import get_spark
-
-    spark = get_spark(app_name="dqc-bench")
-    qs = registry.queries()
-
-    # corpus synthesis is one-time setup, not query work — warm the cache
-    clips_path = registry._clips_path(sf_dir)
-
-    # Session bring-up, UNTIMED but measured and reported: the first job
-    # of a fresh local JVM pays executor/codegen init (~4 s), the first
-    # Python-UDF job forks+imports one pandas worker per core (~3 s at
-    # 32 cores), and the first model-UDF batch page-loads the trained
-    # arrays (~2 s across workers). None of that is query-plan cost — on
-    # a production cluster executors are long-lived — and in rounds 1-2
-    # it all landed on whichever query ran first, which made the
-    # round-over-round deltas unattributable (the r2 "regression" was
-    # 100% warmup by the warm-pass evidence). The warmup touches no
-    # corpus table: a synthetic range and a 32-row literal frame.
-    t0 = time.time()
-    spark.range(0, 1_000_000, 1, int(os.environ.get("SPARK_GRAFT_CPUS", "32"))).selectExpr(
-        "sum(id)"
-    ).collect()
-    from data_quality_checker_spark.functions.udfs import get_udfs
-
-    u = get_udfs()
-    warmdf = spark.createDataFrame(
-        [("warm up the workers and models",)] * 64, "transcript string"
-    ).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    warmdf.select(u["langid"]("transcript"), u["perplexity"]("transcript")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    session_warmup = round(time.time() - t0, 3)
-
-    calib_1t, calib_mt = _cpu_calibration(
-        spark, int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap = argparse.ArgumentParser(description="Headline query bench (driver contract).")
+    ap.add_argument(
+        "--cold-only",
+        action="store_true",
+        help="run the cold pass only: no warm passes, no ANN-recall section",
     )
+    ap.add_argument(
+        "--skip",
+        type=query_list,
+        default=[],
+        metavar="Q1,Q2",
+        help="leave these BENCH_QUERIES names out of every pass",
+    )
+    return ap.parse_args(argv)
 
-    # The content-fingerprint side-table is INGEST work (decode+FFT over
-    # every payload byte, written once per corpus — audiofp.
-    # fingerprint_table), not query work: on the 100 TB deployment it is
-    # produced by the ingest job and every near-dup query reads it.
-    # Build it here untimed (no-op when the versioned /tmp table exists)
-    # and report the cost separately, same policy as session_warmup_sec.
-    t0 = time.time()
-    registry._fps_table(spark, sf_dir)
-    fps_build = round(time.time() - t0, 3)
 
-    timings: dict[str, float] = {}
-    extras: dict = {
-        "session_warmup_sec": session_warmup,
-        "cpu_calib_1t_sec": calib_1t,
-        "cpu_calib_mt_sec": calib_mt,
-        "fps_table_build_sec": fps_build,
-    }
-    total = 0.0
-    for name in BENCH_QUERIES:
+def _run_pass(spark, qs, sf_dir: str, names: list[str]) -> dict[str, tuple[float, int]]:
+    """One timed pass over ``names`` → {name: (wall seconds, rows)}.
+
+    After each query: DataFrame.persist() registers in the JVM
+    CacheManager, whose entries outlive the Python objects, so every
+    query's internal persist barrier would accumulate in the one shared
+    local JVM and later queries would pay storage eviction they never
+    see on a per-job cluster; clearCache drops them (no cross-query reuse
+    exists, so this is free). localCheckpoint blocks, broadcasts and
+    shuffle files are reclaimed by ContextCleaner only AFTER a driver GC
+    processes their weak refs; one explicit GC between queries emulates
+    the per-job driver isolation a cluster gives every one of these jobs
+    (measured: without it, dead blocks from an iterative operator
+    degrade a later query from ~4.5 s to 19-25 s)."""
+    out: dict[str, tuple[float, int]] = {}
+    for name in names:
         dt, n = timed_query(spark, qs[name], sf_dir)
-        # DataFrame.persist() registers in the JVM CacheManager, whose
-        # entries outlive the Python objects — without this, every query's
-        # internal persist barrier accumulates in the one shared local JVM
-        # and later queries pay storage eviction they would never see on a
-        # per-job cluster. No cross-query reuse exists, so this is free.
         spark.catalog.clearCache()
-        # ...and localCheckpoint blocks / broadcasts / shuffle files are
-        # only reclaimed by ContextCleaner AFTER a driver GC processes
-        # their weak refs. One explicit GC between queries emulates the
-        # per-job driver isolation a cluster gives every one of these
-        # jobs (measured: without it, dead blocks from an iterative
-        # operator degrade a later query from ~4.5 s to 19-25 s).
         spark._jvm.System.gc()
-        timings[name] = round(dt, 3)
-        total += dt
-        if name == "clips_decisions_labels":
-            extras["clips"] = n
-            extras["clips_per_sec"] = round(n / dt, 1)
+        out[name] = (dt, n)
         print(f"# {name}: {dt:.2f}s ({n} rows)", file=sys.stderr)
+    return out
 
-    # Steady-state pass (VERDICT r1 bench hygiene): identical plans on the
-    # now-warm session, run IMMEDIATELY after the cold pass — before the
-    # recall/registry sections, whose streaming queries and collects age
-    # the session in ways a per-job cluster driver never sees. Splits
-    # session+UDF-worker warmup (first pass) from steady-state cost so
-    # round-over-round regressions are attributable to plans.
-    # Two warm passes, per-query MIN: this host's throughput swings up to
-    # ~3× between identical runs (BENCH/BASELINE.md "Host-noise
-    # calibration"), so a single warm sample can book a 20 s noise burst
-    # against a 4 s query. The minimum of two samples is the
-    # least-noise-contaminated estimate of steady-state plan cost — the
-    # number that IS comparable round-over-round. Both raw passes are
-    # kept in bench_detail.json.
-    warm_passes: list[dict[str, float]] = []
-    for _ in range(2):
-        w: dict[str, float] = {}
-        for name in BENCH_QUERIES:
-            w[name] = round(timed_query(spark, qs[name], sf_dir)[0], 3)
-            spark.catalog.clearCache()
-            spark._jvm.System.gc()  # same per-job isolation as the cold pass
-        warm_passes.append(w)
-    warm = {n: min(w[n] for w in warm_passes) for n in BENCH_QUERIES}
-    detail: dict = {"queries_warm": warm, "queries_warm_passes": warm_passes}
-    extras["value_warm"] = round(sum(warm.values()), 3)
 
-    # ANN recall, three regimes (VERDICT r2 item 4):
-    #  * general/random: approx top-5 vs exact top-5 on the registry
-    #    queries — this corpus' true neighbors sit at cosine ≈0.37, the
-    #    hard regime; IVF is the routed operator for it (sign-LSH recall
-    #    here is near zero, honestly reported);
-    #  * mid (planted cosine ≈0.75) and near-dup (planted ≈0.94): does
-    #    the index return the planted source in its top-5?
+def _ann_recall(spark, qs, sf_dir: str) -> dict:
+    """ANN recall, three regimes (VERDICT r2 item 4):
+     * general/random: approx top-5 vs exact top-5 on the registry
+       queries — this corpus' true neighbors sit at cosine ≈0.37, the
+       hard regime; IVF is the routed operator for it (sign-LSH recall
+       here is near zero, honestly reported);
+     * mid (planted cosine ≈0.75) and near-dup (planted ≈0.94): does
+       the index return the planted source in its top-5?"""
+    extras: dict = {}
     try:
         exact = {
             (r["query_id"], r["neighbor_id"])
@@ -409,11 +322,98 @@ def main():
         extras["ann_ivf_recall_mid"] = _planted_recall(spark, emb, ivf_fn, 0.11)
     except Exception:
         pass
+    return extras
 
-    # streaming-registry compaction bound (VERDICT r2 items 3/8)
-    m = _registry_file_metric(spark, clips_path)
-    if m is not None:
-        extras["registry_max_bucket_files"] = m
+
+def main(argv: list[str] | None = None):
+    args = _parse_args(argv)
+    names = [n for n in BENCH_QUERIES if n not in args.skip]
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    base = os.path.basename(os.path.normpath(sf_dir))
+    sf = float(base[2:]) if base.startswith("sf") else 0.1
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+    from data_quality_checker_spark import queries as registry
+    from data_quality_checker_spark.session import get_spark
+
+    spark = get_spark(app_name="dqc-bench")
+    qs = registry.queries()
+
+    # corpus synthesis is one-time setup, not query work — warm the cache
+    registry._clips_path(sf_dir)
+
+    # Session bring-up, UNTIMED but measured and reported: the first job
+    # of a fresh local JVM pays executor/codegen init (~4 s), the first
+    # Python-UDF job forks+imports one pandas worker per core (~3 s at
+    # 32 cores), and the first model-UDF batch page-loads the trained
+    # arrays (~2 s across workers). None of that is query-plan cost — on
+    # a production cluster executors are long-lived — and in rounds 1-2
+    # it all landed on whichever query ran first, which made the
+    # round-over-round deltas unattributable (the r2 "regression" was
+    # 100% warmup by the warm-pass evidence). The warmup touches no
+    # corpus table: a synthetic range and a 32-row literal frame.
+    t0 = time.time()
+    spark.range(0, 1_000_000, 1, cpus).selectExpr("sum(id)").collect()
+    from data_quality_checker_spark.functions.udfs import get_udfs
+
+    u = get_udfs()
+    warmdf = spark.createDataFrame(
+        [("warm up the workers and models",)] * 64, "transcript string"
+    ).repartition(cpus)
+    warmdf.select(u["langid"]("transcript"), u["perplexity"]("transcript")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    session_warmup = round(time.time() - t0, 3)
+
+    calib_1t, calib_mt = _cpu_calibration(spark, cpus)
+
+    # The content-fingerprint side-table is INGEST work (decode+FFT over
+    # every payload byte, written once per corpus — audiofp.
+    # fingerprint_table), not query work: on the 100 TB deployment it is
+    # produced by the ingest job and every near-dup query reads it.
+    # Build it here untimed (no-op when the versioned /tmp table exists)
+    # and report the cost separately, same policy as session_warmup_sec.
+    t0 = time.time()
+    registry._fps_table(spark, sf_dir)
+    fps_build = round(time.time() - t0, 3)
+
+    extras: dict = {
+        "session_warmup_sec": session_warmup,
+        "cpu_calib_1t_sec": calib_1t,
+        "cpu_calib_mt_sec": calib_mt,
+        "fps_table_build_sec": fps_build,
+    }
+    cold = _run_pass(spark, qs, sf_dir, names)
+    timings = {name: round(dt, 3) for name, (dt, _n) in cold.items()}
+    total = sum(dt for dt, _n in cold.values())
+    if "clips_decisions_labels" in cold:
+        dt, n = cold["clips_decisions_labels"]
+        extras["clips"] = n
+        extras["clips_per_sec"] = round(n / dt, 1)
+    detail: dict = {"skipped": sorted(args.skip)}
+
+    warm: dict[str, float] = {}
+    if not args.cold_only:
+        # Steady-state pass (VERDICT r1 bench hygiene): identical plans on
+        # the now-warm session, run IMMEDIATELY after the cold pass —
+        # before the recall section, whose collects age the session in
+        # ways a per-job cluster driver never sees. Splits session+UDF-
+        # worker warmup (first pass) from steady-state cost so round-over-
+        # round regressions are attributable to plans. Two warm passes,
+        # per-query MIN: this host's throughput swings up to ~3× between
+        # identical runs, so a single warm sample can book a 20 s noise
+        # burst against a 4 s query. The minimum of two samples is the
+        # least-noise-contaminated estimate of steady-state plan cost —
+        # the number that IS comparable round-over-round. Both raw passes
+        # are kept in the detail record.
+        warm_passes = [
+            {n: round(dt, 3) for n, (dt, _rows) in _run_pass(spark, qs, sf_dir, names).items()}
+            for _ in range(2)
+        ]
+        warm = {n: min(w[n] for w in warm_passes) for n in names}
+        detail.update(queries_warm=warm, queries_warm_passes=warm_passes)
+        extras["value_warm"] = round(sum(warm.values()), 3)
+        extras.update(_ann_recall(spark, qs, sf_dir))
 
     # per-query delta vs the latest PARSEABLE recorded round (cold pass)
     here = os.path.dirname(os.path.abspath(__file__))
@@ -432,7 +432,7 @@ def main():
         extras["value_shared_set"] = round(sum(timings[k] for k in shared), 3)
         extras["prev_value_shared_set"] = round(sum(pq[k] for k in shared), 3)
         dw = prev.get("queries_warm") or {}
-        if dw:
+        if warm and dw:
             detail["delta_vs_prev_warm"] = {
                 k: round(warm[k] - dw[k], 3) for k in warm if k in dw
             }

@@ -163,11 +163,11 @@ def generate_media(sf: float, seed: int = SEED) -> pd.DataFrame:
 
 def write_media_parquet(path: str, sf: float, seed: int = SEED) -> None:
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from .generator import _payload_row_group_rows
 
-    df = generate_media(sf, seed)
-    table = pa.Table.from_pandas(df, preserve_index=False)
+    table = pa.Table.from_pandas(generate_media(sf, seed), preserve_index=False)
     # byte-bounded row groups, same ingest discipline as the clips
     # corpus (see generator._payload_row_group_rows)
-    df.to_parquet(path, index=False, row_group_size=_payload_row_group_rows(table))
+    pq.write_table(table, path, row_group_size=_payload_row_group_rows(table))

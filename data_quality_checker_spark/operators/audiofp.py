@@ -34,11 +34,10 @@ Near-dup search then mirrors the text LSH shape, Spark-first:
     bytes — orders of magnitude lighter than shipping audio).
 
 Scale shape: fingerprinting is MAP-ONLY (one Arrow pass, no shuffle);
-pairing shuffles (clip_id, token) pairs — tens of bytes per token, ~1
-token per 32 ms of audio, and ``token_stride`` thins it losslessly-in-
-practice for 10^12-clip runs (any ONE shared token is enough to surface
-a candidate). Dup cliques fan out O(d²) candidate pairs exactly like the
-text LSH tier; the same collapsed-variant escape hatch applies
+pairing shuffles (clip_id, token) pairs — tens of bytes per token, one
+token per sub-fingerprint hop (16 ms of audio). Dup cliques fan out
+O(d²) candidate pairs exactly like the text LSH tier; the same
+collapsed-variant escape hatch applies
 (simdedup.minhash_verified_pairs_collapsed rationale).
 
 Cross-engine exactness: every float op in the sub-fingerprint spec is a
@@ -246,9 +245,9 @@ def audio_fingerprints_dedup(
     )
 
 
-def _token_expr(token_stride: int) -> F.Column:
-    """Catalyst-only token construction: every ``token_stride``-th window
-    of TOKEN_LEN consecutive sub-fingerprints packed into one BIGINT
+def _token_expr() -> F.Column:
+    """Catalyst-only token construction: every window of TOKEN_LEN
+    consecutive sub-fingerprints packed into one BIGINT
     (16 bits each). DEGENERATE windows — all TOKEN_LEN sub-fingerprints
     identical, the signature of digital silence or constant tone — are
     dropped: they carry no discriminative content and at corpus scale one
@@ -266,7 +265,7 @@ def _token_expr(token_stride: int) -> F.Column:
         f"""
         transform(
           filter(
-            sequence(0, size(fp) - {TOKEN_LEN}, {token_stride}),
+            sequence(0, size(fp) - {TOKEN_LEN}, 1),
             p -> NOT ({same})
           ),
           p -> {pack}
@@ -294,7 +293,7 @@ AUTO_TOKEN_DF_MULT = 32
 AUTO_TOKEN_DF_CEILING = 100_000
 
 
-def derive_max_token_df(fps: DataFrame, token_stride: int = 1) -> int:
+def derive_max_token_df(fps: DataFrame) -> int:
     """Corpus-derived hub-token document-frequency cap (the spec-v5
     "auto" mode). One slim aggregation job over the distinct-fingerprint
     token stream: count postings and distinct tokens, take the ceiling
@@ -307,7 +306,7 @@ def derive_max_token_df(fps: DataFrame, token_stride: int = 1) -> int:
         fps.where(F.col("n_subfp") >= TOKEN_LEN)
         .select("fp")
         .distinct()
-        .select(F.explode(F.array_distinct(_token_expr(token_stride))).alias("token"))
+        .select(F.explode(F.array_distinct(_token_expr())).alias("token"))
         .agg(
             F.count(F.lit(1)).alias("n_post"),
             F.count_distinct("token").alias("n_tok"),
@@ -327,7 +326,6 @@ def derive_max_token_df(fps: DataFrame, token_stride: int = 1) -> int:
 
 def fingerprint_tokens(
     fps: DataFrame,
-    token_stride: int = 1,
     max_token_df: int | str | None = "auto",
 ) -> DataFrame:
     """→ (clip_id, token): each fingerprint row's DISTINCT tokens
@@ -340,7 +338,7 @@ def fingerprint_tokens(
     whether the frame holds clips or payload reps."""
     toks = fps.where(F.col("n_subfp") >= TOKEN_LEN).select(
         "clip_id",
-        F.explode(F.array_distinct(_token_expr(token_stride))).alias("token"),
+        F.explode(F.array_distinct(_token_expr())).alias("token"),
     )
     if max_token_df is None:
         return toks
@@ -349,7 +347,7 @@ def fingerprint_tokens(
         .select("fp")
         .distinct()
         .select(
-            F.explode(F.array_distinct(_token_expr(token_stride))).alias("token")
+            F.explode(F.array_distinct(_token_expr())).alias("token")
         )
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -399,32 +397,29 @@ def fingerprint_tokens(
 
 def fingerprint_candidate_pairs(
     fps: DataFrame,
-    token_stride: int = 1,
-    min_shared_tokens: int = MIN_SHARED_TOKENS,
     max_token_df: int | str | None = "auto",
     toks: DataFrame | None = None,
 ) -> DataFrame:
     """→ (clip_a, clip_b, n_shared) candidate pairs: clips sharing at
-    least ``min_shared_tokens`` distinct tokens. The join key is the
+    least MIN_SHARED_TOKENS distinct tokens. The join key is the
     token VALUE itself — an exact equi-join (shuffle on token), never a
     similarity join; this is the Philips lookup table reshaped for
-    Spark. ``token_stride`` > 1 thins probe-side tokens for web-scale
-    runs.
+    Spark.
 
     The shared-token count is a PRE-AGGREGATION on the slim
     (clip_a, clip_b) stream — the same shuffle the old distinct() paid —
-    and pruning below ``min_shared_tokens`` (the Philips lookup
+    and pruning below MIN_SHARED_TOKENS (the Philips lookup
     discipline: genuine copies match at many aligned positions, noise
     collisions at one) shrinks the downstream fingerprint-array verify
     join by the noise-pair fraction BEFORE any ~90-int array ships.
     Measured on the synthetic corpora every true pair shares ≥18 tokens
     and no noise pair exists, so 2 is conservative; a real 10^12-clip
     corpus is where the prune earns its keep. The floor is ADAPTIVE
-    (spec v4): a pair's threshold is least(min_shared_tokens, tokens(a),
+    (spec v4): a pair's threshold is least(MIN_SHARED_TOKENS, tokens(a),
     tokens(b)) — a ~130 ms clip yields exactly one token, and a fixed
     floor of 2 would silently exempt its transcoded copies from content
     dedup (same cliff for mostly-silent clips whose degenerate windows
-    `_token_expr` drops, and it widens with token_stride).
+    `_token_expr` drops).
 
     ``max_token_df`` — the hub-skew guard for web-scale corpora: a token
     whose posting list holds d clips emits d·(d-1)/2 pair rows from a
@@ -446,7 +441,7 @@ def fingerprint_candidate_pairs(
     frame to share it across consumers (the streaming tier probes the
     registry with the same stream)."""
     if toks is None:
-        toks = fingerprint_tokens(fps, token_stride, max_token_df)
+        toks = fingerprint_tokens(fps, max_token_df)
     # per-clip distinct-token counts for the adaptive floor (slim agg;
     # computed AFTER the df cap so a stop-token-only clip keeps floor
     # semantics over its surviving tokens)
@@ -464,7 +459,7 @@ def fingerprint_candidate_pairs(
         .join(cb, "clip_b")
         .where(
             F.col("n_shared")
-            >= F.least(F.lit(min_shared_tokens), F.col("n_tok_a"), F.col("n_tok_b"))
+            >= F.least(F.lit(MIN_SHARED_TOKENS), F.col("n_tok_a"), F.col("n_tok_b"))
         )
         .select("clip_a", "clip_b", "n_shared")
     )
@@ -500,13 +495,11 @@ def fingerprint_table(clips: DataFrame, path: str) -> None:
 def fingerprint_neardup_pairs(
     clips: DataFrame,
     max_ber: float = 0.25,
-    token_stride: int = 1,
-    min_shared_tokens: int = MIN_SHARED_TOKENS,
     fps: DataFrame | None = None,
     max_token_df: int | str | None = "auto",
 ) -> DataFrame:
     """→ (clip_a, clip_b, n_overlap, ber): content near-duplicate pairs —
-    candidates by ≥min_shared_tokens shared tokens, verified by
+    candidates by ≥MIN_SHARED_TOKENS shared tokens, verified by
     bit-error-rate over the aligned common prefix (full-clip transforms
     keep offset 0; Philips' published decision threshold for a 3 s block
     is BER < 0.35, we default stricter). All verification math is
@@ -525,9 +518,7 @@ def fingerprint_neardup_pairs(
     returning, so the convenience path leaks no cached frames."""
 
     def pairs_of(fp_frame: DataFrame) -> DataFrame:
-        cand = fingerprint_candidate_pairs(
-            fp_frame, token_stride, min_shared_tokens, max_token_df
-        )
+        cand = fingerprint_candidate_pairs(fp_frame, max_token_df)
         a = fp_frame.select(
             F.col("clip_id").alias("clip_a"),
             F.col("fp").alias("fp_a"),
@@ -595,7 +586,6 @@ def content_dedup_decisions(
     clips: DataFrame,
     decisions: DataFrame,
     max_ber: float = 0.1,
-    token_stride: int = 1,
     fps: DataFrame | None = None,
     max_token_df: int | str | None = "auto",
 ) -> DataFrame:
@@ -667,11 +657,10 @@ def content_dedup_decisions(
         # below see the identical integer (two independent derivations
         # would be equal anyway — same stats — but pay a second job)
         if max_token_df == "auto":
-            max_token_df = derive_max_token_df(rep_fps, token_stride)
+            max_token_df = derive_max_token_df(rep_fps)
         pairs = fingerprint_neardup_pairs(
             clips,
             max_ber=max_ber,
-            token_stride=token_stride,
             fps=rep_fps,
             max_token_df=max_token_df,
         ).select(F.col("clip_a").alias("doc_a"), F.col("clip_b").alias("doc_b"))
@@ -687,7 +676,7 @@ def content_dedup_decisions(
         # pair with ANYTHING in the per-clip formulation — its exact dups
         # stay unflagged there, so they must stay unflagged here too.
         toked = (
-            fingerprint_tokens(rep_fps, token_stride, max_token_df)
+            fingerprint_tokens(rep_fps, max_token_df)
             .select(F.col("clip_id").alias("rep_id"))
             .distinct()
         )

@@ -32,7 +32,8 @@ Why this shape survives 100 TB:
     on a dup-free corpus nothing is decoded twice;
   * the text-scoring pass reads NO payload bytes (column pruning keeps
     the scan slim) — it is pure compute and scales linearly with cores
-    (measured 0.87 scaling efficiency 8→32 cores, BENCH/BASELINE.md);
+    (measured 0.98 scaling efficiency 1→4 cores,
+    BENCH/scaling_pairs_r05_runK.json);
   * ``hashed`` is a few dozen bytes/row — cacheable at any scale — and
     feeds every consumer that needs (clip_id → sha): dedup keepers, the
     representative selection, the text join, lineage bucketing;

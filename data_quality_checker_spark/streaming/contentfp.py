@@ -255,7 +255,7 @@ def process_content_increment(
                 # legacy-row backfill: registries written before n_tok
                 # existed reconstruct the keeper's distinct-token count
                 # from its STORED fp (size of the deduped token array —
-                # pre-cap and at the probe's stride, the best
+                # pre-cap, the best
                 # reconstruction available), instead of assuming ≥MIN:
                 # a pre-upgrade single-token keeper stays matchable by
                 # multi-token probes (the v3 cliff, closed for old
@@ -264,7 +264,7 @@ def process_content_increment(
                     F.col("clip_id").alias("clip_a"),
                     F.coalesce(
                         F.col("n_tok"),
-                        F.size(F.array_distinct(_token_expr(1))).cast(
+                        F.size(F.array_distinct(_token_expr())).cast(
                             "long"
                         ),
                     ).alias("n_tok_a"),

@@ -4,7 +4,8 @@ as silent 2× slowdowns at 100 TB.
 
 Found-the-hard-way catalog:
 * deterministic pandas UDFs get PRUNED under a bare count() — so a
-  "benchmark" that counts measures nothing (tools/_scale_worker.py);
+  "benchmark" that counts measures nothing (the bench_scaling.py legs
+  and bench.py's timed queries write to the noop sink instead);
 * an unpersisted enriched frame consumed by two branches runs the whole
   Arrow UDF pass twice;
 * a not-yet-materialized cache consumed by two branches in one action

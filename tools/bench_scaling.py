@@ -1,37 +1,58 @@
-"""Scaling-efficiency bench (the BASELINE.json two-cluster-size criterion,
-sandbox proxy): the identical job + input at local[N] and local[4N],
-reporting throughput at both and efficiency = (throughput_4N /
-throughput_N) / 4. Results → BENCH/BASELINE.md.
+"""Scaling-efficiency bench: BASELINE.json's "throughput scaling
+efficiency ≥ 0.8 between N and 4N executors", sandbox proxy. The
+identical job on the identical input at local[small] and local[large];
+efficiency = (throughput_large / throughput_small) / (large / small).
 
-Two workloads are measured:
+Two workloads:
 
-* **full pipeline** — enrich (audio decode + langid + perplexity + scrub
-  over Arrow) + salted dedup + rules. The audio payload path moves
-  ~4 bytes of memory traffic per payload byte across the JVM↔Python
-  boundary; on a single-bus local[N] VM this saturates DRAM bandwidth
-  well before 32 cores, so the sandbox structurally under-reports the
-  scaling a real 4×-executor cluster (4× memory buses, 4× disk
-  spindles) would show.
-* **text-scoring stage** — the same job minus the payload columns: pure
-  compute over Arrow batches. This is the stage whose scaling the
-  single-bus VM can measure faithfully.
+* **full** — ``run_pipeline`` (audio decode + langid + perplexity +
+  scrub over Arrow, salted dedup, rules) → decisions, noop write. Every
+  audio payload crosses the JVM→Python boundary, so on a single-bus VM
+  this saturates DRAM bandwidth before it runs out of cores: the proxy
+  under-reports what 4× executors (4× memory buses) would show.
+* **text** — ``pipeline.enrich_text`` (the text-scoring stage) only, noop
+  write: pure compute over Arrow batches, no payload column. The stage
+  whose scaling a single-bus VM measures faithfully.
 
-Corpus: the deterministic sf0.1 synthetic corpus replicated R times with
-remapped clip_ids (heavy duplicate skew by construction — the salted
-two-phase SHA-1 dedup runs in its design regime), written as 128 parquet
-files so scan parallelism is file-granular.
+Corpus: the deterministic sf0.1 clips corpus replicated ``--replicas``
+times with remapped clip_ids (heavy duplicate skew by construction, so
+the salted two-phase SHA-1 dedup runs in its design regime), written as
+128 parquet files so scan parallelism is file-granular.
 
-Usage: python tools/bench_scaling.py [--replicas 96] [--small 2 --large 8]
-(default N=1 vs 4N=4, median of --repeats 3 — the pair below this
-host's ~1.5 GB/s aggregate memory-bandwidth ceiling AND below its run-
-to-run variance at high core counts; see BENCH/BASELINE.md)
+On the shared 32-vCPU VM of the r05 runs, load bursts swung any single
+leg ±30%, and multi-core legs degraded 2× while single-core legs did
+not. So:
+
+* each leg runs in a fresh interpreter and JVM (a spawned process);
+  timing excludes session start and Python-worker warmup;
+* legs alternate small/large, so the two legs of a pair see the same
+  host mode;
+* before every leg a 4-process numpy probe records its dilation (4-proc
+  per-proc rate vs 1-proc rate, ideal 1.0), and ``/proc/stat`` stamps
+  the leg's steal fraction and busy cores. A pair is clean when both
+  legs' dilation is ≤ CLEAN_DILATION; the headline is the median
+  efficiency over clean pairs (every pair is kept in the JSON).
+
+Usage:
+  python tools/bench_scaling.py [--pairs 7] [--text-pairs 3]
+      [--small 1 --large 4] [--replicas 96] [--clean-target 0]
+      [--tag r05] [--wait-quiet MIN]
+``--wait-quiet MIN`` polls the probe every QUIET_POLL_SEC and starts
+after two consecutive reads below QUIET_DILATION; if no such window
+comes within MIN minutes it prints WAITED_OUT and exits 0, so an
+unattended run never records a knowingly dirty measurement.
+
+Writes BENCH/scaling_pairs_<tag>.json. BENCH/BASELINE.md is curated by
+hand from these files.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import multiprocessing as mp
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -39,167 +60,265 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+CLEAN_DILATION = 1.35
+QUIET_DILATION = 1.25
+QUIET_POLL_SEC = 300.0
+LEG_TIMEOUT_SEC = 3600
 
-def build_corpus(replicas: int) -> str:
-    path = f"/tmp/dqc_scale_corpus_r{replicas}.parquet"
-    if os.path.exists(path):
-        return path
+
+def _spawn(target, *args):
+    """Run ``target(*args)`` in a fresh interpreter (spawn context, so a
+    fresh JVM too) and return its result."""
+    ctx = mp.get_context("spawn")
+    recv, send = ctx.Pipe(duplex=False)
+    proc = ctx.Process(target=_send_result, args=(send, target, *args))
+    proc.start()
+    send.close()
+    try:
+        if not recv.poll(LEG_TIMEOUT_SEC):
+            proc.terminate()
+            raise RuntimeError(f"{target.__name__}{args} timed out")
+        try:
+            return recv.recv()
+        except EOFError:
+            proc.join()
+            raise RuntimeError(
+                f"{target.__name__}{args} died (exit {proc.exitcode})"
+            ) from None
+    finally:
+        proc.join()
+
+
+def _send_result(conn, target, *args) -> None:
+    conn.send(target(*args))
+    conn.close()
+
+
+def _write_corpus(replicas: int, path: str) -> None:
     from pyspark.sql import functions as F
 
     from data_quality_checker_spark.queries import _clips_path
     from data_quality_checker_spark.session import get_spark
 
     spark = get_spark(app_name="dqc-scale-corpus", master="local[8]")
-    base = spark.read.parquet(_clips_path("/root/testdata/sf0.1"))
-    parts = [
-        base.withColumn("clip_id", F.concat(F.col("clip_id"), F.lit(f"_r{i:02d}")))
-        for i in range(replicas)
-    ]
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    df.repartition(128).write.mode("overwrite").parquet(path)
+    base = spark.read.parquet(_clips_path("sf0.1"))
+    df = base.withColumn("clip_id", F.concat(F.col("clip_id"), F.lit("_r00")))
+    for i in range(1, replicas):
+        df = df.unionByName(
+            base.withColumn("clip_id", F.concat(F.col("clip_id"), F.lit(f"_r{i:02d}")))
+        )
+    df.repartition(128).write.parquet(path)
     spark.stop()
-    return path
+
+
+def build_corpus(replicas: int) -> str:
+    from data_quality_checker_spark.queries import _publish
+
+    return _publish(
+        f"/tmp/dqc_scale_corpus_r{replicas}.parquet",
+        lambda tmp: _spawn(_write_corpus, replicas, tmp),
+        marker="_SUCCESS",
+    )
 
 
 def warm_cache(path: str) -> None:
     subprocess.run(f"cat {path}/* > /dev/null 2>&1", shell=True)
 
 
-def run_at(corpus: str, cores: int, workload: str = "full", repeats: int = 1) -> dict:
-    """Median-of-repeats: single runs on this shared VM vary ±30% at high
-    core counts (page cache, JIT, host neighbors); the median of 3
-    interleaved repeats is stable to a few percent."""
-    if repeats > 1:
-        runs = sorted(
-            (run_at(corpus, cores, workload) for _ in range(repeats)),
-            key=lambda r: r["seconds"],
-        )
-        med = runs[len(runs) // 2]
-        med = dict(med)
-        med["all_seconds"] = [r["seconds"] for r in runs]
-        return med
-    return _run_once(corpus, cores, workload)
+def _leg(corpus: str, cores: int, workload: str) -> dict:
+    """One timed leg → {"rows", "seconds"}. The warmup materializes the
+    UDF outputs (under a bare count() Catalyst prunes deterministic
+    pandas UDFs out of the plan) and the timed run writes to the noop
+    sink for the same reason."""
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")  # 4N concurrent payload tasks
 
+    from data_quality_checker_spark.pipeline import enrich_text, run_pipeline
+    from data_quality_checker_spark.session import get_spark
 
-def _run_once(corpus: str, cores: int, workload: str = "full") -> dict:
-    env = dict(os.environ)
-    # heap sized for the high-core payload workload (32 concurrent tasks
-    # of ~60 MB Arrow batches + parquet buffers starve an 8g heap)
-    env.setdefault("SPARK_DRIVER_MEMORY", "24g")
-    out = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(REPO, "tools", "_scale_worker.py"),
-            corpus,
-            str(cores),
-            workload,
-        ],
-        capture_output=True, text=True, timeout=3600, env=env,
+    spark = get_spark(
+        app_name=f"dqc-scale-{cores}",
+        master=f"local[{cores}]",
+        shuffle_partitions=cores * 2,
+        # file-granular parallelism: every core gets several input splits
+        extra_conf={"spark.sql.files.maxPartitionBytes": "128m"},
     )
-    lines = [l for l in out.stdout.strip().splitlines() if l.startswith("{")]
-    if not lines:
-        raise RuntimeError(f"worker produced no result: {out.stderr[-500:]}")
-    return json.loads(lines[-1])
+    clips = spark.read.parquet(corpus)
+    run_pipeline(spark, clips.limit(32 * cores).repartition(cores)).decisions.collect()
+    spark.catalog.clearCache()
+
+    t0 = time.time()
+    out = enrich_text(clips) if workload == "text" else run_pipeline(spark, clips).decisions
+    out.write.format("noop").mode("overwrite").save()
+    dt = time.time() - t0
+    n = clips.count()
+    spark.stop()
+    return {"rows": n, "seconds": round(dt, 3)}
 
 
-def main():
+def _cpu_stat() -> tuple[float, float]:
+    """(busy, steal) jiffies from /proc/stat — busy = user+nice+system."""
+    with open("/proc/stat") as fh:
+        f = fh.readline().split()
+    vals = [float(x) for x in f[1:9]]
+    return vals[0] + vals[1] + vals[2], vals[7]
+
+
+def run_leg(corpus: str, cores: int, workload: str) -> dict:
+    """``_leg`` in a fresh process, stamped with what the host did during
+    it: steal_frac = Δsteal/(Δbusy+Δsteal) from /proc/stat (a shared
+    VM's steal spikes under sustained multi-core load, throttling large legs
+    while leaving single-core legs untouched), and busy_cores = Δbusy
+    jiffies / wall / USER_HZ, the host's actual concurrency grant over
+    the leg (it tells "granted 4 cores but starved of bandwidth" from
+    "never granted the cores"). Wall includes JVM startup, so busy_cores
+    slightly understates the grant during the timed section."""
+    b0, s0 = _cpu_stat()
+    t0 = time.time()
+    r = _spawn(_leg, corpus, cores, workload)
+    wall = time.time() - t0
+    b1, s1 = _cpu_stat()
+    db, dst = b1 - b0, s1 - s0
+    r["rows_per_sec"] = round(r["rows"] / r["seconds"], 1)
+    r["steal_frac"] = round(dst / (db + dst), 3) if (db + dst) > 0 else 0.0
+    r["busy_cores"] = round(db / wall / os.sysconf("SC_CLK_TCK"), 2) if wall > 0 else None
+    return r
+
+
+def _probe_work(_i: int) -> float:
+    """~1.2 s of sustained float32 dot work (compute + 48 MB of memory
+    traffic per pass — past LLC, so bandwidth participates). Timed
+    INTERNALLY and returned as a rate (iters/sec) so pool fork/start
+    overhead never contaminates the measurement."""
+    import numpy as np
+
+    a = np.ones(12_000_000, dtype=np.float32)
+    t0 = time.time()
+    s, it = 0.0, 0
+    while time.time() - t0 < 1.2:
+        s += float(a @ a)
+        it += 1
+    return it / (time.time() - t0)
+
+
+def host_probe(procs: int = 4) -> dict:
+    """Dilation of `procs` concurrent sustained workers vs one:
+    single-proc rate / mean concurrent per-proc rate. 1.0 = host grants
+    full concurrency; bad windows measured 1.5-3×. The pool forks: the
+    parent runs no JVM or threads (corpus build and legs are spawned),
+    and forked workers start their timed windows together."""
+    r1 = _probe_work(0)
+    with mp.get_context("fork").Pool(procs) as pool:
+        rates = pool.map(_probe_work, range(procs))
+    return {"calib_1p_rate": round(r1, 2),
+            "calib_4p_rates": [round(r, 2) for r in rates],
+            "dilation": round(r1 / (sum(rates) / len(rates)), 3)}
+
+
+def wait_quiet(max_wait_min: float) -> bool:
+    """True once two consecutive probes read below QUIET_DILATION;
+    False if ``max_wait_min`` passes first."""
+    deadline = time.time() + max_wait_min * 60.0
+    consecutive = 0
+    while time.time() < deadline:
+        d = host_probe()["dilation"]
+        print(f"probe dilation={d:.3f} (clean<{QUIET_DILATION})", flush=True)
+        consecutive = consecutive + 1 if d < QUIET_DILATION else 0
+        if consecutive >= 2:
+            return True
+        time.sleep(max(0.0, min(QUIET_POLL_SEC, deadline - time.time())))
+    return False
+
+
+def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--replicas", type=int, default=96)
+    ap.add_argument("--pairs", type=int, default=7)
+    ap.add_argument("--text-pairs", type=int, default=3)
     ap.add_argument("--small", type=int, default=1)
     ap.add_argument("--large", type=int, default=4)
-    ap.add_argument("--repeats", type=int, default=3)
+    ap.add_argument("--replicas", type=int, default=96)
+    ap.add_argument("--clean-target", type=int, default=0,
+                    help="stop a workload early once this many clean pairs "
+                         "exist (0 = run all pairs)")
+    ap.add_argument("--tag", default="r05")
+    ap.add_argument("--wait-quiet", type=float, default=None, metavar="MIN",
+                    help="start only after two consecutive clean host probes; "
+                         "give up after MIN minutes")
     args = ap.parse_args()
 
     corpus = build_corpus(args.replicas)
     warm_cache(corpus)
-    results = {}
-    for workload in ("full", "text"):
-        r_small = run_at(corpus, args.small, workload, args.repeats)
-        r_large = run_at(corpus, args.large, workload, args.repeats)
-        factor = args.large / args.small
-        eff = (r_large["rows_per_sec"] / r_small["rows_per_sec"]) / factor
-        results[workload] = {
-            "small": r_small,
-            "large": r_large,
-            "efficiency": round(eff, 3),
-        }
-    rows = results["full"]["small"]["rows"]
+    if args.wait_quiet is not None and not wait_quiet(args.wait_quiet):
+        print("WAITED_OUT — no quiet window; nothing run", flush=True)
+        return 0
     factor = args.large / args.small
+
     out = {
         "corpus": corpus,
-        "rows": rows,
+        "small": args.small,
+        "large": args.large,
         "scaling_factor": factor,
-        **results,
-        "ts": time.strftime("%Y-%m-%d %H:%M:%S"),
+        "clean_dilation_threshold": CLEAN_DILATION,
+        "pairs": {"full": [], "text": []},
     }
-    print(json.dumps(out, indent=2))
+    for workload, n_pairs in (("full", args.pairs), ("text", args.text_pairs)):
+        clean = 0
+        for i in range(n_pairs):
+            cal_s = host_probe()
+            r_s = run_leg(corpus, args.small, workload)
+            cal_l = host_probe()
+            r_l = run_leg(corpus, args.large, workload)
+            eff = (r_l["rows_per_sec"] / r_s["rows_per_sec"]) / factor
+            out.setdefault(f"{workload}_rows", r_s["rows"])
+            is_clean = (cal_s["dilation"] <= CLEAN_DILATION
+                        and cal_l["dilation"] <= CLEAN_DILATION)
+            # host-normalized: the large leg can capture at most
+            # large/dilation effective cores — eff × dilation isolates the
+            # pipeline's software scaling from the host's concurrency
+            # grant at that moment (disclosed alongside raw, never
+            # substituted for it)
+            pair = {
+                "pair": i + 1,
+                "small_sec": r_s["seconds"],
+                "large_sec": r_l["seconds"],
+                "small_rps": r_s["rows_per_sec"],
+                "large_rps": r_l["rows_per_sec"],
+                "efficiency": round(eff, 3),
+                "efficiency_host_normalized": round(eff * cal_l["dilation"], 3),
+                "steal_small": r_s["steal_frac"],
+                "steal_large": r_l["steal_frac"],
+                "busy_cores_small": r_s["busy_cores"],
+                "busy_cores_large": r_l["busy_cores"],
+                "calib_small": cal_s,
+                "calib_large": cal_l,
+                "clean_host": is_clean,
+            }
+            out["pairs"][workload].append(pair)
+            print(json.dumps({"workload": workload, **pair}), flush=True)
+            clean += int(is_clean)
+            if args.clean_target and clean >= args.clean_target:
+                break
+        ps = out["pairs"][workload]
+        if not ps:  # a workload run with 0 pairs has no summary
+            continue
+        effs = [p["efficiency"] for p in ps]
+        ceffs = [p["efficiency"] for p in ps if p["clean_host"]]
+        neffs = [p["efficiency_host_normalized"] for p in ps]
+        out[f"{workload}_median_eff"] = round(statistics.median(effs), 3)
+        out[f"{workload}_mean_eff"] = round(statistics.mean(effs), 3)
+        out[f"{workload}_median_eff_host_normalized"] = round(
+            statistics.median(neffs), 3)
+        if ceffs:
+            out[f"{workload}_clean_median_eff"] = round(statistics.median(ceffs), 3)
+            out[f"{workload}_clean_pairs"] = len(ceffs)
 
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    md = os.path.join(REPO, "BENCH", "BASELINE.md")
-    f_, t_ = results["full"], results["text"]
-    with open(md, "w") as fh:
-        fh.write(f"""# BENCH — scaling-efficiency evidence (BASELINE.json criterion)
-
-North rule: throughput scaling efficiency ≥ 0.8 between N and 4N
-executors. Sandbox proxy (no real cluster): the identical quality-filter
-job on the identical input at `local[{args.small}]` vs `local[{args.large}]`,
-fresh JVM per run, page cache warmed, timing excludes session startup and
-Python-worker warmup.
-
-Corpus: deterministic sf0.1 synthetic clips corpus × {args.replicas} replicas =
-**{rows} clips** (~{args.replicas * 0.11:.0f} GB), heavy duplicate skew by
-construction — the salted two-phase SHA-1 dedup runs in its design regime.
-
-## Full pipeline (audio decode + langid + perplexity + scrub + dedup + rules)
-
-| parallelism | wall (s) | clips/sec |
-|---|---|---|
-| local[{args.small}] | {f_['small']['seconds']} | {f_['small']['rows_per_sec']} |
-| local[{args.large}] | {f_['large']['seconds']} | {f_['large']['rows_per_sec']} |
-
-Scaling efficiency = ({f_['large']['rows_per_sec']} / {f_['small']['rows_per_sec']}) / {factor:g}
-= **{f_['efficiency']}**
-
-## Text-scoring stage (same job minus the binary payload columns)
-
-| parallelism | wall (s) | clips/sec |
-|---|---|---|
-| local[{args.small}] | {t_['small']['seconds']} | {t_['small']['rows_per_sec']} |
-| local[{args.large}] | {t_['large']['seconds']} | {t_['large']['rows_per_sec']} |
-
-Scaling efficiency = ({t_['large']['rows_per_sec']} / {t_['small']['rows_per_sec']}) / {factor:g}
-= **{t_['efficiency']}**
-
-## Why the two numbers differ — and what a real 4× cluster would show
-
-The full pipeline ships every audio payload across the JVM→Arrow→Python
-boundary (≈4 bytes of DRAM traffic per payload byte after parquet decode,
-Arrow serialization, socket copy, and Python materialization). On this
-single-VM proxy all {args.large} cores share ONE memory bus, so the payload
-path saturates bandwidth — adding cores adds contention, not throughput
-(verified by stage isolation: the JVM-only payload scan scales ≈3.3×
-from 8→32 cores; the identical scan + Arrow hop to Python does not).
-On a real cluster the 4N-executor configuration has 4× the memory buses
-and 4× the storage bandwidth, which is exactly the resource this stage
-is bound on; the compute-bound text stage — which the proxy CAN measure
-faithfully — demonstrates the job's software scaling.
-
-Mitigations already in the pipeline (measured, kept):
-- audio stats computed on raw int16 (no float64 blow-up: 4× less traffic;
-  turned the audio stage from anti-scaling into positive scaling),
-- Arrow batch 1024 (fewer JVM↔Python round trips at high worker counts),
-- dedup keepers from a JVM-only (clip_id, sha1) scan — the payload never
-  crosses to Python twice,
-- all non-UDF work (rules, dedup, joins, aggregation) stays in
-  whole-stage-codegen JVM execution, which scales cleanly.
-
-Measured {time.strftime('%Y-%m-%d %H:%M:%S')} via
-`python tools/bench_scaling.py --replicas {args.replicas}`.
-""")
-    print(f"wrote {md}")
+    path = os.path.join(REPO, "BENCH", f"scaling_pairs_{args.tag}.json")
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as fh:
+        json.dump(out, fh, indent=2)
+    print(json.dumps({k: v for k, v in out.items() if k != "pairs"}))
+    print(f"wrote {path}", flush=True)
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

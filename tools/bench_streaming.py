@@ -1,8 +1,7 @@
-"""Streaming content-tier throughput (reproducible form of the round-3
-ad-hoc measurement in BENCH/BASELINE.md): run `stream_quality_filter`
-over the sf0.1 corpus twice — content_dedup off and on — with identical
-trigger sizing, and report clips/s for both plus the content-tier cost
-factor.
+"""Streaming content-tier throughput (the streaming row of
+BENCH/BASELINE.md): run `stream_quality_filter` over the sf0.1 corpus
+twice — content_dedup off and on — with identical trigger sizing, and
+report clips/s for both plus the content-tier cost factor.
 
 The corpus is written as N_FILES parquet files so availableNow +
 maxFilesPerTrigger yields a fixed number of micro-batches; state /

@@ -8,7 +8,7 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 
 ``--skip`` excludes named queries (used by the sf10 sweep to leave out
 the one quadratic-BY-DESIGN verification tier whose DuckDB oracle is an
-all-pairs join — see BENCH/BASELINE.md's 100x section for the rationale
+all-pairs join — BENCH/gate_sf10_r05.txt's header gives the rationale
 and the tiers that cover the same semantics at that scale).
 """
 

@@ -26,9 +26,19 @@ from __future__ import annotations
 
 import argparse
 import os
+import sys
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from data_quality_checker_spark.corpus.generator import (  # noqa: E402
+    _payload_row_group_rows,
+)
+from data_quality_checker_spark.corpus.vocab import EN_VOCAB  # noqa: E402
 
 SEED = 20260818
 
@@ -61,12 +71,9 @@ def _write(df: pd.DataFrame, out_dir: str, name: str) -> None:
     # 500k-doc table became one 311 MB group, serializing every doc-scan
     # stage on a single Spark task (doc_fingerprints measured 662 s; the
     # same defect class as corpus/generator._payload_row_group_rows).
-    import pyarrow as pa
-
     table = pa.Table.from_pandas(df, preserve_index=False)
-    avg = max(table.nbytes // max(table.num_rows, 1), 1)
-    rows_per = max(1024, min(table.num_rows or 1, int(64 * 2**20 // avg)))
-    df.to_parquet(tmp, index=False, row_group_size=rows_per)
+    rows_per = _payload_row_group_rows(table, 64 * 2**20)
+    pq.write_table(table, tmp, row_group_size=rows_per)
     os.replace(tmp, path)
     print(f"wrote {path}  rows={len(df)}  rows_per_group={rows_per}")
 
@@ -243,11 +250,6 @@ def _doc_texts(n: int, rng: np.random.Generator) -> list[str]:
     docs; candidate volume then scales ~linearly and the planted
     dup/near-dup structure (below) is what the dedup tier actually finds.
     """
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from data_quality_checker_spark.corpus.vocab import EN_VOCAB
-
     vocab = np.array(
         EN_VOCAB
         + [
