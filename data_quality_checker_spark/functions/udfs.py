@@ -85,10 +85,11 @@ def _audio_stats_core(
     multi-core scaling long before CPUs saturate.
 
     ``with_fp`` additionally computes the Philips content fingerprint
-    (operators/audiofp spec — the SAME resample + sub-fingerprint
-    primitives as audiofp._fp_udf, so the bits are identical) on the
-    already-decoded samples: one payload decode serves both the quality
-    rules and the content-dedup tier.
+    (operators/audiofp spec: resample to FP_SR, then
+    clip_subfingerprints) on the already-decoded samples: one payload
+    decode serves both the quality rules and the content-dedup tier.
+    This is the only fingerprint producer — audiofp.audio_fingerprints
+    selects its (n_subfp, fp) columns.
     """
     if with_fp:
         from ..operators.audio import resample_linear_i16

@@ -55,10 +55,11 @@ under content-preserving transforms.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from ..functions.udfs import get_udfs
+from ..pipeline import hashed_frame
 
 # ---------------------------------------------------------------------------
 # Spec constants (oracle/audio_oracle.py imports these — they ARE the
@@ -103,13 +104,6 @@ TOKEN_LEN = 4           # sub-fingerprints per 64-bit candidate token
 # instead of a (clip_id, token) shuffle.
 FP_SPEC_VERSION = 5
 
-FINGERPRINT_SCHEMA = T.StructType(
-    [
-        T.StructField("n_subfp", T.LongType(), True),
-        T.StructField("fp", T.ArrayType(T.IntegerType()), True),
-    ]
-)
-
 
 def clip_subfingerprints(x16: np.ndarray) -> np.ndarray:
     """Sub-fingerprint sequence (int32, each FP_N_BITS bits; bit 0 =
@@ -134,106 +128,73 @@ def clip_subfingerprints(x16: np.ndarray) -> np.ndarray:
     return (bits * weights).sum(axis=1).astype(np.int32)
 
 
-def _fp_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    from .audio import _decode_iter, resample_linear_i16
-
-    @pandas_udf(FINGERPRINT_SCHEMA)
-    def fp(payload: pd.Series, codec: pd.Series, sr_hz: pd.Series) -> pd.DataFrame:
-        rows = []
-        for decoded in _decode_iter(payload, codec, sr_hz):
-            if decoded is None:
-                rows.append({"n_subfp": None, "fp": None})
-                continue
-            x, sr = decoded
-            x16 = x if sr == FP_SR else resample_linear_i16(x, sr, FP_SR)
-            s = clip_subfingerprints(x16)
-            rows.append({"n_subfp": len(s), "fp": s.tolist()})
-        df = pd.DataFrame(rows, columns=["n_subfp", "fp"])
-        df["n_subfp"] = df["n_subfp"].astype("Int64")
-        return df
-
-    return fp
-
-
 def audio_fingerprints(clips: DataFrame) -> DataFrame:
     """→ (clip_id, n_subfp, fp: array<int>): the robust content
     fingerprint per clip. One map-only Arrow-batched scan (decode +
     resample + FFT inside the batch), no shuffle; undecodable clips keep
     a null row. Clips shorter than FP_FRAME+FP_HOP samples at FP_SR
     (<96 ms) get an empty fingerprint — sub-second exact dups are
-    already covered by the SHA tier."""
-    f = _fp_udf()(F.col("bytes"), F.col("codec"), F.col("sr_hz"))
-    return clips.select("clip_id", f.alias("f")).select("clip_id", "f.*")
+    already covered by the SHA tier. The UDF is the stage graph's
+    ``audio_stats_fp`` (functions/udfs.py), so the standalone scan and
+    the content-dedup tick compute the bits with one implementation."""
+    c = get_udfs()["audio_stats_fp"](F.col("bytes"), F.col("codec"), F.col("sr_hz"))
+    return clips.select("clip_id", c.alias("_c")).select(
+        "clip_id", "_c.n_subfp", "_c.fp"
+    )
 
 
-def payload_reps(clips: DataFrame | None, hashed: DataFrame | None = None) -> DataFrame:
-    """→ (clip_id, rep_id): every clip mapped to the representative
-    (min clip_id) of its distinct (sha1(bytes), codec, sr_hz) decode
-    key — the decode-once-per-distinct-payload discipline's key map.
-    One JVM-only sha1 pass + a slim self-join; the payload never
-    shuffles. Null key components group null-safely (matching groupBy
-    semantics), so byte-identical exact duplicates always share one
-    representative. ``hashed`` — a precomputed (clip_id, sha, codec,
-    sr_hz) frame (pipeline.hashed_frame); pass it (and ``clips=None``)
-    to skip the sha pass when the pipeline already hashed the batch."""
-    if hashed is not None:
-        keyed = hashed.select(
-            "clip_id", F.col("sha").alias("_k"), "codec", "sr_hz"
-        )
-    else:
-        keyed = clips.select(
-            "clip_id", F.sha1("bytes").alias("_k"), "codec", "sr_hz"
-        )
+def payload_reps(hashed: DataFrame) -> DataFrame:
+    """→ (clip_id, rep_id): every row of a ``pipeline.hashed_frame``
+    frame (clip_id, sha, codec, sr_hz) mapped to the representative (min
+    clip_id) of its distinct (sha, codec, sr_hz) decode key — the
+    decode-once-per-distinct-payload discipline's key map. A slim
+    self-join; the payload never shuffles. Null key components group
+    null-safely (matching groupBy semantics), so byte-identical exact
+    duplicates always share one representative."""
     reps = (
-        keyed.groupBy("_k", "codec", "sr_hz")
+        hashed.groupBy("sha", "codec", "sr_hz")
         .agg(F.min("clip_id").alias("rep_id"))
         .select(
-            F.col("_k").alias("_k2"),
+            F.col("sha").alias("_sha2"),
             F.col("codec").alias("_codec2"),
             F.col("sr_hz").alias("_sr2"),
             "rep_id",
         )
     )
-    return keyed.join(
+    return hashed.join(
         reps,
-        F.col("_k").eqNullSafe(F.col("_k2"))
+        F.col("sha").eqNullSafe(F.col("_sha2"))
         & F.col("codec").eqNullSafe(F.col("_codec2"))
         & F.col("sr_hz").eqNullSafe(F.col("_sr2")),
     ).select("clip_id", "rep_id")
 
 
-def audio_fingerprints_dedup(
-    clips: DataFrame, keys: DataFrame | None = None
-) -> DataFrame:
-    """Same output frame as ``audio_fingerprints``, but the decode +
-    resample + FFT runs ONCE per distinct (sha1(bytes), codec, sr_hz)
-    payload key — the decode-once-per-distinct-payload discipline of
+def audio_fingerprints_dedup(clips: DataFrame) -> DataFrame:
+    """→ (clip_id, rep_id, n_subfp, fp): ``audio_fingerprints`` plus each
+    clip's payload representative, with the decode + resample + FFT run
+    ONCE per distinct (sha1(bytes), codec, sr_hz) payload key — the
+    decode-once-per-distinct-payload discipline of
     pipeline.audio_stats_table, applied to the fingerprint scan. The
     fingerprint is a pure function of exactly that key, so byte-identical
     payloads share one by construction; on dup-heavy corpora (the regime
     content dedup exists for) the expensive scan shrinks by the dup
     factor and the per-clip frame is recovered with a slim equi-join
-    (~360 B fp rows, never the payload).
+    (~360 B fp rows, never the payload). This is the one rep-level frame
+    that fingerprint_table writes and the fps=None paths of
+    fingerprint_neardup_pairs / content_dedup_decisions build from.
 
-    Plan shape: payload_reps builds the (clip → rep) key map (one
-    JVM-only sha1 pass, null-safe key grouping — the decode UDF
-    tolerates null codec/sr_hz, WAV headers carry the rate);
-    representative rows are selected with a left-semi join (scan-side
-    filter, payload never shuffles) and fingerprinted map-only; the
-    rep fingerprints join back over the slim map on rep_id. Null-payload
-    and undecodable groups inherit their rep's null fingerprint row,
-    exactly like the plain scan. ``keys`` — pass a precomputed
-    payload_reps frame to share the sha pass with other consumers; when
-    omitted the map is persisted internally (it appears in BOTH the
-    rep-selection and join-back subtrees — unpersisted, each
-    materialization would pay the sha1 payload scan twice). Persist
-    barriers here follow the module discipline: released by the
-    caller's clearCache between jobs (see fingerprint_neardup_pairs)."""
-    if keys is None:
-        keys = payload_reps(clips).persist()
-        keys.count()
+    Plan shape: payload_reps over pipeline.hashed_frame builds the
+    (clip → rep) key map (one JVM-only sha1 pass, null-safe key grouping
+    — the decode UDF tolerates null codec/sr_hz, WAV headers carry the
+    rate); representative rows are selected with a left-semi join
+    (scan-side filter, payload never shuffles) and fingerprinted
+    map-only; the rep fingerprints join back over the slim map on
+    rep_id. Null-payload and undecodable groups inherit their rep's null
+    fingerprint row, exactly like the plain scan. The key map appears in
+    BOTH the rep-selection and join-back subtrees, so it is
+    local-checkpointed here (one eager sha pass; no cache-manager entry
+    to release — the blocks go with the returned frame)."""
+    keys = payload_reps(hashed_frame(clips)).localCheckpoint(eager=True)
     rep_rows = clips.join(
         keys.select(F.col("rep_id").alias("clip_id")).distinct(),
         "clip_id",
@@ -241,7 +202,7 @@ def audio_fingerprints_dedup(
     )
     rep_fps = audio_fingerprints(rep_rows).withColumnRenamed("clip_id", "rep_id")
     return keys.join(rep_fps, "rep_id", "left").select(
-        "clip_id", "n_subfp", "fp"
+        "clip_id", "rep_id", "n_subfp", "fp"
     )
 
 
@@ -293,35 +254,49 @@ AUTO_TOKEN_DF_MULT = 32
 AUTO_TOKEN_DF_CEILING = 100_000
 
 
-def derive_max_token_df(fps: DataFrame) -> int:
-    """Corpus-derived hub-token document-frequency cap (the spec-v5
-    "auto" mode). One slim aggregation job over the distinct-fingerprint
-    token stream: count postings and distinct tokens, take the ceiling
-    mean, clamp to [AUTO_TOKEN_DF_FLOOR, AUTO_TOKEN_DF_CEILING] after
-    the AUTO_TOKEN_DF_MULT multiplier. Pure integer arithmetic — the
-    eager labeler (oracle/audio_oracle.py) recomputes the same number
-    from its dict-based index, so both engines drop exactly the same
-    stop-tokens on any corpus."""
-    row = (
+def _token_df(fps: DataFrame) -> DataFrame:
+    """→ (token, df): each token's document frequency over DISTINCT
+    fingerprint values (the spec-v5 df basis above)."""
+    return (
         fps.where(F.col("n_subfp") >= TOKEN_LEN)
         .select("fp")
         .distinct()
         .select(F.explode(F.array_distinct(_token_expr())).alias("token"))
-        .agg(
-            F.count(F.lit(1)).alias("n_post"),
-            F.count_distinct("token").alias("n_tok"),
-        )
-        .first()
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("df"))
     )
-    if row is None or not row["n_tok"]:
-        return AUTO_TOKEN_DF_FLOOR
-    mean_ceil = -(-int(row["n_post"]) // int(row["n_tok"]))
-    return int(
-        min(
-            AUTO_TOKEN_DF_CEILING,
-            max(AUTO_TOKEN_DF_FLOOR, AUTO_TOKEN_DF_MULT * mean_ceil),
+
+
+def _token_cap(token_df: DataFrame) -> DataFrame:
+    """One-row (_cap) aggregate over a ``_token_df`` frame: the "auto"
+    cap, clamp(FLOOR, MULT × ceil(postings / distinct tokens), CEILING).
+    Pure integer arithmetic — ceil-mean via `div` (no double division,
+    exact past 2^53 postings) — so the eager labeler's
+    oracle_token_cap derives the same number from its dict index."""
+    return token_df.agg(
+        F.sum("df").alias("n_post"), F.count(F.lit(1)).alias("n_tok")
+    ).select(
+        F.when(  # empty corpus: ANSI div-by-zero guard (lazily evaluated)
+            F.col("n_tok") > 0,
+            F.least(
+                F.lit(AUTO_TOKEN_DF_CEILING).cast("long"),
+                F.greatest(
+                    F.lit(AUTO_TOKEN_DF_FLOOR).cast("long"),
+                    F.lit(AUTO_TOKEN_DF_MULT)
+                    * F.expr("(n_post + n_tok - 1) div n_tok"),
+                ),
+            ),
         )
+        .otherwise(F.lit(AUTO_TOKEN_DF_FLOOR).cast("long"))
+        .alias("_cap")
     )
+
+
+def derive_max_token_df(fps: DataFrame) -> int:
+    """Corpus-derived hub-token document-frequency cap (the spec-v5
+    "auto" mode) as a driver-side integer: one job collecting the same
+    ``_token_cap`` aggregate that fingerprint_tokens joins in-plan."""
+    return int(_token_cap(_token_df(fps)).first()["_cap"])
 
 
 def fingerprint_tokens(
@@ -332,64 +307,28 @@ def fingerprint_tokens(
     (array_distinct before the explode — per-row dedup inside Catalyst,
     no shuffle), with stop-tokens above the document-frequency cap
     dropped. ``max_token_df="auto"`` (the default) derives the cap from
-    corpus stats via derive_max_token_df; pass an int to pin it or None
-    to opt out entirely. The df filter's basis is DISTINCT FINGERPRINT
-    VALUES (see derive_max_token_df) so the same tokens are dropped
-    whether the frame holds clips or payload reps."""
+    corpus stats (``_token_cap``); pass an int to pin it or None to opt
+    out entirely. The df filter's basis is DISTINCT FINGERPRINT VALUES
+    (see ``_token_df``) so the same tokens are dropped whether the frame
+    holds clips or payload reps."""
     toks = fps.where(F.col("n_subfp") >= TOKEN_LEN).select(
         "clip_id",
         F.explode(F.array_distinct(_token_expr())).alias("token"),
     )
     if max_token_df is None:
         return toks
-    df_tbl = (
-        fps.where(F.col("n_subfp") >= TOKEN_LEN)
-        .select("fp")
-        .distinct()
-        .select(
-            F.explode(F.array_distinct(_token_expr())).alias("token")
-        )
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
+    df_tbl = _token_df(fps)
     if max_token_df == "auto":
-        # The cap is derived INSIDE the same plan (a broadcast one-row
-        # aggregate over df_tbl joined back as the filter bound) instead
-        # of an eager derive_max_token_df job: the df_tbl exchange is
-        # then REUSED between the agg and the filter branch, so the
-        # distinct-fp token stream is scanned once per query, not twice
-        # per call. Integer arithmetic matches derive_max_token_df /
-        # the eager labeler exactly: ceil-mean via `div` (no double
-        # division — exact past 2^53 postings), then MULT/clamp.
-        cap = (
-            df_tbl.agg(
-                F.sum("df").alias("n_post"), F.count(F.lit(1)).alias("n_tok")
-            )
-            .select(
-                F.when(  # empty corpus: ANSI div-by-zero guard (lazily
-                    F.col("n_tok") > 0,  # evaluated); FLOOR matches
-                    F.least(  # derive_max_token_df's empty case
-                        F.lit(AUTO_TOKEN_DF_CEILING).cast("long"),
-                        F.greatest(
-                            F.lit(AUTO_TOKEN_DF_FLOOR).cast("long"),
-                            F.lit(AUTO_TOKEN_DF_MULT)
-                            * F.expr("(n_post + n_tok - 1) div n_tok"),
-                        ),
-                    ),
-                )
-                .otherwise(F.lit(AUTO_TOKEN_DF_FLOOR).cast("long"))
-                .alias("_cap")
-            )
-        )
-        # 1-row broadcast join (plans as BroadcastNestedLoopJoin with
-        # the df<=_cap bound as its condition — LINEAR, build side is
-        # one row; the same allow-listed shape as the registry's 1-row
-        # scalar crossJoins). AQE reuses the df_tbl exchange between
-        # this branch and the cap aggregate at runtime.
-        rare = (
-            df_tbl.join(F.broadcast(cap), F.col("df") <= F.col("_cap"))
-            .select("token")
-        )
+        # The cap is derived INSIDE the same plan (no eager job): a
+        # 1-row broadcast join (plans as BroadcastNestedLoopJoin with the
+        # df<=_cap bound as its condition — LINEAR, build side is one
+        # row; the same allow-listed shape as the registry's 1-row scalar
+        # crossJoins). AQE reuses the df_tbl exchange between this branch
+        # and the cap aggregate, so the distinct-fp token stream is
+        # scanned once.
+        rare = df_tbl.join(
+            F.broadcast(_token_cap(df_tbl)), F.col("df") <= F.col("_cap")
+        ).select("token")
     else:
         rare = df_tbl.where(F.col("df") <= max_token_df).select("token")
     return toks.join(rare, "token")
@@ -431,7 +370,7 @@ def fingerprint_candidate_pairs(
     over the slim token stream); genuine copies still match on their
     many rare tokens — the inverse-document-frequency argument of the
     published Philips lookup discipline. ON by default since spec v5
-    ("auto": corpus-derived, see derive_max_token_df — the FLOOR keeps
+    ("auto": corpus-derived, see ``_token_cap`` — the FLOOR keeps
     every token of a small corpus, so test/sf-scale semantics are
     unchanged); ``None`` is the explicit opt-out. The semantic tradeoff
     of ANY df cap: content popular enough that its own distinct variants
@@ -466,30 +405,38 @@ def fingerprint_candidate_pairs(
 
 
 def fingerprint_table(clips: DataFrame, path: str) -> None:
-    """Materialize the per-clip fingerprints as a parquet side-table —
-    the build-once/probe-many shape (same discipline as the IVF index
-    build in operators/ann.py). Fingerprinting is the expensive stage
-    (decode + resample + FFT over every payload byte); on a 100 TB
-    corpus it runs ONCE per ingest and every downstream consumer
-    (near-dup pairing, clustering, content-dedup decisions, streaming
-    registry seeding) reads the ~90-int rows instead of re-decoding
-    audio. The build decodes once per DISTINCT payload — at ingest the
-    corpus still carries its duplicates, which is precisely when the rep
-    discipline pays — and the rows carry ``rep_id`` (the clip's
-    payload_reps representative) so consumers needing the exact-dup
-    group map (content_dedup_decisions' rep-level collapse) read it here
-    instead of re-hashing the payload. Write is plain parquet; callers
-    own tmp+rename atomicity (see queries._fps_table)."""
-    keys = payload_reps(clips).persist()
-    keys.count()
-    try:
-        audio_fingerprints_dedup(clips, keys=keys).join(keys, "clip_id").where(
-            F.col("fp").isNotNull()
-        ).select("clip_id", "rep_id", "n_subfp", "fp").write.mode(
-            "overwrite"
-        ).parquet(path)
-    finally:
-        keys.unpersist()
+    """Materialize the fingerprints as a parquet side-table of
+    (clip_id, rep_id, n_subfp, fp) rows — the build-once/probe-many
+    shape (same discipline as the IVF index build in operators/ann.py).
+    Fingerprinting is the expensive stage (decode + resample + FFT over
+    every payload byte); on a 100 TB corpus it runs ONCE per ingest and
+    every downstream consumer (near-dup pairing, clustering,
+    content-dedup decisions, streaming registry seeding) reads the
+    ~90-int rows instead of re-decoding audio. The build is
+    audio_fingerprints_dedup — one decode per DISTINCT payload, which
+    pays at ingest, when the corpus still carries its duplicates — and
+    ``rep_id`` gives content_dedup_decisions its exact-dup group map
+    without re-hashing the payload. Undecodable clips (null fp) are
+    left out. Write is plain parquet; callers own tmp+rename atomicity
+    (see queries._fps_table)."""
+    audio_fingerprints_dedup(clips).where(F.col("fp").isNotNull()).write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
+def _verified_pairs(cand: DataFrame, fps: DataFrame, max_ber: float) -> DataFrame:
+    """Candidate (clip_a, clip_b) pairs with both sides' fingerprints
+    joined from ``fps`` (clip_id, n_subfp, fp), BER-verified by
+    ``with_ber``."""
+
+    def side(s: str) -> DataFrame:
+        return fps.select(
+            F.col("clip_id").alias(f"clip_{s}"),
+            F.col("fp").alias(f"fp_{s}"),
+            F.col("n_subfp").alias(f"n_{s}"),
+        )
+
+    return with_ber(cand.join(side("a"), "clip_a").join(side("b"), "clip_b"), max_ber)
 
 
 def fingerprint_neardup_pairs(
@@ -510,51 +457,28 @@ def fingerprint_neardup_pairs(
     ``fps`` — a precomputed fingerprint frame/table (fingerprint_table).
     Pass it whenever fingerprints already exist: the decode+FFT scan is
     ~75% of this operator's wall-time and is pure recomputation when a
-    fingerprint table is on disk. Without it the frame is computed and
-    persisted here (three consumers — token side a, token side b, verify
-    join — would otherwise re-run the scan), the pair output is
-    materialized eagerly (localCheckpoint — pairs are slim, bounded by
-    near-dup volume), and the internal persists are released before
-    returning, so the convenience path leaks no cached frames."""
-
-    def pairs_of(fp_frame: DataFrame) -> DataFrame:
-        cand = fingerprint_candidate_pairs(fp_frame, max_token_df)
-        a = fp_frame.select(
-            F.col("clip_id").alias("clip_a"),
-            F.col("fp").alias("fp_a"),
-            F.col("n_subfp").alias("n_a"),
+    fingerprint table is on disk. Without it the audio_fingerprints_dedup
+    frame is built and local-checkpointed here (three consumers — token
+    side a, token side b, verify join — would otherwise re-run the scan);
+    no cached frame is left behind."""
+    if fps is None:
+        fps = (
+            audio_fingerprints_dedup(clips)
+            .where(F.col("fp").isNotNull())
+            .localCheckpoint(eager=True)
         )
-        b = fp_frame.select(
-            F.col("clip_id").alias("clip_b"),
-            F.col("fp").alias("fp_b"),
-            F.col("n_subfp").alias("n_b"),
-        )
-        return with_ber(cand.join(a, "clip_a").join(b, "clip_b"), max_ber).select(
-            "clip_a", "clip_b", "n_overlap", "ber"
-        )
-
-    if fps is not None:
-        return pairs_of(fps)
-    keys = payload_reps(clips).persist()
-    keys.count()
-    fps_local = (
-        audio_fingerprints_dedup(clips, keys=keys)
-        .where(F.col("fp").isNotNull())
-        .persist()
+    cand = fingerprint_candidate_pairs(fps, max_token_df)
+    return _verified_pairs(cand, fps, max_ber).select(
+        "clip_a", "clip_b", "n_overlap", "ber"
     )
-    fps_local.count()
-    try:
-        return pairs_of(fps_local).localCheckpoint(eager=True)
-    finally:
-        fps_local.unpersist()
-        keys.unpersist()
 
 
 def with_ber(pairs_with_fps: DataFrame, max_ber: float) -> DataFrame:
     """Append (n_overlap, ber) to a frame carrying (fp_a, n_a, fp_b,
     n_b) and keep rows with ber ≤ max_ber — the shared verification
-    stage of the batch near-dup pairing above and the streaming
-    cross-batch probe (streaming/contentfp.py). All whole-stage codegen.
+    stage of the near-dup pairing above, the content verdicts below and
+    the streaming cross-batch probe (streaming/contentfp.py). All
+    whole-stage codegen.
 
     Slice BOTH arrays to the common prefix before zip_with: zip_with
     pads the shorter array with nulls, so on unequal-length pairs
@@ -580,26 +504,112 @@ def with_ber(pairs_with_fps: DataFrame, max_ber: float) -> DataFrame:
 
 CONTENT_DUP_RULE = "content_duplicate"
 CONTENT_DUP_SEVERITY = "medium"  # same tier as the byte-level duplicate rule
+# BER bound of a verified CONTENT match — batch post-pass and streaming
+# tier alike (stricter than the pair operator's 0.25 default).
+CONTENT_MAX_BER = 0.1
+
+
+def content_verdicts(
+    keys: DataFrame,
+    fps: DataFrame,
+    toks: DataFrame,
+    registry: DataFrame | None = None,
+) -> DataFrame:
+    """→ (clip_id, content_keeper_id, is_content_dup): the one
+    content-dedup verdict core of the batch post-pass
+    (content_dedup_decisions) and the streaming tier
+    (streaming/contentfp.process_content_increment).
+
+    Runs at REPRESENTATIVE level: ``fps`` holds one (clip_id, n_subfp,
+    fp) row per distinct payload (clip_id = the rep), ``toks`` is its
+    fingerprint_tokens stream (the df cap applied once, shared by pairing
+    and the gate below), and ``keys`` the (clip_id, rep_id) map of every
+    clip. Within-set pairs from ``toks`` → BER verify (CONTENT_MAX_BER) →
+    connected components (near-duplication is transitive: A≈B≈C must not
+    drop the whole clique). A rep's keeper is, in order: its
+    ``registry`` match (a (clip_id, content_keeper_id) frame of reps
+    matched to earlier content — the streaming registry; None in batch),
+    its local cluster keeper (min clip_id), itself.
+
+    The verdicts then expand over each exact-dup group: a member's keeper
+    is its rep's keeper, so exact dups of a keeper are content dups OF
+    that keeper — the per-clip formulation's BER-0 edges, without d(d-1)/2
+    intra-group pair rows (the group's min clip_id IS its rep, and the
+    component min over reps IS the min over member clips). Only reps
+    with ≥1 surviving token expand: a zero-token rep (all-degenerate
+    silence windows, every token df-capped) can never pair per-clip, so
+    its group's clips are absent from the output (callers left-join)."""
+    from .simdedup import neardup_components
+
+    pairs = _verified_pairs(
+        fingerprint_candidate_pairs(fps, toks=toks), fps, CONTENT_MAX_BER
+    )
+    local = neardup_components(
+        pairs.select(F.col("clip_a").alias("doc_a"), F.col("clip_b").alias("doc_b"))
+    ).select(F.col("doc_id").alias("rep_id"), F.col("cluster_id").alias("_local"))
+    reps = (
+        toks.select(F.col("clip_id").alias("rep_id"))
+        .distinct()
+        .join(local, "rep_id", "left")
+    )
+    keeper = [F.col("_local"), F.col("rep_id")]
+    if registry is not None:
+        reps = reps.join(
+            registry.select(
+                F.col("clip_id").alias("rep_id"),
+                F.col("content_keeper_id").alias("_registered"),
+            ),
+            "rep_id",
+            "left",
+        )
+        keeper.insert(0, F.col("_registered"))
+    return (
+        keys.join(
+            reps.select("rep_id", F.coalesce(*keeper).alias("content_keeper_id")),
+            "rep_id",
+        )
+        .select("clip_id", "content_keeper_id")
+        .withColumn("is_content_dup", F.col("content_keeper_id") != F.col("clip_id"))
+    )
+
+
+def apply_content_verdicts(decisions: DataFrame, verdicts: DataFrame) -> DataFrame:
+    """Fold a content_verdicts frame into a decisions frame: every
+    flagged clip gets ``keep = false`` and CONTENT_DUP_RULE appended to
+    ``rules_fired``; every other row and column passes through, in
+    order."""
+    flagged = verdicts.where(F.col("is_content_dup")).select(
+        "clip_id", F.lit(True).alias("_content_dup")
+    )
+    dup = F.coalesce(F.col("_content_dup"), F.lit(False))
+    folded = {
+        "keep": F.col("keep") & ~dup,
+        "rules_fired": F.when(
+            dup, F.array_append(F.col("rules_fired"), F.lit(CONTENT_DUP_RULE))
+        ).otherwise(F.col("rules_fired")),
+    }
+    return decisions.join(flagged, "clip_id", "left").select(
+        *[folded.get(c, F.col(c)).alias(c) for c in decisions.columns]
+    )
 
 
 def content_dedup_decisions(
     clips: DataFrame,
     decisions: DataFrame,
-    max_ber: float = 0.1,
     fps: DataFrame | None = None,
-    max_token_df: int | str | None = "auto",
 ) -> DataFrame:
     """Optional pipeline post-pass: drop content-level near-duplicates
     the byte-SHA dedup tier cannot see (gain-scaled, transcoded,
-    resampled, lightly trimmed copies).
+    resampled, lightly trimmed copies). It is the streaming content
+    tier's within-batch logic with an empty registry: content_verdicts,
+    then apply_content_verdicts.
 
-    Fingerprint near-dup pairs → connected components (near-duplication
-    is transitive: A≈B≈C must not drop the whole clique) → every cluster
-    member except the keeper (min clip_id, the same keep-first-min-id
-    convention as every other dedup tier here) gets ``keep = false`` and
-    ``content_duplicate`` appended to ``rules_fired``. All other
-    decision rows and columns pass through untouched, so the post-pass
-    composes with run/job.py, findings_from_decisions (pass
+    Every content-cluster member except the keeper (min clip_id, the
+    same keep-first-min-id convention as every other dedup tier here)
+    gets ``keep = false`` and ``content_duplicate`` appended to
+    ``rules_fired``. All other decision rows and columns pass through
+    untouched, so the post-pass composes with run/job.py,
+    findings_from_decisions (pass
     ``extra_severities={CONTENT_DUP_RULE: CONTENT_DUP_SEVERITY}``) and
     the summary/report sinks.
 
@@ -608,105 +618,24 @@ def content_dedup_decisions(
     truthful, and the keeper conventions coincide (min clip_id in both
     tiers), so no keeper is ever dropped by the other tier.
 
-    Scale shape — REPRESENTATIVE-LEVEL (the same collapse as the text
-    tier's minhash_verified_pairs_collapsed): byte-identical clips share
-    a fingerprint by construction, so pairing runs only between the
-    distinct-payload representatives (payload_reps) and each verdict
-    expands back over the exact-dup group by the key map. A d-clip
-    exact-dup clique contributes ZERO intra-clique pair rows instead of
-    d(d-1)/2, and the fingerprint scan decodes once per distinct
-    payload. The expansion preserves the per-clip semantics exactly: the
-    group's min clip_id IS its representative, and the component
-    keeper's min-over-reps IS the min over all member clips, so
-    flag(clip) = clip_id != keeper(rep(clip)) reproduces the per-clip
-    component labeling (BER-0 intra-group edges included) without
-    materializing it.
-
-    Internal persists (the non-fingerprint-table branches) are released
-    before returning: the slim ``dups`` frame — bounded by the number of
-    flagged clips — is materialized eagerly (localCheckpoint), severing
-    the output's lineage from the cached key map / rep fingerprints, so
-    repeated post-pass calls in a long-lived session accumulate nothing."""
-    from .simdedup import neardup_components
-
-    owned: list[DataFrame] = []
-    if fps is not None and "rep_id" in fps.columns:
-        # the ingest fingerprint table carries the key map — the whole
-        # post-pass runs with ZERO payload reads
-        keys = fps.select("clip_id", "rep_id")
-        rep_fps = fps.where(F.col("clip_id") == F.col("rep_id")).select(
-            "clip_id", "n_subfp", "fp"
+    ``fps`` — a (clip_id, rep_id, n_subfp, fp) frame, as
+    fingerprint_table writes it: with the ingest table the whole
+    post-pass runs with ZERO payload reads. Omitted, the same frame is
+    built from ``clips`` (audio_fingerprints_dedup) and
+    local-checkpointed, so no cached frame is left behind. The rep rows
+    (clip_id == rep_id) feed the verdict core; one fingerprint_tokens
+    stream with the in-plan "auto" df cap serves both the pairing and
+    the expansion gate."""
+    if fps is None:
+        fps = (
+            audio_fingerprints_dedup(clips)
+            .where(F.col("fp").isNotNull())
+            .localCheckpoint(eager=True)
         )
-    else:
-        # one slim sha pass over the payload, persisted so no consumer
-        # of this plan re-scans bytes (released in the finally below)
-        keys = payload_reps(clips).persist()
-        keys.count()
-        owned.append(keys)
-        rep_ids = keys.select(F.col("rep_id").alias("clip_id")).distinct()
-        if fps is not None:
-            rep_fps = fps.join(rep_ids, "clip_id", "left_semi")
-        else:
-            rep_rows = clips.join(rep_ids, "clip_id", "left_semi")
-            rep_fps = audio_fingerprints(rep_rows).where(F.col("fp").isNotNull())
-            rep_fps = rep_fps.persist()
-            rep_fps.count()
-            owned.append(rep_fps)
-    try:
-        # resolve the "auto" cap ONCE so pairing and the expansion gate
-        # below see the identical integer (two independent derivations
-        # would be equal anyway — same stats — but pay a second job)
-        if max_token_df == "auto":
-            max_token_df = derive_max_token_df(rep_fps)
-        pairs = fingerprint_neardup_pairs(
-            clips,
-            max_ber=max_ber,
-            fps=rep_fps,
-            max_token_df=max_token_df,
-        ).select(F.col("clip_a").alias("doc_a"), F.col("clip_b").alias("doc_b"))
-        comp = neardup_components(pairs).select(
-            F.col("doc_id").alias("rep_id"), F.col("cluster_id").alias("_keeper")
-        )
-        # expand rep verdicts over their exact-dup groups: keeper defaults
-        # to the rep itself (groups with no cross-content match still flag
-        # their non-rep members — those pairs were BER-0 edges in the
-        # per-clip formulation). The expansion covers only reps with ≥1
-        # SURVIVING token (post-df-cap — fingerprint_tokens applies the
-        # same cap as pairing): a rep with no surviving token can never
-        # pair with ANYTHING in the per-clip formulation — its exact dups
-        # stay unflagged there, so they must stay unflagged here too.
-        toked = (
-            fingerprint_tokens(rep_fps, max_token_df)
-            .select(F.col("clip_id").alias("rep_id"))
-            .distinct()
-        )
-        dups = (
-            keys.join(toked, "rep_id", "left_semi")
-            .join(comp, "rep_id", "left")
-            .withColumn("_keeper", F.coalesce("_keeper", "rep_id"))
-            .where(F.col("clip_id") != F.col("_keeper"))
-            .select("clip_id", F.lit(True).alias("_content_dup"))
-        )
-        if owned:
-            dups = dups.localCheckpoint(eager=True)
-    finally:
-        for frame in owned:
-            frame.unpersist()
-    out = decisions.join(dups, "clip_id", "left")
-    is_dup = F.coalesce(F.col("_content_dup"), F.lit(False))
-    cols = []
-    for c in decisions.columns:
-        if c == "keep":
-            cols.append((F.col("keep") & ~is_dup).alias("keep"))
-        elif c == "rules_fired":
-            cols.append(
-                F.when(
-                    is_dup,
-                    F.array_append(F.col("rules_fired"), F.lit(CONTENT_DUP_RULE)),
-                )
-                .otherwise(F.col("rules_fired"))
-                .alias("rules_fired")
-            )
-        else:
-            cols.append(F.col(c))
-    return out.select(*cols)
+    rep_fps = fps.where(F.col("clip_id") == F.col("rep_id")).select(
+        "clip_id", "n_subfp", "fp"
+    )
+    verdicts = content_verdicts(
+        fps.select("clip_id", "rep_id"), rep_fps, fingerprint_tokens(rep_fps)
+    )
+    return apply_content_verdicts(decisions, verdicts)

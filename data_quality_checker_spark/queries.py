@@ -1455,9 +1455,8 @@ def _fps_table(spark, sf_dir: str) -> DataFrame:
     from .operators.audiofp import fingerprint_table
 
     base, _sf = _sf_of(sf_dir)
-    # t2: table format gained the rep_id column (payload_reps map) —
-    # readers fall back gracefully on old tables, but the zero-payload
-    # fast path of content_dedup_decisions deserves the rebuild
+    # t2: table format gained the rep_id column (payload_reps map), which
+    # content_dedup_decisions requires of its fps frame
     path = _publish(
         f"/tmp/dqc_fps_{_FP_V}t2_{base}{_TAG}",
         lambda tmp: fingerprint_table(spark.read.parquet(_clips_path(sf_dir)), tmp),
@@ -1642,9 +1641,7 @@ def q_clips_content_decisions(spark, sf_dir):
 
     clips = spark.read.parquet(_clips_path(sf_dir))
     dec = run_pipeline(spark, clips).decisions
-    return content_dedup_decisions(
-        clips, dec, max_ber=0.1, fps=_fps_table(spark, sf_dir)
-    ).select(
+    return content_dedup_decisions(clips, dec, fps=_fps_table(spark, sf_dir)).select(
         "clip_id",
         "keep",
         F.concat_ws(",", F.array_sort("rules_fired")).alias("rules_fired"),

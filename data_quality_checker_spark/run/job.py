@@ -53,11 +53,16 @@ def bucket_expr(cfg: PipelineConfig):
 
 
 def completed_buckets(spark: SparkSession, output: str, run_id: str) -> set[int]:
+    """Buckets this run_id has committed. A fresh output has no lineage
+    table yet — probed with os.path.exists, as incremental.read_registry
+    does, because a parquet read of a missing path logs a WARN
+    FileNotFoundException stack. Any other read failure (an unreadable
+    lineage part file) propagates: treating it as "nothing committed"
+    would silently redo every bucket on every run."""
     path = os.path.join(output, "lineage")
-    try:
-        lineage = spark.read.parquet(path)
-    except Exception:
+    if not os.path.exists(path):
         return set()
+    lineage = spark.read.parquet(path)
     rows = (
         lineage.where(F.col("run_id") == run_id).select("bucket").distinct().collect()
     )

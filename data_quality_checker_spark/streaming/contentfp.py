@@ -21,9 +21,7 @@ Per micro-batch:
    (pipeline.stage_graph with_fingerprints: the same decode pass as the
    audio stats, once per distinct payload) and its (clip → rep) key map
    from the graph's cached sha pass;
-2. WITHIN-batch near-dups: token pairing + BER verify + connected
-   components (the batch operators, reused verbatim);
-3. ACROSS batches: batch tokens ⋈ pruned ``fp_tokens`` buckets →
+2. ACROSS batches: batch tokens ⋈ pruned ``fp_tokens`` buckets →
    candidate (batch clip, registered keeper) pairs sharing ≥
    least(MIN_SHARED_TOKENS, tokens(clip), tokens(keeper)) tokens (the
    spec-v4 adaptive floor; keeper token counts stored as ``n_tok`` at
@@ -33,6 +31,9 @@ Per micro-batch:
    of the EARLIEST registry match: min over (reg_batch, keeper id), so
    first-seen-BATCH genuinely wins (``fp_store`` records the
    registering batch), mirroring the SHA registry;
+3. WITHIN the batch, and the verdicts: audiofp.content_verdicts with
+   the step-2 matches as its registry — the batch post-pass
+   (audiofp.content_dedup_decisions) is the same call with no registry;
 4. register the batch's surviving cluster keepers (not already matched
    to the registry) into both tables, gated on the same O(1) per-batch
    marker-file idempotence protocol as the SHA registry, with the same
@@ -54,15 +55,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.audiofp import (
+    CONTENT_MAX_BER,
     MIN_SHARED_TOKENS,
     TOKEN_LEN,
-    _token_expr,
-    fingerprint_candidate_pairs,
+    content_verdicts,
     fingerprint_tokens,
     payload_reps,
     with_ber,
 )
-from ..operators.simdedup import neardup_components
 from ..pipeline import StageGraph
 from .incremental import (
     MAX_BUCKET_FILES,  # noqa: F401  (re-exported for tests/docs)
@@ -75,9 +75,6 @@ from .incremental import (
 # tick (incremental.pin_bucket_count) so small streams don't pay a
 # 256-dir append per tick — see the N_SHA_BUCKETS comment.
 N_FP_BUCKETS = 256
-
-# BER bound of a verified content match (the batch tier's default).
-MAX_BER = 0.1
 
 
 def _tokens_path(state_dir: str) -> str:
@@ -132,7 +129,7 @@ def process_content_increment(
     batch clip whose payload group carries ≥1 fingerprint token — clips
     of undecodable or token-free (all-degenerate silence windows, or
     every token df-capped) groups are absent, since no token can ever
-    pair them (callers must left-join, as process_and_write does).
+    pair them (callers must left-join, as apply_content_verdicts does).
     Idempotent per batch_id.
 
     ``graph`` — the tick's pipeline.stage_graph over the batch, built
@@ -144,19 +141,18 @@ def process_content_increment(
     The graph's frames stay the caller's to unpersist.
 
     The whole tier runs at REPRESENTATIVE level (payload_reps: one rep
-    per distinct (sha1, codec, sr_hz) key — the same collapse as
-    content_dedup_decisions): byte-identical clips share a fingerprint
-    by construction, so only reps are decoded, tokenized, probed against
-    the registry and clustered; verdicts expand back over each exact-dup
-    group at the end (the group's min clip_id IS its rep, so
-    flag(clip) = clip_id != keeper(rep) reproduces the per-clip
-    labeling, BER-0 intra-group edges included). A dup-heavy batch — the
-    design regime — costs one decode per distinct payload and zero
-    intra-group pair rows.
+    per distinct (sha1, codec, sr_hz) key): byte-identical clips share a
+    fingerprint by construction, so only reps are decoded, tokenized,
+    probed against the registry and clustered. The within-batch pairing,
+    the keeper precedence and the expansion over each exact-dup group are
+    audiofp.content_verdicts with the registry matches as its
+    ``registry`` — the batch post-pass (content_dedup_decisions) is the
+    same call with none. A dup-heavy batch — the design regime — costs
+    one decode per distinct payload and zero intra-group pair rows.
 
-    Hub tokens are capped (spec v5): the "auto" df cap derives from THIS
-    batch's distinct-fingerprint token stats (derive_max_token_df) and
-    thins the batch-side token stream, which bounds BOTH the
+    Hub tokens are capped (spec v5): the "auto" df cap derives in-plan
+    from THIS batch's distinct-fingerprint token stats and thins the
+    batch-side token stream, which bounds BOTH the
     within-batch self-join fan-out and the registry-probe fan-out (a
     stop-token the batch side dropped never joins any registry posting
     list); registration stores only surviving tokens, so the registry
@@ -171,7 +167,7 @@ def process_content_increment(
     )
     batch_seen = os.path.exists(_marker(state_dir, batch_id))
 
-    keys = payload_reps(None, hashed=graph.hashed)
+    keys = payload_reps(graph.hashed)
     fps = graph.stats.select(
         F.col("rep_id").alias("clip_id"), "n_subfp", "fp"
     ).where(F.col("fp").isNotNull() & (F.col("n_subfp") >= TOKEN_LEN))
@@ -179,10 +175,7 @@ def process_content_increment(
     try:
         # The probe, the within-batch pairing, and the registration all
         # consume THIS persisted frame, so they drop the same stop-tokens
-        # by construction — "auto" passes straight through to
-        # fingerprint_tokens, which derives the cap INSIDE the toks plan
-        # (1-row broadcast scalar join, exchange-reused): one fewer eager
-        # job per tick than the old pre-resolved derive_max_token_df.
+        # by construction; the "auto" cap is derived inside its plan.
         toks = fingerprint_tokens(fps).persist()
         owned.append(toks)
 
@@ -237,14 +230,6 @@ def process_content_increment(
                 spark, _store_path(state_dir), "cbkt", keeper_buckets
             )
             if store is not None:
-                # reg_batch: the batch that registered each keeper.
-                # Registries written before the columns existed read as
-                # batch -1 (unknown-but-earlier, keeps precedence) and
-                # n_tok null (treated as ≥ MIN — the pre-v4 behavior).
-                if "reg_batch" not in store.columns:
-                    store = store.withColumn("reg_batch", F.lit(-1))
-                if "n_tok" not in store.columns:
-                    store = store.withColumn("n_tok", F.lit(None).cast("long"))
                 bcnt = toks.groupBy("clip_id").agg(
                     F.count(F.lit(1)).alias("n_tok_b")
                 ).withColumnRenamed("clip_id", "clip_b")
@@ -252,22 +237,8 @@ def process_content_increment(
                 # noise candidates die before any ~360 B fingerprint
                 # array is fetched from the store or shipped through a
                 # shuffle — the whole point of the count prune
-                # legacy-row backfill: registries written before n_tok
-                # existed reconstruct the keeper's distinct-token count
-                # from its STORED fp (size of the deduped token array —
-                # pre-cap, the best
-                # reconstruction available), instead of assuming ≥MIN:
-                # a pre-upgrade single-token keeper stays matchable by
-                # multi-token probes (the v3 cliff, closed for old
-                # registries too)
                 a_slim = store.select(
-                    F.col("clip_id").alias("clip_a"),
-                    F.coalesce(
-                        F.col("n_tok"),
-                        F.size(F.array_distinct(_token_expr())).cast(
-                            "long"
-                        ),
-                    ).alias("n_tok_a"),
+                    F.col("clip_id").alias("clip_a"), F.col("n_tok").alias("n_tok_a")
                 )
                 pruned = (
                     cand.join(a_slim, "clip_a")
@@ -294,82 +265,22 @@ def process_content_increment(
                     F.col("n_subfp").alias("n_b"),
                 )
                 verified = with_ber(
-                    pruned.join(a_fp, "clip_a").join(b, "clip_b"), MAX_BER
+                    pruned.join(a_fp, "clip_a").join(b, "clip_b"), CONTENT_MAX_BER
                 )
                 # earliest registry match wins — FIRST-SEEN-BATCH, tie-broken
                 # by min keeper id (min over (reg_batch, clip_a); a bare
                 # min(clip_a) would be lexicographic across batches, which is
                 # first-seen only when ids happen to sort by arrival)
-                cross = verified.groupBy("clip_b").agg(
+                cross = verified.groupBy(F.col("clip_b").alias("clip_id")).agg(
                     F.min(F.struct("reg_batch", "clip_a"))["clip_a"].alias(
                         "content_keeper_id"
                     )
                 )
 
-        # --- within the batch: pairs → components (keeper = min clip_id)
-        # (toks passed through: same capped stream as the probe above)
-        local_pairs = fingerprint_candidate_pairs(fps, toks=toks)
-        lv = with_ber(
-            local_pairs.join(
-                fps.select(
-                    F.col("clip_id").alias("clip_a"),
-                    F.col("fp").alias("fp_a"),
-                    F.col("n_subfp").alias("n_a"),
-                ),
-                "clip_a",
-            ).join(
-                fps.select(
-                    F.col("clip_id").alias("clip_b"),
-                    F.col("fp").alias("fp_b"),
-                    F.col("n_subfp").alias("n_b"),
-                ),
-                "clip_b",
-            ),
-            MAX_BER,
-        ).select(F.col("clip_a").alias("doc_a"), F.col("clip_b").alias("doc_b"))
-        local = neardup_components(lv).select(
-            F.col("doc_id").alias("clip_id"),
-            F.col("cluster_id").alias("local_keeper_id"),
-        )
-
-        # --- merge: a registry match beats local clustering (the content
-        # existed before this batch); else the local cluster keeper rules
-        rep_out = (
-            fps.select("clip_id")
-            .join(local, "clip_id", "left")
-            .join(
-                cross.withColumnRenamed("clip_b", "clip_id")
-                if cross is not None
-                else spark.createDataFrame(
-                    [], "clip_id string, content_keeper_id string"
-                ),
-                "clip_id",
-                "left",
-            )
-            .select(
-                "clip_id",
-                F.coalesce(
-                    "content_keeper_id", "local_keeper_id", "clip_id"
-                ).alias("content_keeper_id"),
-            )
-        )
-        # --- expand rep verdicts over their exact-dup groups: a non-rep
-        # member's keeper is its rep's keeper (which is the rep itself
-        # when the rep matched nothing), so exact dups of a keeper are
-        # content duplicates OF that keeper — identical to the per-clip
-        # formulation's BER-0 edges. Gate on TOKEN-BEARING reps: a
-        # zero-token rep (all-degenerate silence windows) can never pair
-        # with anything per-clip, so its exact dups must stay unflagged
-        # here too.
-        toked = toks.select(F.col("clip_id").alias("rep_id")).distinct()
-        out = (
-            keys.join(toked, "rep_id", "left_semi")
-            .join(rep_out.withColumnRenamed("clip_id", "rep_id"), "rep_id")
-            .select("clip_id", "content_keeper_id")
-            .withColumn(
-                "is_content_dup", F.col("content_keeper_id") != F.col("clip_id")
-            )
-        )
+        # --- within the batch, then the verdicts: the batch post-pass's
+        # core with the registry matches above (toks passed through: the
+        # same capped stream as the probe)
+        out = content_verdicts(keys, fps, toks, registry=cross)
 
         # Materialize BEFORE the registration block: the registration
         # derives keepers/ktoks/kfps from this frame ~5 times (two table

@@ -266,14 +266,8 @@ def compact_table_buckets(
     # bloat would survive every rewrite and grow per crash-replay.
     tmproot = os.path.join(state_dir, f".{tag}_compact_tmp_batch")
     shutil.rmtree(tmproot, ignore_errors=True)
-    # mergeSchema: a registry can mix file schemas (pre-v5 files lack
-    # n_tok/reg_batch); the default single-file schema sample would
-    # silently strip those columns from every flagged bucket in one
-    # rewrite, changing keeper precedence (reg_batch) and the v5 floor
-    # (n_tok) on the next probe. The old per-bucket loop at least
-    # confined that to mixed buckets — the batched read must merge.
     (
-        spark.read.option("mergeSchema", "true").parquet(reg_root)
+        spark.read.parquet(reg_root)
         .where(F.col(part).isin(*flagged))
         .distinct()
         .repartition(F.col(part))
@@ -408,11 +402,12 @@ def process_and_write(
     ``content_dedup=True`` additionally probes/updates the cross-batch
     fingerprint registry (streaming/contentfp.py): clips whose CONTENT
     matches any earlier batch's keeper (or a within-batch cluster
-    keeper) flip to keep=false with ``content_duplicate`` appended —
-    the streaming form of audiofp.content_dedup_decisions. The graph's
-    one decode pass emits the fingerprints too (with_fingerprints), and
-    its cached sha pass feeds the content tier's key map. Both
-    registries share the marker-file idempotence, so replays converge.
+    keeper) flip to keep=false with ``content_duplicate`` appended, by
+    the same audiofp.apply_content_verdicts fold as the batch post-pass
+    audiofp.content_dedup_decisions. The graph's one decode pass emits
+    the fingerprints too (with_fingerprints), and its cached sha pass
+    feeds the content tier's key map. Both registries share the
+    marker-file idempotence, so replays converge.
 
     CRITICAL: the overwrite mode must be set on the session that executes
     the WRITE. Inside foreachBatch that is the micro-batch's cloned
@@ -432,7 +427,7 @@ def process_and_write(
     try:
         decisions = graph.decisions
         if content_dedup:
-            from ..operators.audiofp import CONTENT_DUP_RULE
+            from ..operators.audiofp import apply_content_verdicts
             from .contentfp import process_content_increment
 
             # the stats frame feeds the base rules AND the content tier
@@ -441,22 +436,7 @@ def process_and_write(
             stats.count()
             flags = process_content_increment(spark, graph, state_dir, batch_id)
             owned.append(flags)
-            dup = F.coalesce(F.col("is_content_dup"), F.lit(False))
-            decisions = (
-                decisions.join(
-                    flags.where(F.col("is_content_dup")).select("clip_id", "is_content_dup"),
-                    "clip_id",
-                    "left",
-                )
-                .withColumn(
-                    "rules_fired",
-                    F.when(
-                        dup, F.array_append("rules_fired", F.lit(CONTENT_DUP_RULE))
-                    ).otherwise(F.col("rules_fired")),
-                )
-                .withColumn("keep", F.col("keep") & ~dup)
-                .drop("is_content_dup")
-            )
+            decisions = apply_content_verdicts(decisions, flags)
         decisions.withColumn("batch_id", F.lit(batch_id)).write.mode(
             "overwrite"
         ).partitionBy("batch_id").parquet(output_dir)

@@ -92,6 +92,26 @@ def test_resume_after_partial_failure(spark, corpus_path, tmp_path_factory):
     assert sv["rows_kept"] + sv["rows_dropped"] == sv["rows_in"]
 
 
+def test_corrupt_lineage_part_raises(spark, corpus_path, tmp_path):
+    """An unreadable lineage part file fails the job instead of reading
+    as "no bucket committed", which would silently redo every bucket on
+    every run."""
+    from datetime import datetime
+
+    from data_quality_checker_spark.schema import LINEAGE_SCHEMA
+
+    lineage = str(tmp_path / "out" / "lineage")
+    spark.createDataFrame(
+        [("run4", 0, 1, 1, 0, datetime(2026, 1, 1))], LINEAGE_SCHEMA
+    ).write.parquet(lineage)
+    # sorts before the real part file, so the read's schema inference
+    # (first file by path) is what meets it
+    with open(os.path.join(lineage, "part-0-corrupt.snappy.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_job(spark, corpus_path, str(tmp_path / "out"), "run4")
+
+
 def test_spark_submit_py_files_smoke(clips_pdf, tmp_path_factory):
     """North-rule launch contract: the job runs via ``spark-submit
     --py-files <package.zip>`` from a directory where the repo is NOT

@@ -136,6 +136,53 @@ def test_unrelated_clips_never_flagged(spark, state_dir):
     assert all(not dup for _, dup in flags.values())
 
 
+def test_batch_post_pass_matches_first_tick(spark, state_dir, monkeypatch):
+    """The batch post-pass is the streaming tier's within-batch logic
+    with an empty registry: on one batch holding a gain copy, an exact
+    copy, an unrelated clip and a silent exact pair,
+    content_dedup_decisions and a first tick on an empty state_dir flag
+    the same clips with the same keeper ids (the post-pass's verdicts are
+    read where it folds them into the decisions)."""
+    base = _speechlike(60, 2.5)
+    silent = np.zeros(SR, dtype=np.int16)
+    rows = [
+        ("a_orig", encode_wav(base, SR), SR, 2500, "wav", "t"),
+        ("b_gain", encode_wav(base * 0.6, SR), SR, 2500, "wav", "t"),
+        ("c_exact", encode_wav(base, SR), SR, 2500, "wav", "t"),
+        ("d_other", encode_wav(_speechlike(61, 2.5), SR), SR, 2500, "wav", "t"),
+        ("s_a", encode_wav(silent, SR), SR, 1000, "wav", "t"),
+        ("s_b", encode_wav(silent, SR), SR, 1000, "wav", "t"),
+    ]
+    batch = _df(spark, rows)
+    out = _increment(spark, batch, state_dir, 0)
+    stream = _flags(out)
+    out.unpersist()
+
+    seen = {}
+    fold = FP.apply_content_verdicts
+
+    def spy(decisions, verdicts):
+        seen["verdicts"] = verdicts
+        return fold(decisions, verdicts)
+
+    monkeypatch.setattr(FP, "apply_content_verdicts", spy)
+    dec = spark.createDataFrame(
+        [(r[0], True, []) for r in rows],
+        "clip_id string, keep boolean, rules_fired array<string>",
+    )
+    post = {r.clip_id: r.keep for r in FP.content_dedup_decisions(batch, dec).collect()}
+
+    assert _flags(seen["verdicts"]) == stream == {
+        "a_orig": ("a_orig", False),
+        "b_gain": ("a_orig", True),
+        "c_exact": ("a_orig", True),
+        "d_other": ("d_other", False),
+    }
+    assert {c for c, keep in post.items() if not keep} == {
+        c for c, (_, dup) in stream.items() if dup
+    }
+
+
 def test_stream_quality_filter_with_content_dedup(spark, tmp_path):
     """End-to-end streaming entry point with content_dedup=True: a later
     FILE containing a gain-scaled copy of an earlier file's clip drops
