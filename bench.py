@@ -74,8 +74,6 @@ BENCH_QUERIES = [
     "simhash_neardup_pairs",
     "embed_neardup",
     "ann_topk",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
     "ann_ivfpq_topk",
 ]
 
@@ -93,13 +91,9 @@ LINE_EXTRAS = [
     "value_shared_set",
     "prev_value_shared_set",
     "prev_bench",
-    "ann_lsh_recall",
-    "ann_ivf_recall",
     "ann_ivfpq_recall",
-    "ann_lsh_recall_mid",
-    "ann_lsh_recall_mid_h2",
-    "ann_ivf_recall_mid",
-    "ann_lsh_recall_neardup",
+    "ann_ivfpq_recall_mid",
+    "ann_ivfpq_recall_neardup",
 ]
 MAX_LINE_BYTES = 1900
 
@@ -270,59 +264,30 @@ def _run_pass(spark, qs, sf_dir: str, names: list[str]) -> dict[str, tuple[float
 
 
 def _ann_recall(spark, qs, sf_dir: str) -> dict:
-    """ANN recall, three regimes (VERDICT r2 item 4):
-     * general/random: approx top-5 vs exact top-5 on the registry
-       queries — this corpus' true neighbors sit at cosine ≈0.37, the
-       hard regime; IVF is the routed operator for it (sign-LSH recall
-       here is near zero, honestly reported);
+    """IVF-PQ recall@5 against the exact top-5, three regimes:
+     * general: the registry row vs ``ann_topk`` — this corpus' true
+       neighbors sit at cosine ≈0.37, the hard regime;
      * mid (planted cosine ≈0.75) and near-dup (planted ≈0.94): does
-       the index return the planted source in its top-5?"""
-    extras: dict = {}
-    try:
-        exact = {
-            (r["query_id"], r["neighbor_id"])
-            for r in qs["ann_topk"](spark, sf_dir).collect()
-        }
-        for qname, key in (
-            ("ann_lsh_topk", "ann_lsh_recall"),
-            ("ann_ivf_topk", "ann_ivf_recall"),
-            ("ann_ivfpq_topk", "ann_ivfpq_recall"),
-        ):
-            approx = {
-                (r["query_id"], r["neighbor_id"])
-                for r in qs[qname](spark, sf_dir).collect()
-            }
-            if exact:
-                extras[key] = round(len(exact & approx) / len(exact), 3)
-    except Exception:
-        pass
-    try:
-        from data_quality_checker_spark.operators import ann
+       the index return the planted source in its top-5?
+    Errors raise: a failing tier must not read as a missing key."""
+    from data_quality_checker_spark import queries as registry
+    from data_quality_checker_spark.operators import ann
 
-        emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-        centroids = ann.fit_ivf_centroids(emb)  # index reuse: fit once
+    def pairs(qname):
+        return {(r["query_id"], r["neighbor_id"]) for r in qs[qname](spark, sf_dir).collect()}
 
-        def lsh_near(emb_df, qdf):
-            return ann.lsh_topk(emb_df, qdf, k=5)
+    exact, approx = pairs("ann_topk"), pairs("ann_ivfpq_topk")
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    path = registry._ivfpq_index(spark, sf_dir)
 
-        def lsh_mid(emb_df, qdf):
-            # declared out-of-regime at H<=1: forced, for the honest number
-            return ann.lsh_topk(emb_df, qdf, k=5, regime="mid", force=True)
+    def ivfpq(emb_df, qdf):
+        return ann.ivfpq_topk_from_index(spark, path, qdf, refine_emb=emb_df)
 
-        def lsh_mid_h2(emb_df, qdf):
-            # the supported mid-regime configuration (wider multi-probe)
-            return ann.lsh_topk(emb_df, qdf, k=5, regime="mid", max_hamming=2)
-
-        def ivf_fn(emb_df, qdf):
-            return ann.ivf_topk(emb_df, qdf, k=5, centroids=centroids)
-
-        extras["ann_lsh_recall_neardup"] = _planted_recall(spark, emb, lsh_near, 0.045)
-        extras["ann_lsh_recall_mid"] = _planted_recall(spark, emb, lsh_mid, 0.11)
-        extras["ann_lsh_recall_mid_h2"] = _planted_recall(spark, emb, lsh_mid_h2, 0.11)
-        extras["ann_ivf_recall_mid"] = _planted_recall(spark, emb, ivf_fn, 0.11)
-    except Exception:
-        pass
-    return extras
+    return {
+        "ann_ivfpq_recall": round(len(exact & approx) / len(exact), 3),
+        "ann_ivfpq_recall_mid": _planted_recall(spark, emb, ivfpq, 0.11),
+        "ann_ivfpq_recall_neardup": _planted_recall(spark, emb, ivfpq, 0.045),
+    }
 
 
 def main(argv: list[str] | None = None):

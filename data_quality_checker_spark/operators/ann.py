@@ -1,58 +1,28 @@
 """Similarity search over an embedding column (array<float>).
 
-Four tiers, per the standard large-corpus design (Faiss-style):
+Two tiers, per the standard large-corpus design (Faiss-style):
 
 * ``cosine_topk`` — exact brute-force top-k (broadcast-Q crossJoin +
   windowed row_number). O(Q·N) — the verification baseline, and the
   right tool when Q (queries) is small: Spark broadcasts the Q side so
   the scan of the N side stays embarrassingly parallel with NO shuffle
-  of the corpus.
-
-* ``ivf_topk`` — inverted-file index: centroids trained once on a
-  bounded deterministic sample (driver-side seeded k-means — standard
-  IVF practice; the training sample is capped, never the corpus), each
-  corpus vector assigned to its ``assign_mult`` nearest centroids via an
-  Arrow-batched GEMM UDF, each query probes its ``nprobe`` nearest
-  centroids, candidates matched by **equi-join on centroid id**. The
-  general-regime approximate path: measured recall 0.94 at this corpus'
-  hard regime (true neighbors at cosine ≈0.37) with k=128 / nprobe=32 /
-  assign_mult=2 (see BENCH `ann_ivf_recall`).
-
-* ``lsh_topk`` — random-hyperplane (sign) LSH, multi-table
-  OR-construction: ``n_tables`` independent b-bit codes per vector
-  (deterministic md5-derived pseudo-hyperplanes — no RNG state to ship),
-  each query exploded into its 1+b Hamming≤1 probe bucket ids per table,
-  candidates matched by **equi-join on (table, bucket)** — a shuffled /
-  broadcast hash join, never a nested-loop theta-join. The near-dup
-  regime path: measured recall 1.0 for planted cosine≥0.9 neighbors at
-  b=12 / T=4 while scanning ~2% of the corpus (BENCH
-  `ann_lsh_recall_neardup`); the mid regime (cosine 0.6–0.9) needs the
-  wider ``max_hamming=2`` multi-probe (measured 0.94 vs 0.56 at H≤1);
-  for low-cosine neighbors sign-LSH recall collapses — measured 0.08 on
-  this corpus' cosine≈0.37 true neighbors — so ``lsh_topk`` takes a
-  ``regime`` argument and refuses under-provisioned mid and all general
-  workloads unless forced; use ``ivf_topk`` there.
+  of the corpus. On small corpora it is also the fastest tier.
 
 * ``build_ivfpq_index`` / ``ivfpq_topk_from_index`` — product-quantized
-  IVF (Jégou/Douze/Schmid 2011, the Faiss IVFPQ design): postings store
-  pq_m one-byte residual codes instead of raw vectors (64× smaller at
-  dim 64), scoring is per-query LUT lookups (ADC) inside mapInPandas
-  over a partition-pruned read, with an optional exact-cosine refine
-  join. The memory-bounded tier for corpora whose raw vectors no longer
-  fit aggregate cluster memory. Measured recall in this corpus' hard
-  general regime (true neighbors at cosine≈0.37 — PQ distortion is
-  comparable to the neighbor gap, the worst case for ADC): at sf0.1,
-  pq_m=8 (64× compression) reaches 0.66 at nprobe=48/refine 4 while
-  pq_m=16 (32×) reaches **0.94** at nprobe=64/refine 24 — matching the
-  raw-vector IVF tier at sf0.1 AND at the 10× sweep's 20k vectors
-  (refine 8's 40-candidate pool thinned to 0.88 there; the re-rank pool
-  is O(Q·k) work independent of corpus size, so 24 is the default);
-  BENCH `ann_ivfpq_recall`. The standard accuracy-for-memory dial:
-  halve dsub to halve distortion.
+  inverted file (Jégou/Douze/Schmid 2011, the Faiss IVFPQ design) with
+  an exact refine: postings store pq_m one-byte residual codes instead
+  of raw vectors (32× smaller at dim 64, pq_m=16), scoring is per-query
+  LUT lookups (ADC) inside mapInPandas over a partition-pruned read, and
+  the top ``k·refine_mult`` ADC candidates are re-ranked by exact cosine
+  against the raw vectors. The one approximate index: measured recall@5
+  0.94 / 1.0 / 1.0 in the general, mid and near-dup regimes at sf0.1
+  and sf1 (BENCH ``ann_ivfpq_recall``, ``_mid``, ``_neardup``), never
+  more than 0.02 below the sign-LSH and raw-vector IVF tiers it
+  replaced in any regime.
 
-All candidate→exact stages re-rank with true cosine, so precision is
-exact; only recall is approximate (ADC-only results expose an
-approximate ``score``, not a cosine).
+Both tiers rank through one exact stage (``_exact_topk``) and return
+the same (query_id, neighbor_id, rank, cosine): precision is exact,
+only the IVF-PQ tier's recall is approximate.
 """
 
 from __future__ import annotations
@@ -66,105 +36,46 @@ from pyspark.sql.types import ArrayType, IntegerType
 from .simdedup import cosine_expr
 from .text import portable_hash64, round6
 
-# Defaults chosen by measurement on the testdata embeddings (BENCH_r02):
-# 12 planes × 4 tables with Hamming≤1 multi-probe → recall 1.0 for
-# cosine≥0.9 planted neighbors, ~2% of corpus scanned per query.
-N_PLANES = 12
-N_TABLES = 4
-
 IVF_CENTROIDS = 128
-IVF_NPROBE = 32
-IVF_ASSIGN_MULT = 2
 IVF_SAMPLE = 4096
+
+# Defaults measured in this corpus' hard general regime (true neighbors
+# at cosine≈0.37 — PQ distortion is comparable to the neighbor gap, the
+# worst case for ADC). PQ_M=16 (dsub=4, 32× compression at dim 64)
+# halves the residual quantization distortion vs pq_m=8, which lifts
+# sf0.1 recall 0.66 → 0.94 at IVF_NPROBE=64. ivfpq_topk_from_index's
+# refine_mult=24 sizes the exact re-rank pool (k·24 = 120 rows/query —
+# O(Q·k·dim) work, INDEPENDENT of corpus size): a 10× sweep showed the
+# ADC top-40 pool (refine_mult=8) thin as distractor density grows
+# (recall 0.94 at 2k vectors → 0.88 at 20k); 120 candidates restore
+# 0.94 at 20k and leave sf0.1 recall and wall time unchanged.
+IVF_NPROBE = 64
+PQ_M = 16    # subspaces (codes per vector, one byte each)
+PQ_KS = 256  # entries per subspace codebook (fits a uint8 code)
 
 
 def _as_double(vec_col: str) -> Column:
     return F.transform(F.col(vec_col), lambda x: x.cast("double"))
 
 
-def _plane_weight(table: int, plane: int, dim: int) -> float:
-    """Deterministic pseudo-random hyperplane weight in [-0.5, 0.5):
-    w(t, p, d) = (H(t || '_' || p || '_' || d) % 1000)/1000 - 0.5, where
-    H is the 60-bit md5-prefix hash (the Python mirror of
-    text.portable_hash64 — same arithmetic, so the planes are pinned by
-    the formula, not by any RNG state)."""
-    import hashlib
-
-    h = int(hashlib.md5(f"{table}_{plane}_{dim}".encode()).hexdigest()[:15], 16)
-    return (h % 1000) / 1000.0 - 0.5
+def _top(scored: DataFrame, by: str, k: int) -> DataFrame:
+    """Per-query top-k of ``scored`` by descending ``by``; ties broken by
+    neighbor_id for determinism. Adds ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(by), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def _plane_matrix(n_planes: int, n_tables: int, dim: int) -> np.ndarray:
-    """(n_tables·n_planes, dim) hyperplane weights — pure constants;
-    computed once on the driver and shipped in the UDF closure."""
-    return np.array(
-        [
-            [_plane_weight(t, p, d) for d in range(dim)]
-            for t in range(n_tables)
-            for p in range(n_planes)
-        ]
+def _exact_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, qv, neighbor_id, nv) pairs → exact-cosine top-k
+    (query_id, neighbor_id, rank, cosine), self-matches excluded. Each
+    (query_id, neighbor_id) must arrive at most once: the crossJoin and
+    the single-assignment IVF-PQ postings both guarantee it."""
+    scored = pairs.where(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id",
+        "neighbor_id",
+        round6(cosine_expr(F.col("qv"), F.col("nv"))).alias("cosine"),
     )
-
-
-def _probe_flips(n_planes: int, max_hamming: int) -> np.ndarray:
-    """All XOR masks of popcount ≤ max_hamming over n_planes bits, in
-    deterministic (popcount, value) order: 1 + b masks at H≤1,
-    1 + b + b(b−1)/2 at H≤2 (79 for b=12)."""
-    from itertools import combinations
-
-    masks = [0]
-    for h in range(1, max_hamming + 1):
-        for bits in combinations(range(n_planes), h):
-            masks.append(sum(1 << p for p in bits))
-    return np.array(masks, dtype=np.int64)
-
-
-def _lsh_codes_udf(n_planes: int, n_tables: int, probe: bool, max_hamming: int = 1):
-    """Arrow-batched pandas UDF: vector batch → flat int array of bucket
-    ids, one GEMM per batch (the hyperplane weights are constants — never
-    recomputed per row, unlike an expression-tree formulation which would
-    evaluate n_tables·n_planes·dim hash calls per row).
-
-    * probe=False (corpus side): n_tables ids — position == table.
-    * probe=True (query side): n_tables·n_flips ids — for each table,
-      the vector's own bucket plus every Hamming≤max_hamming bit flip
-      (``_probe_flips``); position // n_flips == table.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    flips = _probe_flips(n_planes, max_hamming)
-    weights: dict[int, np.ndarray] = {}
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def codes(batch: pd.Series) -> pd.Series:
-        if len(batch) == 0:  # zero-row Arrow batch → 1-D array, no shape[1]
-            return pd.Series([], dtype=object)
-        v = np.array(batch.tolist(), dtype=np.float64)
-        if v.ndim != 2:
-            raise ValueError(
-                f"embedding vectors must share one length; got batch shape {v.shape}"
-            )
-        dim = v.shape[1]
-        if dim not in weights:
-            weights[dim] = _plane_matrix(n_planes, n_tables, dim)
-        bits = (v @ weights[dim].T) > 0  # (n, n_tables*n_planes)
-        bits = bits.reshape(len(v), n_tables, n_planes)
-        base = (bits @ (1 << np.arange(n_planes))).astype(np.int64)  # (n, n_tables)
-        if probe:
-            out = (base[:, :, None] ^ flips[None, None, :]).reshape(len(v), -1)
-        else:
-            out = base
-        out = out.astype("int32")
-        return pd.Series(list(out))
-
-    return codes
-
-
-def hyperplane_bucket_codes(
-    vec_col: str, n_planes: int = N_PLANES, n_tables: int = N_TABLES
-):
-    """Column: array<int> of per-table bucket ids (position == table)."""
-    return _lsh_codes_udf(n_planes, n_tables, probe=False)(F.col(vec_col))
+    return _top(scored, "cosine", k).select("query_id", "neighbor_id", "rank", "cosine")
 
 
 def cosine_topk(
@@ -175,128 +86,30 @@ def cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact brute-force cosine top-k: → (query_id, neighbor_id, rank,
-    cosine). Self-matches excluded; ties broken by neighbor_id for
-    determinism. ``queries`` must be small — it is explicitly broadcast."""
+    cosine). ``queries`` must be small — it is explicitly broadcast."""
     base = emb.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("nv"))
     q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv"))
-    scored = (
-        base.crossJoin(F.broadcast(q))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            round6(cosine_expr(F.col("qv"), F.col("nv"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
-def _rerank_topk(cand: DataFrame, k: int) -> DataFrame:
-    """Shared candidate→result stage: exact cosine per candidate row,
-    dedup multi-table/multi-probe hits with a map-side-combinable max
-    (cosine is identical across duplicate hits), then window top-k."""
-    scored = cand.where(F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id",
-        "neighbor_id",
-        round6(cosine_expr(F.col("qv"), F.col("nv"))).alias("cosine"),
-    )
-    dedup = scored.groupBy("query_id", "neighbor_id").agg(F.max("cosine").alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        dedup.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
-
-
-def lsh_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_planes: int = N_PLANES,
-    n_tables: int = N_TABLES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    regime: str = "near_dup",
-    force: bool = False,
-    max_hamming: int = 1,
-) -> DataFrame:
-    """Approximate top-k via multi-table sign-LSH with Hamming≤h
-    multi-probe, matched by **equi-join on (table, bucket)**:
-
-    * corpus side: each vector → ``n_tables`` rows (tbl, bucket, nv);
-    * query side: each query → ``n_tables·n_flips`` probe rows
-      (tbl, bucket) — its own bucket plus every ≤max_hamming bit flip
-      per table (13 flips at H≤1, 79 at H≤2 for b=12);
-    * candidates = hash-join on (tbl, bucket); query side broadcast.
-
-    The bucket id IS the join key, so at cluster scale the corpus
-    shuffles (or streams, with the probe side broadcast) by bucket and
-    each probe touches only its bucket's rows — no nested-loop pass.
-
-    → (query_id, neighbor_id, rank, cosine). Recall is regime-dependent
-    (sign-LSH collision prob. is (1−θ/π)^b per table). Measured at the
-    H≤1 defaults: 1.0 for planted cosine≥0.9 neighbors, 0.72 at planted
-    cosine≈0.75, and **0.08 — near zero** for this corpus'
-    general-regime cosine≈0.37 true neighbors (BENCH
-    `ann_lsh_recall_neardup` / `_mid` / `ann_lsh_recall`).
-    ``max_hamming=2`` widens the probe to make the MID regime viable
-    (measured 0.94 at planted cosine≈0.75, vs the 0.91 the collision
-    math predicts; BENCH `ann_lsh_recall_mid_h2`) at ~6× the probed
-    buckets. ``regime`` declares the caller's workload:
-    ``"mid"`` requires ``max_hamming≥2`` (or ``force``), ``"general"``
-    always raises unless forced — route it to ``ivf_topk`` (measured
-    1.0 mid / 0.94 general) — so no caller lands on 8% recall
-    unknowingly.
-    """
-    if regime not in ("near_dup", "mid", "general"):
-        raise ValueError(f"unknown regime {regime!r}: near_dup | mid | general")
-    if regime == "mid" and max_hamming < 2 and not force:
-        raise ValueError(
-            "lsh_topk in the 'mid' regime (cosine~0.6-0.9) measured 0.72 "
-            "recall at the Hamming<=1 defaults — pass max_hamming=2 "
-            "(measured ~0.9 recall, ~6x probed buckets), use ivf_topk "
-            "(measured 1.0), or pass force=True."
-        )
-    if regime == "general" and not force:
-        raise ValueError(
-            "lsh_topk is the near-dup/mid-regime operator; general-regime "
-            "(low-cosine) recall measured 0.08 vs ivf_topk's 0.94 — use "
-            "ivf_topk, or pass force=True to run sign-LSH anyway (the "
-            "bench does, to keep the honest recall number on the record)."
-        )
-    corpus_codes = _lsh_codes_udf(n_planes, n_tables, probe=False)
-    probe_codes = _lsh_codes_udf(n_planes, n_tables, probe=True, max_hamming=max_hamming)
-    n_flips = len(_probe_flips(n_planes, max_hamming))
-
-    base = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(vec_col).alias("nv"),
-        F.posexplode(corpus_codes(F.col(vec_col))).alias("tbl", "bucket"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        F.posexplode(probe_codes(F.col(vec_col))).alias("pos", "bucket"),
-    ).select(
-        "query_id",
-        "qv",
-        (F.col("pos") / F.lit(n_flips)).cast("int").alias("tbl"),
-        "bucket",
-    )
-
-    cand = base.join(F.broadcast(q), on=["tbl", "bucket"])
-    return _rerank_topk(cand, k)
+    return _exact_topk(base.crossJoin(F.broadcast(q)), k)
 
 
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) index
+# IVF-PQ: product-quantized inverted file
 # ---------------------------------------------------------------------------
+#
+# Product quantization (Jégou, Douze & Schmid, "Product Quantization for
+# Nearest Neighbor Search", TPAMI 2011 — the Faiss IVFPQ design, public)
+# replaces each RESIDUAL (vector − its coarse centroid) with ``pq_m``
+# one-byte codes: 64-dim float64 postings (512 B) become 16 bytes, so
+# the postings for a trillion vectors fit the cluster's aggregate page
+# cache instead of thrashing storage.
+#
+# Scoring is asymmetric (ADC): cosine(q, x) ≈ q·c_cid + Σ_j LUT_q[j][code_j]
+# where LUT_q[j] = codebook_j @ q_sub_j. The LUT depends ONLY on the
+# query (residual codebooks are global, and the identity
+# q·x = q·c + q·(x−c) is exact), so each query ships one (pq_m × ks)
+# float table to the executors; scanning a posting costs pq_m table
+# lookups — no floating GEMM against raw vectors at all.
+
 
 def _driver_sample(
     emb: DataFrame, sample_n: int, id_col: str, vec_col: str
@@ -306,13 +119,15 @@ def _driver_sample(
     across the keyspace). Only ≤ sample_n rows ever reach the driver;
     at any corpus scale this is a TakeOrdered over a column-pruned
     scan. Faiss trains its coarse/PQ quantizers on a capped sample the
-    same way."""
+    same way. A zero-row corpus gives a (0, 0) sample."""
     rows = (
         emb.select(F.col(id_col).cast("string").alias("i"), _as_double(vec_col).alias("v"))
         .orderBy(portable_hash64(F.col("i")))
         .limit(sample_n)
         .collect()
     )
+    if not rows:  # a 1-D empty array has no axis 1 to normalize over
+        return np.empty((0, 0))
     x = np.array([r["v"] for r in rows], dtype=np.float64)
     x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     return x
@@ -333,22 +148,10 @@ def _bincount_means(
 
 
 def fit_ivf_centroids(
-    emb: DataFrame,
-    n_centroids: int = IVF_CENTROIDS,
-    sample_n: int = IVF_SAMPLE,
-    iters: int = 15,
-    seed: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample: np.ndarray | None = None,
+    x: np.ndarray, n_centroids: int = IVF_CENTROIDS, iters: int = 15, seed: int = 1
 ) -> np.ndarray:
-    """Train unit-norm centroids with seeded spherical k-means on the
-    bounded deterministic driver sample (see _driver_sample; pass
-    ``sample`` to reuse one already collected — build_ivfpq_index
-    shares a single collect between both quantizer fits)."""
-    x = sample if sample is not None else _driver_sample(
-        emb, sample_n, id_col, vec_col
-    )
+    """Train unit-norm coarse centroids with seeded spherical k-means on
+    the driver sample ``x`` (see _driver_sample)."""
     rng = np.random.default_rng(seed)
     c = x[rng.choice(len(x), min(n_centroids, len(x)), replace=False)].copy()
     for _ in range(iters):
@@ -358,214 +161,16 @@ def fit_ivf_centroids(
     return c
 
 
-def _top_centroid_udf(centroids: np.ndarray, m: int):
-    """Arrow-batched pandas UDF: vector batch → its m nearest centroid
-    ids (one GEMM per batch, no per-row Python)."""
-    from pyspark.sql.functions import pandas_udf
-
-    c_t = centroids.T.copy()  # (dim, k) — captured in the closure, shipped once per executor
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def top_cids(batch: pd.Series) -> pd.Series:
-        if len(batch) == 0:  # zero-row Arrow batch → 1-D array, no axis=1
-            return pd.Series([], dtype=object)
-        v = np.array(batch.tolist(), dtype=np.float64)
-        if v.ndim != 2:
-            raise ValueError(
-                f"embedding vectors must share one length; got batch shape {v.shape}"
-            )
-        v /= np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
-        sims = v @ c_t
-        if m >= sims.shape[1]:
-            top = np.argsort(-sims, axis=1)
-        else:
-            part = np.argpartition(-sims, m, axis=1)[:, :m]
-            order = np.argsort(-np.take_along_axis(sims, part, axis=1), axis=1)
-            top = np.take_along_axis(part, order, axis=1)
-        return pd.Series([row[:m].astype("int32") for row in top])
-
-    return top_cids
-
-
-def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_centroids: int = IVF_CENTROIDS,
-    nprobe: int = IVF_NPROBE,
-    assign_mult: int = IVF_ASSIGN_MULT,
-    centroids: np.ndarray | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k via an inverted-file index, matched by
-    **equi-join on centroid id**:
-
-    * corpus side: each vector → its ``assign_mult`` nearest centroids
-      (multi-assignment softens boundary losses) — ``assign_mult`` rows;
-    * query side: each query → its ``nprobe`` nearest centroids;
-    * candidates = hash-join on cid (query side broadcast), exact-cosine
-      re-rank.
-
-    ``centroids`` may be passed in (index reuse across query batches —
-    the fit is the expensive one-time step, exactly as a real IVF index
-    is built once and probed many times).
-
-    → (query_id, neighbor_id, rank, cosine). Measured recall at the
-    defaults on the testdata embeddings: 0.94 overall (BENCH
-    `ann_ivf_recall`) in the hard cosine≈0.37 regime.
-    """
-    if centroids is None:
-        centroids = fit_ivf_centroids(
-            emb, n_centroids, id_col=id_col, vec_col=vec_col
-        )
-    assign_udf = _top_centroid_udf(centroids, assign_mult)
-    probe_udf = _top_centroid_udf(centroids, nprobe)
-
-    base = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(vec_col).alias("nv"),
-        F.explode(assign_udf(F.col(vec_col))).alias("cid"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        F.explode(probe_udf(F.col(vec_col))).alias("cid"),
-    )
-    cand = base.join(F.broadcast(q), on="cid")
-    return _rerank_topk(cand, k)
-
-
-# --- persisted IVF index: build once, probe many ---------------------------
-
-def build_ivf_index(
-    emb: DataFrame,
-    path: str,
-    n_centroids: int = IVF_CENTROIDS,
-    assign_mult: int = IVF_ASSIGN_MULT,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Materialize the IVF index on storage — the production shape
-    (Faiss: train once, add once, search many):
-
-    * ``{path}/centroids.parquet`` — (cid, weights: array<double>), tiny;
-    * ``{path}/assigned/cid=K/...`` — the corpus exploded to its
-      ``assign_mult`` nearest centroids, **partitioned by cid**, so a
-      probe reads ONLY its probed partitions (manifest-level pruning —
-      at 10^12 rows a 32-of-4096-centroid probe touches <1% of files).
-
-    Returns the centroid matrix (also persisted)."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    centroids = fit_ivf_centroids(emb, n_centroids, id_col=id_col, vec_col=vec_col)
-    assign_udf = _top_centroid_udf(centroids, assign_mult)
-    (
-        emb.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(vec_col).alias("nv"),
-            F.explode(assign_udf(F.col(vec_col))).alias("cid"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(f"{path}/assigned")
-    )
-    cdf = pd.DataFrame(
-        {"cid": range(len(centroids)), "weights": [list(map(float, c)) for c in centroids]}
-    )
-    import os
-
-    tmp = f"{path}/centroids.parquet.tmp"
-    pq.write_table(pa.Table.from_pandas(cdf, preserve_index=False), tmp)
-    os.replace(tmp, f"{path}/centroids.parquet")
-    return centroids
-
-
-def load_ivf_centroids(path: str) -> np.ndarray:
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(f"{path}/centroids.parquet").to_pandas().sort_values("cid")
-    return np.array([np.array(w, dtype=np.float64) for w in t["weights"]])
-
-
-def ivf_topk_from_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = IVF_NPROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a persisted IVF index: queries → probe centroid ids →
-    **partition-pruned** read of only those ``cid=`` partitions →
-    equi-join → exact re-rank. The corpus is never rescanned; the probe
-    cid set is collected driver-side (≤ Q·nprobe ints) so the filter is
-    a static IN-list the parquet source prunes on at planning time."""
-    centroids = load_ivf_centroids(path)
-    probe_udf = _top_centroid_udf(centroids, nprobe)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        F.explode(probe_udf(F.col(vec_col))).alias("cid"),
-    )
-    probe_cids = sorted({r["cid"] for r in q.select("cid").distinct().collect()})
-    if not probe_cids:  # empty query batch: empty result, correct schema
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine double"
-        )
-    assigned = (
-        spark.read.parquet(f"{path}/assigned").where(F.col("cid").isin(probe_cids))
-    )
-    cand = assigned.join(F.broadcast(q), on="cid")
-    return _rerank_topk(cand, k)
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ: product-quantized inverted file (the memory-bounded tier)
-# ---------------------------------------------------------------------------
-#
-# At 10^12 vectors the IVF index above still stores every raw vector
-# (dim × 8 bytes/row) in its postings; product quantization (Jégou,
-# Douze & Schmid, "Product Quantization for Nearest Neighbor Search",
-# TPAMI 2011 — the Faiss IVFPQ design, public) replaces each RESIDUAL
-# (vector − its coarse centroid) with ``pq_m`` one-byte codes: 64-dim
-# float64 postings (512 B) become pq_m=8 bytes — 64× smaller, so the
-# postings for a trillion vectors fit the cluster's aggregate page
-# cache instead of thrashing storage.
-#
-# Scoring is asymmetric (ADC): cosine(q, x) ≈ q·c_cid + Σ_j LUT_q[j][code_j]
-# where LUT_q[j] = codebook_j @ q_sub_j. The LUT depends ONLY on the
-# query (residual codebooks are global, and the identity
-# q·x = q·c + q·(x−c) is exact), so each query ships one (pq_m × ks)
-# float table to the executors; scanning a posting costs pq_m table
-# lookups — no floating GEMM against raw vectors at all.
-
-PQ_M = 8     # subspaces (codes per vector, one byte each)
-PQ_KS = 256  # entries per subspace codebook (fits a uint8 code)
-
-
 def fit_pq_codebooks(
-    emb: DataFrame,
+    x: np.ndarray,
     centroids: np.ndarray,
     pq_m: int = PQ_M,
     ks: int = PQ_KS,
-    sample_n: int = IVF_SAMPLE,
     iters: int = 15,
     seed: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample: np.ndarray | None = None,
 ) -> np.ndarray:
-    """Train per-subspace residual codebooks → (pq_m, ks', dim/pq_m)
-    array (ks' = min(ks, sample rows)); same bounded deterministic
-    driver sample discipline as fit_ivf_centroids (``sample`` reuses an
-    already-collected one)."""
-    x = sample if sample is not None else _driver_sample(
-        emb, sample_n, id_col, vec_col
-    )
+    """Train per-subspace residual codebooks on the driver sample ``x``
+    → (pq_m, ks', dim/pq_m) array (ks' = min(ks, sample rows))."""
     dim = x.shape[1]
     if dim % pq_m:
         raise ValueError(f"dim {dim} not divisible by pq_m {pq_m}")
@@ -596,7 +201,7 @@ def _pq_encode_udf(centroids: np.ndarray, codebooks: np.ndarray):
     for assignment plus pq_m small distance computations per batch —
     no per-row Python."""
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType, StructField, StructType
+    from pyspark.sql.types import StructField, StructType
 
     schema = StructType(
         [
@@ -611,7 +216,7 @@ def _pq_encode_udf(centroids: np.ndarray, codebooks: np.ndarray):
 
     @pandas_udf(schema)
     def enc(batch: pd.Series) -> pd.DataFrame:
-        if len(batch) == 0:
+        if len(batch) == 0:  # zero-row Arrow batch → 1-D array, no axis=1
             return pd.DataFrame({"cid": pd.Series([], dtype="int32"),
                                  "codes": pd.Series([], dtype=object)})
         v = np.array(batch.tolist(), dtype=np.float64)
@@ -644,25 +249,28 @@ def build_ivfpq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Materialize the PQ index: ``{path}/assigned/cid=K`` postings hold
-    (neighbor_id, codes) ONLY — pq_m ints per row, never the raw vector
-    (the 64× memory win); centroids + codebooks parquet'd beside them.
-    Single assignment (Faiss IVFPQ shape): residuals are relative to the
-    OWN cell's centroid, recall is bought with nprobe at query time."""
+    """Materialize the PQ index — the production shape (Faiss: train
+    once, add once, search many):
+
+    * ``{path}/assigned/cid=K/...`` — postings of (neighbor_id, codes)
+      ONLY, pq_m ints per row, never the raw vector; **partitioned by
+      cid**, so a probe reads ONLY its probed partitions (manifest-level
+      pruning — at 10^12 rows a 64-of-4096-centroid probe touches <2% of
+      files). Single assignment: residuals are relative to the OWN
+      cell's centroid, recall is bought with nprobe at query time.
+    * ``{path}/quantizers.npz`` — the coarse centroids and the residual
+      codebooks, both fit on one bounded driver sample.
+
+    A zero-row corpus gives an index with no cells, whose probes return
+    zero rows. Returns (centroids, codebooks)."""
     import os
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    # one driver-sample collect feeds BOTH quantizer fits (the two
-    # samples were identical by construction — same hash order, same cap)
     x = _driver_sample(emb, IVF_SAMPLE, id_col, vec_col)
-    centroids = fit_ivf_centroids(
-        emb, n_centroids, id_col=id_col, vec_col=vec_col, sample=x
-    )
-    codebooks = fit_pq_codebooks(
-        emb, centroids, pq_m=pq_m, ks=ks, id_col=id_col, vec_col=vec_col, sample=x
-    )
+    if len(x):
+        centroids = fit_ivf_centroids(x, n_centroids)
+        codebooks = fit_pq_codebooks(x, centroids, pq_m=pq_m, ks=ks)
+    else:
+        centroids, codebooks = np.empty((0, 0)), np.empty((pq_m, 0, 0))
     enc = _pq_encode_udf(centroids, codebooks)
     (
         emb.select(F.col(id_col).alias("neighbor_id"), enc(F.col(vec_col)).alias("e"))
@@ -671,70 +279,43 @@ def build_ivfpq_index(
         .partitionBy("cid")
         .parquet(f"{path}/assigned")
     )
-    cdf = pd.DataFrame(
-        {"cid": range(len(centroids)), "weights": [list(map(float, c)) for c in centroids]}
-    )
-    tmp = f"{path}/centroids.parquet.tmp"
-    pq.write_table(pa.Table.from_pandas(cdf, preserve_index=False), tmp)
-    os.replace(tmp, f"{path}/centroids.parquet")
-    pq_m_, ks_eff, dsub = codebooks.shape
-    bdf = pd.DataFrame(
-        [
-            {"j": j, "t": t, "weights": [float(w) for w in codebooks[j, t]]}
-            for j in range(pq_m_)
-            for t in range(ks_eff)
-        ]
-    )
-    tmp = f"{path}/codebooks.parquet.tmp"
-    pq.write_table(pa.Table.from_pandas(bdf, preserve_index=False), tmp)
-    os.replace(tmp, f"{path}/codebooks.parquet")
+    tmp = f"{path}/quantizers.tmp.npz"
+    np.savez(tmp, centroids=centroids, codebooks=codebooks)
+    os.replace(tmp, f"{path}/quantizers.npz")
     return centroids, codebooks
-
-
-def load_pq_codebooks(path: str) -> np.ndarray:
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(f"{path}/codebooks.parquet").to_pandas()
-    pq_m = int(t["j"].max()) + 1
-    ks = int(t["t"].max()) + 1
-    dsub = len(t["weights"].iloc[0])
-    books = np.empty((pq_m, ks, dsub), dtype=np.float64)
-    for r in t.itertuples():
-        books[r.j, r.t] = np.array(r.weights, dtype=np.float64)
-    return books
 
 
 def ivfpq_topk_from_index(
     spark,
     path: str,
     queries: DataFrame,
+    refine_emb: DataFrame,
     k: int = 5,
     nprobe: int = IVF_NPROBE,
-    refine_emb: DataFrame | None = None,
-    refine_mult: int = 4,
+    refine_mult: int = 24,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe the PQ index: partition-pruned read of the probed ``cid=``
     postings, ADC scoring inside mapInPandas (per-query LUT lookups —
-    zero raw-vector math on the scan), global top-k. With ``refine_emb``
-    (Faiss's refine stage) the top ``k·refine_mult`` ADC candidates are
-    re-ranked by exact cosine against the raw vectors — an equi-join on
-    neighbor_id touching only Q·k·refine_mult rows, so precision is
-    exact and recall costs one slim join.
+    zero raw-vector math on the scan), then Faiss's refine stage: the
+    top ``k·refine_mult`` ADC candidates per query are re-ranked by
+    exact cosine against ``refine_emb``'s raw vectors — an equi-join on
+    neighbor_id touching only Q·k·refine_mult rows.
 
-    Queries are collected driver-side (same bounded-Q contract as the
-    other probes: ≤ IVF_SAMPLE rows enforced)."""
-    centroids = load_ivf_centroids(path)
-    codebooks = load_pq_codebooks(path)
+    → (query_id, neighbor_id, rank, cosine), as ``cosine_topk``.
+    Queries are collected driver-side (bounded-Q contract: ≤ IVF_SAMPLE
+    rows enforced)."""
+    with np.load(f"{path}/quantizers.npz") as z:
+        centroids, codebooks = z["centroids"], z["codebooks"]
     qrows = queries.select(
         F.col(id_col).alias("qid"), _as_double(vec_col).alias("qv")
     ).limit(IVF_SAMPLE + 1).collect()
     if len(qrows) > IVF_SAMPLE:
         raise ValueError(f"query batch exceeds the bounded-Q contract ({IVF_SAMPLE})")
-    if not qrows:
+    if not qrows or not len(centroids):  # empty query batch or zero-row corpus
         return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, score double"
+            [], "query_id long, neighbor_id long, rank int, cosine double"
         )
     qids = np.array([r["qid"] for r in qrows])
     qv = np.array([r["qv"] for r in qrows], dtype=np.float64)
@@ -785,15 +366,7 @@ def ivfpq_topk_from_index(
     scored = assigned.mapInPandas(
         score, "query_id long, neighbor_id long, score double"
     ).where(F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    pre_k = k * refine_mult if refine_emb is not None else k
-    top = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= pre_k)
-    )
-    if refine_emb is None:
-        return top.select("query_id", "neighbor_id", "rank", "score")
-    # refine: exact cosine on the surviving candidates only
+    top = _top(scored, "score", k * refine_mult)
     # .tolist() yields native Python floats/ints: list(np_row) keeps
     # np.float64 elements, which createDataFrame's verifier rejects when
     # Arrow conversion is OFF (the driver harness runs without Arrow).
@@ -809,4 +382,4 @@ def ivfpq_topk_from_index(
         .join(nv, "neighbor_id")
         .join(F.broadcast(qdf), "query_id")
     )
-    return _rerank_topk(cand, k)
+    return _exact_topk(cand, k)

@@ -739,7 +739,7 @@ def cosine_expr(a: Column, b: Column) -> Column:
 
 # exact all-pairs is O(n²) compute BY DEFINITION — above this many
 # vectors the caller almost certainly wants the candidate-generating
-# tiers (minhash_verified_pairs for text, ann.ivf_topk/lsh_topk for
+# tiers (minhash_verified_pairs for text, the ann IVF-PQ index for
 # embeddings) with this operator as the verify stage over candidates
 EMBED_EXACT_MAX = 1_000_000
 
@@ -770,13 +770,14 @@ def embedding_neardup_pairs(
     scales: shuffle volume grows with n·n_blocks, compute is
     embarrassingly parallel over n_blocks² groups.
 
-    REGIME GUARD (same discipline as ann.lsh_topk's ``regime``): exact
-    all-pairs is O(n²) compute no matter how it is distributed — a 10⁹-
-    vector corpus is ~10¹⁸ dot products. Inputs above ``max_vectors``
-    raise unless ``force=True``; the size probe is a short-circuiting
-    ``limit(max+1).count()`` (O(max) scan, never a full count of an
-    arbitrarily large input). Route oversized corpora to the candidate
-    tiers (minhash/LSH/IVF) and call this on the candidates only.
+    SIZE GUARD (same discipline as ivfpq_topk_from_index's bounded-Q
+    contract): exact all-pairs is O(n²) compute no matter how it is
+    distributed — a 10⁹-vector corpus is ~10¹⁸ dot products. Inputs
+    above ``max_vectors`` raise unless ``force=True``; the size probe is
+    a short-circuiting ``limit(max+1).count()`` (O(max) scan, never a
+    full count of an arbitrarily large input). Route oversized corpora
+    to the candidate tiers (minhash, the IVF-PQ index) and call this on
+    the candidates only.
     """
     if not force:
         probe = emb.select(id_col).limit(max_vectors + 1).count()
@@ -784,8 +785,9 @@ def embedding_neardup_pairs(
             raise ValueError(
                 f"embedding_neardup_pairs is the exact O(n²) verification "
                 f"tier; input exceeds max_vectors={max_vectors}. Generate "
-                "candidates with minhash_verified_pairs / ann.ivf_topk / "
-                "ann.lsh_topk and verify those, or pass force=True."
+                "candidates with minhash_verified_pairs / the IVF-PQ index "
+                "(ann.build_ivfpq_index + ann.ivfpq_topk_from_index) and "
+                "verify those, or pass force=True."
             )
     if strategy == "fold":
         v = F.transform(F.col(vec_col), lambda x: x.cast("double"))

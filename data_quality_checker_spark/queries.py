@@ -1875,68 +1875,34 @@ def q_audio_neardup_clusters(spark, sf_dir):
     )
 
 
-@register("ann_lsh_topk", None)
-def q_ann_lsh_topk(spark, sf_dir):
-    """Approximate top-k via deterministic multi-table hyperplane LSH,
-    probe-bucket equi-join — operators/ann.lsh_topk (recall measured
-    against ann_topk in bench, general + planted mid/near-dup regimes).
-    This corpus' true neighbors sit at cosine≈0.37 — the GENERAL regime,
-    where sign-LSH recall measured 0.08 — so the call declares
-    regime="general", force=True: it exists to keep the honest recall
-    number on the bench record; production general-regime queries route
-    to ann_ivf_topk (the regime guard in lsh_topk enforces this).
-    Rows-only: the fp sign-threshold inside the bucket bits is not safely
-    reproducible in a second engine."""
+def _ivfpq_index(spark, sf_dir: str) -> str:
+    """The IVF-PQ index over sf_dir's embeddings, built once per sf into
+    a deterministic /tmp path and probed thereafter — the Faiss
+    build-once/search-many shape. Shared by the registry row and the
+    bench's planted-recall regimes."""
+    base, _sf = _sf_of(sf_dir)
     e = _t(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < 10)
-    out = ann.lsh_topk(e, q, k=5, regime="general", force=True)
-    return out.withColumn("rank", F.col("rank").cast("bigint"))
-
-
-@register("ann_ivf_topk", None)
-def q_ann_ivf_topk(spark, sf_dir):
-    """Approximate top-k via the IVF (inverted-file) index — centroid-id
-    equi-join, Arrow-GEMM assignment — operators/ann.ivf_topk. Rows-only:
-    the k-means fit is not SQL-expressible; bench reports measured recall
-    vs ann_topk (`ann_ivf_recall`)."""
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < 10)
-    out = ann.ivf_topk(e, q, k=5)
-    return out.withColumn("rank", F.col("rank").cast("bigint"))
+    return _publish(
+        f"/tmp/dqc_ivfpq_{base}{_TAG}",
+        lambda tmp: ann.build_ivfpq_index(e, tmp),
+        marker="quantizers.npz",
+    )
 
 
 @register("ann_ivfpq_topk", None)
 def q_ann_ivfpq_topk(spark, sf_dir):
-    """Approximate top-k via the PRODUCT-QUANTIZED inverted file
-    (operators/ann.build_ivfpq_index / ivfpq_topk_from_index): postings
-    hold pq_m=8 one-byte codes per vector instead of the raw floats
-    (64× smaller at dim 64 — the memory-bounded tier for 10^12-vector
+    """Approximate top-k via the PRODUCT-QUANTIZED inverted file, the one
+    approximate ANN index (operators/ann.build_ivfpq_index /
+    ivfpq_topk_from_index, at the module's measured defaults): postings
+    hold pq_m=16 one-byte codes per vector instead of the raw floats
+    (32× smaller at dim 64 — the memory-bounded tier for 10^12-vector
     corpora), ADC table-lookup scoring inside mapInPandas over a
     partition-pruned read, exact-cosine refine on the top candidates.
     Rows-only: the two k-means fits are not SQL-expressible; bench
-    reports measured recall vs ann_topk (`ann_ivfpq_recall`). The index
-    is built once per (sf, spec) into a deterministic /tmp path and
-    probed thereafter — the Faiss build-once/search-many shape."""
+    reports measured recall vs ann_topk (`ann_ivfpq_recall`)."""
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 10)
-    base, _sf = _sf_of(sf_dir)
-    # pq_m=16 (dsub=4, 32× compression at dim 64): halves the residual
-    # quantization distortion vs pq_m=8, which in this corpus' hard
-    # cosine≈0.37 regime lifts measured sf0.1 recall 0.66 → 0.94 —
-    # matching the raw-vector IVF tier — at nprobe=64. refine_mult=24
-    # (the exact re-rank pool, k·24 = 120 rows/query — O(Q·k·dim) work,
-    # INDEPENDENT of corpus size): the round-5 10× sweep showed the ADC
-    # top-40 pool thins as distractor density grows (recall 0.94 at 2k
-    # vectors → 0.88 at 20k with refine_mult=8); 120 candidates restores
-    # 0.94 at 20k and leaves sf0.1 recall and wall time unchanged.
-    path = _publish(
-        f"/tmp/dqc_ivfpq16_{base}{_TAG}",
-        lambda tmp: ann.build_ivfpq_index(e, tmp, pq_m=16),
-        marker="codebooks.parquet",
-    )
-    out = ann.ivfpq_topk_from_index(
-        spark, path, q, k=5, nprobe=64, refine_emb=e, refine_mult=24
-    )
+    out = ann.ivfpq_topk_from_index(spark, _ivfpq_index(spark, sf_dir), q, refine_emb=e)
     return out.withColumn("rank", F.col("rank").cast("bigint"))
 
 
@@ -2077,7 +2043,6 @@ _FIRST = [
     "orders_profile",
     "documents_profile",
     "ann_topk",
-    "ann_lsh_topk",
     "regional_revenue",
     "cell_missing_pct",
     "summary_stats_lineitem",

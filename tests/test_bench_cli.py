@@ -1,7 +1,8 @@
 """Bench and tool entry points: bench.py's argument parser rejects bad
-input before any Spark session starts, and every script under tools/
-(plus bench.py) imports cleanly, so a helper deleted from one tool that
-another still imports fails here instead of at the next measurement."""
+input before any Spark session starts, its ANN-recall section raises
+when a tier fails, and every script under tools/ (plus bench.py)
+imports cleanly, so a helper deleted from one tool that another still
+imports fails here instead of at the next measurement."""
 
 from __future__ import annotations
 
@@ -39,6 +40,22 @@ def test_bench_skip_names_are_bench_queries():
     assert args.cold_only
     assert args.skip == ["ann_ivfpq_topk", "ann_topk"]
     assert not bench._parse_args([]).cold_only
+
+
+def test_ann_recall_raises_when_a_tier_fails():
+    """A failing approximate tier fails the recall section instead of
+    vanishing from it as a missing key."""
+
+    class Rows:
+        def collect(self):
+            return [{"query_id": 0, "neighbor_id": 1}]
+
+    def broken(_spark, _sf_dir):
+        raise RuntimeError("index probe failed")
+
+    qs = {"ann_topk": lambda _spark, _sf_dir: Rows(), "ann_ivfpq_topk": broken}
+    with pytest.raises(RuntimeError, match="index probe failed"):
+        bench._ann_recall(None, qs, "sf0.01")
 
 
 @pytest.mark.parametrize("script", SCRIPTS)

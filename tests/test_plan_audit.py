@@ -29,7 +29,6 @@ SF_DIR = "/root/testdata/sf0.001"
 _EXECUTES_ON_BUILD = {
     "clips_decisions_labels",
     "clips_findings_summary",
-    "ann_ivf_topk",           # driver-side k-means sample/fit
     "minhash_verified_pairs",  # eager candidate persist
     "ml_recommendations",      # driver-side aggregate collect + assembly
 }

@@ -113,8 +113,8 @@ def test_embedding_neardup_both_strategies_agree(spark):
 
 def test_embedding_neardup_size_guard(spark):
     """VERDICT r3 item 6: the exact O(n²) all-pairs tier must refuse
-    oversized inputs (mirroring lsh_topk's regime guard) and route the
-    caller to the candidate-generating tiers, unless forced."""
+    oversized inputs and route the caller to the candidate-generating
+    tiers (minhash, the IVF-PQ index), unless forced."""
     import numpy as np
 
     rng = np.random.default_rng(3)
@@ -144,18 +144,28 @@ def test_cosine_topk_exact(spark):
     assert out == [(1, 1), (2, 2), (3, 3)]
 
 
-def test_lsh_topk_subset_of_exact_candidates(spark):
+def _unit_emb(spark, rng, n, dim):
+    """n seeded unit-norm vectors → (numpy matrix, embeddings frame)."""
     import numpy as np
 
-    rng = np.random.default_rng(1)
-    vecs = [(i, [float(x) for x in rng.normal(size=16)]) for i in range(100)]
-    e = _emb(spark, vecs)
+    en = rng.standard_normal((n, dim))
+    en /= np.linalg.norm(en, axis=1, keepdims=True)
+    return en, _emb(spark, [(i, [float(x) for x in v]) for i, v in enumerate(en)])
+
+
+def test_ivfpq_subset_of_exact_candidates(spark, tmp_path):
+    """Refined IVF-PQ rows carry exact cosines: every (query, neighbor,
+    cosine) appears in the exact full ranking with the same value, at
+    most k per query. Single assignment makes refine candidates unique
+    per (query, neighbor): with every cell probed and a pool covering
+    the corpus, each query gets each other vector exactly once."""
+    import numpy as np
+
+    _, e = _unit_emb(spark, np.random.default_rng(1), 100, 16)
     q = e.where("vec_id < 3")
-    exact = ann.cosine_topk(e, q, k=5)
-    approx = ann.lsh_topk(e, q, k=5)
-    # approx neighbors must be valid ids with correct cosines: spot-check
-    # that any (query, neighbor, cosine) in approx appears in the exact
-    # full ranking with the same cosine value
+    idx = str(tmp_path / "pq")
+    ann.build_ivfpq_index(e, idx, n_centroids=8, pq_m=4, ks=32)
+    approx = ann.ivfpq_topk_from_index(spark, idx, q, refine_emb=e, k=5, nprobe=2)
     full = {
         (r["query_id"], r["neighbor_id"]): r["cosine"]
         for r in ann.cosine_topk(e, q, k=99).collect()
@@ -163,6 +173,12 @@ def test_lsh_topk_subset_of_exact_candidates(spark):
     for r in approx.collect():
         assert full[(r["query_id"], r["neighbor_id"])] == pytest.approx(r["cosine"], abs=1e-9)
     assert approx.groupBy("query_id").count().agg(F.max("count")).first()[0] <= 5
+
+    pool = ann.ivfpq_topk_from_index(
+        spark, idx, q, refine_emb=e, k=99, nprobe=8, refine_mult=1
+    ).collect()
+    pairs = [(r["query_id"], r["neighbor_id"]) for r in pool]
+    assert len(pairs) == len(set(pairs)) == len(full) == 3 * 99
 
 
 def _planted(rng, en, n_q, scale=0.045):
@@ -177,21 +193,19 @@ def _planted(rng, en, n_q, scale=0.045):
     return src, out
 
 
-def test_lsh_topk_neardup_recall(spark):
-    """The regime sign-LSH is built for: planted cosine≥0.9 neighbors
-    must be found (VERDICT r1: measured recall was 0.44 with the old
-    single-table theta-join; the multi-table equi-join must clear 0.9)."""
+def test_ivfpq_neardup_recall(spark, tmp_path):
+    """Planted cosine≈0.94 neighbors must be found through ADC + refine
+    while probing a quarter of the cells."""
     import numpy as np
 
     rng = np.random.default_rng(5)
-    en = rng.standard_normal((300, 32))
-    en /= np.linalg.norm(en, axis=1, keepdims=True)
-    e = _emb(spark, [(i, [float(x) for x in v]) for i, v in enumerate(en)])
+    en, e = _unit_emb(spark, rng, 300, 32)
     src, planted = _planted(rng, en, 20)
     q = _emb(spark, planted)
-    hits = {
-        (r["query_id"], r["neighbor_id"]) for r in ann.lsh_topk(e, q, k=3).collect()
-    }
+    idx = str(tmp_path / "pq")
+    ann.build_ivfpq_index(e, idx, n_centroids=32, pq_m=8, ks=64)
+    out = ann.ivfpq_topk_from_index(spark, idx, q, refine_emb=e, k=3, nprobe=8)
+    hits = {(r["query_id"], r["neighbor_id"]) for r in out.collect()}
     recall = sum(1 for qi, s in enumerate(src) if (1000 + qi, int(s)) in hits) / len(src)
     assert recall >= 0.9, recall
 
@@ -222,68 +236,30 @@ def test_neardup_components_chain_and_clique(spark):
         assert got == expected, bound
 
 
-def test_lsh_topk_regime_guard(spark):
-    """VERDICT r2 item 4: no caller may land on sign-LSH's measured 0.08
-    general-regime recall unknowingly — out-of-regime calls must raise
-    (routing to ivf_topk) unless explicitly forced."""
-    import numpy as np
-
-    rng = np.random.default_rng(9)
-    e = _emb(spark, [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(10)])
-    q = e.where("vec_id < 2")
-    for regime in ("mid", "general"):
-        with pytest.raises(ValueError, match="ivf_topk"):
-            ann.lsh_topk(e, q, k=3, regime=regime)
-    with pytest.raises(ValueError, match="unknown regime"):
-        ann.lsh_topk(e, q, k=3, regime="nope")
-    # forced out-of-regime and default near-dup calls still plan fine
-    assert ann.lsh_topk(e, q, k=3, regime="general", force=True).count() >= 0
-    assert ann.lsh_topk(e, q, k=3).count() >= 0
-    # the mid regime is legitimate WITH the wider Hamming<=2 probe
-    assert ann.lsh_topk(e, q, k=3, regime="mid", max_hamming=2).count() >= 0
-
-
-def test_ann_udfs_handle_empty_partitions(spark):
-    """Zero-row Arrow batches reach the codes/centroid UDFs whenever a
+def test_ann_udfs_handle_empty_partitions(spark, tmp_path):
+    """Zero-row Arrow batches reach the PQ encode UDF whenever a
     partition is empty; they must not blow up on v.shape[1] (ADVICE r2)."""
-    e = _emb(spark, [(i, [float(i), 1.0, 0.0]) for i in range(4)]).repartition(8)
+    e = _emb(spark, [(i, [float(i), 1.0, 0.0, 0.0]) for i in range(4)]).repartition(8)
     q = e.where("vec_id < 2").repartition(4)
-    assert ann.lsh_topk(e, q, k=2).count() >= 0
-    assert ann.ivf_topk(e, q, k=2, n_centroids=2, nprobe=1).count() >= 0
+    idx = str(tmp_path / "pq")
+    ann.build_ivfpq_index(e, idx, n_centroids=2, pq_m=2, ks=4)
+    assert ann.ivfpq_topk_from_index(spark, idx, q, refine_emb=e, k=2).count() >= 0
 
 
-def test_ivf_topk_recall_planted(spark):
+def test_ann_probe_is_equi_join(spark, tmp_path):
+    """The IVF-PQ probe and refine must be hash equi-joins — never a
+    nested-loop theta-join evaluating every (corpus × query) pair
+    (VERDICT r1 'What's wrong' #4)."""
     import numpy as np
 
-    rng = np.random.default_rng(6)
-    en = rng.standard_normal((300, 32))
-    en /= np.linalg.norm(en, axis=1, keepdims=True)
-    e = _emb(spark, [(i, [float(x) for x in v]) for i, v in enumerate(en)])
-    src, planted = _planted(rng, en, 20)
-    q = _emb(spark, planted)
-    out = ann.ivf_topk(e, q, k=3, n_centroids=32, nprobe=8, assign_mult=2)
-    hits = {(r["query_id"], r["neighbor_id"]) for r in out.collect()}
-    recall = sum(1 for qi, s in enumerate(src) if (1000 + qi, int(s)) in hits) / len(src)
-    assert recall >= 0.9, recall
-
-
-@pytest.mark.parametrize("fn", ["lsh", "ivf"])
-def test_ann_probe_is_equi_join(spark, fn):
-    """The probe must be a hash equi-join on the bucket/centroid id —
-    never a nested-loop theta-join evaluating every (corpus × query)
-    pair (VERDICT r1 'What's wrong' #4)."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    vecs = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(50)]
-    e = _emb(spark, vecs)
+    _, e = _unit_emb(spark, np.random.default_rng(7), 50, 8)
     q = e.where("vec_id < 3")
-    if fn == "lsh":
-        out = ann.lsh_topk(e, q, k=3, n_planes=6, n_tables=2)
-    else:
-        out = ann.ivf_topk(e, q, k=3, n_centroids=8, nprobe=2, assign_mult=1)
+    idx = str(tmp_path / "pq")
+    ann.build_ivfpq_index(e, idx, n_centroids=8, pq_m=2, ks=16)
+    out = ann.ivfpq_topk_from_index(spark, idx, q, refine_emb=e, k=3, nprobe=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan, plan[:1500]
+    assert "CartesianProduct" not in plan, plan[:1500]
     assert "HashJoin" in plan or "SortMergeJoin" in plan, plan[:1500]
 
 
@@ -356,32 +332,6 @@ def test_minhash_verified_pairs_collapsed_equivalence(spark):
     assert not any(a >= 200 or b >= 200 for a, b, _ in collapsed)
 
 
-def test_ivf_persisted_index_matches_inline(spark, tmp_path):
-    """build-once/probe-many: the persisted-index probe must return the
-    same top-k as the inline operator with the same centroids, and its
-    scan must be partition-pruned to the probed cid partitions."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    en = rng.standard_normal((200, 16))
-    en /= np.linalg.norm(en, axis=1, keepdims=True)
-    e = _emb(spark, [(i, [float(x) for x in v]) for i, v in enumerate(en)])
-    q = e.where("vec_id < 5")
-
-    idx = str(tmp_path / "ivf")
-    cents = ann.build_ivf_index(e, idx, n_centroids=16, assign_mult=2)
-    inline = {
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in ann.ivf_topk(e, q, k=3, nprobe=4, assign_mult=2, centroids=cents).collect()
-    }
-    from_index = ann.ivf_topk_from_index(spark, idx, q, k=3, nprobe=4)
-    got = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in from_index.collect()}
-    assert got == inline
-
-    plan = from_index._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cid" in plan.split("PartitionFilters")[1][:200], plan[:1500]
-
-
 # ---------------------------------------------------------------------------
 # IVF-PQ (product-quantized inverted file)
 
@@ -419,25 +369,26 @@ def test_ivfpq_recall_and_compressed_postings(spark, tmp_path):
     assert "CartesianProduct" not in plan
 
 
-def test_ivfpq_adc_only_and_empty_queries(spark, tmp_path):
+def test_ivfpq_empty_inputs(spark, tmp_path):
+    """An empty query batch, a zero-row corpus and a one-row corpus all
+    return cosine_topk's four columns: zero rows for the first two, and
+    exactly cosine_topk's rows for the third."""
     import numpy as np
 
-    rng = np.random.default_rng(8)
-    en = rng.standard_normal((120, 16))
-    en /= np.linalg.norm(en, axis=1, keepdims=True)
-    e = _emb(spark, [(i, [float(x) for x in v]) for i, v in enumerate(en)])
-    idx = str(tmp_path / "pq2")
-    ann.build_ivfpq_index(e, idx, n_centroids=8, pq_m=4, ks=32)
-
-    # ADC-only path: approximate score column, k rows per query
-    out = ann.ivfpq_topk_from_index(spark, idx, e.where("vec_id < 3"), k=2, nprobe=8)
-    rows = out.collect()
-    assert {r["query_id"] for r in rows} == {0, 1, 2}
-    assert all(r["rank"] in (1, 2) for r in rows)
-    assert out.columns == ["query_id", "neighbor_id", "rank", "score"]
-
-    empty = ann.ivfpq_topk_from_index(spark, idx, e.where("vec_id < 0"), k=2)
-    assert empty.count() == 0
+    _, e = _unit_emb(spark, np.random.default_rng(8), 120, 16)
+    q = e.where("vec_id < 3")
+    for name, corpus, queries in (
+        ("empty_queries", e, e.where("vec_id < 0")),
+        ("zero_row_corpus", e.where("vec_id < 0"), q),
+        ("one_row_corpus", e.where("vec_id = 0"), q),
+    ):
+        idx = str(tmp_path / name)
+        ann.build_ivfpq_index(corpus, idx, n_centroids=8, pq_m=4, ks=32)
+        out = ann.ivfpq_topk_from_index(spark, idx, queries, refine_emb=corpus, k=2)
+        exact = ann.cosine_topk(corpus, queries, k=2)
+        assert out.columns == exact.columns, name
+        assert sorted(out.collect()) == sorted(exact.collect()), name
+        assert out.count() == (2 if name == "one_row_corpus" else 0), name
 
 
 def test_ivfpq_refine_without_arrow(spark, tmp_path):
@@ -484,8 +435,8 @@ def test_pq_fit_matches_naive_reference():
     x = rng0.standard_normal((512, 32))
     x /= np.linalg.norm(x, axis=1, keepdims=True)
 
-    cent = ann.fit_ivf_centroids(None, n_centroids=16, sample=x)
-    books = ann.fit_pq_codebooks(None, cent, pq_m=8, ks=32, sample=x)
+    cent = ann.fit_ivf_centroids(x, n_centroids=16)
+    books = ann.fit_pq_codebooks(x, cent, pq_m=8, ks=32)
     assert books.shape == (8, 32, 4)
 
     # naive reference (the pre-optimization inner loop, verbatim shape)
