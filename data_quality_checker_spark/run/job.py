@@ -54,7 +54,7 @@ def bucket_expr(cfg: PipelineConfig):
 
 def completed_buckets(spark: SparkSession, output: str, run_id: str) -> set[int]:
     """Buckets this run_id has committed. A fresh output has no lineage
-    table yet — probed with os.path.exists, as incremental.read_registry
+    table yet — probed with os.path.exists, as incremental.StateTable.read
     does, because a parquet read of a missing path logs a WARN
     FileNotFoundException stack. Any other read failure (an unreadable
     lineage part file) propagates: treating it as "nothing committed"

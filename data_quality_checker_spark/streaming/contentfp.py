@@ -35,10 +35,11 @@ Per micro-batch:
    the step-2 matches as its registry — the batch post-pass
    (audiofp.content_dedup_decisions) is the same call with no registry;
 4. register the batch's surviving cluster keepers (not already matched
-   to the registry) into both tables, gated on the same O(1) per-batch
-   marker-file idempotence protocol as the SHA registry, with the same
-   generic per-bucket compaction (incremental.compact_table_buckets) so
-   neither table degrades into a small-file storm.
+   to the registry) into both tables through incremental.commit_batch:
+   the same O(1) per-batch marker-file idempotence (marker dir
+   ``fp_batches``), pruned reads and per-bucket compaction as the SHA
+   registry, so neither table degrades into a small-file storm. A batch
+   with no fingerprinted clip registers nothing.
 
 Scale shape: every cross-table touch is an equi-join on a
 hash-partitioned key with the partition list pruned to the batch's own
@@ -47,9 +48,6 @@ candidates; audio bytes never reach this module.
 """
 
 from __future__ import annotations
-
-import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,58 +62,15 @@ from ..operators.audiofp import (
     with_ber,
 )
 from ..pipeline import StageGraph
-from .incremental import (
-    MAX_BUCKET_FILES,  # noqa: F401  (re-exported for tests/docs)
-    compact_table_buckets,
-    pin_bucket_count,
-    recover_table_compaction,
-)
+from .incremental import StateTable, bucket_of, commit_batch, pin_bucket_count
 
 # Upper bound; the effective fan-out is pinned per state_dir at first
 # tick (incremental.pin_bucket_count) so small streams don't pay a
 # 256-dir append per tick — see the N_SHA_BUCKETS comment.
 N_FP_BUCKETS = 256
 
-
-def _tokens_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "fp_tokens")
-
-
-def _store_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "fp_store")
-
-
-def _marker(state_dir: str, batch_id: int) -> str:
-    return os.path.join(state_dir, "fp_batches", f"{batch_id}.done")
-
-
-def _tbkt(col, n_buckets: int | None = None):
-    n = N_FP_BUCKETS if n_buckets is None else n_buckets
-    return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
-
-
-def _cbkt(col, n_buckets: int | None = None):
-    n = N_FP_BUCKETS if n_buckets is None else n_buckets
-    return F.pmod(F.xxhash64(F.col(col).cast("string")), F.lit(n)).cast(
-        "int"
-    )
-
-
-def _read_bucketed(
-    spark: SparkSession, path: str, part: str, buckets: list[int]
-) -> DataFrame | None:
-    if not buckets:
-        return None
-    # existence probe, not try/except: a parquet read of a missing path
-    # logs a full FileNotFoundException stack at WARN (see
-    # incremental.read_registry) — first batch always lands here
-    if not os.path.exists(path):
-        return None
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
-        return None
-    return df.where(F.col(part).isin(*buckets))
+FP_TOKENS = StateTable("fp_tokens", "tbkt", "fptok", "token")
+FP_STORE = StateTable("fp_store", "cbkt", "fpstore", "clip_id")
 
 
 def process_content_increment(
@@ -157,15 +112,12 @@ def process_content_increment(
     stop-token the batch side dropped never joins any registry posting
     list); registration stores only surviving tokens, so the registry
     never accumulates a hub posting list either."""
-    recover_table_compaction(state_dir, "fp_tokens", "tbkt", "fptok")
-    recover_table_compaction(state_dir, "fp_store", "cbkt", "fpstore")
     # effective bucket fan-out, pinned per state_dir at first tick (both
     # fp tables share it; the sha tick pinned the sha count from the
     # same batch already, so the meta file is just extended here)
     n_bkt = pin_bucket_count(
-        state_dir, "n_fp_buckets", "fp_tokens", graph.n_rows, N_FP_BUCKETS
+        state_dir, "n_fp_buckets", FP_TOKENS.name, graph.n_rows, N_FP_BUCKETS
     )
-    batch_seen = os.path.exists(_marker(state_dir, batch_id))
 
     keys = payload_reps(graph.hashed)
     fps = graph.stats.select(
@@ -185,13 +137,11 @@ def process_content_increment(
         # job per tick for the same scan)
         probe_buckets = sorted(
             r["b"]
-            for r in toks.select(_tbkt("token", n_bkt).alias("b"))
+            for r in toks.select(bucket_of("token", n_bkt).alias("b"))
             .distinct()
             .collect()
         )
-        reg_toks = _read_bucketed(
-            spark, _tokens_path(state_dir), "tbkt", probe_buckets
-        )
+        reg_toks = FP_TOKENS.read(spark, state_dir, probe_buckets)
         cross = None
         if reg_toks is not None:
             # same candidate discipline as the batch operator: shared
@@ -222,13 +172,11 @@ def process_content_increment(
             owned.append(cand)
             keeper_buckets = sorted(
                 r["b"]
-                for r in cand.select(_cbkt("clip_a", n_bkt).alias("b"))
+                for r in cand.select(bucket_of("clip_a", n_bkt).alias("b"))
                 .distinct()
                 .collect()
             )
-            store = _read_bucketed(
-                spark, _store_path(state_dir), "cbkt", keeper_buckets
-            )
+            store = FP_STORE.read(spark, state_dir, keeper_buckets)
             if store is not None:
                 bcnt = toks.groupBy("clip_id").agg(
                     F.count(F.lit(1)).alias("n_tok_b")
@@ -283,97 +231,36 @@ def process_content_increment(
         out = content_verdicts(keys, fps, toks, registry=cross)
 
         # Materialize BEFORE the registration block: the registration
-        # derives keepers/ktoks/kfps from this frame ~5 times (two table
-        # writes, two bucket-list collects, the returned count), and its
-        # appends land in the very fp_tokens/fp_store paths the
-        # unpersisted plan would re-read — correctness must not hinge on
-        # the file-listing snapshot racing the self-append. The persist
-        # freezes the probe-join results first.
+        # derives keepers/ktoks/kfps from this frame (two table writes,
+        # the returned frame), and its appends land in the very
+        # fp_tokens/fp_store paths the unpersisted plan would re-read —
+        # correctness must not hinge on the file-listing snapshot racing
+        # the self-append. The persist freezes the probe-join results
+        # first. The count gates registration: a batch without a
+        # fingerprinted clip appends nothing (commit_batch takes no
+        # zero-row append).
         rows = out.persist()
-        rows.count()
-
-        if not batch_seen:
+        appends = []
+        if rows.count():
             # register the batch's NEW keepers: not a dup of anything.
             # ktoks filters the already-capped token stream, so hub
             # tokens never enter the registry's posting lists
             keepers = rows.where(~F.col("is_content_dup")).select("clip_id")
-            kfps = fps.join(keepers, "clip_id", "left_semi")
             ktoks = toks.join(keepers, "clip_id", "left_semi")
-            # repartition by the partition column: ONE file per touched
-            # bucket per tick regardless of upstream task count. toks is
-            # a persisted 8-partition frame and the keeper semi join is
-            # broadcast (no shuffle), so the unrepartitioned write put 8
-            # files in EVERY bucket per tick — tick 2 then tripped
-            # MAX_BUCKET_FILES on all 256 buckets of both tables at once
-            # (the round-5 streaming fixed-cost regression)
-            def _write_tokens() -> None:
-                ktoks.withColumn("tbkt", _tbkt("token", n_bkt)).repartition(
-                    F.col("tbkt")
-                ).write.mode("append").partitionBy(
-                    "tbkt"
-                ).parquet(_tokens_path(state_dir))
-
-            def _write_store() -> None:
-                # n_tok: the keeper's GLOBAL distinct-token count, stored
-                # so later batches can apply the adaptive candidate floor
-                # (least(MIN, n_tok_keeper, n_tok_probe)) over pruned
-                # bucket reads; left join keeps token-less keepers (never
-                # token-matchable, n_tok null → treated as ≥ MIN)
-                ktok_cnt = ktoks.groupBy("clip_id").agg(
-                    F.count(F.lit(1)).alias("n_tok")
-                )
-                kfps.select("clip_id", "n_subfp", "fp").join(
-                    ktok_cnt, "clip_id", "left"
-                ).withColumn(
-                    "reg_batch", F.lit(batch_id)
-                ).withColumn("cbkt", _cbkt("clip_id", n_bkt)).repartition(
-                    F.col("cbkt")
-                ).write.mode("append").partitionBy(
-                    "cbkt"
-                ).parquet(
-                    _store_path(state_dir)
-                )
-
-            # The two appends target DIFFERENT tables and read only
-            # persisted/broadcast inputs, so submit them from two threads:
-            # each write's cost is dominated by the job-scheduling +
-            # parquet task-commit floor (~1-2.5 s at the pinned 32 dirs,
-            # measured), and overlapping them turns fixed-cost SUM into
-            # fixed-cost MAX per tick. Exceptions propagate.
-            _errs: list[BaseException] = []
-
-            def _guard(fn):
-                try:
-                    fn()
-                except BaseException as exc:  # noqa: BLE001 - re-raised
-                    _errs.append(exc)
-
-            threads = [
-                threading.Thread(target=_guard, args=(fn,), daemon=True)
-                for fn in (_write_tokens, _write_store)
-            ]
-            for th in threads:
-                th.start()
-            for th in threads:
-                th.join()
-            if _errs:
-                raise _errs[0]
-            os.makedirs(os.path.dirname(_marker(state_dir, batch_id)), exist_ok=True)
-            with open(_marker(state_dir, batch_id), "w"):
-                pass
-            # compaction candidates: ALL buckets, not a collect of the
-            # buckets this tick touched — the over-bound check is an
-            # os.listdir per existing bucket dir (microseconds), while
-            # the two touched-bucket collects were one Spark job each
-            # per tick. A bucket another tick pushed over the bound gets
-            # compacted here too, which only tightens the file bound.
-            all_buckets = list(range(n_bkt))
-            compact_table_buckets(
-                spark, state_dir, all_buckets, "fp_tokens", "tbkt", "fptok"
+            # n_tok: the keeper's GLOBAL distinct-token count, stored so
+            # later batches can apply the adaptive candidate floor
+            # (least(MIN, n_tok_keeper, n_tok_probe)) over pruned bucket
+            # reads; left join keeps token-less keepers (never
+            # token-matchable, n_tok null → treated as ≥ MIN)
+            ktok_cnt = ktoks.groupBy("clip_id").agg(F.count(F.lit(1)).alias("n_tok"))
+            kfps = (
+                fps.join(keepers, "clip_id", "left_semi")
+                .select("clip_id", "n_subfp", "fp")
+                .join(ktok_cnt, "clip_id", "left")
+                .withColumn("reg_batch", F.lit(batch_id))
             )
-            compact_table_buckets(
-                spark, state_dir, all_buckets, "fp_store", "cbkt", "fpstore"
-            )
+            appends = [(FP_TOKENS, ktoks), (FP_STORE, kfps)]
+        commit_batch(spark, state_dir, "fp_batches", batch_id, n_bkt, appends)
         return rows
     finally:
         for frame in owned:

@@ -23,35 +23,50 @@ graph as the batch job (pipeline.stage_graph) + a persistent SHA registry:
   keeper source;
 * a new row is a duplicate if its sha is already registered
   (first-seen-batch wins; within the first batch, min clip_id wins —
-  deterministic given ordered arrival);
-* registry buckets stay scan-friendly: each micro-batch appends one
-  file set per touched bucket, so a hot bucket would accumulate O(B)
-  small files over B batches — after the append, any touched bucket
-  holding more than ``MAX_BUCKET_FILES`` parquet files is rewritten to
-  a single file (tmp dir + two renames, with a leftover-dir recovery
-  sweep at the next tick for the crash window between the renames).
+  deterministic given ordered arrival).
+
+State tables. ``sha_registry/sbkt=K`` here and the content tier's
+``fp_tokens/tbkt=K`` and ``fp_store/cbkt=K`` (streaming/contentfp.py) are
+each one ``StateTable``: a parquet dir under ``state_dir`` whose rows land
+in bucket ``bucket_of(key, n)``, n pinned per state_dir
+(``pin_bucket_count``). All three share one protocol:
+
+* ``StateTable.read`` — the pruned read of the buckets a batch can touch.
+  A missing table dir is a fresh stream; a table dir without readable
+  data raises, because reading it as empty would silently turn
+  cross-batch dedup off. No commit creates a table with a zero-row
+  append, so an existing table dir always holds data;
+* ``commit_batch`` — a tier's commit sequence: marker probe, appends,
+  marker, compaction;
+* compaction: each append adds one file per touched bucket, so a hot
+  bucket would accumulate O(B) small files over B batches — any bucket
+  holding more than ``MAX_BUCKET_FILES`` parquet files is rewritten to a
+  single file (tmp dir + two renames), and every read and append first
+  sweeps the leftovers of a compaction cut short between the renames.
 
 Commit order of one tick (``process_and_write``):
 
 1. decisions — written partitioned by batch_id with dynamic partition
    overwrite, while the registry still holds exactly the files the
    decisions plan listed;
-2. the registry append of the batch's new keepers;
-3. the per-batch marker file;
-4. compaction of the touched buckets (it deletes registry files, so it
-   must follow every read of them).
+2. ``commit_batch`` of the SHA registry: the append of the batch's new
+   keepers (none when the batch has no non-null sha), the per-batch
+   marker ``registry_batches/{batch_id}.done``, then compaction (it
+   deletes registry files, so it must follow every read of them).
 
-With ``content_dedup`` the fingerprint tier registers inside its own
-step before step 1, after freezing its verdicts (streaming/contentfp.py).
+With ``content_dedup`` the fingerprint tier runs its own ``commit_batch``
+(marker dir ``fp_batches``) before step 1, after freezing its verdicts
+(streaming/contentfp.py).
 
 ``foreachBatch`` is at-least-once, so every step is idempotent per
 batch_id. A replay after a crash anywhere recomputes the decisions
-deterministically: before step 2 the registry does not hold the batch,
-after it the registry already holds the batch's own keepers, and in
-both cases the keeper of every sha is unchanged, so the overwrite of
+deterministically: before the append the registry does not hold the
+batch, after it the registry already holds the batch's own keepers, and
+in both cases the keeper of every sha is unchanged, so the overwrite of
 step 1 converges. The append is gated on the marker (an O(1) existence
 probe — NOT a collect of an ever-growing marker table); a replay
-between steps 2 and 3 finds its keepers registered and appends nothing.
+between the append and the marker finds its keepers registered and
+appends nothing.
 
 The global IQR duration fence is whole-dataset state and cannot be
 "streamed" — it is calibrated once from a static sample (or a previous
@@ -69,7 +84,9 @@ import json
 import os
 import shutil
 import threading
+from typing import NamedTuple
 
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -100,21 +117,194 @@ MIN_REGISTRY_BUCKETS = 32
 MAX_BUCKET_FILES = 8
 
 
-def _registry_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "sha_registry")
+def bucket_of(col: Column | str, n_buckets: int) -> Column:
+    """The state-table bucket of a key: ``pmod(xxhash64(key), n)``."""
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
-def _batches_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "registry_batches")
+class StateTable(NamedTuple):
+    """One bucketed parquet table under ``state_dir``: rows land in
+    ``name/part=K`` with K = bucket_of(key, n); a compaction in flight
+    lives in ``.{tag}_compact_*`` dirs beside it."""
+
+    name: str
+    part: str
+    tag: str
+    key: str
+
+    def path(self, state_dir: str) -> str:
+        return os.path.join(state_dir, self.name)
+
+    def read(
+        self, spark: SparkSession, state_dir: str, buckets: list[int]
+    ) -> DataFrame | None:
+        """The table pruned to ``buckets`` (partition pruning bounds the
+        scan), or None when no bucket is asked for or the stream has not
+        created the table yet.
+
+        The fresh-stream probe is an ``os.path.exists`` check, not a
+        try/except around the read: a parquet read of a missing path makes
+        Spark's ResolveDataSource log a full FileNotFoundException stack
+        trace at WARN (FileStreamSink metadata probe) before the Python
+        exception even surfaces — a benign but trust-eroding trace in every
+        clean bench/driver log (VERDICT r3 item 7). Any other failure
+        propagates: a table dir without readable data read as "nothing
+        registered" would silently turn cross-batch dedup off. State dirs
+        are local filesystem by design here (same assumption as the
+        os.rename compaction protocol)."""
+        self.recover(state_dir)
+        if not buckets or not os.path.exists(self.path(state_dir)):
+            return None
+        return spark.read.parquet(self.path(state_dir)).where(
+            F.col(self.part).isin(*buckets)
+        )
+
+    def append(self, state_dir: str, rows: DataFrame, n_buckets: int) -> None:
+        # repartition by the partition column: exactly ONE parquet file per
+        # touched bucket per tick, whatever the upstream task count (W write
+        # tasks would otherwise append up to W files per bucket per tick and
+        # trip the compaction bound W× sooner — at cluster scale, every tick)
+        rows.withColumn(self.part, bucket_of(self.key, n_buckets)).repartition(
+            F.col(self.part)
+        ).write.mode("append").partitionBy(self.part).parquet(self.path(state_dir))
+
+    def recover(self, state_dir: str) -> None:
+        """Sweep leftovers of a compaction interrupted mid-swap. The swap is
+        write-tmp → rename(bucket→old) → rename(tmp→bucket) → delete old; a
+        crash can only leave (a) a stale tmp dir (harmless, deleted), or
+        (b) an ``old`` dir with the bucket dir missing (restored) / present
+        (compaction completed, ``old`` deleted). Single-writer: one streaming
+        query owns ``state_dir`` (enforced by the stream checkpoint)."""
+        try:
+            names = os.listdir(state_dir)
+        except FileNotFoundError:
+            return
+        for name in names:
+            full = os.path.join(state_dir, name)
+            if name.startswith(f".{self.tag}_compact_tmp_"):
+                shutil.rmtree(full, ignore_errors=True)
+            elif name.startswith(f".{self.tag}_compact_old_"):
+                b = name.rsplit("_", 1)[1]
+                bdir = os.path.join(self.path(state_dir), f"{self.part}={b}")
+                if os.path.exists(bdir):
+                    shutil.rmtree(full, ignore_errors=True)
+                else:
+                    os.rename(full, bdir)
+
+    def compact(self, spark: SparkSession, state_dir: str) -> None:
+        """Rewrite every bucket holding more than ``MAX_BUCKET_FILES``
+        parquet files down to one file, so per-batch pruned reads stay
+        O(bucket bytes), not O(batches). The candidates are every existing
+        bucket dir — an os.listdir each (microseconds), where collecting
+        the buckets a tick touched costs a Spark job. Local-FS renames
+        here; on HDFS/S3 the same sequence goes through the Hadoop
+        FileSystem API (or the table graduates to Iceberg, whose rewrite
+        action is this operation natively — see run/ddl.py)."""
+        root = self.path(state_dir)
+        flagged = [
+            int(name.split("=", 1)[1])
+            for name in os.listdir(root)
+            if name.startswith(f"{self.part}=")
+            and sum(f.endswith(".parquet") for f in os.listdir(os.path.join(root, name)))
+            > MAX_BUCKET_FILES
+        ]
+        if not flagged:
+            return
+        # ONE Spark job rewrites every flagged bucket — the round-5 fixed-cost
+        # fix: the previous per-bucket loop launched one read+coalesce+write
+        # job PER bucket, and a tick whose appends pushed all 256 buckets of
+        # both fingerprint tables over the bound paid a 512-job, ~65 s driver
+        # storm. Partition pruning reads just the flagged dirs; the
+        # repartition by the partition column lands each bucket in exactly
+        # one task → one output file per bucket.
+        #
+        # The write materializes the full flagged read BEFORE any source dir
+        # is touched. distinct(): a crash between a batch's table append and
+        # its marker write makes the replay re-append identical rows —
+        # downstream min/distinct keeps RESULTS correct, but without this the
+        # bloat would survive every rewrite and grow per crash-replay.
+        tmproot = os.path.join(state_dir, f".{self.tag}_compact_tmp_batch")
+        shutil.rmtree(tmproot, ignore_errors=True)
+        (
+            spark.read.parquet(root)
+            .where(F.col(self.part).isin(*flagged))
+            .distinct()
+            .repartition(F.col(self.part))
+            .write.mode("overwrite")
+            .partitionBy(self.part)
+            .parquet(tmproot)
+        )
+        # per-bucket swap, same crash protocol as before: a leftover tmp root
+        # is swept by recover's .{tag}_compact_tmp_* rule; a mid-swap crash
+        # leaves .{tag}_compact_old_{b} with the bucket dir missing
+        # (restored) or present (completed, old deleted)
+        for b in flagged:
+            bdir = os.path.join(root, f"{self.part}={b}")
+            tmp_b = os.path.join(tmproot, f"{self.part}={b}")
+            if not os.path.exists(tmp_b):
+                continue
+            old = os.path.join(state_dir, f".{self.tag}_compact_old_{b}")
+            shutil.rmtree(old, ignore_errors=True)
+            os.rename(bdir, old)
+            os.rename(tmp_b, bdir)
+            shutil.rmtree(old, ignore_errors=True)
+        shutil.rmtree(tmproot, ignore_errors=True)
 
 
-def _batch_marker(state_dir: str, batch_id: int) -> str:
-    return os.path.join(_batches_path(state_dir), f"{batch_id}.done")
+SHA_REGISTRY = StateTable("sha_registry", "sbkt", "sha", "sha")
 
 
-def sha_bucket_expr(col: Column | str, n_buckets: int | None = None):
-    n = N_SHA_BUCKETS if n_buckets is None else n_buckets
-    return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
+def commit_batch(
+    spark: SparkSession,
+    state_dir: str,
+    markers: str,
+    batch_id: int,
+    n_buckets: int,
+    appends: list[tuple[StateTable, DataFrame]],
+) -> None:
+    """A tier's commit of one batch. The batch is committed once its
+    marker ``state_dir/markers/{batch_id}.done`` exists (an O(1) probe —
+    the batch count grows without bound, so collecting a marker table
+    each tick would too); otherwise run the appends, write the marker,
+    then compact the appended tables.
+
+    A caller never passes a zero-row append for a table that does not
+    exist yet: it would create a table dir holding only ``_SUCCESS``,
+    which the next tick's read cannot infer a schema from.
+
+    The appends target different tables and read only persisted or
+    broadcast inputs, so every append after the first runs on its own
+    thread: each write's cost is dominated by the job-scheduling +
+    parquet task-commit floor (~1-2.5 s at the pinned 32 dirs, measured),
+    and overlapping them turns fixed-cost SUM into fixed-cost MAX per
+    tick. InheritableThread carries the caller's job description;
+    exceptions propagate."""
+    marker = os.path.join(state_dir, markers, f"{batch_id}.done")
+    if os.path.exists(marker):
+        return
+    errs: list[BaseException] = []
+
+    def _append(table: StateTable, rows: DataFrame) -> None:
+        try:
+            table.recover(state_dir)
+            table.append(state_dir, rows, n_buckets)
+        except BaseException as exc:  # noqa: BLE001 - re-raised below
+            errs.append(exc)
+
+    threads = [InheritableThread(_append, args=a) for a in appends[1:]]
+    for th in threads:
+        th.start()
+    for a in appends[:1]:
+        _append(*a)
+    for th in threads:
+        th.join()
+    if errs:
+        raise errs[0]
+    os.makedirs(os.path.dirname(marker), exist_ok=True)
+    with open(marker, "w"):
+        pass
+    for table, _ in appends:
+        table.compact(spark, state_dir)
 
 
 def _meta_path(state_dir: str) -> str:
@@ -129,13 +319,11 @@ def load_registry_meta(state_dir: str) -> dict:
         return {}
 
 
+_META_LOCK = threading.Lock()
+
+
 def pin_bucket_count(
-    state_dir: str,
-    key: str,
-    table: str,
-    batch_rows,
-    upper: int,
-    explicit: int | None = None,
+    state_dir: str, key: str, table: str, batch_rows, upper: int
 ) -> int:
     """Resolve the EFFECTIVE bucket count for one registry table and pin
     it in ``state_dir/registry_meta.json`` so every later tick (and any
@@ -143,14 +331,14 @@ def pin_bucket_count(
     Iceberg's ``bucket(N, col)`` DDL, and changing it means rewriting
     the table.
 
-    Resolution order: pinned meta value → ``explicit`` caller override →
-    legacy (table dir exists with no meta: it was written under the
-    module global, pin that) → derived from the first batch's row count
-    (``batch_rows`` is a thunk — only evaluated here, on the one tick
-    per stream lifetime that actually derives): the next power of two of
-    rows/64 clamped to [min(MIN_REGISTRY_BUCKETS, upper), upper], so a
-    500-clip sandbox tick gets 32 dirs per append while a 10^6-clip
-    production tick gets the full ``upper`` fan-out.
+    Resolution order: pinned meta value → legacy (table dir exists with
+    no meta: it was written under the module global, pin that) → derived
+    from the first batch's row count (``batch_rows`` is a thunk — only
+    evaluated here, on the one tick per stream lifetime that actually
+    derives): the next power of two of rows/64 clamped to
+    [min(MIN_REGISTRY_BUCKETS, upper), upper], so a 500-clip sandbox tick
+    gets 32 dirs per append while a 10^6-clip production tick gets the
+    full ``upper`` fan-out.
 
     Single-writer ACROSS PROCESSES (the stream checkpoint enforces one
     owner per state_dir), but the sha and content tiers pin DIFFERENT
@@ -158,186 +346,40 @@ def pin_bucket_count(
     threads — the module lock makes the read-modify-write atomic within
     the process so neither thread's key is lost."""
     with _META_LOCK:
-        return _pin_bucket_count_locked(
-            state_dir, key, table, batch_rows, upper, explicit
-        )
-
-
-_META_LOCK = threading.Lock()
-
-
-def _pin_bucket_count_locked(
-    state_dir: str,
-    key: str,
-    table: str,
-    batch_rows,
-    upper: int,
-    explicit: int | None = None,
-) -> int:
-    meta = load_registry_meta(state_dir)
-    if key in meta:
-        return int(meta[key])
-    if explicit is not None:
-        n = int(explicit)
-    elif os.path.exists(os.path.join(state_dir, table)):
-        n = upper
-    else:
-        rows = max(1, int(batch_rows() if callable(batch_rows) else batch_rows))
-        n = 1 << max(0, (rows // 64) - 1).bit_length()
-        n = max(min(MIN_REGISTRY_BUCKETS, upper), min(upper, n))
-    meta[key] = n
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = _meta_path(state_dir) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, _meta_path(state_dir))
-    return n
-
-
-def recover_table_compaction(
-    state_dir: str, table: str = "sha_registry", part: str = "sbkt", tag: str = "sha"
-) -> None:
-    """Sweep leftovers of a compaction interrupted mid-swap. The swap is
-    write-tmp → rename(bucket→old) → rename(tmp→bucket) → delete old; a
-    crash can only leave (a) a stale tmp dir (harmless, deleted), or
-    (b) an ``old`` dir with the bucket dir missing (restored) / present
-    (compaction completed, ``old`` deleted). Single-writer: one streaming
-    query owns ``state_dir`` (enforced by the stream checkpoint).
-
-    Generic over (table, partition column, tag) so every bucketed
-    streaming side-table — the SHA registry here, the fingerprint
-    token/store tables in streaming/contentfp.py — shares one audited
-    crash-recovery protocol instead of three."""
-    try:
-        names = os.listdir(state_dir)
-    except FileNotFoundError:
-        return
-    for name in names:
-        full = os.path.join(state_dir, name)
-        if name.startswith(f".{tag}_compact_tmp_"):
-            shutil.rmtree(full, ignore_errors=True)
-        elif name.startswith(f".{tag}_compact_old_"):
-            b = name.rsplit("_", 1)[1]
-            bdir = os.path.join(state_dir, table, f"{part}={b}")
-            if os.path.exists(bdir):
-                shutil.rmtree(full, ignore_errors=True)
-            else:
-                os.rename(full, bdir)
-
-
-def compact_table_buckets(
-    spark: SparkSession,
-    state_dir: str,
-    buckets: list[int],
-    table: str = "sha_registry",
-    part: str = "sbkt",
-    tag: str = "sha",
-) -> None:
-    """Rewrite any touched bucket of ``table`` holding more than
-    ``MAX_BUCKET_FILES`` parquet files down to one file, so per-batch
-    pruned reads stay O(bucket bytes), not O(batches). Local-FS renames
-    here; on HDFS/S3 the same sequence goes through the Hadoop
-    FileSystem API (or the table graduates to Iceberg, whose rewrite
-    action is this operation natively — see run/ddl.py)."""
-    reg_root = os.path.join(state_dir, table)
-    flagged = []
-    for b in buckets:
-        bdir = os.path.join(reg_root, f"{part}={b}")
-        try:
-            n_files = sum(1 for f in os.listdir(bdir) if f.endswith(".parquet"))
-        except FileNotFoundError:
-            continue
-        if n_files > MAX_BUCKET_FILES:
-            flagged.append(b)
-    if not flagged:
-        return
-    # ONE Spark job rewrites every flagged bucket — the round-5 fixed-cost
-    # fix: the previous per-bucket loop launched one read+coalesce+write
-    # job PER bucket, and a tick whose appends pushed all 256 buckets of
-    # both fingerprint tables over the bound paid a 512-job, ~65 s driver
-    # storm. Partition pruning reads just the flagged dirs; the
-    # repartition by the partition column lands each bucket in exactly
-    # one task → one output file per bucket.
-    #
-    # The write materializes the full flagged read BEFORE any source dir
-    # is touched. distinct(): a crash between a batch's table append and
-    # its marker write makes the replay re-append identical rows —
-    # downstream min/distinct keeps RESULTS correct, but without this the
-    # bloat would survive every rewrite and grow per crash-replay.
-    tmproot = os.path.join(state_dir, f".{tag}_compact_tmp_batch")
-    shutil.rmtree(tmproot, ignore_errors=True)
-    (
-        spark.read.parquet(reg_root)
-        .where(F.col(part).isin(*flagged))
-        .distinct()
-        .repartition(F.col(part))
-        .write.mode("overwrite")
-        .partitionBy(part)
-        .parquet(tmproot)
-    )
-    # per-bucket swap, same crash protocol as before: a leftover tmp root
-    # is swept by recover_table_compaction's .{tag}_compact_tmp_* rule; a
-    # mid-swap crash leaves .{tag}_compact_old_{b} with the bucket dir
-    # missing (restored) or present (completed, old deleted)
-    for b in flagged:
-        bdir = os.path.join(reg_root, f"{part}={b}")
-        tmp_b = os.path.join(tmproot, f"{part}={b}")
-        if not os.path.exists(tmp_b):
-            continue
-        old = os.path.join(state_dir, f".{tag}_compact_old_{b}")
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(bdir, old)
-        os.rename(tmp_b, bdir)
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmproot, ignore_errors=True)
-
-
-def read_registry(
-    spark: SparkSession, state_dir: str, buckets: list[int] | None = None
-) -> DataFrame | None:
-    """Read the SHA registry; with ``buckets`` given, read only those
-    hash-partitions (partition pruning bounds the scan).
-
-    First-batch probe is an ``os.path.exists`` check, not a
-    try/except around the read: a parquet read of a missing path makes
-    Spark's ResolveDataSource log a full FileNotFoundException stack
-    trace at WARN (FileStreamSink metadata probe) before the Python
-    exception even surfaces — a benign but trust-eroding trace in every
-    clean bench/driver log (VERDICT r3 item 7). State dirs are local
-    filesystem by design here (same assumption as the os.rename
-    compaction protocol)."""
-    if not os.path.exists(_registry_path(state_dir)):
-        return None
-    try:
-        reg = spark.read.parquet(_registry_path(state_dir))
-    except Exception:
-        # race/partial-write backstop only; the common miss is above
-        return None
-    if buckets is not None:
-        reg = reg.where(F.col("sbkt").isin(*buckets))
-    return reg.select("sha", "keeper_clip_id")
+        meta = load_registry_meta(state_dir)
+        if key in meta:
+            return int(meta[key])
+        if os.path.exists(os.path.join(state_dir, table)):
+            n = upper
+        else:
+            rows = max(1, int(batch_rows() if callable(batch_rows) else batch_rows))
+            n = 1 << max(0, (rows // 64) - 1).bit_length()
+            n = max(min(MIN_REGISTRY_BUCKETS, upper), min(upper, n))
+        meta[key] = n
+        os.makedirs(state_dir, exist_ok=True)
+        tmp = _meta_path(state_dir) + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(meta, fh)
+        os.replace(tmp, _meta_path(state_dir))
+        return n
 
 
 class _RegistryTick:
     """One tick's side of the SHA registry: ``keepers`` is the keeper
-    source handed to pipeline.stage_graph, ``commit`` the append after
-    the tick's decisions are written. Idempotent per batch_id (an O(1)
-    marker-file probe — the batch count grows without bound, so
-    collecting a marker table each tick would too)."""
+    source handed to pipeline.stage_graph, ``commit`` the registry's
+    ``commit_batch`` after the tick's decisions are written."""
 
     def __init__(
         self, spark: SparkSession, state_dir: str, batch_id: int, cfg: PipelineConfig
     ):
         self.spark, self.state_dir, self.batch_id, self.cfg = spark, state_dir, batch_id, cfg
-        recover_table_compaction(state_dir)
-        self.seen = os.path.exists(_batch_marker(state_dir, batch_id))
 
     def keepers(self, hashed: DataFrame) -> DataFrame:
         """Registry keepers for the batch's shas plus the batch's new
         keepers (a sha already registered belongs to an earlier batch —
         the local candidate keeper loses)."""
         self.n_bkt = pin_bucket_count(
-            self.state_dir, "n_sha_buckets", "sha_registry", hashed.count, N_SHA_BUCKETS
+            self.state_dir, "n_sha_buckets", SHA_REGISTRY.name, hashed.count, N_SHA_BUCKETS
         )
         # the registry buckets this batch can possibly collide with (≤ n_bkt
         # values), observed on a noop pass over the cached slim frame: the
@@ -346,41 +388,29 @@ class _RegistryTick:
         hashed.observe(
             touched,
             F.collect_set(
-                F.when(F.col("sha").isNotNull(), sha_bucket_expr("sha", self.n_bkt))
+                F.when(F.col("sha").isNotNull(), bucket_of("sha", self.n_bkt))
             ).alias("b"),
         ).write.format("noop").mode("overwrite").save()
+        # empty for a batch of only null-payload clips: it reads nothing
+        # and registers nothing
         self.buckets = sorted(touched.get["b"])
-        # a batch of only null-payload clips touches no registry bucket
-        # (an empty isin() would also be malformed)
-        registered = (
-            read_registry(self.spark, self.state_dir, buckets=self.buckets)
-            if self.buckets
-            else None
-        )
+        registered = SHA_REGISTRY.read(self.spark, self.state_dir, self.buckets)
         self.new = keepers_by_sha(hashed.select("clip_id", "sha"), self.cfg)
         if registered is None:
             return self.new
+        registered = registered.select("sha", "keeper_clip_id")
         self.new = self.new.join(registered.select("sha"), "sha", "left_anti")
         return registered.unionByName(self.new)
 
     def commit(self) -> None:
-        """Append the batch's new keepers, write the marker, compact."""
-        if self.seen:
-            return
-        # repartition by the partition column: exactly ONE parquet file
-        # per touched bucket per tick, whatever the upstream task count
-        # (W write tasks would otherwise append up to W files per bucket
-        # per tick and trip the compaction bound W× sooner — at cluster
-        # scale, every tick)
-        self.new.withColumn("sbkt", sha_bucket_expr("sha", self.n_bkt)).repartition(
-            F.col("sbkt")
-        ).write.mode("append").partitionBy("sbkt").parquet(
-            _registry_path(self.state_dir)
+        commit_batch(
+            self.spark,
+            self.state_dir,
+            "registry_batches",
+            self.batch_id,
+            self.n_bkt,
+            [(SHA_REGISTRY, self.new)] if self.buckets else [],
         )
-        os.makedirs(_batches_path(self.state_dir), exist_ok=True)
-        with open(_batch_marker(self.state_dir, self.batch_id), "w"):
-            pass
-        compact_table_buckets(self.spark, self.state_dir, self.buckets)
 
 
 def process_and_write(
@@ -406,8 +436,8 @@ def process_and_write(
     the same audiofp.apply_content_verdicts fold as the batch post-pass
     audiofp.content_dedup_decisions. The graph's one decode pass emits
     the fingerprints too (with_fingerprints), and its cached sha pass
-    feeds the content tier's key map. Both registries share the
-    marker-file idempotence, so replays converge.
+    feeds the content tier's key map. Both registries commit through
+    ``commit_batch``, so replays converge.
 
     CRITICAL: the overwrite mode must be set on the session that executes
     the WRITE. Inside foreachBatch that is the micro-batch's cloned

@@ -5,14 +5,15 @@ arrive in clip_id order."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from data_quality_checker_spark.schema import CLIPS_SCHEMA
 from data_quality_checker_spark.streaming.incremental import (
     process_and_write,
-    read_registry,
     stream_quality_filter,
 )
 
@@ -67,10 +68,10 @@ def test_increment_idempotent_per_batch(spark, halves, tmp_path_factory):
     f = sorted(glob.glob(os.path.join(halves, "*.parquet")))[0]
     batch = spark.read.parquet(f)
     process_and_write(spark, batch, 0, state, out)
-    n1 = read_registry(spark, state).count()
+    n1 = spark.read.parquet(os.path.join(state, "sha_registry")).count()
     # replay of the same batch_id must not grow the registry
     process_and_write(spark, batch, 0, state, out)
-    n2 = read_registry(spark, state).count()
+    n2 = spark.read.parquet(os.path.join(state, "sha_registry")).count()
     assert n1 == n2
 
 
@@ -96,19 +97,19 @@ def test_registry_read_is_bucket_pruned(spark, halves, tmp_path_factory):
     not hash into — if the read were unbounded it would crash on it."""
     from data_quality_checker_spark.operators.dedup import sha1_expr
     from data_quality_checker_spark.streaming.incremental import (
+        bucket_of,
         load_registry_meta,
-        pin_bucket_count,
-        sha_bucket_expr,
     )
 
     state = str(tmp_path_factory.mktemp("stream_state4"))
     out = str(tmp_path_factory.mktemp("stream_out4"))
     files = sorted(glob.glob(os.path.join(halves, "*.parquet")))
     b0 = spark.read.parquet(files[0])
-    # explicit fan-out override, pinned before the first tick: with the
+    # fan-out pinned in the meta file before the first tick: with the
     # derived sandbox-sized count every bucket would be occupied and no
     # foreign bucket would exist to plant the corrupt file in
-    pin_bucket_count(state, "n_sha_buckets", "sha_registry", 0, 256, explicit=256)
+    with open(os.path.join(state, "registry_meta.json"), "w") as fh:
+        json.dump({"n_sha_buckets": 256}, fh)
     process_and_write(spark, b0, 0, state, out)
 
     n_bkt = load_registry_meta(state)["n_sha_buckets"]
@@ -118,7 +119,7 @@ def test_registry_read_is_bucket_pruned(spark, halves, tmp_path_factory):
         r["b"]
         for r in b1.select(sha1_expr("bytes").alias("sha"))
         .where(F.col("sha").isNotNull())
-        .select(sha_bucket_expr("sha", n_bkt).alias("b"))
+        .select(bucket_of("sha", n_bkt).alias("b"))
         .distinct()
         .collect()
     }
@@ -194,7 +195,7 @@ def test_registry_compaction_bounds_file_count(
     # distinct non-null sha across the whole corpus
     from data_quality_checker_spark.operators.dedup import sha1_expr
 
-    reg = inc.read_registry(spark, state)
+    reg = spark.read.parquet(os.path.join(state, "sha_registry"))
     n_shas = (
         spark.read.parquet(str(src))
         .select(sha1_expr("bytes").alias("sha"))
@@ -276,12 +277,6 @@ def test_bucket_count_pinning(tmp_path):
         == N_SHA_BUCKETS
     )
 
-    # explicit override wins on first pin
-    s5 = str(tmp_path / "s5")
-    assert (
-        pin_bucket_count(s5, "n_sha_buckets", "sha_registry", 100, 256, explicit=64)
-        == 64
-    )
     assert MIN_REGISTRY_BUCKETS == 32
 
 
@@ -316,3 +311,115 @@ def test_bucket_count_pinning_cross_thread(tmp_path):
         assert set(load_registry_meta(s)) == {"n_sha_buckets", "n_fp_buckets"}, (
             f"lost a pin on trial {trial}"
         )
+
+
+def _clean_wavs(spark, clips_pdf, n, suffix=""):
+    """``n`` clean wav clips with distinct payloads, ids suffixed."""
+    pdf = clips_pdf[(clips_pdf["defect"] == "clean") & (clips_pdf["codec"] == "wav")]
+    pdf = pdf.drop(columns=["defect"]).iloc[:n].copy()
+    pdf["clip_id"] = pdf["clip_id"] + suffix
+    return spark.createDataFrame(pdf, CLIPS_SCHEMA)
+
+
+@pytest.mark.parametrize("damage", ["corrupt_first_part", "buckets_removed"])
+@pytest.mark.parametrize(
+    "table,part,content_dedup",
+    [("sha_registry", "sbkt", False), ("fp_tokens", "tbkt", True)],
+)
+def test_unreadable_state_table_raises(
+    spark, clips_pdf, tmp_path, damage, table, part, content_dedup
+):
+    """A state table whose dir exists but holds no readable data fails
+    the next tick instead of reading as "nothing registered", which would
+    silently turn cross-batch dedup off: all 20 re-uploads would pass as
+    new."""
+    import shutil
+
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    first = _clean_wavs(spark, clips_pdf, 20)
+    process_and_write(spark, first, 0, state, out, content_dedup=content_dedup)
+    root = os.path.join(state, table)
+    buckets = [b for b in os.listdir(root) if b.startswith(f"{part}=")]
+    assert buckets
+    for b in buckets:
+        if damage == "buckets_removed":
+            shutil.rmtree(os.path.join(root, b))
+        else:
+            # sorts before the real part files, so the read's schema
+            # inference (first file by path) is what meets it
+            with open(os.path.join(root, b, "part-0-corrupt.snappy.parquet"), "wb") as fh:
+                fh.write(b"not a parquet file")
+
+    again = _clean_wavs(spark, clips_pdf, 20, suffix="_re")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        process_and_write(spark, again, 1, state, out, content_dedup=content_dedup)
+
+
+def test_null_payload_first_tick_keeps_registry_readable(spark, clips_pdf, tmp_path):
+    """A first tick whose clips all have null payloads registers nothing,
+    so it leaves no table dir holding only ``_SUCCESS`` (which the next
+    read could not infer a schema from), and cross-batch dedup works from
+    the next tick on."""
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    nulls = _clean_wavs(spark, clips_pdf, 10, suffix="_null")
+    nulls = nulls.withColumn("bytes", F.lit(None).cast("binary"))
+    process_and_write(spark, nulls, 0, state, out)
+    process_and_write(spark, _clean_wavs(spark, clips_pdf, 10), 1, state, out)
+    again = _clean_wavs(spark, clips_pdf, 10, suffix="_re")
+    process_and_write(spark, again, 2, state, out)
+    got = spark.read.parquet(out).where(F.col("batch_id") == 2)
+    assert got.where(F.array_contains("rules_fired", "duplicate")).count() == 10
+
+
+# Bucket of each fixed key under pmod(xxhash64(key), n), as the per-table
+# bucket expressions that wrote existing state_dirs computed it: a 40-hex
+# sha string (sha_registry/sbkt), a bigint token (fp_tokens/tbkt) and a
+# clip_id string (fp_store/cbkt)
+_PINNED_KEYS = {
+    "sha": (
+        "string",
+        [
+            "da39a3ee5e6b4b0d3255bfef95601890afd80709",
+            "356a192b7913b04c54575d69a7d3b5d6e8a2b3c4",
+            "ffffffffffffffffffffffffffffffffffffffff",
+        ],
+    ),
+    "token": ("bigint", [0, 123456789012345, -4611686018427387904]),
+    "clip_id": ("string", ["clip_000000", "clip_000042", "b00_c0"]),
+}
+_PINNED_BUCKETS = {
+    32: {"sha": [1, 19, 19], "token": [12, 14, 22], "clip_id": [2, 13, 31]},
+    256: {"sha": [129, 83, 211], "token": [108, 174, 118], "clip_id": [130, 13, 191]},
+}
+
+
+@pytest.mark.parametrize("n", sorted(_PINNED_BUCKETS))
+def test_state_bucket_placement_is_pinned(spark, clips_pdf, tmp_path, n):
+    """Registered keys stay in the buckets an existing state_dir holds
+    them under, or its pruned reads would miss them: the placement
+    pmod(xxhash64(key), n) gives the pinned buckets for fixed keys of each
+    key type, and after one content tick at fan-out n every row of the
+    three state tables sits in its key's bucket."""
+
+    def bucket(col):
+        return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
+
+    for key, (dtype, values) in _PINNED_KEYS.items():
+        df = spark.createDataFrame([(v,) for v in values], f"{key} {dtype}")
+        got = [r["b"] for r in df.select(bucket(key).alias("b")).collect()]
+        assert got == _PINNED_BUCKETS[n][key], key
+
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    os.makedirs(state)
+    with open(os.path.join(state, "registry_meta.json"), "w") as fh:
+        json.dump({"n_sha_buckets": n, "n_fp_buckets": n}, fh)
+    batch = _clean_wavs(spark, clips_pdf, 4)
+    process_and_write(spark, batch, 0, state, out, content_dedup=True)
+    for table, part, key in (
+        ("sha_registry", "sbkt", "sha"),
+        ("fp_tokens", "tbkt", "token"),
+        ("fp_store", "cbkt", "clip_id"),
+    ):
+        rows = spark.read.parquet(os.path.join(state, table))
+        assert rows.count() > 0, table
+        assert rows.where(F.col(part) != bucket(key)).count() == 0, table
