@@ -34,21 +34,25 @@ def sha1_expr(payload_col: str = "bytes") -> Column:
     return F.sha1(F.col(payload_col))
 
 
-def keepers_by_sha(
-    hashed: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    sha_col: str = "sha",
-    id_col: str = "clip_id",
-) -> DataFrame:
-    """→ (sha, keeper_clip_id): the minimum clip_id per distinct SHA-1,
-    via salted two-phase aggregation."""
-    salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(cfg.dedup_salt_buckets))
-    phase1 = (
-        hashed.where(F.col(sha_col).isNotNull())
-        .groupBy(F.col(sha_col), salt.alias("_salt"))
-        .agg(F.min(id_col).alias("_local_min"))
+def keeper_candidates(hashed: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Phase 1 of the salted keeper aggregation over (clip_id, sha) →
+    (sha, _local_min): at most ``dedup_salt_buckets`` candidate rows per
+    distinct SHA-1, however skewed the key."""
+    salt = F.pmod(F.xxhash64(F.col("clip_id")), F.lit(cfg.dedup_salt_buckets))
+    return (
+        hashed.where(F.col("sha").isNotNull())
+        .groupBy(F.col("sha"), salt.alias("_salt"))
+        .agg(F.min("clip_id").alias("_local_min"))
     )
-    return phase1.groupBy(sha_col).agg(F.min("_local_min").alias("keeper_clip_id"))
+
+
+def keepers_by_sha(
+    hashed: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
+) -> DataFrame:
+    """(clip_id, sha) → (sha, keeper_clip_id): the minimum clip_id per
+    distinct SHA-1, via salted two-phase aggregation."""
+    phase1 = keeper_candidates(hashed, cfg)
+    return phase1.groupBy("sha").agg(F.min("_local_min").alias("keeper_clip_id"))
 
 
 def flag_duplicates(

@@ -49,7 +49,8 @@ whole-stage-codegen pass over the joined slim frames.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable
+from functools import lru_cache
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -244,6 +245,18 @@ def enrich(
     )
 
 
+@lru_cache(maxsize=64)
+def _rule_columns(
+    cfg: PipelineConfig, dur_bounds: tuple[float, float] | None
+) -> tuple[Column, Column]:
+    """The ``keep`` and ``rules_fired`` columns of one rule set. Building
+    them is some hundred py4j calls, so they are built once per (config,
+    fence) — both hashable, the config frozen — and reused by every
+    ``decide`` under it (each streaming tick, each re-score)."""
+    rules = build_rules(cfg, dur_bounds)
+    return keep_expr(rules).alias("keep"), rules_fired_expr(rules).alias("rules_fired")
+
+
 def decide(
     enriched: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
@@ -265,11 +278,11 @@ def decide(
         enriched = flag_duplicates(
             enriched, keepers_by_sha(hashed.select("clip_id", "sha"), cfg)
         )
-    rules = build_rules(cfg, dur_bounds)
+    keep, fired = _rule_columns(cfg, None if dur_bounds is None else tuple(dur_bounds))
     return enriched.select(
         "clip_id",
-        keep_expr(rules).alias("keep"),
-        rules_fired_expr(rules).alias("rules_fired"),
+        keep,
+        fired,
         F.when(F.col("transcript").isNotNull(), F.col("scrub")["scrubbed"]).alias(
             "scrubbed_transcript"
         ),
@@ -299,7 +312,8 @@ def stage_graph(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     dur_bounds: tuple[float, float] | None = None,
     scope: Column | None = None,
-    keepers: Callable[[DataFrame], DataFrame] | None = None,
+    keepers: Callable[[DataFrame, dict], DataFrame] | None = None,
+    observe: Sequence[Column] = (),
     with_fingerprints: bool = False,
 ) -> StageGraph:
     """Build hashed → keepers → enrichment → decode → decisions from the
@@ -308,40 +322,51 @@ def stage_graph(
     ``scope`` — a predicate over clip_id selecting the rows to decide
     (None: every row); the text pass and the representative decode see
     only those rows, while ``hashed`` and the keepers span the full input.
-    ``keepers`` — maps the cached ``hashed`` frame to (sha,
-    keeper_clip_id); default ``keepers_by_sha`` over it.
+    ``keepers`` — maps the cached ``hashed`` frame and the fill's observed
+    row to (sha, keeper_clip_id); default ``keepers_by_sha`` over it.
+    ``observe`` — extra named aggregates over ``hashed`` for the fill to
+    observe, handed to ``keepers`` in that row (the streaming tick's
+    touched registry buckets).
     ``with_fingerprints`` — the stats frame also carries the content
     fingerprints (see ``audio_stats_table``).
 
     The cache is filled EAGERLY: two consumers in one action would
     otherwise race to fill it and run the sha scan twice. The fill is a
-    noop write that observes the row count — one Spark job, where
-    ``count()`` over a cache runs three. That count bounds the
-    representatives, so the reps broadcast gate needs no probe of its
-    own under ``REPS_BROADCAST_MAX`` rows.
+    noop write observed by one ``Observation`` — the row count plus the
+    ``observe`` aggregates, all in one Spark job, where ``count()`` over a
+    cache runs three and each further aggregate a pass of its own. The
+    count bounds the representatives, so the reps broadcast gate needs no
+    probe of its own under ``REPS_BROADCAST_MAX`` rows. When any step of
+    the build fails, from the fill through ``decide``, the cache is
+    released here; after a successful build the caller owns it.
     """
     hashed = hashed_frame(clips).persist(StorageLevel.MEMORY_AND_DISK)
-    fill = Observation()
-    hashed.observe(fill, F.count(F.lit(1)).alias("rows")).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    n_rows = fill.get["rows"]
-    if keepers is None:
-        keeper_rows = keepers_by_sha(hashed.select("clip_id", "sha"), cfg)
-    else:
-        keeper_rows = keepers(hashed)
-    todo, todo_hashed = clips, hashed
-    if scope is not None:
-        todo, todo_hashed = clips.where(scope), hashed.where(scope)
-    stats = audio_stats_table(
-        todo,
-        cfg,
-        hashed=todo_hashed,
-        broadcast_reps=True if n_rows <= REPS_BROADCAST_MAX else None,
-        with_fingerprints=with_fingerprints,
-    )
-    enriched = enrich(todo, cfg, hashed=todo_hashed, stats=stats)
-    decisions = decide(flag_duplicates(enriched, keeper_rows), cfg, dur_bounds)
+    try:
+        fill = Observation()
+        hashed.observe(fill, F.count(F.lit(1)).alias("rows"), *observe).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        seen = fill.get
+        n_rows = seen["rows"]
+        if keepers is None:
+            keeper_rows = keepers_by_sha(hashed.select("clip_id", "sha"), cfg)
+        else:
+            keeper_rows = keepers(hashed, seen)
+        todo, todo_hashed = clips, hashed
+        if scope is not None:
+            todo, todo_hashed = clips.where(scope), hashed.where(scope)
+        stats = audio_stats_table(
+            todo,
+            cfg,
+            hashed=todo_hashed,
+            broadcast_reps=True if n_rows <= REPS_BROADCAST_MAX else None,
+            with_fingerprints=with_fingerprints,
+        )
+        enriched = enrich(todo, cfg, hashed=todo_hashed, stats=stats)
+        decisions = decide(flag_duplicates(enriched, keeper_rows), cfg, dur_bounds)
+    except BaseException:
+        hashed.unpersist()
+        raise
     return StageGraph(hashed, n_rows, stats, enriched, decisions)
 
 

@@ -69,8 +69,16 @@ from .incremental import StateTable, bucket_of, commit_batch, pin_bucket_count
 # 256-dir append per tick — see the N_SHA_BUCKETS comment.
 N_FP_BUCKETS = 256
 
-FP_TOKENS = StateTable("fp_tokens", "tbkt", "fptok", "token")
-FP_STORE = StateTable("fp_store", "cbkt", "fpstore", "clip_id")
+FP_TOKENS = StateTable(
+    "fp_tokens", "tbkt", "fptok", "token", "clip_id STRING, token BIGINT, tbkt INT"
+)
+FP_STORE = StateTable(
+    "fp_store",
+    "cbkt",
+    "fpstore",
+    "clip_id",
+    "clip_id STRING, n_subfp BIGINT, fp ARRAY<INT>, n_tok BIGINT, reg_batch INT, cbkt INT",
+)
 
 
 def process_content_increment(

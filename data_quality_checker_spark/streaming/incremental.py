@@ -27,35 +27,44 @@ graph as the batch job (pipeline.stage_graph) + a persistent SHA registry:
 
 State tables. ``sha_registry/sbkt=K`` here and the content tier's
 ``fp_tokens/tbkt=K`` and ``fp_store/cbkt=K`` (streaming/contentfp.py) are
-each one ``StateTable``: a parquet dir under ``state_dir`` whose rows land
-in bucket ``bucket_of(key, n)``, n pinned per state_dir
-(``pin_bucket_count``). All three share one protocol:
+each one ``StateTable``: a parquet dir under ``state_dir`` with a declared
+schema, whose rows land in bucket ``bucket_of(key, n)``, n pinned per
+state_dir (``pin_bucket_count``). All three share one protocol:
 
-* ``StateTable.read`` — the pruned read of the buckets a batch can touch.
-  A missing table dir is a fresh stream; a table dir without readable
-  data raises, because reading it as empty would silently turn
-  cross-batch dedup off. No commit creates a table with a zero-row
-  append, so an existing table dir always holds data;
-* ``commit_batch`` — a tier's commit sequence: marker probe, appends,
-  marker, compaction;
+* ``StateTable.read`` — the pruned read of the buckets a batch can touch,
+  under the declared schema (no footer job). A missing table dir is a
+  fresh stream; a table dir without readable data raises, because
+  reading it as empty would silently turn cross-batch dedup off. No
+  commit creates a table with a zero-row append, so an existing table
+  dir always holds data;
+* ``StateTable.append`` — Spark writes the rows to a staging dir, then
+  the part files are renamed into the bucket dirs, so no listing a
+  running read already took changes under it;
+* ``commit_batch`` — a tier's commit sequence: marker probe, appends
+  (with an optional write alongside), marker, compaction;
 * compaction: each append adds one file per touched bucket, so a hot
   bucket would accumulate O(B) small files over B batches — any bucket
   holding more than ``MAX_BUCKET_FILES`` parquet files is rewritten to a
   single file (tmp dir + two renames), and every read and append first
-  sweeps the leftovers of a compaction cut short between the renames.
+  sweeps the leftovers of an append or compaction cut short.
 
-Commit order of one tick (``process_and_write``):
+One tick (``process_and_write``) runs each stage once:
 
-1. decisions — written partitioned by batch_id with dynamic partition
-   overwrite, while the registry still holds exactly the files the
-   decisions plan listed;
-2. ``commit_batch`` of the SHA registry: the append of the batch's new
-   keepers (none when the batch has no non-null sha), the per-batch
-   marker ``registry_batches/{batch_id}.done``, then compaction (it
-   deletes registry files, so it must follow every read of them).
+1. the stage graph's cache fill observes the row count and the registry
+   buckets the batch's shas hash into, in one noop pass; the graph's
+   keepers are one aggregation over the batch's salted keeper candidates
+   and the registry rows of those buckets, cut to the batch's shas and
+   persisted, whose rows not registered yet are ``new``;
+2. the decisions write (partitioned by batch_id, dynamic partition
+   overwrite) and the registry append of ``new`` overlap on two threads;
+   whichever runs first fills the keeper cache and the other reads it;
+3. the per-batch marker ``registry_batches/{batch_id}.done``, once both
+   writes succeeded;
+4. compaction, which deletes registry files, so it follows every read of
+   them.
 
 With ``content_dedup`` the fingerprint tier runs its own ``commit_batch``
-(marker dir ``fp_batches``) before step 1, after freezing its verdicts
+(marker dir ``fp_batches``) before step 2, after freezing its verdicts
 (streaming/contentfp.py).
 
 ``foreachBatch`` is at-least-once, so every step is idempotent per
@@ -63,10 +72,11 @@ batch_id. A replay after a crash anywhere recomputes the decisions
 deterministically: before the append the registry does not hold the
 batch, after it the registry already holds the batch's own keepers, and
 in both cases the keeper of every sha is unchanged, so the overwrite of
-step 1 converges. The append is gated on the marker (an O(1) existence
-probe — NOT a collect of an ever-growing marker table); a replay
-between the append and the marker finds its keepers registered and
-appends nothing.
+the decisions partition converges whichever write of step 2 finished
+first. The append is gated on the marker (an O(1) existence probe — NOT
+a collect of an ever-growing marker table); a replay between the append
+and the marker finds its keepers registered and appends nothing, and a
+replay whose marker exists still rewrites its decisions partition.
 
 The global IQR duration fence is whole-dataset state and cannot be
 "streamed" — it is calibrated once from a static sample (or a previous
@@ -84,14 +94,15 @@ import json
 import os
 import shutil
 import threading
-from typing import NamedTuple
+from functools import partial
+from typing import Callable, NamedTuple
 
 from pyspark import InheritableThread
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
-from ..operators.dedup import keepers_by_sha
+from ..operators.dedup import keeper_candidates
 from ..pipeline import stage_graph
 from ..schema import CLIPS_SCHEMA
 
@@ -124,13 +135,16 @@ def bucket_of(col: Column | str, n_buckets: int) -> Column:
 
 class StateTable(NamedTuple):
     """One bucketed parquet table under ``state_dir``: rows land in
-    ``name/part=K`` with K = bucket_of(key, n); a compaction in flight
-    lives in ``.{tag}_compact_*`` dirs beside it."""
+    ``name/part=K`` with K = bucket_of(key, n); ``schema`` is its declared
+    DDL schema, partition column included. An append or a compaction in
+    flight lives in ``.{tag}_append_tmp`` / ``.{tag}_compact_*`` dirs
+    beside it."""
 
     name: str
     part: str
     tag: str
     key: str
+    schema: str
 
     def path(self, state_dir: str) -> str:
         return os.path.join(state_dir, self.name)
@@ -142,36 +156,63 @@ class StateTable(NamedTuple):
         scan), or None when no bucket is asked for or the stream has not
         created the table yet.
 
+        The read carries the declared ``schema``, so it launches no footer
+        job for schema inference. It stays loud: a table dir holding no
+        ``part=`` bucket dir raises here, and a corrupt part file in a read
+        bucket fails the scan — a table dir without readable data read as
+        "nothing registered" would silently turn cross-batch dedup off.
+
         The fresh-stream probe is an ``os.path.exists`` check, not a
         try/except around the read: a parquet read of a missing path makes
         Spark's ResolveDataSource log a full FileNotFoundException stack
-        trace at WARN (FileStreamSink metadata probe) before the Python
-        exception even surfaces — a benign but trust-eroding trace in every
-        clean bench/driver log (VERDICT r3 item 7). Any other failure
-        propagates: a table dir without readable data read as "nothing
-        registered" would silently turn cross-batch dedup off. State dirs
+        trace at WARN before the Python exception even surfaces. State dirs
         are local filesystem by design here (same assumption as the
-        os.rename compaction protocol)."""
+        os.rename append and compaction protocols)."""
         self.recover(state_dir)
-        if not buckets or not os.path.exists(self.path(state_dir)):
+        root = self.path(state_dir)
+        if not buckets or not os.path.exists(root):
             return None
-        return spark.read.parquet(self.path(state_dir)).where(
+        if not any(name.startswith(f"{self.part}=") for name in os.listdir(root)):
+            raise FileNotFoundError(
+                f"state table {root} holds no {self.part}= bucket dir: "
+                "no readable parquet data"
+            )
+        return spark.read.schema(self.schema).parquet(root).where(
             F.col(self.part).isin(*buckets)
         )
 
     def append(self, state_dir: str, rows: DataFrame, n_buckets: int) -> None:
+        """Add ``rows`` to their buckets. Spark writes them to a staging dir
+        beside the table and the part files are then renamed into the
+        bucket dirs: a Spark write to the table path itself would refresh,
+        in place, the file listing of every cached plan reading the table
+        (the tick's persisted keepers), so a decisions write running
+        alongside could see the batch's keepers both as registered and as
+        new. A rename changes no listing already taken."""
         # repartition by the partition column: exactly ONE parquet file per
         # touched bucket per tick, whatever the upstream task count (W write
         # tasks would otherwise append up to W files per bucket per tick and
         # trip the compaction bound W× sooner — at cluster scale, every tick)
+        stage = os.path.join(state_dir, f".{self.tag}_append_tmp")
+        shutil.rmtree(stage, ignore_errors=True)
         rows.withColumn(self.part, bucket_of(self.key, n_buckets)).repartition(
             F.col(self.part)
-        ).write.mode("append").partitionBy(self.part).parquet(self.path(state_dir))
+        ).write.mode("overwrite").partitionBy(self.part).parquet(stage)
+        root = self.path(state_dir)
+        for bdir in os.listdir(stage):
+            if not bdir.startswith(f"{self.part}="):
+                continue
+            os.makedirs(os.path.join(root, bdir), exist_ok=True)
+            for f in os.listdir(os.path.join(stage, bdir)):
+                os.rename(os.path.join(stage, bdir, f), os.path.join(root, bdir, f))
+        shutil.rmtree(stage)
 
     def recover(self, state_dir: str) -> None:
-        """Sweep leftovers of a compaction interrupted mid-swap. The swap is
-        write-tmp → rename(bucket→old) → rename(tmp→bucket) → delete old; a
-        crash can only leave (a) a stale tmp dir (harmless, deleted), or
+        """Sweep leftovers of an interrupted append or compaction. An append
+        cut short leaves its staging dir (deleted: the batch has no marker,
+        so its replay appends what the registry still lacks). The compaction
+        swap is write-tmp → rename(bucket→old) → rename(tmp→bucket) → delete
+        old; a crash can only leave (a) a stale tmp dir (deleted), or
         (b) an ``old`` dir with the bucket dir missing (restored) / present
         (compaction completed, ``old`` deleted). Single-writer: one streaming
         query owns ``state_dir`` (enforced by the stream checkpoint)."""
@@ -181,7 +222,7 @@ class StateTable(NamedTuple):
             return
         for name in names:
             full = os.path.join(state_dir, name)
-            if name.startswith(f".{self.tag}_compact_tmp_"):
+            if name.startswith((f".{self.tag}_compact_tmp_", f".{self.tag}_append_tmp")):
                 shutil.rmtree(full, ignore_errors=True)
             elif name.startswith(f".{self.tag}_compact_old_"):
                 b = name.rsplit("_", 1)[1]
@@ -226,7 +267,8 @@ class StateTable(NamedTuple):
         tmproot = os.path.join(state_dir, f".{self.tag}_compact_tmp_batch")
         shutil.rmtree(tmproot, ignore_errors=True)
         (
-            spark.read.parquet(root)
+            spark.read.schema(self.schema)
+            .parquet(root)
             .where(F.col(self.part).isin(*flagged))
             .distinct()
             .repartition(F.col(self.part))
@@ -251,7 +293,9 @@ class StateTable(NamedTuple):
         shutil.rmtree(tmproot, ignore_errors=True)
 
 
-SHA_REGISTRY = StateTable("sha_registry", "sbkt", "sha", "sha")
+SHA_REGISTRY = StateTable(
+    "sha_registry", "sbkt", "sha", "sha", "sha STRING, keeper_clip_id STRING, sbkt INT"
+)
 
 
 def commit_batch(
@@ -261,50 +305,64 @@ def commit_batch(
     batch_id: int,
     n_buckets: int,
     appends: list[tuple[StateTable, DataFrame]],
+    alongside: Callable[[], None] | None = None,
 ) -> None:
-    """A tier's commit of one batch. The batch is committed once its
-    marker ``state_dir/markers/{batch_id}.done`` exists (an O(1) probe —
-    the batch count grows without bound, so collecting a marker table
-    each tick would too); otherwise run the appends, write the marker,
-    then compact the appended tables.
+    """A tier's commit of one batch: the appends, then the marker
+    ``state_dir/markers/{batch_id}.done``, then compaction of the appended
+    tables. A batch whose marker exists (an O(1) probe — the batch count
+    grows without bound, so collecting a marker table each tick would
+    too) is committed already and appends nothing.
+
+    ``alongside`` — a write that overlaps the appends and runs even when
+    the batch is committed already (the tick's decisions write). The
+    marker and the compaction wait for it: compaction deletes table files
+    the write may still be reading, and a batch whose write failed stays
+    uncommitted, so its replay redoes the whole commit.
 
     A caller never passes a zero-row append for a table that does not
-    exist yet: it would create a table dir holding only ``_SUCCESS``,
-    which the next tick's read cannot infer a schema from.
+    exist yet, so every table dir holds data from its first commit on.
 
-    The appends target different tables and read only persisted or
-    broadcast inputs, so every append after the first runs on its own
-    thread: each write's cost is dominated by the job-scheduling +
-    parquet task-commit floor (~1-2.5 s at the pinned 32 dirs, measured),
-    and overlapping them turns fixed-cost SUM into fixed-cost MAX per
-    tick. InheritableThread carries the caller's job description;
-    exceptions propagate."""
+    The writes target different paths, and an append publishes its files
+    by rename (``StateTable.append``), so no write changes what another
+    reads: every write after the first runs on its own thread. Each
+    write's cost is dominated by the job-scheduling + parquet task-commit
+    floor, and overlapping them turns fixed-cost SUM into fixed-cost MAX
+    per tick. InheritableThread carries the caller's job description.
+    Every write finishes before the first error is raised."""
     marker = os.path.join(state_dir, markers, f"{batch_id}.done")
-    if os.path.exists(marker):
-        return
+    committed = os.path.exists(marker)
+    writes = [] if alongside is None else [alongside]
+    if not committed:
+        writes += [partial(_append, state_dir, n_buckets, *a) for a in appends]
     errs: list[BaseException] = []
 
-    def _append(table: StateTable, rows: DataFrame) -> None:
+    def _run(write: Callable[[], None]) -> None:
         try:
-            table.recover(state_dir)
-            table.append(state_dir, rows, n_buckets)
+            write()
         except BaseException as exc:  # noqa: BLE001 - re-raised below
             errs.append(exc)
 
-    threads = [InheritableThread(_append, args=a) for a in appends[1:]]
+    threads = [InheritableThread(_run, args=(w,)) for w in writes[1:]]
     for th in threads:
         th.start()
-    for a in appends[:1]:
-        _append(*a)
+    for w in writes[:1]:
+        _run(w)
     for th in threads:
         th.join()
     if errs:
         raise errs[0]
+    if committed:
+        return
     os.makedirs(os.path.dirname(marker), exist_ok=True)
     with open(marker, "w"):
         pass
     for table, _ in appends:
         table.compact(spark, state_dir)
+
+
+def _append(state_dir: str, n_buckets: int, table: StateTable, rows: DataFrame) -> None:
+    table.recover(state_dir)
+    table.append(state_dir, rows, n_buckets)
 
 
 def _meta_path(state_dir: str) -> str:
@@ -365,44 +423,68 @@ def pin_bucket_count(
 
 
 class _RegistryTick:
-    """One tick's side of the SHA registry: ``keepers`` is the keeper
-    source handed to pipeline.stage_graph, ``commit`` the registry's
-    ``commit_batch`` after the tick's decisions are written."""
+    """One tick's side of the SHA registry. ``touched`` is the aggregate
+    the stage graph's cache fill observes: the registry buckets the
+    batch's shas hash into, under the bucket count pinned here (only the
+    first tick of a state_dir counts the batch to derive it). ``keepers``
+    is the graph's keeper source; it persists the keeper rows, so the
+    decisions write and ``commit``'s append of ``new`` (the batch's own
+    keepers not registered yet) share one computation. ``commit`` runs
+    the registry's ``commit_batch`` with the decisions write alongside
+    the append; ``unpersist`` releases the cache."""
 
     def __init__(
-        self, spark: SparkSession, state_dir: str, batch_id: int, cfg: PipelineConfig
+        self,
+        spark: SparkSession,
+        state_dir: str,
+        batch_id: int,
+        cfg: PipelineConfig,
+        batch: DataFrame,
     ):
         self.spark, self.state_dir, self.batch_id, self.cfg = spark, state_dir, batch_id, cfg
-
-    def keepers(self, hashed: DataFrame) -> DataFrame:
-        """Registry keepers for the batch's shas plus the batch's new
-        keepers (a sha already registered belongs to an earlier batch —
-        the local candidate keeper loses)."""
         self.n_bkt = pin_bucket_count(
-            self.state_dir, "n_sha_buckets", SHA_REGISTRY.name, hashed.count, N_SHA_BUCKETS
+            state_dir, "n_sha_buckets", SHA_REGISTRY.name, batch.count, N_SHA_BUCKETS
         )
-        # the registry buckets this batch can possibly collide with (≤ n_bkt
-        # values), observed on a noop pass over the cached slim frame: the
-        # set merges on the driver, so the pass runs no shuffle
-        touched = Observation()
-        hashed.observe(
-            touched,
-            F.collect_set(
-                F.when(F.col("sha").isNotNull(), bucket_of("sha", self.n_bkt))
-            ).alias("b"),
-        ).write.format("noop").mode("overwrite").save()
+        self.touched = F.collect_set(
+            F.when(F.col("sha").isNotNull(), bucket_of("sha", self.n_bkt))
+        ).alias("sha_buckets")
+        self.keeper_rows: DataFrame | None = None
+
+    def keepers(self, hashed: DataFrame, seen: dict) -> DataFrame:
+        """(sha, keeper_clip_id) for the batch's shas: the registered
+        keeper where the sha is registered (it belongs to an earlier
+        batch — the local candidate loses), else the batch's own min
+        clip_id. One aggregation over the salted candidates and the
+        registry rows decides both, so the registry is scanned once and
+        joined nowhere; it keeps the batch's shas only, so its cache grows
+        with the batch, not the registry, and also yields ``new``."""
         # empty for a batch of only null-payload clips: it reads nothing
         # and registers nothing
-        self.buckets = sorted(touched.get["b"])
+        self.buckets = sorted(seen["sha_buckets"])
         registered = SHA_REGISTRY.read(self.spark, self.state_dir, self.buckets)
-        self.new = keepers_by_sha(hashed.select("clip_id", "sha"), self.cfg)
-        if registered is None:
-            return self.new
-        registered = registered.select("sha", "keeper_clip_id")
-        self.new = self.new.join(registered.select("sha"), "sha", "left_anti")
-        return registered.unionByName(self.new)
 
-    def commit(self) -> None:
+        def candidate(rows: DataFrame, new: bool, id_col: str) -> DataFrame:
+            # (new, id) order: new=false sorts first, so a registered keeper wins
+            k = F.struct(F.lit(new).alias("new"), F.col(id_col).alias("id"))
+            return rows.select("sha", k.alias("k"))
+
+        local = keeper_candidates(hashed.select("clip_id", "sha"), self.cfg)
+        cands = candidate(local, True, "_local_min")
+        if registered is not None:
+            cands = cands.unionByName(candidate(registered, False, "keeper_clip_id"))
+        self.keeper_rows = (
+            cands.groupBy("sha")
+            .agg(F.min("k").alias("k"), F.max("k.new").alias("local"))
+            .where("local")
+            .select("sha", F.col("k.id").alias("keeper_clip_id"), F.col("k.new").alias("new"))
+            .persist()
+        )
+        self.new = self.keeper_rows.where(F.col("new")).drop("new")
+        return self.keeper_rows.drop("new")
+
+    def commit(self, write_decisions: Callable[[], None]) -> None:
+        """The registry's ``commit_batch`` with the decisions write
+        alongside the append."""
         commit_batch(
             self.spark,
             self.state_dir,
@@ -410,7 +492,12 @@ class _RegistryTick:
             self.batch_id,
             self.n_bkt,
             [(SHA_REGISTRY, self.new)] if self.buckets else [],
+            alongside=write_decisions,
         )
+
+    def unpersist(self) -> None:
+        if self.keeper_rows is not None:
+            self.keeper_rows.unpersist()
 
 
 def process_and_write(
@@ -449,12 +536,18 @@ def process_and_write(
     for sess in {spark, batch_df.sparkSession}:
         sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    registry = _RegistryTick(spark, state_dir, batch_id, cfg)
-    graph = stage_graph(
-        batch_df, cfg, dur_bounds, keepers=registry.keepers, with_fingerprints=content_dedup
-    )
-    owned = [graph.hashed]
+    registry = _RegistryTick(spark, state_dir, batch_id, cfg, batch_df)
+    owned: list[DataFrame] = []
     try:
+        graph = stage_graph(
+            batch_df,
+            cfg,
+            dur_bounds,
+            keepers=registry.keepers,
+            observe=[registry.touched],
+            with_fingerprints=content_dedup,
+        )
+        owned.append(graph.hashed)
         decisions = graph.decisions
         if content_dedup:
             from ..operators.audiofp import apply_content_verdicts
@@ -467,11 +560,12 @@ def process_and_write(
             flags = process_content_increment(spark, graph, state_dir, batch_id)
             owned.append(flags)
             decisions = apply_content_verdicts(decisions, flags)
-        decisions.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).partitionBy("batch_id").parquet(output_dir)
-        registry.commit()
+        out = decisions.withColumn("batch_id", F.lit(batch_id))
+        registry.commit(
+            lambda: out.write.mode("overwrite").partitionBy("batch_id").parquet(output_dir)
+        )
     finally:
+        registry.unpersist()
         for df in owned:
             df.unpersist()
 

@@ -199,3 +199,52 @@ def test_usage_metrics_over_lineage(spark, clips_df, tmp_path):
     assert sum(m["runs_by_day"].values()) == 1
     # outside the window: nothing
     assert usage_metrics(spark, out, days=0)["total_runs"] == 0
+
+
+def test_decide_rule_cache_is_keyed_on_config_and_bounds(spark, clips_df):
+    """decide reuses its rule columns per (config, dur_bounds): in one
+    session, two fences and a disabled-rule config each get exactly the
+    decisions of freshly built rules, never another key's."""
+    from dataclasses import replace
+
+    from pyspark.sql import functions as F
+
+    from data_quality_checker_spark.operators.dedup import flag_duplicates, keepers_by_sha
+    from data_quality_checker_spark.operators.rules import keep_expr, rules_fired_expr
+    from data_quality_checker_spark.pipeline import decide, stage_graph
+
+    graph = stage_graph(clips_df.limit(60))
+    enriched = flag_duplicates(
+        graph.enriched, keepers_by_sha(graph.hashed.select("clip_id", "sha"))
+    ).persist()
+    try:
+        disabled = replace(DEFAULT_CONFIG, disabled_rules=("dur_outlier",))
+        narrow, wide = (2000.0, 6000.0), (0.0, 1e9)
+        got = {}
+        for key in [
+            (DEFAULT_CONFIG, narrow),
+            (DEFAULT_CONFIG, wide),
+            (disabled, narrow),
+            (DEFAULT_CONFIG, narrow),
+        ]:
+            cfg, bounds = key
+            rules = build_rules(cfg, bounds)
+            want = enriched.select(
+                "clip_id",
+                keep_expr(rules).alias("keep"),
+                rules_fired_expr(rules).alias("rules_fired"),
+            )
+            rows = sorted(
+                decide(enriched, cfg, bounds)
+                .select("clip_id", "keep", F.col("rules_fired"))
+                .collect()
+            )
+            assert rows == sorted(want.collect()), key
+            got.setdefault(key, rows)
+        # the keys really differ, so a cache returning another key's
+        # columns would have failed above
+        assert got[(DEFAULT_CONFIG, narrow)] != got[(DEFAULT_CONFIG, wide)]
+        assert got[(DEFAULT_CONFIG, narrow)] != got[(disabled, narrow)]
+    finally:
+        enriched.unpersist()
+        graph.hashed.unpersist()
