@@ -55,20 +55,16 @@ def keepers_by_sha(
     return phase1.groupBy("sha").agg(F.min("_local_min").alias("keeper_clip_id"))
 
 
-def flag_duplicates(
-    df: DataFrame,
-    keepers: DataFrame,
-    sha_col: str = "sha",
-    id_col: str = "clip_id",
-) -> DataFrame:
+def flag_duplicates(df: DataFrame, keepers: DataFrame) -> DataFrame:
     """Add ``is_duplicate`` against (sha, keeper_clip_id) keepers — true
-    for every row whose SHA-1 has a different keeper. Null-payload rows
-    are never duplicates (they fail the missing-bytes rule instead)."""
-    joined = df.join(keepers.select(sha_col, "keeper_clip_id"), on=sha_col, how="left")
+    for every (clip_id, sha) row whose SHA-1 has a different keeper.
+    Null-payload rows are never duplicates (they fail the missing-bytes
+    rule instead)."""
+    joined = df.join(keepers.select("sha", "keeper_clip_id"), on="sha", how="left")
     return joined.withColumn(
         "is_duplicate",
         F.when(
-            F.col(sha_col).isNotNull() & (F.col(id_col) != F.col("keeper_clip_id")),
+            F.col("sha").isNotNull() & (F.col("clip_id") != F.col("keeper_clip_id")),
             F.lit(True),
         ).otherwise(F.lit(False)),
     ).drop("keeper_clip_id")

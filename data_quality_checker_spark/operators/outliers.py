@@ -11,12 +11,14 @@ fused filter in the main scan) is the scalable part and stays the same.
 The pre-pass scans ONLY the numeric column (column pruning keeps it off
 the heavy ``bytes`` payload), and its result is folded into the main plan
 as literals — so the fence costs one lightweight job, not a second full
-pass over the corpus.
+pass over the corpus. The batch job and the in-session pipeline pay not
+even that: ``pipeline.stage_graph`` observes the same aggregates
+(``iqr_aggs``) on its cache fill and applies the same guards (``fence``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
@@ -165,6 +167,28 @@ def exact_quantiles_scalable(
     return out
 
 
+def iqr_aggs(column: str, exact: bool = True) -> tuple[Column, Column]:
+    """The fence's aggregates over ``column``: its (q1, q3) quartiles and
+    its non-null count. ``iqr_bounds`` runs them as a job of their own;
+    ``pipeline.stage_graph`` observes them on the cache fill it runs
+    anyway. Both hand the results to ``fence``."""
+    pct = "percentile" if exact else "percentile_approx"
+    return F.expr(f"{pct}({column}, array(0.25, 0.75))"), F.count(column)
+
+
+def fence(q, n: int, mult: float, min_rows: int) -> tuple[float, float] | None:
+    """(q1, q3) quartiles over ``n`` non-null values → the (lo, hi)
+    fence, or None when undefined per the reference's guards
+    (n < min_rows or IQR <= 0)."""
+    if n < min_rows or q is None:
+        return None
+    q1, q3 = float(q[0]), float(q[1])
+    iqr = q3 - q1
+    if iqr <= 0:
+        return None
+    return q1 - mult * iqr, q3 + mult * iqr
+
+
 def iqr_bounds(
     df: DataFrame,
     column: str,
@@ -174,15 +198,6 @@ def iqr_bounds(
 ) -> tuple[float, float] | None:
     """→ (lo, hi) fence for `column`, or None when undefined per the
     reference's guards (n < min_rows or IQR == 0)."""
-    pct = "percentile" if exact else "percentile_approx"
-    row = df.select(
-        F.expr(f"{pct}({column}, array(0.25, 0.75))").alias("q"),
-        F.count(column).alias("n"),
-    ).first()
-    if row is None or row["n"] < min_rows or row["q"] is None:
-        return None
-    q1, q3 = float(row["q"][0]), float(row["q"][1])
-    iqr = q3 - q1
-    if iqr <= 0:
-        return None
-    return q1 - mult * iqr, q3 + mult * iqr
+    q, n = iqr_aggs(column, exact)
+    row = df.select(q.alias("q"), n.alias("n")).first()
+    return fence(row["q"], row["n"], mult, min_rows)

@@ -13,9 +13,11 @@
   hashed ──► KEEPERS (sha → keeper clip_id)                    ─┐
   text ⋈ hashed (sha) ⋈ stats (key) ⋈ keepers (sha) ──► rules ──┴─► decisions
 
-The callers differ in three inputs only:
+The callers differ in four inputs only:
   * scope — the rows to decide: every row (pipeline, tick, write_metrics)
     or the job's remaining lineage buckets on resume;
+  * the IQR fence — the full input's, observed on the cache fill
+    (pipeline, job), or handed in (the tick's stream fence);
   * keepers — ``keepers_by_sha`` over ``hashed`` (pipeline, job: the
     full input, so a resumed bucket's duplicate still loses to a keeper
     in a completed bucket), or the tick's SHA-registry keepers plus the
@@ -60,16 +62,17 @@ from .config import DEFAULT_CONFIG, PipelineConfig
 from .functions.udfs import get_udfs
 from .operators import metrics as metrics_ops
 from .operators.dedup import flag_duplicates, keepers_by_sha, sha1_expr
-from .operators.outliers import iqr_bounds
+from .operators.outliers import fence, iqr_aggs
 from .operators.rules import build_rules, keep_expr, rules_fired_expr, severity_map_expr
 
 
 def hashed_frame(clips: DataFrame) -> DataFrame:
-    """Scan A → (clip_id, sha, codec, sr_hz): the ONLY full sha1 pass
-    over the payload. Slim enough to cache at any corpus scale; every
-    sha consumer (dedup keepers, stats reps, text join) reuses it."""
+    """Scan A → (clip_id, sha, codec, sr_hz, dur_ms): the ONLY full sha1
+    pass over the payload. Slim enough to cache at any corpus scale; every
+    sha consumer (dedup keepers, stats reps, text join) reuses it, and
+    ``dur_ms`` (4 B/row) lets its fill observe the input's IQR fence."""
     return clips.select(
-        "clip_id", sha1_expr("bytes").alias("sha"), "codec", "sr_hz"
+        "clip_id", sha1_expr("bytes").alias("sha"), "codec", "sr_hz", "dur_ms"
     )
 
 
@@ -297,11 +300,15 @@ def decide(
 class StageGraph:
     """One build of the stage graph. Every frame is lazy except
     ``hashed``, which is cached and filled; ``n_rows`` is that fill's
-    count (the full input's rows). The caller owns the cache: call
+    count (the full input's rows) and ``observed`` its whole observed row
+    (``rows`` plus the caller's ``observe`` aggregates); ``dur_bounds``
+    is the fence ``decisions`` applies. The caller owns the cache: call
     ``hashed.unpersist()`` once the consumers have run."""
 
     hashed: DataFrame
     n_rows: int
+    observed: dict
+    dur_bounds: tuple[float, float] | None
     stats: DataFrame
     enriched: DataFrame
     decisions: DataFrame
@@ -315,6 +322,7 @@ def stage_graph(
     keepers: Callable[[DataFrame, dict], DataFrame] | None = None,
     observe: Sequence[Column] = (),
     with_fingerprints: bool = False,
+    input_fence: bool = False,
 ) -> StageGraph:
     """Build hashed → keepers → enrichment → decode → decisions from the
     FULL input ``clips``.
@@ -325,29 +333,44 @@ def stage_graph(
     ``keepers`` — maps the cached ``hashed`` frame and the fill's observed
     row to (sha, keeper_clip_id); default ``keepers_by_sha`` over it.
     ``observe`` — extra named aggregates over ``hashed`` for the fill to
-    observe, handed to ``keepers`` in that row (the streaming tick's
-    touched registry buckets).
+    observe, handed to ``keepers`` in that row and kept as
+    ``StageGraph.observed`` (the streaming tick's touched registry
+    buckets, the resumed job's count of rows to decide).
     ``with_fingerprints`` — the stats frame also carries the content
     fingerprints (see ``audio_stats_table``).
+    ``input_fence`` — decide with the IQR fence of the full input's
+    ``dur_ms`` (the batch job, the in-session pipeline) instead of a
+    ``dur_bounds`` handed in (the stream's fence, calibrated once).
 
     The cache is filled EAGERLY: two consumers in one action would
     otherwise race to fill it and run the sha scan twice. The fill is a
-    noop write observed by one ``Observation`` — the row count plus the
-    ``observe`` aggregates, all in one Spark job, where ``count()`` over a
-    cache runs three and each further aggregate a pass of its own. The
-    count bounds the representatives, so the reps broadcast gate needs no
-    probe of its own under ``REPS_BROADCAST_MAX`` rows. When any step of
-    the build fails, from the fill through ``decide``, the cache is
-    released here; after a successful build the caller owns it.
+    noop write observed by one ``Observation`` — the row count, the
+    ``observe`` aggregates and, for ``input_fence``, the same exact
+    quartiles and count that ``outliers.iqr_bounds`` runs as a job of its
+    own (so the fence is bit-identical), all in one Spark job, where
+    ``count()`` over a cache runs three and each further aggregate a pass
+    of its own. The count bounds the representatives, so the reps
+    broadcast gate needs no probe of its own under ``REPS_BROADCAST_MAX``
+    rows. When any step of the build fails, from the fill through
+    ``decide``, the cache is released here; after a successful build the
+    caller owns it.
     """
+    if input_fence and dur_bounds is not None:
+        raise ValueError("stage_graph takes dur_bounds or input_fence, not both")
+    aggs = [F.count(F.lit(1)).alias("rows"), *observe]
+    if input_fence:
+        q, n = iqr_aggs("dur_ms")
+        aggs += [q.alias("dur_q"), n.alias("dur_n")]
     hashed = hashed_frame(clips).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         fill = Observation()
-        hashed.observe(fill, F.count(F.lit(1)).alias("rows"), *observe).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        hashed.observe(fill, *aggs).write.format("noop").mode("overwrite").save()
         seen = fill.get
         n_rows = seen["rows"]
+        if input_fence:
+            dur_bounds = fence(
+                seen["dur_q"], seen["dur_n"], cfg.outlier_iqr_mult, cfg.outlier_min_rows
+            )
         if keepers is None:
             keeper_rows = keepers_by_sha(hashed.select("clip_id", "sha"), cfg)
         else:
@@ -367,7 +390,16 @@ def stage_graph(
     except BaseException:
         hashed.unpersist()
         raise
-    return StageGraph(hashed, n_rows, stats, enriched, decisions)
+    return StageGraph(hashed, n_rows, seen, dur_bounds, stats, enriched, decisions)
+
+
+@lru_cache(maxsize=64)
+def _core_severities(cfg: PipelineConfig) -> tuple[Column, frozenset[str]]:
+    """The core rules' (rule → severity) map column and their names,
+    built once per config as ``_rule_columns`` is: ``build_rules`` is
+    some hundred py4j calls, and every run and findings write reuses it."""
+    rules = build_rules(cfg)
+    return severity_map_expr(rules), frozenset(r.name for r in rules)
 
 
 def findings_from_decisions(
@@ -383,10 +415,9 @@ def findings_from_decisions(
     ``spark.sql.mapKeyDedupPolicy=EXCEPTION`` would otherwise throw an
     opaque DUPLICATED_MAP_KEY mid-job — and silently "overriding" a core
     severity is not this parameter's contract."""
-    rules = build_rules(cfg)
-    sev = severity_map_expr(rules)
+    sev, core = _core_severities(cfg)
     if extra_severities:
-        clash = sorted(set(extra_severities) & {r.name for r in rules})
+        clash = sorted(set(extra_severities) & core)
         if clash:
             raise ValueError(
                 f"extra_severities must not shadow core rules: {clash} "
@@ -417,18 +448,16 @@ def run_pipeline(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     with_column_findings: bool = False,
 ) -> PipelineResult:
-    """End-to-end in-session run (tests / entry point): the IQR fence over
-    ``clips`` plus ``stage_graph`` over every row. The spark-submit job
-    with lineage/resume (run/job.py) builds the same graph.
+    """End-to-end in-session run (tests / entry point): ``stage_graph``
+    over every row, with the IQR fence of ``clips`` observed on its cache
+    fill. The spark-submit job with lineage/resume (run/job.py) builds
+    the same graph.
 
     ``with_column_findings`` triggers two extra eager aggregate passes
     (the reference's dataset-level issue records) — off by default.
     """
-    # tiny pre-pass: exact IQR fence over dur_ms only (column-pruned scan)
-    bounds = iqr_bounds(
-        clips, "dur_ms", cfg.outlier_iqr_mult, cfg.outlier_min_rows
-    )
-    decisions = stage_graph(clips, cfg, bounds).decisions
+    graph = stage_graph(clips, cfg, input_fence=True)
+    decisions = graph.decisions
     findings = findings_from_decisions(decisions, cfg)
     summ = metrics_ops.summary(findings)
     col_findings = (
@@ -436,4 +465,4 @@ def run_pipeline(
         if with_column_findings
         else None
     )
-    return PipelineResult(decisions, findings, summ, bounds, col_findings)
+    return PipelineResult(decisions, findings, summ, graph.dur_bounds, col_findings)

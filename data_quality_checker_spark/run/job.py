@@ -11,12 +11,16 @@ Resume protocol (exactly-once per bucket):
 1. read lineage table → set of completed buckets for this run_id;
 2. anti-filter the input to the remaining buckets only;
 3. build the stage graph (pipeline.stage_graph) over the full input,
-   scoped to the remainder; write decisions/findings
+   scoped to the remainder; its cache fill also observes the input's IQR
+   fence and, on resume, the remainder's row count; write decisions
    partitioned by ``bucket`` with **dynamic partition overwrite** — a
-   re-run of a half-written bucket atomically replaces its partition;
-4. append lineage rows LAST, one per bucket actually completed, with row
-   counts (the commit point — a crash before this step leaves the bucket
-   uncommitted and step 2 of the next run redoes it).
+   re-run of a half-written bucket atomically replaces its partition —
+   while an ``Observation`` on that write counts each bucket's rows in
+   and rows kept; then findings from this run's decisions, the same way;
+4. append lineage rows LAST, one per bucket actually completed, with the
+   counts the decisions write observed, as ONE file per run (the commit
+   point — a crash before this step leaves the bucket uncommitted and
+   step 2 of the next run redoes it).
 
 On a real deployment the decisions/findings/lineage tables are Iceberg
 (``PARTITIONED BY (bucket(N, clip_id), codec)``, commits are snapshots,
@@ -27,7 +31,7 @@ dynamic partition overwrite, which preserves the idempotency argument.
 Output layout under ``--output``:
   decisions/bucket=K/*.parquet
   findings/bucket=K/*.parquet
-  lineage/*.parquet           (append-only; run_id column)
+  lineage/*.parquet           (append-only, one file per run; run_id column)
   runs/run_id=R/config.json   (serialized PipelineConfig — rule lineage)
 """
 
@@ -38,18 +42,32 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
-from ..operators import metrics as metrics_ops
 from ..pipeline import findings_from_decisions, stage_graph
-from ..operators.outliers import iqr_bounds
-from ..schema import LINEAGE_SCHEMA
+from ..schema import DECISIONS_SCHEMA, LINEAGE_SCHEMA
+
+# the decisions table as read back: the run_id/bucket partition columns
+# are declared, so the read infers nothing from parquet footers
+DECISIONS_TABLE_SCHEMA = T.StructType(
+    DECISIONS_SCHEMA.fields
+    + [T.StructField("run_id", T.StringType()), T.StructField("bucket", T.IntegerType())]
+)
 
 
 def bucket_expr(cfg: PipelineConfig):
     return F.pmod(F.xxhash64(F.col("clip_id")), F.lit(cfg.n_lineage_buckets)).cast("int")
+
+
+def _bucket_counts(cfg: PipelineConfig, cond: str) -> Column:
+    """An array of per-bucket counts of the rows where ``cond`` holds, one
+    aggregate written as SQL text: a Column per bucket costs ~10 py4j
+    round trips, about a second at 64 buckets."""
+    sums = ", ".join(f"count_if(bucket = {b}{cond})" for b in range(cfg.n_lineage_buckets))
+    return F.expr(f"array({sums})")
 
 
 def completed_buckets(spark: SparkSession, output: str, run_id: str) -> set[int]:
@@ -62,7 +80,7 @@ def completed_buckets(spark: SparkSession, output: str, run_id: str) -> set[int]
     path = os.path.join(output, "lineage")
     if not os.path.exists(path):
         return set()
-    lineage = spark.read.parquet(path)
+    lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(path)
     rows = (
         lineage.where(F.col("run_id") == run_id).select("bucket").distinct().collect()
     )
@@ -81,36 +99,49 @@ def run_job(
     clips = spark.read.parquet(input_path)
 
     done = completed_buckets(spark, output, run_id)
-    scope = ~bucket_expr(cfg).isin(*sorted(done)) if done else None
+    scope, observe = None, ()
+    if done:
+        scope = ~bucket_expr(cfg).isin(*sorted(done))
+        observe = (F.count_if(scope).alias("todo"),)
 
     # Global calibration is whole-dataset state, computed over the FULL
     # input, not the remainder — resume must not change rule thresholds
     # (validator.py:270-294 semantics are whole-dataset): the IQR fence
-    # here, the dedup keepers inside stage_graph (a duplicate in a
-    # remaining bucket must still lose to a keeper in a completed one).
-    bounds = iqr_bounds(clips, "dur_ms", cfg.outlier_iqr_mult, cfg.outlier_min_rows)
-    graph = stage_graph(clips, cfg, bounds, scope=scope)
+    # (observed on the graph's cache fill), the dedup keepers inside
+    # stage_graph (a duplicate in a remaining bucket must still lose to a
+    # keeper in a completed one).
+    graph = stage_graph(clips, cfg, scope=scope, observe=observe, input_fence=True)
+    decisions_dir = os.path.join(output, "decisions")
+    written = Observation()
     try:
-        n_todo = graph.n_rows if scope is None else graph.hashed.where(scope).count()
+        n_todo = graph.observed["todo"] if done else graph.n_rows
         if n_todo == 0:
             return {"run_id": run_id, "buckets_done": len(done), "rows_processed": 0}
         # bucket is a pure function of clip_id — recomputed in each
         # projection, never joined (no extra shuffle); partitioned
         # (run_id, bucket): dynamic overwrite only ever touches THIS
         # run's incomplete buckets, and findings stay attributable per
-        # run for the history/compare analytics
+        # run for the history/compare analytics. The lineage counts are
+        # observed directly above the write, in its result stage, where
+        # Spark merges each task's metrics once however often it is
+        # retried.
         graph.decisions.withColumn("run_id", F.lit(run_id)).withColumn(
             "bucket", bucket_expr(cfg)
-        ).write.mode("overwrite").partitionBy("run_id", "bucket").parquet(
-            os.path.join(output, "decisions")
-        )
+        ).observe(
+            written,
+            _bucket_counts(cfg, "").alias("rows_in"),
+            _bucket_counts(cfg, " AND keep").alias("rows_kept"),
+        ).write.mode("overwrite").partitionBy("run_id", "bucket").parquet(decisions_dir)
     finally:
         graph.hashed.unpersist()
 
+    # the partition directory name escapes run_id as the write did (a
+    # timestamp's ':' becomes %3A)
+    catalog_utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     fresh = (
-        spark.read.parquet(os.path.join(output, "decisions"))
-        .where(F.col("run_id") == run_id)
-        .withColumn("bucket", F.col("bucket").cast("int"))
+        spark.read.schema(DECISIONS_TABLE_SCHEMA)
+        .option("basePath", decisions_dir)
+        .parquet(os.path.join(decisions_dir, f"run_id={catalog_utils.escapePathName(run_id)}"))
     )
     if done:
         fresh = fresh.where(~F.col("bucket").isin(*sorted(done)))
@@ -125,26 +156,21 @@ def run_job(
 
     # commit point: lineage rows for buckets completed THIS run (appended
     # last — a crash anywhere above leaves those buckets uncommitted and
-    # the next run's anti-filter redoes exactly them)
-    lineage_rows = (
-        fresh.groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("rows_in"),
-            F.sum(F.col("keep").cast("long")).alias("rows_kept"),
-            F.sum((~F.col("keep")).cast("long")).alias("rows_dropped"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("bucket").cast("int"),
-            "rows_in",
-            "rows_kept",
-            "rows_dropped",
-            F.current_timestamp().alias("completed_at"),
-        )
+    # the next run's anti-filter redoes exactly them), written from the
+    # observed counts by a one-row, one-task frame that never leaves the
+    # JVM: one file per run
+    seen = written.get
+    rows = ", ".join(
+        f"struct({b} AS bucket, {n_in}L AS rows_in, {kept}L AS rows_kept, "
+        f"{n_in - kept}L AS rows_dropped)"
+        for b, (n_in, kept) in enumerate(zip(seen["rows_in"], seen["rows_kept"]))
+        if n_in
     )
-    spark.createDataFrame(lineage_rows.collect(), LINEAGE_SCHEMA).write.mode(
-        "append"
-    ).parquet(os.path.join(output, "lineage"))
+    spark.range(1, numPartitions=1).select(
+        F.lit(run_id).alias("run_id"),
+        F.expr(f"inline(array({rows}))"),
+        F.current_timestamp().alias("completed_at"),
+    ).write.mode("append").parquet(os.path.join(output, "lineage"))
 
     run_dir = os.path.join(output, "runs", f"run_id={run_id}")
     os.makedirs(run_dir, exist_ok=True)
@@ -155,7 +181,7 @@ def run_job(
         "run_id": run_id,
         "buckets_done": len(done),
         "rows_processed": n_todo,
-        "dur_bounds": bounds,
+        "dur_bounds": graph.dur_bounds,
     }
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pandas as pd
 import pytest
@@ -23,6 +24,26 @@ def spark():
     spark = get_spark(app_name="dqc-tests", master="local[4]", shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """→ ``count(fn)``: the number of Spark jobs ``fn()`` runs, read from
+    the statusTracker under a job group of its own (threads that ``fn``
+    starts inherit the group)."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

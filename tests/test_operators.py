@@ -150,31 +150,24 @@ def test_advisor_skips_single_class_columns(spark):
     assert imb.get("skewed") == "moderate_class_weights"  # 80% share
 
 
-def test_advisor_topshare_is_one_job(spark):
+def test_advisor_topshare_is_one_job(spark, count_jobs):
     """Top-class share must be ONE stacked job for all categorical
     columns, not a serial groupBy().first() scan per column: total jobs
     to build the advisor frame stay constant as columns grow."""
     from data_quality_checker_spark.operators.advisor import ml_recommendations
 
-    sc = spark.sparkContext
-
-    def jobs_for(n_cols: int, group: str) -> int:
+    def jobs_for(n_cols: int) -> int:
         cats = [f"c{i}" for i in range(n_cols)]
         data = [
             tuple(f"v{j % (i + 2)}" for i in range(n_cols)) for j in range(40)
         ]
         df = spark.createDataFrame(data, ", ".join(f"{c} string" for c in cats))
-        sc.setJobGroup(group, group)
-        try:
-            ml_recommendations(spark, df, [], cats, [])
-            return len(sc.statusTracker().getJobIdsForGroup(group))
-        finally:
-            sc.setJobGroup(None, None)
+        return count_jobs(lambda: ml_recommendations(spark, df, [], cats, []))
 
     # AQE stages make the absolute count plan-shaped, so assert the
     # invariant that matters: the job count is CONSTANT in column count
     # (a per-column scan loop grows it linearly)
-    assert jobs_for(2, "advisor-audit-2") == jobs_for(6, "advisor-audit-6")
+    assert jobs_for(2) == jobs_for(6)
 
 
 def test_exact_quantiles_tie_straddle_bracket(spark):

@@ -42,7 +42,7 @@ def _decisions(spark, out, batch_id):
     )
 
 
-def test_steady_tick_job_count(spark, ticks, tmp_path):
+def test_steady_tick_job_count(spark, ticks, tmp_path, count_jobs):
     """Each stage of a steady tick runs once: the input read, one cache
     fill that also observes the touched registry buckets, the keepers
     computed once for the decisions write and the registry append, and a
@@ -54,18 +54,11 @@ def test_steady_tick_job_count(spark, ticks, tmp_path):
     overlapped writes read the keeper cache, and each submits the job
     that fills it unless the other's fill finished before it planned.
     That race adds at most one job, so 15 is one above its worst case."""
-    sc = spark.sparkContext
     state, out = str(tmp_path / "state"), str(tmp_path / "out")
-    counts = []
-    try:
-        for k, path in enumerate(ticks):
-            group = f"steady-tick-{os.getpid()}-{k}"
-            sc.setJobGroup(group, "tick")
-            process_and_write(spark, spark.read.parquet(path), k, state, out)
-            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    counts = [
+        count_jobs(lambda: process_and_write(spark, spark.read.parquet(path), k, state, out))
+        for k, path in enumerate(ticks)
+    ]
     assert counts[1] <= 15, counts
 
 
