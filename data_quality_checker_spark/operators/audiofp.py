@@ -144,10 +144,11 @@ def audio_fingerprints(clips: DataFrame) -> DataFrame:
 
 
 def payload_reps(hashed: DataFrame) -> DataFrame:
-    """→ (clip_id, rep_id): every row of a ``pipeline.hashed_frame``
-    frame (clip_id, sha, codec, sr_hz) mapped to the representative (min
-    clip_id) of its distinct (sha, codec, sr_hz) decode key — the
-    decode-once-per-distinct-payload discipline's key map. A slim
+    """→ (clip_id, rep_id): every row of a (clip_id, sha, codec, sr_hz)
+    frame (``pipeline.hashed_frame``, the stage graph's cache) mapped to
+    the representative (min clip_id) of its distinct (sha, codec, sr_hz)
+    decode key — the decode-once-per-distinct-payload discipline's key
+    map. A slim
     self-join; the payload never shuffles. Null key components group
     null-safely (matching groupBy semantics), so byte-identical exact
     duplicates always share one representative."""

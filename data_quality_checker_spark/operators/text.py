@@ -149,18 +149,22 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     parallelizes; above it a sanely-ingested corpus (byte-bounded row
     groups — the layout contract tools/gen_scale_tables and
     corpus/generator now enforce) already has ≥ cores data-bearing
-    splits, and no shuffle is added at real corpus scale."""
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
+    splits, and no shuffle is added at real corpus scale.
+
+    A frame already respread (its optimized plan a round-robin
+    repartition under any filters and projections, e.g. the output of
+    this function feeding a composed operator) is returned unchanged: a
+    second round-robin shuffle moves every row again for nothing."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    root = plan
+    while root.nodeName() in ("Project", "Filter"):
+        root = root.child()
+    if root.nodeName() == "Repartition" and root.shuffle():
+        return df
+    par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
-    try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:
-        return df
-    if size < par * 128 * 2**20:
+    if int(str(plan.stats().sizeInBytes())) < par * 128 * 2**20:
         return df.repartition(par)
     return df
 

@@ -2,50 +2,51 @@
 
 ``stage_graph`` builds it; ``run_pipeline`` (in-session), ``run/job.run_job``
 (spark-submit job with lineage/resume), the streaming tick
-(``streaming/incremental.process_and_write``) and
-``run/rescore.write_metrics`` all call it. Shape (scale rationale inline):
+(``streaming/incremental.process_and_write``), the content-dedup tick
+and ``run/rescore.write_metrics`` all call it. Shape (scale rationale
+inline):
 
-  clips ──(scan A: clip_id+bytes → sha1, JVM only)──► hashed (slim, CACHED,
-        │                                              full input)
-        ├─(scan B: transcript cols of the SCOPE rows → langid/ppl/scrub)──► text
-        └─(scan C: bytes of REPRESENTATIVE scope rows → audio-stats UDF)──►
-                                                        stats (per distinct key)
-  hashed ──► KEEPERS (sha → keeper clip_id)                    ─┐
-  text ⋈ hashed (sha) ⋈ stats (key) ⋈ keepers (sha) ──► rules ──┴─► decisions
+  clips ──(ONE scan: sha1(bytes) in the JVM; text + decode UDFs of the
+        │  SCOPE rows in one Arrow stage)──► cache (no bytes, CACHED,
+        │                                      full input)
+  cache ──► KEEPERS (sha → keeper clip_id)            ─┐
+  cache[scope] = enriched ⋈ keepers (sha) ──► rules ───┴─► decisions
 
 The callers differ in four inputs only:
   * scope — the rows to decide: every row (pipeline, tick, write_metrics)
     or the job's remaining lineage buckets on resume;
   * the IQR fence — the full input's, observed on the cache fill
     (pipeline, job), or handed in (the tick's stream fence);
-  * keepers — ``keepers_by_sha`` over ``hashed`` (pipeline, job: the
+  * keepers — ``keepers_by_sha`` over the cache (pipeline, job: the
     full input, so a resumed bucket's duplicate still loses to a keeper
     in a completed bucket), or the tick's SHA-registry keepers plus the
     batch's new ones;
   * with_fingerprints — the content-dedup tick decodes fingerprints in
-    the same pass as the audio stats.
+    the same pass as the audio stats, and reads them per distinct
+    payload from a JVM aggregate over the cache.
 
 Why this shape survives 100 TB:
-  * the heavy ``bytes`` column is scanned exactly twice (sha pass +
-    representative pass) and NEVER shuffled, never cached, and crosses
-    the JVM→Python Arrow boundary only for one representative per
-    distinct (sha, codec, sr_hz) key — on a dedup-heavy corpus the
-    Python-side decode work shrinks by the duplication factor, and even
-    on a dup-free corpus nothing is decoded twice;
-  * the text-scoring pass reads NO payload bytes (column pruning keeps
-    the scan slim) — it is pure compute and scales linearly with cores
-    (measured 0.98 scaling efficiency 1→4 cores,
-    BENCH/scaling_pairs_r05_runK.json);
-  * ``hashed`` is a few dozen bytes/row — cacheable at any scale — and
-    feeds every consumer that needs (clip_id → sha): dedup keepers, the
-    representative selection, the text join, lineage bucketing;
-  * the representative broadcast is size-gated: the cache fill's row
-    count bounds the number of representatives, and only above
-    ``REPS_BROADCAST_MAX`` does a probe decide (shuffled semi join).
+  * the heavy ``bytes`` column is scanned exactly once and NEVER
+    shuffled and never cached: the scan hashes it in the JVM and hands
+    the scope rows' payloads to the decode UDF in the same stage, so
+    the payload crosses the JVM→Python Arrow boundary once per scope
+    row. Decoding is per row: a byte-identical duplicate is decoded
+    again instead of joined to one representative's stats, which costs
+    the duplication factor in decode work on a dedup-heavy corpus and
+    saves a second read of the whole payload column on every corpus;
+  * it is the only Python stage: every Python-UDF task pays a fixed
+    worker start (Spark's worker re-reads its zip archives on each
+    task) before its first batch, so one Arrow stage pays it once per
+    task instead of once per UDF pass;
+  * the cache holds the scores, the transcript and the audio stats — a
+    few hundred bytes per row with no payload, MEMORY_AND_DISK — and
+    feeds every consumer: dedup keepers, the enriched frame, lineage
+    bucketing. Everything after the fill (keepers, rules, writes) runs
+    in the JVM over it, with no join back to the input.
 
 The reference runs ~10 sequential full scans over one in-memory frame
 (src/core/validator.py:62-82); here Catalyst fuses every rule into one
-whole-stage-codegen pass over the joined slim frames.
+whole-stage-codegen pass over the cached slim frame.
 """
 
 from __future__ import annotations
@@ -64,34 +65,59 @@ from .operators import metrics as metrics_ops
 from .operators.dedup import flag_duplicates, keepers_by_sha, sha1_expr
 from .operators.outliers import fence, iqr_aggs
 from .operators.rules import build_rules, keep_expr, rules_fired_expr, severity_map_expr
+from .schema import AUDIO_STATS_SCHEMA
 
 
 def hashed_frame(clips: DataFrame) -> DataFrame:
-    """Scan A → (clip_id, sha, codec, sr_hz, dur_ms): the ONLY full sha1
-    pass over the payload. Slim enough to cache at any corpus scale; every
-    sha consumer (dedup keepers, stats reps, text join) reuses it, and
-    ``dur_ms`` (4 B/row) lets its fill observe the input's IQR fence."""
+    """(clip_id, sha, codec, sr_hz, dur_ms): the sha1 pass over the
+    payload on its own, slim enough to cache at any corpus scale — the
+    decode-key map of ``audio_stats_table`` and the fingerprint tier.
+    The stage graph computes ``sha`` inside its one payload pass."""
     return clips.select(
         "clip_id", sha1_expr("bytes").alias("sha"), "codec", "sr_hz", "dur_ms"
     )
 
 
-def enrich_text(clips: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Scan B: text UDF pass over every clip — langid + perplexity +
-    scrub. Reads NO payload bytes (sha joins in from ``hashed_frame``),
-    so only transcript columns ride the Arrow batches: compute-bound,
-    scales linearly with cores."""
+def _text_columns(transcript: Column) -> list[Column]:
+    """The text UDFs over ``transcript``: langid, perplexity, scrub."""
     udfs = get_udfs()
+    return [
+        udfs["langid"](transcript).alias("langid"),
+        udfs["perplexity"](transcript).alias("ppl"),
+        udfs["scrub"](transcript).alias("scrub"),
+    ]
+
+
+def enrich_text(clips: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Text UDF pass over every clip — langid + perplexity + scrub. Reads
+    NO payload bytes, so only transcript columns ride the Arrow batches.
+    The stage graph runs the same columns inside its one payload pass."""
     return clips.select(
-        "clip_id",
-        "sr_hz",
-        "dur_ms",
-        "codec",
-        "transcript",
-        udfs["langid"](F.col("transcript")).alias("langid"),
-        udfs["perplexity"](F.col("transcript")).alias("ppl"),
-        udfs["scrub"](F.col("transcript")).alias("scrub"),
+        "clip_id", "sr_hz", "dur_ms", "codec", "transcript",
+        *_text_columns(F.col("transcript")),
     )
+
+
+def _decode_column(payload: Column, with_fingerprints: bool) -> Column:
+    """The decode UDF over (``payload``, codec, sr_hz) as ``_c``: the audio
+    stats, plus ``n_subfp`` and ``fp`` with the content fingerprint."""
+    udf = get_udfs()["audio_stats_fp" if with_fingerprints else "audio_stats"]
+    return udf(payload, F.col("codec"), F.col("sr_hz")).alias("_c")
+
+
+def _audio_columns(with_fingerprints: bool) -> list[Column]:
+    """``audio`` (AUDIO_STATS_SCHEMA), plus ``n_subfp`` and ``fp`` with
+    the fingerprint, in place of the ``_decode_column`` of a frame that
+    also carries ``sha``. A row without a payload (null sha) gets a null
+    ``audio``, which the rules treat as not decoded."""
+    c = F.col("_c")
+    audio = c
+    if with_fingerprints:
+        audio = F.struct(*(c[f.name].alias(f.name) for f in AUDIO_STATS_SCHEMA.fields))
+    cols = [F.when(F.col("sha").isNotNull(), audio).alias("audio")]
+    if with_fingerprints:
+        cols += [c["n_subfp"].alias("n_subfp"), c["fp"].alias("fp")]
+    return cols
 
 
 # Above this many representative keys, the reps side stops being
@@ -108,8 +134,10 @@ def audio_stats_table(
     broadcast_reps: bool | None = None,
     with_fingerprints: bool = False,
 ) -> DataFrame:
-    """Scan C → (sha, codec, sr_hz, audio struct): decoded stats per
-    DISTINCT payload-decode key of the ``hashed`` rows.
+    """(sha, codec, sr_hz, audio struct): decoded stats per DISTINCT
+    payload-decode key of the ``hashed`` rows — the standalone
+    decode-once-per-key table (the stage graph decodes per row inside
+    its one payload pass instead).
 
     Audio stats are a pure function of (bytes, codec, sr_hz), and a
     dedup-heavy corpus repeats payloads — so decode each distinct key
@@ -132,18 +160,14 @@ def audio_stats_table(
     side of that shuffle is pre-placed: only the slim reps side moves
     (tests/test_bucketed_layout.py::test_stats_reps_join_paths). Pass a
     CACHED ``hashed`` so the probe reads the slim cache, not the
-    payload; ``stage_graph`` skips the probe when its cache-fill count
-    already bounds the reps under the threshold.
+    payload.
 
     ``with_fingerprints`` — compute the Philips content fingerprint
     (operators/audiofp) in the SAME decode pass and emit it alongside:
     output gains ``rep_id`` (the representative clip_id), ``n_subfp``
     and ``fp`` top-level columns while ``audio`` keeps its exact
-    AUDIO_STATS_SCHEMA shape, so every stats consumer is unchanged and
-    the content-dedup tier reads its fingerprints from here instead of
-    paying a second full payload decode.
+    AUDIO_STATS_SCHEMA shape.
     """
-    udfs = get_udfs()
     reps = (
         hashed.where(F.col("sha").isNotNull())
         .groupBy("sha", "codec", "sr_hz")
@@ -165,39 +189,15 @@ def audio_stats_table(
         F.col("clip_id") == F.col("rep_id"),
         "left_semi",
     )
-    if not with_fingerprints:
-        return rep_rows.select(
-            sha1_expr("bytes").alias("sha"),
-            "codec",
-            "sr_hz",
-            udfs["audio_stats"](F.col("bytes"), F.col("codec"), F.col("sr_hz")).alias("audio"),
-        )
-    return (
-        rep_rows.select(
-            sha1_expr("bytes").alias("sha"),
-            "codec",
-            "sr_hz",
-            F.col("clip_id").alias("rep_id"),
-            udfs["audio_stats_fp"](
-                F.col("bytes"), F.col("codec"), F.col("sr_hz")
-            ).alias("_c"),
-        ).select(
-            "sha",
-            "codec",
-            "sr_hz",
-            "rep_id",
-            F.struct(
-                "_c.n_samples",
-                "_c.peak",
-                "_c.rms",
-                "_c.clip_ratio",
-                "_c.decoded_ms",
-                "_c.decode_ok",
-            ).alias("audio"),
-            F.col("_c.n_subfp").alias("n_subfp"),
-            F.col("_c.fp").alias("fp"),
-        )
+    rep_id = [F.col("clip_id").alias("rep_id")] if with_fingerprints else []
+    decoded = rep_rows.select(
+        sha1_expr("bytes").alias("sha"),
+        "codec",
+        "sr_hz",
+        *rep_id,
+        _decode_column(F.col("bytes"), with_fingerprints),
     )
+    return decoded.select(*decoded.columns[:-1], *_audio_columns(with_fingerprints))
 
 
 def enrich(
@@ -207,8 +207,10 @@ def enrich(
     hashed: DataFrame,
     stats: DataFrame | None = None,
 ) -> DataFrame:
-    """Full enrichment: text pass ⋈ hashed (sha) ⋈ per-distinct-payload
-    audio stats.
+    """Full enrichment from separate passes: text pass ⋈ hashed (sha) ⋈
+    per-distinct-payload audio stats. Its output has the columns of the
+    stage graph's ``enriched`` projection (``ENRICHED_COLUMNS``), which
+    reads them from one pass instead.
 
     Output is a slim frame (no bytes) safe to persist/shuffle. The stats
     join is null-safe on (sha, codec, sr_hz) — null sr_hz is a real key
@@ -298,20 +300,47 @@ def decide(
 
 @dataclass
 class StageGraph:
-    """One build of the stage graph. Every frame is lazy except
-    ``hashed``, which is cached and filled; ``n_rows`` is that fill's
-    count (the full input's rows) and ``observed`` its whole observed row
-    (``rows`` plus the caller's ``observe`` aggregates); ``dur_bounds``
-    is the fence ``decisions`` applies. The caller owns the cache: call
-    ``hashed.unpersist()`` once the consumers have run."""
+    """One build of the stage graph. Every frame is lazy except ``cache``,
+    the filled payload pass over the full input; ``n_rows`` is that fill's
+    count and ``observed`` its whole observed row (``rows`` plus the
+    caller's ``observe`` aggregates); ``dur_bounds`` is the fence
+    ``decisions`` applies. ``stats`` is None unless the graph was built
+    with fingerprints. The caller owns the cache: call
+    ``cache.unpersist()`` once the consumers have run."""
 
-    hashed: DataFrame
+    cache: DataFrame
     n_rows: int
     observed: dict
     dur_bounds: tuple[float, float] | None
-    stats: DataFrame
+    stats: DataFrame | None
     enriched: DataFrame
     decisions: DataFrame
+
+
+ENRICHED_COLUMNS = (
+    "clip_id", "sr_hz", "dur_ms", "codec", "transcript", "sha", "audio", "langid", "ppl", "scrub"
+)
+
+
+def payload_pass(
+    clips: DataFrame, scope: Column | None = None, with_fingerprints: bool = False
+) -> DataFrame:
+    """The ONE payload scan and the ONE Python stage of the stage graph:
+    (clip_id, sha, codec, sr_hz, dur_ms, transcript, langid, ppl, scrub,
+    audio[, n_subfp, fp]) for every row of ``clips``. The text UDFs read
+    the transcript and the decode UDF the payload of the ``scope`` rows
+    only (null elsewhere, so out-of-scope rows cost no UDF work), all in
+    one ArrowEvalPython node; ``sha`` spans every row. The output holds
+    no payload bytes."""
+    transcript, payload = F.col("transcript"), F.col("bytes")
+    if scope is not None:
+        transcript, payload = F.when(scope, transcript), F.when(scope, payload)
+    scored = clips.select(
+        "clip_id", sha1_expr("bytes").alias("sha"), "codec", "sr_hz", "dur_ms", "transcript",
+        *_text_columns(transcript),
+        _decode_column(payload, with_fingerprints),
+    )
+    return scored.select(*scored.columns[:-1], *_audio_columns(with_fingerprints))
 
 
 def stage_graph(
@@ -324,36 +353,37 @@ def stage_graph(
     with_fingerprints: bool = False,
     input_fence: bool = False,
 ) -> StageGraph:
-    """Build hashed → keepers → enrichment → decode → decisions from the
-    FULL input ``clips``.
+    """Build payload pass → keepers → decisions from the FULL input
+    ``clips``.
 
     ``scope`` — a predicate over clip_id selecting the rows to decide
-    (None: every row); the text pass and the representative decode see
-    only those rows, while ``hashed`` and the keepers span the full input.
-    ``keepers`` — maps the cached ``hashed`` frame and the fill's observed
-    row to (sha, keeper_clip_id); default ``keepers_by_sha`` over it.
-    ``observe`` — extra named aggregates over ``hashed`` for the fill to
+    (None: every row); the UDFs of the payload pass see only those rows,
+    while the cache and the keepers span the full input.
+    ``keepers`` — maps the cache and the fill's observed row to (sha,
+    keeper_clip_id); default ``keepers_by_sha`` over the cache.
+    ``observe`` — extra named aggregates over the cache for the fill to
     observe, handed to ``keepers`` in that row and kept as
     ``StageGraph.observed`` (the streaming tick's touched registry
     buckets, the resumed job's count of rows to decide).
-    ``with_fingerprints`` — the stats frame also carries the content
-    fingerprints (see ``audio_stats_table``).
+    ``with_fingerprints`` — the pass decodes with the content
+    fingerprint, and ``stats`` holds (sha, codec, sr_hz, rep_id, n_subfp,
+    fp) per distinct decode key of the scope rows: a JVM aggregate over
+    the cache, rep_id the key's min clip_id.
     ``input_fence`` — decide with the IQR fence of the full input's
     ``dur_ms`` (the batch job, the in-session pipeline) instead of a
     ``dur_bounds`` handed in (the stream's fence, calibrated once).
 
     The cache is filled EAGERLY: two consumers in one action would
-    otherwise race to fill it and run the sha scan twice. The fill is a
-    noop write observed by one ``Observation`` — the row count, the
+    otherwise race to fill it and run the payload pass twice. The fill is
+    a noop write observed by one ``Observation`` — the row count, the
     ``observe`` aggregates and, for ``input_fence``, the same exact
     quartiles and count that ``outliers.iqr_bounds`` runs as a job of its
     own (so the fence is bit-identical), all in one Spark job, where
     ``count()`` over a cache runs three and each further aggregate a pass
-    of its own. The count bounds the representatives, so the reps
-    broadcast gate needs no probe of its own under ``REPS_BROADCAST_MAX``
-    rows. When any step of the build fails, from the fill through
-    ``decide``, the cache is released here; after a successful build the
-    caller owns it.
+    of its own. Everything after the fill reads the cache in the JVM.
+    When any step of the build fails, from the fill through ``decide``,
+    the cache is released here; after a successful build the caller owns
+    it.
     """
     if input_fence and dur_bounds is not None:
         raise ValueError("stage_graph takes dur_bounds or input_fence, not both")
@@ -361,36 +391,37 @@ def stage_graph(
     if input_fence:
         q, n = iqr_aggs("dur_ms")
         aggs += [q.alias("dur_q"), n.alias("dur_n")]
-    hashed = hashed_frame(clips).persist(StorageLevel.MEMORY_AND_DISK)
+    cache = payload_pass(clips, scope, with_fingerprints).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         fill = Observation()
-        hashed.observe(fill, *aggs).write.format("noop").mode("overwrite").save()
+        cache.observe(fill, *aggs).write.format("noop").mode("overwrite").save()
         seen = fill.get
-        n_rows = seen["rows"]
         if input_fence:
             dur_bounds = fence(
                 seen["dur_q"], seen["dur_n"], cfg.outlier_iqr_mult, cfg.outlier_min_rows
             )
         if keepers is None:
-            keeper_rows = keepers_by_sha(hashed.select("clip_id", "sha"), cfg)
+            keeper_rows = keepers_by_sha(cache.select("clip_id", "sha"), cfg)
         else:
-            keeper_rows = keepers(hashed, seen)
-        todo, todo_hashed = clips, hashed
-        if scope is not None:
-            todo, todo_hashed = clips.where(scope), hashed.where(scope)
-        stats = audio_stats_table(
-            todo,
-            cfg,
-            hashed=todo_hashed,
-            broadcast_reps=True if n_rows <= REPS_BROADCAST_MAX else None,
-            with_fingerprints=with_fingerprints,
-        )
-        enriched = enrich(todo, cfg, hashed=todo_hashed, stats=stats)
+            keeper_rows = keepers(cache, seen)
+        todo = cache if scope is None else cache.where(scope)
+        stats = None
+        if with_fingerprints:
+            stats = (
+                todo.where(F.col("sha").isNotNull())
+                .groupBy("sha", "codec", "sr_hz")
+                .agg(
+                    F.min("clip_id").alias("rep_id"),
+                    F.min_by(F.struct("n_subfp", "fp"), "clip_id").alias("_r"),
+                )
+                .select("sha", "codec", "sr_hz", "rep_id", "_r.n_subfp", "_r.fp")
+            )
+        enriched = todo.select(*ENRICHED_COLUMNS)
         decisions = decide(flag_duplicates(enriched, keeper_rows), cfg, dur_bounds)
     except BaseException:
-        hashed.unpersist()
+        cache.unpersist()
         raise
-    return StageGraph(hashed, n_rows, seen, dur_bounds, stats, enriched, decisions)
+    return StageGraph(cache, seen["rows"], seen, dur_bounds, stats, enriched, decisions)
 
 
 @lru_cache(maxsize=64)

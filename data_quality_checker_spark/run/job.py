@@ -13,9 +13,9 @@ Resume protocol (exactly-once per bucket):
 3. build the stage graph (pipeline.stage_graph) over the full input,
    scoped to the remainder; its cache fill also observes the input's IQR
    fence and, on resume, the remainder's row count; write decisions
-   partitioned by ``bucket`` with **dynamic partition overwrite** — a
-   re-run of a half-written bucket atomically replaces its partition —
-   while an ``Observation`` on that write counts each bucket's rows in
+   partitioned by ``bucket``, one file per bucket, with **dynamic
+   partition overwrite** — a re-run of a half-written bucket atomically
+   replaces its partition — while an ``Observation`` on that write counts each bucket's rows in
    and rows kept; then findings from this run's decisions, the same way;
 4. append lineage rows LAST, one per bucket actually completed, with the
    counts the decisions write observed, as ONE file per run (the commit
@@ -118,22 +118,23 @@ def run_job(
         if n_todo == 0:
             return {"run_id": run_id, "buckets_done": len(done), "rows_processed": 0}
         # bucket is a pure function of clip_id — recomputed in each
-        # projection, never joined (no extra shuffle); partitioned
+        # projection, never joined; partitioned
         # (run_id, bucket): dynamic overwrite only ever touches THIS
         # run's incomplete buckets, and findings stay attributable per
-        # run for the history/compare analytics. The lineage counts are
-        # observed directly above the write, in its result stage, where
-        # Spark merges each task's metrics once however often it is
-        # retried.
+        # run for the history/compare analytics. The repartition by bucket
+        # writes one file per bucket, whatever the partitioning of the
+        # cache. The lineage counts are observed directly above the
+        # write, in its result stage, where Spark merges each task's
+        # metrics once however often it is retried.
         graph.decisions.withColumn("run_id", F.lit(run_id)).withColumn(
             "bucket", bucket_expr(cfg)
-        ).observe(
+        ).repartition("bucket").observe(
             written,
             _bucket_counts(cfg, "").alias("rows_in"),
             _bucket_counts(cfg, " AND keep").alias("rows_kept"),
         ).write.mode("overwrite").partitionBy("run_id", "bucket").parquet(decisions_dir)
     finally:
-        graph.hashed.unpersist()
+        graph.cache.unpersist()
 
     # the partition directory name escapes run_id as the write did (a
     # timestamp's ':' becomes %3A)

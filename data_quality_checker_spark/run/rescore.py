@@ -1,9 +1,9 @@
 """Config-delta re-score — new keep/drop decisions from persisted
 per-clip metrics, without touching audio bytes or re-running any UDF.
 
-The expensive half of the pipeline is enrichment (pipeline.enrich): the
-sha pass over every payload, the Arrow text-model pass, the
-representative audio decode. The cheap half is ``decide()`` — pure
+The expensive half of the pipeline is enrichment (the stage graph's
+payload pass): the sha1, the text-model UDFs and the audio decode over
+every payload. The cheap half is ``decide()`` — pure
 whole-stage-codegen rule predicates over the slim enriched columns.
 Rule-config iteration (tighten perplexity_max, flip a rule off, change
 the sr whitelist — the reference's configurable validation rules,
@@ -54,14 +54,15 @@ def write_metrics(
 ) -> None:
     """One enrichment pass → metrics parquet at ``path``, partitioned by
     the run/job.py lineage-bucket expression (pure function of clip_id,
-    so re-scores and point lookups prune identically to the job)."""
+    so re-scores and point lookups prune identically to the job), one
+    file per bucket."""
     graph = stage_graph(clips, cfg)
     try:
-        graph.enriched.withColumn("bucket", bucket_expr(cfg)).write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(path)
+        graph.enriched.withColumn("bucket", bucket_expr(cfg)).repartition(
+            "bucket"
+        ).write.mode("overwrite").partitionBy("bucket").parquet(path)
     finally:
-        graph.hashed.unpersist()
+        graph.cache.unpersist()
 
 
 def rescore_decisions(

@@ -86,9 +86,9 @@ AUDIO_STATS_SCHEMA = T.StructType(
     ]
 )
 
-# stats + content fingerprint from ONE decode (the combined UDF behind
-# pipeline.audio_stats_table(with_fingerprints=True) — the streaming
-# content tier's fix for paying the payload decode twice per tick)
+# stats + content fingerprint from ONE decode (the decode UDF of the
+# stage graph's payload pass and of pipeline.audio_stats_table with
+# with_fingerprints=True), so the content tier pays no second decode
 AUDIO_STATS_FP_SCHEMA = T.StructType(
     list(AUDIO_STATS_SCHEMA.fields)
     + [

@@ -19,8 +19,8 @@ Per micro-batch:
 
 1. take the batch's rep-level fingerprints from the tick's stage graph
    (pipeline.stage_graph with_fingerprints: the same decode pass as the
-   audio stats, once per distinct payload) and its (clip → rep) key map
-   from the graph's cached sha pass;
+   audio stats, read once per distinct payload by a JVM aggregate over
+   the graph's cache) and its (clip → rep) key map from that cache;
 2. ACROSS batches: batch tokens ⋈ pruned ``fp_tokens`` buckets →
    candidate (batch clip, registered keeper) pairs sharing ≥
    least(MIN_SHARED_TOKENS, tokens(clip), tokens(keeper)) tokens (the
@@ -96,22 +96,22 @@ def process_content_increment(
     Idempotent per batch_id.
 
     ``graph`` — the tick's pipeline.stage_graph over the batch, built
-    with ``with_fingerprints=True``: its cached ``hashed`` frame gives
-    the (clip_id, rep_id) key map and its ``stats`` frame the rep-level
-    fingerprints, so the tier adds no sha pass and no decode of its own.
+    with ``with_fingerprints=True``: its ``cache`` gives the (clip_id,
+    rep_id) key map and its ``stats`` frame the rep-level fingerprints,
+    so the tier adds no payload scan and no decode of its own.
     Cache ``graph.stats`` before the call (process_and_write does): the
     probe, the within-batch pairing and the registration each read it.
     The graph's frames stay the caller's to unpersist.
 
     The whole tier runs at REPRESENTATIVE level (payload_reps: one rep
     per distinct (sha1, codec, sr_hz) key): byte-identical clips share a
-    fingerprint by construction, so only reps are decoded, tokenized,
-    probed against the registry and clustered. The within-batch pairing,
+    fingerprint by construction, so only reps are tokenized, probed
+    against the registry and clustered. The within-batch pairing,
     the keeper precedence and the expansion over each exact-dup group are
     audiofp.content_verdicts with the registry matches as its
     ``registry`` — the batch post-pass (content_dedup_decisions) is the
     same call with none. A dup-heavy batch — the design regime — costs
-    one decode per distinct payload and zero intra-group pair rows.
+    one token set per distinct payload and zero intra-group pair rows.
 
     Hub tokens are capped (spec v5): the "auto" df cap derives in-plan
     from THIS batch's distinct-fingerprint token stats and thins the
@@ -127,7 +127,7 @@ def process_content_increment(
         state_dir, "n_fp_buckets", FP_TOKENS.name, graph.n_rows, N_FP_BUCKETS
     )
 
-    keys = payload_reps(graph.hashed)
+    keys = payload_reps(graph.cache)
     fps = graph.stats.select(
         F.col("rep_id").alias("clip_id"), "n_subfp", "fp"
     ).where(F.col("fp").isNotNull() & (F.col("n_subfp") >= TOKEN_LEN))

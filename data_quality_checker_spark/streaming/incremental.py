@@ -50,13 +50,15 @@ state_dir (``pin_bucket_count``). All three share one protocol:
 
 One tick (``process_and_write``) runs each stage once:
 
-1. the stage graph's cache fill observes the row count and the registry
-   buckets the batch's shas hash into, in one noop pass; the graph's
+1. the stage graph's cache fill, the tick's only payload scan and only
+   Python stage, observes the row count and the registry buckets the
+   batch's shas hash into, in one noop pass; the graph's
    keepers are one aggregation over the batch's salted keeper candidates
    and the registry rows of those buckets, cut to the batch's shas and
    persisted, whose rows not registered yet are ``new``;
 2. the decisions write (partitioned by batch_id, dynamic partition
-   overwrite) and the registry append of ``new`` overlap on two threads;
+   overwrite; JVM only, over the cache) and the registry append of
+   ``new`` overlap on two threads;
    whichever runs first fills the keeper cache and the other reads it;
 3. the per-batch marker ``registry_batches/{batch_id}.done``, once both
    writes succeeded;
@@ -450,7 +452,7 @@ class _RegistryTick:
         ).alias("sha_buckets")
         self.keeper_rows: DataFrame | None = None
 
-    def keepers(self, hashed: DataFrame, seen: dict) -> DataFrame:
+    def keepers(self, cache: DataFrame, seen: dict) -> DataFrame:
         """(sha, keeper_clip_id) for the batch's shas: the registered
         keeper where the sha is registered (it belongs to an earlier
         batch — the local candidate loses), else the batch's own min
@@ -468,7 +470,7 @@ class _RegistryTick:
             k = F.struct(F.lit(new).alias("new"), F.col(id_col).alias("id"))
             return rows.select("sha", k.alias("k"))
 
-        local = keeper_candidates(hashed.select("clip_id", "sha"), self.cfg)
+        local = keeper_candidates(cache.select("clip_id", "sha"), self.cfg)
         cands = candidate(local, True, "_local_min")
         if registered is not None:
             cands = cands.unionByName(candidate(registered, False, "keeper_clip_id"))
@@ -521,9 +523,9 @@ def process_and_write(
     matches any earlier batch's keeper (or a within-batch cluster
     keeper) flip to keep=false with ``content_duplicate`` appended, by
     the same audiofp.apply_content_verdicts fold as the batch post-pass
-    audiofp.content_dedup_decisions. The graph's one decode pass emits
-    the fingerprints too (with_fingerprints), and its cached sha pass
-    feeds the content tier's key map. Both registries commit through
+    audiofp.content_dedup_decisions. The graph's one payload pass emits
+    the fingerprints too (with_fingerprints), and its cache feeds the
+    content tier's key map. Both registries commit through
     ``commit_batch``, so replays converge.
 
     CRITICAL: the overwrite mode must be set on the session that executes
@@ -547,13 +549,14 @@ def process_and_write(
             observe=[registry.touched],
             with_fingerprints=content_dedup,
         )
-        owned.append(graph.hashed)
+        owned.append(graph.cache)
         decisions = graph.decisions
         if content_dedup:
             from ..operators.audiofp import apply_content_verdicts
             from .contentfp import process_content_increment
 
-            # the stats frame feeds the base rules AND the content tier
+            # the per-key fingerprints feed the probe, the within-batch
+            # pairing and the registration of the content tier
             stats = graph.stats.persist()
             owned.append(stats)
             stats.count()

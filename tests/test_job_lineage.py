@@ -90,7 +90,7 @@ def test_fill_fence_matches_iqr_bounds(spark, clips_df, clips_pdf):
     ]
     for df, c, defined in cases:
         graph = stage_graph(df, c, input_fence=True)
-        graph.hashed.unpersist()
+        graph.cache.unpersist()
         assert graph.dur_bounds == iqr_bounds(
             df, "dur_ms", c.outlier_iqr_mult, c.outlier_min_rows
         )
@@ -108,14 +108,48 @@ def test_zero_row_input_writes_nothing(spark, tmp_path):
 
 
 def test_fresh_run_job_count(spark, clips_df, tmp_path, count_jobs):
-    """A fresh run_job on the test corpus (64 lineage buckets) reads its
-    fence and its lineage counts from observations: no IQR pre-pass, no
-    footer read of the decisions, no groupBy/collect of lineage and no
-    Python-row lineage frame — at most 14 Spark jobs, where the design
-    with all four ran 18 (in each of 22 runs on a 4-core host).
+    """A fresh run_job reads its fence and its lineage counts from
+    observations and runs its Python UDFs once, in the stage graph's
+    cache fill: the decisions write runs in the JVM over that cache.
 
-    The count was 13 in each of 22 runs on a 4-core host, counting the
-    input read; 14 leaves one job for a plan that adds a stage."""
+    Counting the input read, the test corpus ran 10 Spark jobs with 64
+    lineage buckets (12 of 12 runs on a 4-core host; the findings read
+    of 64 bucket dirs adds a parallel listing job) and 9 with 8 buckets,
+    where the design with a second payload scan and a second Python
+    stage ran 13 and 14 on 600 clips / 8 buckets."""
     path = clips_df.inputFiles()[0]
-    n = count_jobs(lambda: run_job(spark, path, str(tmp_path / "out"), "J"))
-    assert n <= 14, n
+    wide = count_jobs(lambda: run_job(spark, path, str(tmp_path / "wide"), "J"))
+    cfg = replace(DEFAULT_CONFIG, n_lineage_buckets=8)
+    narrow = count_jobs(lambda: run_job(spark, path, str(tmp_path / "narrow"), "J", cfg))
+    assert wide <= 10 and narrow <= 9, (wide, narrow)
+
+
+def test_one_file_per_bucket(spark, clips_pdf, tmp_path):
+    """``run_job`` writes one decisions file and one findings file per
+    (run_id, bucket), and ``write_metrics`` one file per bucket, however
+    many partitions the input scan and the stage graph's cache have (here
+    four input files)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_quality_checker_spark.run.rescore import write_metrics
+
+    pdf = clips_pdf.drop(columns=["defect"])
+    clips_dir = tmp_path / "clips"
+    clips_dir.mkdir()
+    for k in range(4):
+        part = pa.Table.from_pandas(pdf.iloc[k::4], preserve_index=False)
+        pq.write_table(part, str(clips_dir / f"part-{k}.parquet"))
+    cfg = replace(DEFAULT_CONFIG, n_lineage_buckets=8)
+    out = str(tmp_path / "out")
+    run_job(spark, str(clips_dir), out, "F", cfg)
+    assert spark.read.parquet(str(clips_dir)).rdd.getNumPartitions() > 1
+    for table in ("decisions", "findings"):
+        files = glob.glob(os.path.join(out, table, "run_id=F", "bucket=*", "*.parquet"))
+        buckets = [os.path.basename(os.path.dirname(f)) for f in files]
+        assert sorted(buckets) == sorted(set(buckets)) and len(buckets) == 8, (table, buckets)
+    metrics = str(tmp_path / "metrics")
+    write_metrics(spark, spark.read.parquet(str(clips_dir)), metrics, cfg)
+    files = glob.glob(os.path.join(metrics, "bucket=*", "*.parquet"))
+    buckets = [os.path.basename(os.path.dirname(f)) for f in files]
+    assert sorted(buckets) == sorted(set(buckets)) and len(buckets) == 8, buckets

@@ -12,7 +12,9 @@ Found-the-hard-way catalog:
   races both branches into computing it concurrently;
 * a caller that assembles its own stages drifts from the stage graph:
   the batch job once read the payload four times and broadcast one
-  representative row per clip without a size gate.
+  representative row per clip without a size gate;
+* each Python-UDF stage costs a fixed worker start per task, so the
+  stage graph runs its text and decode UDFs in one Arrow stage.
 """
 
 from __future__ import annotations
@@ -31,29 +33,32 @@ def _executed_plan(df) -> str:
 
 
 def _nodes(plan) -> list:
-    out, stack = [], [plan]
+    """Every node of a physical plan, descending into the input plan of
+    each adaptive plan and, once, into the cached plan of each distinct
+    cached relation it scans: an InMemoryTableScan hides its children,
+    and an InMemoryRelation repeats its cached plan's text, so a second
+    scan of one cache adds nothing."""
+    out, cached, stack = [], set(), [plan]
     while stack:
         node = stack.pop()
         out.append(node)
         children = node.children()
         stack.extend(children.apply(i) for i in range(children.size()))
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.inputPlan())
+        elif node.nodeName() == "InMemoryTableScan":
+            inner = node.relation().cachedPlan()
+            if inner.toString() not in cached:
+                cached.add(inner.toString())
+                stack.append(inner)
     return out
 
 
-def _payload_reads(plan) -> int:
-    """Scan leaves whose schema holds the payload, plus one fill per
-    distinct cached relation that reads it (an InMemoryRelation repeats
-    its cached scan's text, so the plan string would double-count)."""
-    reads, fills = 0, {}
-    for leaf in _nodes(plan):
-        if leaf.children().size():
-            continue
-        if leaf.nodeName() == "InMemoryTableScan":
-            inner = leaf.relation().cachedPlan()
-            fills[inner.toString()] = _payload_reads(inner)
-        elif "bytes:binary" in leaf.schema().simpleString():
-            reads += 1
-    return reads + sum(fills.values())
+def _payload_reads(nodes) -> int:
+    """Scan leaves whose schema holds the payload."""
+    return sum(
+        not n.children().size() and "bytes:binary" in n.schema().simpleString() for n in nodes
+    )
 
 
 class _Built(Exception):
@@ -78,15 +83,10 @@ def _caller_graph_shape(spark, monkeypatch, caller: str, clips_path: str, work: 
 
     def spy(*args, **kwargs):
         graph = real(*args, **kwargs)
-        plan = graph.decisions._jdf.queryExecution().executedPlan().inputPlan()
-        nodes = _nodes(plan)
+        nodes = _nodes(graph.decisions._jdf.queryExecution().executedPlan())
         shape["arrow"] = sum(n.nodeName() == "ArrowEvalPython" for n in nodes)
-        shape["payload_reads"] = _payload_reads(plan)
-        shape["reps_broadcast"] = any(
-            n.nodeName() == "BroadcastHashJoin" and "LeftSemi" in n.simpleString(50)
-            for n in nodes
-        )
-        graph.hashed.unpersist()
+        shape["payload_reads"] = _payload_reads(nodes)
+        graph.cache.unpersist()
         raise _Built
 
     monkeypatch.setattr(module, "stage_graph", spy)
@@ -110,41 +110,46 @@ def _caller_graph_shape(spark, monkeypatch, caller: str, clips_path: str, work: 
     return shape
 
 
-def test_decisions_plan_has_two_udf_passes(spark, clips_df, tmp_path, monkeypatch):
+def test_decisions_plan_has_one_udf_pass(spark, clips_df, tmp_path, monkeypatch):
     """Every caller of the stage graph — the in-session pipeline, the
     batch job, the default streaming tick and the content-dedup tick
-    (whose one decode pass also emits the fingerprints) — decides from a
-    plan with exactly TWO ArrowEvalPython nodes (the per-clip text pass
-    and the per-distinct-payload audio pass) and at most TWO payload
-    reads (the cached sha pass and the representative decode). The reps
-    broadcast is size-gated on every path: with REPS_BROADCAST_MAX at 0
-    the representative semi join is not broadcast."""
+    (whose decode also emits the fingerprints) — decides from a plan with
+    exactly ONE ArrowEvalPython node (the text and decode UDFs of the
+    cache fill) and ONE payload read (that fill's scan), counted through
+    the cached fill's own plan."""
     # other tests may have left persisted frames; the cache manager would
     # substitute InMemoryRelation into matching subtrees and change the
     # node count
     spark.catalog.clearCache()
     clips_path = clips_df.inputFiles()[0]
+    for caller in ("pipeline", "job", "tick", "content_tick"):
+        shape = _caller_graph_shape(
+            spark, monkeypatch, caller, clips_path, str(tmp_path / caller)
+        )
+        assert shape == {"arrow": 1, "payload_reads": 1}, (caller, shape)
+
+
+def test_reps_broadcast_is_size_gated(spark, clips_df, monkeypatch):
+    """``audio_stats_table`` broadcasts its representatives only under
+    ``REPS_BROADCAST_MAX``: at the default the semi join is broadcast,
+    with the bound at 0 (and no size-based broadcast) it is not."""
+    hashed = pipeline.hashed_frame(clips_df).persist()
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        for caller in ("pipeline", "job", "tick", "content_tick"):
-            shape = _caller_graph_shape(
-                spark, monkeypatch, caller, clips_path, str(tmp_path / caller)
+        def broadcast() -> bool:
+            stats = pipeline.audio_stats_table(clips_df, hashed=hashed)
+            return any(
+                n.nodeName() == "BroadcastHashJoin" and "LeftSemi" in n.simpleString(50)
+                for n in _nodes(stats._jdf.queryExecution().executedPlan())
             )
-            assert shape["arrow"] == 2, (caller, shape)
-            assert shape["payload_reads"] <= 2, (caller, shape)
-            assert shape["reps_broadcast"], (caller, shape)
 
-            # the size gate alone decides: no size-based broadcast either
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            with monkeypatch.context() as m:
-                m.setattr(pipeline, "REPS_BROADCAST_MAX", 0)
-                gated = _caller_graph_shape(
-                    spark, m, caller, clips_path, str(tmp_path / f"{caller}_gated")
-                )
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-            assert not gated["reps_broadcast"], (caller, gated)
+        assert broadcast()
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        monkeypatch.setattr(pipeline, "REPS_BROADCAST_MAX", 0)
+        assert not broadcast()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        hashed.unpersist()
 
 
 def test_text_rules_prune_bytes_from_scan(spark, clips_df):
@@ -210,3 +215,22 @@ def test_fingerprints_plan_partial_aggregates(spark):
     assert plan.count("Exchange") <= 2, plan[:1200]
     # md5/conv runs inside whole-stage codegen, not an interpreted HOF
     assert "transform(" not in plan, plan[:1200]
+
+
+def test_shingles_respreads_once(spark, count_jobs):
+    """A frame that ``spread_small_scan`` already respread is not
+    respread again by a composed operator: ``shingles`` over it plans
+    exactly one round-robin exchange, and building it runs no Spark job
+    (asking an adaptive plan with an exchange for its partition count
+    runs that exchange's shuffle stage)."""
+    from data_quality_checker_spark.operators.text import shingles, spread_small_scan
+
+    docs = spark.createDataFrame(
+        [(i, f"document {i} with text long enough to shingle") for i in range(40)],
+        "doc_id bigint, text string",
+    ).coalesce(1)
+    respread = spread_small_scan(docs)
+    built = []
+    assert count_jobs(lambda: built.append(shingles(respread))) == 0
+    plan = _executed_plan(built[0])
+    assert plan.count("RoundRobinPartitioning") == 1, plan

@@ -215,7 +215,7 @@ def test_decide_rule_cache_is_keyed_on_config_and_bounds(spark, clips_df):
 
     graph = stage_graph(clips_df.limit(60))
     enriched = flag_duplicates(
-        graph.enriched, keepers_by_sha(graph.hashed.select("clip_id", "sha"))
+        graph.enriched, keepers_by_sha(graph.cache.select("clip_id", "sha"))
     ).persist()
     try:
         disabled = replace(DEFAULT_CONFIG, disabled_rules=("dur_outlier",))
@@ -247,4 +247,4 @@ def test_decide_rule_cache_is_keyed_on_config_and_bounds(spark, clips_df):
         assert got[(DEFAULT_CONFIG, narrow)] != got[(disabled, narrow)]
     finally:
         enriched.unpersist()
-        graph.hashed.unpersist()
+        graph.cache.unpersist()

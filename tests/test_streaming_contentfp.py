@@ -50,7 +50,7 @@ def _increment(spark, batch, state_dir, batch_id):
         return process_content_increment(spark, graph, state_dir, batch_id)
     finally:
         graph.stats.unpersist()
-        graph.hashed.unpersist()
+        graph.cache.unpersist()
 
 
 @pytest.fixture()

@@ -44,22 +44,23 @@ def _decisions(spark, out, batch_id):
 
 def test_steady_tick_job_count(spark, ticks, tmp_path, count_jobs):
     """Each stage of a steady tick runs once: the input read, one cache
-    fill that also observes the touched registry buckets, the keepers
-    computed once for the decisions write and the registry append, and a
-    registry read with a declared schema — at most 15 Spark jobs, where
-    the design with a second noop pass, a footer-inferring registry read
-    and an append that re-derived the keepers ran 18.
+    fill that runs the tick's only Python stage and also observes the
+    touched registry buckets, the keepers computed once for the decisions
+    write and the registry append, a registry read with a declared schema
+    and a decisions write that runs in the JVM — at most 11 Spark jobs,
+    where the design with a second payload scan and a second Python stage
+    ran 13 or 14.
 
-    The count is 13 or 14 (13 in 2 of 20 runs on a 4-core host): both
+    The count was 10 in each of 12 runs on a 4-core host: both
     overlapped writes read the keeper cache, and each submits the job
     that fills it unless the other's fill finished before it planned.
-    That race adds at most one job, so 15 is one above its worst case."""
+    That race adds at most one job, so 11 is its worst case."""
     state, out = str(tmp_path / "state"), str(tmp_path / "out")
     counts = [
         count_jobs(lambda: process_and_write(spark, spark.read.parquet(path), k, state, out))
         for k, path in enumerate(ticks)
     ]
-    assert counts[1] <= 15, counts
+    assert counts[1] <= 11, counts
 
 
 def test_failed_decisions_write_replays_clean(spark, ticks, tmp_path):
