@@ -39,8 +39,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # timing is now clips_decisions_labels (same run_pipeline call the old
 # clips_decisions row timed); null_counts/outlier_count_iqr live on as
 # columns of events_profile/orders_profile; quantiles_price folded into
-# quantiles_price_scalable; simhash_docs/ngram_jaccard are covered by
-# simhash_neardup_pairs/minhash_verified_pairs.
+# quantiles_price_scalable; ngram_jaccard is covered by
+# minhash_verified_pairs.
 BENCH_QUERIES = [
     "clips_decisions_labels",
     "clips_findings_summary",
@@ -71,7 +71,6 @@ BENCH_QUERIES = [
     "neardup_clusters",
     "quantiles_price_scalable",
     "histogram_price",
-    "simhash_neardup_pairs",
     "embed_neardup",
     "ann_topk",
     "ann_ivfpq_topk",

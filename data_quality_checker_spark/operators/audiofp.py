@@ -4,7 +4,7 @@ The flagship pipeline's dedup tier (operators/dedup.py) is BYTE-level:
 SHA-1 over the encoded payload, which a 1-sample trim, a gain change, a
 resample, or a codec transcode all defeat. A 100 TB speech-training
 corpus needs CONTENT-level dedup on top of it — the audio analog of the
-text tier's MinHash/SimHash near-dup stack (operators/simdedup.py).
+text tier's MinHash-LSH near-dup stack (operators/simdedup.py).
 
 Design: the Philips robust-hash family (Haitsma & Kalker, "A Highly
 Robust Audio Fingerprinting System", ISMIR 2002 — public):
@@ -36,9 +36,9 @@ Near-dup search then mirrors the text LSH shape, Spark-first:
 Scale shape: fingerprinting is MAP-ONLY (one Arrow pass, no shuffle);
 pairing shuffles (clip_id, token) pairs — tens of bytes per token, one
 token per sub-fingerprint hop (16 ms of audio). Dup cliques fan out
-O(d²) candidate pairs exactly like the text LSH tier; the same
-collapsed-variant escape hatch applies
-(simdedup.minhash_verified_pairs_collapsed rationale).
+O(d²) candidate pairs exactly like the text LSH tier; the answer for a
+dup-heavy corpus is the same as there: exact dedup first (the SHA-1
+tier), then near-dup the representatives.
 
 Cross-engine exactness: every float op in the sub-fingerprint spec is a
 fixed numpy primitive on bit-identical float64 inputs (np.hanning,
@@ -375,9 +375,9 @@ def fingerprint_candidate_pairs(
     every token of a small corpus, so test/sf-scale semantics are
     unchanged); ``None`` is the explicit opt-out. The semantic tradeoff
     of ANY df cap: content popular enough that its own distinct variants
-    exceed the cap stops pairing through those tokens — the collapsed-
-    variant escape hatch (module docstring) is the answer there, not an
-    uncapped join. ``toks`` — pass a precomputed fingerprint_tokens
+    exceed the cap stops pairing through those tokens — exact dedup
+    first (module docstring) is the answer there, not an uncapped
+    join. ``toks`` — pass a precomputed fingerprint_tokens
     frame to share it across consumers (the streaming tier probes the
     registry with the same stream)."""
     if toks is None:

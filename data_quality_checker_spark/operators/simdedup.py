@@ -1,12 +1,12 @@
 """Deduplication family for a web-scale training corpus — exact, MinHash
-LSH, SimHash, n-gram Jaccard, and embedding-cosine near-dup.
+LSH with exact n-gram Jaccard verification, and embedding-cosine near-dup.
 
 The reference only has exact row/key duplicate detection
 (src/core/validator.py:101-123, src/core/validation_rules.py:176-193);
 the near-duplicate operators here are the standard large-corpus extensions
-(MinHash banding per Broder '97; SimHash per Charikar '02), each expressed
-as pure DataFrame plans so Catalyst handles partial aggregation, shuffle
-planning and AQE skew-splitting.
+(MinHash banding per Broder '97), each expressed as pure DataFrame plans
+so Catalyst handles partial aggregation, shuffle planning and AQE
+skew-splitting.
 
 Scale shapes (what survives a 100 TB corpus):
   * exact dedup      — one groupBy(md5) shuffle; salted two-phase min()
@@ -15,15 +15,13 @@ Scale shapes (what survives a 100 TB corpus):
                        combinable; banding turns O(n²) pairs into
                        per-bucket candidate joins; only candidates get an
                        exact Jaccard verification.
-  * SimHash          — per-doc 64 aggregated sign bits, then bucket by
-                       hash prefix for Hamming candidates.
   * n-gram Jaccard   — exposed standalone for small/verification use; at
                        scale it runs ONLY on LSH candidate pairs.
   * embedding cosine — brute pairwise for verification; ANN (operators/
                        ann.py) is the scale path.
 
-All hashes use the engine-portable 60-bit md5 prefix (text.portable_hash64)
-so every operator has an exact DuckDB SQL oracle.
+The MinHash and band hashes are engine-portable md5 prefixes, so every
+operator has an exact DuckDB SQL oracle.
 """
 
 from __future__ import annotations
@@ -32,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text import portable_hash64, round6, shingles, tokens_col
+from .text import round6, shingles, spread_small_scan
 
 # MinHash parameters: h_i(x) = (A_i * H28(x) + B_i) mod P, where H28 is a
 # 28-bit md5-prefix hash and P = 2^31 - 1. All intermediates stay well
@@ -104,38 +102,34 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, k: int = 8, n_hashes: int = N_HASHES
-) -> DataFrame:
-    """→ (doc_id, sig: array<bigint>[n_hashes]) MinHash signature.
+def minhash_signatures(docs: DataFrame, k: int = 8) -> DataFrame:
+    """→ (doc_id, sig: array<bigint>[N_HASHES]) MinHash signature.
 
-    Plan: shingle explode → ONE groupBy(doc_id) computing all n_hashes
+    Plan: shingle explode → ONE groupBy(doc_id) computing all N_HASHES
     mins in a single partial-aggregatable pass (no per-hash shuffle).
 
-    Measured alternative, rejected (same verdict as simhash): a
-    zero-shuffle shingle-set-array formulation (one md5 transform, then
-    n_hashes array_min folds) runs ~2× slower at sf0.1 — Spark's
-    higher-order folds are interpreted per element × n_hashes, while the
-    explode's per-doc shuffle is tiny after map-side combine.
+    Measured alternative, rejected: a zero-shuffle shingle-set-array
+    formulation (one md5 transform, then N_HASHES array_min folds) runs
+    ~2× slower at sf0.1 — Spark's higher-order folds are interpreted per
+    element × N_HASHES, while the explode's per-doc shuffle is tiny
+    after map-side combine.
     """
     sh = shingles(docs, k)
     h = minhash_base_hash(F.col("shingle"))
     mins = [
-        F.min(_minhash_perm(i, h)).alias(f"m{i}") for i in range(n_hashes)
+        F.min(_minhash_perm(i, h)).alias(f"m{i}") for i in range(N_HASHES)
     ]
     agg = sh.groupBy("doc_id").agg(*mins)
     return agg.select(
-        "doc_id", F.array(*[F.col(f"m{i}") for i in range(n_hashes)]).alias("sig")
+        "doc_id", F.array(*[F.col(f"m{i}") for i in range(N_HASHES)]).alias("sig")
     )
 
 
-def minhash_band_buckets(
-    docs: DataFrame, k: int = 8, n_hashes: int = N_HASHES, n_bands: int = N_BANDS
-) -> DataFrame:
+def minhash_band_buckets(docs: DataFrame, k: int = 8) -> DataFrame:
     """→ (doc_id, band, bucket): LSH bucket key per band — md5 of the
     band's concatenated signature slice."""
-    rows_per_band = n_hashes // n_bands
-    sig = minhash_signatures(docs, k, n_hashes)
+    rows_per_band = N_HASHES // N_BANDS
+    sig = minhash_signatures(docs, k)
     # ONE pass: posexplode over the array of per-band keys. The former
     # union-of-4-selects shape replicated the whole signature subtree
     # once per band (ReusedExchange salvaged the shuffle but each branch
@@ -151,15 +145,13 @@ def minhash_band_buckets(
                     ],
                 )
             )
-            for b in range(n_bands)
+            for b in range(N_BANDS)
         ]
     )
     return sig.select("doc_id", F.posexplode(keys).alias("band", "bucket"))
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame, k: int = 8, n_hashes: int = N_HASHES, n_bands: int = N_BANDS
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, k: int = 8) -> DataFrame:
     """→ (doc_a, doc_b) candidate near-dup pairs: documents sharing any
     LSH band bucket (doc_a < doc_b, distinct).
 
@@ -168,7 +160,7 @@ def minhash_lsh_pairs(
     boilerplate-heavy crawl shard). Feed these pairs to
     ``ngram_jaccard_for_pairs`` for exact verification.
     """
-    b = minhash_band_buckets(docs, k, n_hashes, n_bands)
+    b = minhash_band_buckets(docs, k)
     left = b.alias("l")
     right = b.alias("r")
     return (
@@ -184,10 +176,7 @@ def minhash_lsh_pairs(
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    k: int = 8,
-    threshold: float = 0.5,
-    max_docs: int | None = None,
+    docs: DataFrame, k: int = 8, threshold: float = 0.5
 ) -> DataFrame:
     """Exact n-gram Jaccard over ALL pairs sharing ≥1 shingle:
     → (doc_a, doc_b, jaccard) with jaccard ≥ threshold.
@@ -196,8 +185,6 @@ def ngram_jaccard_pairs(
     on stop-shingles; at scale run only on LSH candidates), |A∪B| =
     |A|+|B|−|A∩B| from per-doc distinct-shingle counts.
     """
-    if max_docs is not None:
-        docs = docs.orderBy("doc_id").limit(max_docs)
     sh = shingles(docs, k).distinct()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("a")
@@ -224,42 +211,35 @@ def ngram_jaccard_pairs(
     )
 
 
-def shingle_set_col(text_col: str, k: int, hashed: bool = False) -> Column:
-    """array of DISTINCT k-char shingles, computed entirely in
-    whole-stage codegen (no explode, no distinct shuffle): transform over
-    a position sequence + array_distinct. Empty array for null/short
-    text (identical eligibility to the explode-based ``shingles``).
-    Guarded: Spark's sequence(1, stop) DESCENDS when stop < 1, which
-    would emit bogus sub-k fragments for short texts.
+def shingle_set_col(text_col: str, k: int) -> Column:
+    """array<bigint> of the DISTINCT k-char shingles' xxhash64 values,
+    computed entirely in whole-stage codegen (no explode, no distinct
+    shuffle): transform over a position sequence + array_distinct. Empty
+    array for null/short text (identical eligibility to the
+    explode-based ``shingles``). Guarded: Spark's sequence(1, stop)
+    DESCENDS when stop < 1, which would emit bogus sub-k fragments for
+    short texts.
 
-    ``hashed=True`` maps each shingle through xxhash64 inside the same
-    codegen pass → array<bigint>: 8 B per element instead of a ~20+ B
-    string header+payload, so every downstream shuffle/array_intersect
-    moves ~3× fewer bytes. Set semantics are preserved w.h.p. — a
-    collision needs two distinct k-grams of one doc pair hashing equal,
-    P ≈ pairs·len²/2⁶⁴ ≈ 10⁻¹² per pair at 2k shingles/doc — and the
-    Jaccard VALUE is then bit-identical to the string computation, so
-    the exact string-based oracle still applies."""
-    inner = f"substr({text_col}, i, {k})"
-    if hashed:
-        inner = f"xxhash64({inner})"
+    Hashing inside the same codegen pass gives 8 B per element instead
+    of a ~20+ B string header+payload, so every downstream
+    shuffle/array_intersect moves ~3× fewer bytes. Set semantics are
+    preserved w.h.p. — a collision needs two distinct k-grams of one doc
+    pair hashing equal, P ≈ pairs·len²/2⁶⁴ ≈ 10⁻¹² per pair at 2k
+    shingles/doc — and the Jaccard VALUE is then bit-identical to the
+    string computation, so the exact string-based oracle still applies."""
     arr = F.expr(
-        f"transform(sequence(1, length({text_col}) - {k - 1}), i -> {inner})"
+        f"transform(sequence(1, length({text_col}) - {k - 1}), "
+        f"i -> xxhash64(substr({text_col}, i, {k})))"
     )
-    empty = F.array().cast("array<bigint>" if hashed else "array<string>")
     return F.when(
         F.length(text_col) >= F.lit(k), F.array_distinct(arr)
-    ).otherwise(empty)
+    ).otherwise(F.array().cast("array<bigint>"))
 
 
 def ngram_jaccard_for_pairs(
     docs: DataFrame,
     pairs: DataFrame,
     k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hashed: bool = True,
-    prune_below: float | None = None,
     threshold: float | None = None,
 ) -> DataFrame:
     """Exact k-char-shingle Jaccard restricted to the given candidate
@@ -267,17 +247,17 @@ def ngram_jaccard_for_pairs(
     jaccard) for every input pair whose docs both shingle (zero-OVERLAP
     pairs get jaccard 0; docs shorter than k have no shingle set, and
     such pairs are dropped — they can never be LSH candidates anyway).
+    With ``threshold`` set, only pairs with jaccard ≥ threshold are
+    returned.
 
     Scale shape (vs the corpus-wide ``ngram_jaccard_pairs``):
 
-    * per-doc shingle SETS are built as arrays in codegen
-      (``shingle_set_col``) — no shingle explode, no distinct shuffle;
-    * ``hashed=True`` (default): the sets are xxhash64 int64 arrays, so
-      the per-pair array fan-out through the two id-joins (each doc's
-      set ships once per candidate pair it appears in — the dominant
-      shuffle of this stage) moves 8 B/shingle instead of ~20+ B string
-      bytes, with Jaccard values identical w.h.p. (collision math in
-      ``shingle_set_col``);
+    * per-doc shingle SETS are built as xxhash64 int64 arrays in codegen
+      (``shingle_set_col``) — no shingle explode, no distinct shuffle,
+      and the per-pair array fan-out through the two id-joins (each
+      doc's set ships once per candidate pair it appears in — the
+      dominant shuffle of this stage) moves 8 B/shingle instead of ~20+
+      B string bytes;
     * only docs appearing in some candidate pair are materialized
       (left-semi join);
     * the intersection is ``size(array_intersect(sa, sb))`` computed
@@ -287,8 +267,8 @@ def ngram_jaccard_for_pairs(
       candidates).
     """
     cand_ids = (
-        pairs.select(F.col("doc_a").alias(id_col))
-        .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
     # Spread the set build across the cluster BEFORE the per-element
@@ -298,40 +278,42 @@ def ngram_jaccard_for_pairs(
     # unspread build serializes the CPU-heavy stage on one core. Gated:
     # at real corpus scale the semi-join output is already partitioned
     # wider than the cluster and no shuffle is added.
-    from .text import spread_small_scan
-
-    cdocs = spread_small_scan(docs.join(cand_ids, on=id_col, how="left_semi"))
-    shset = cdocs.select(
-        F.col(id_col), shingle_set_col(text_col, k, hashed=hashed).alias("ss")
-    ).where(F.size("ss") > 0)
+    #
+    # Docs shorter than k (empty sets) are dropped on the text length,
+    # not on size(ss): Catalyst pushes a filter on the set through the
+    # respread and the semi join into the scan, which then builds the set
+    # of every doc in the corpus, unspread.
+    cdocs = spread_small_scan(
+        docs.where(F.length("text") >= k).join(cand_ids, on="doc_id", how="left_semi")
+    )
+    shset = cdocs.select("doc_id", shingle_set_col("text", k).alias("ss"))
     # Both join sides broadcast this frame; without a barrier each
     # broadcast rebuilds the whole semi-join + set-build subtree (2× the
     # dominant cost). The persisted form is (id, set) for candidate docs
     # only — bounded by the candidate set, not the corpus.
     shset = shset.persist()
-    a = shset.select(F.col(id_col).alias("doc_a"), F.col("ss").alias("sa"))
-    b = shset.select(F.col(id_col).alias("doc_b"), F.col("ss").alias("sb"))
+    a = shset.select(F.col("doc_id").alias("doc_a"), F.col("ss").alias("sa"))
+    b = shset.select(F.col("doc_id").alias("doc_b"), F.col("ss").alias("sb"))
     n_inter = F.size(F.array_intersect("sa", "sb"))
     joined = pairs.join(a, "doc_a").join(b, "doc_b")
-    if prune_below is not None:
+    if threshold is not None:
         # lossless size bound (PPJoin-family length filter): J(A,B) ≤
         # min(|A|,|B|)/max(|A|,|B|), so a pair whose set sizes differ by
         # more than the threshold ratio cannot reach it — the filter
         # runs BEFORE the projection, so the O(|A|+|B|) intersect is
-        # never evaluated for pruned pairs. Callers that keep every
-        # jaccard value (the corpus-wide report shape) pass None.
+        # never evaluated for pruned pairs.
         joined = joined.where(
             F.least(F.size("sa"), F.size("sb"))
-            >= F.lit(prune_below) * F.greatest(F.size("sa"), F.size("sb"))
+            >= F.lit(threshold) * F.greatest(F.size("sa"), F.size("sb"))
         )
     # Same engine-determinism discipline as ngram_jaccard_pairs: the
     # keep/drop decision is made on the RAW ratio (bit-identical across
     # engines — integer sizes, one IEEE division), and round6 (not
     # F.round, which diverges from DuckDB/numpy on representational
-    # ties) is display-only. Filtering raw also keeps the prune_below
-    # size bound exactly lossless: a pair with raw_j < t can round UP
-    # to t, so a rounded-value filter would need pairs the size prune
-    # correctly discards.
+    # ties) is display-only. Filtering raw also keeps the size bound
+    # exactly lossless: a pair with raw_j < t can round UP to t, so a
+    # rounded-value filter would need pairs the size prune correctly
+    # discards.
     out = joined.select(
         "doc_a",
         "doc_b",
@@ -342,20 +324,8 @@ def ngram_jaccard_for_pairs(
     return out.select("doc_a", "doc_b", round6(F.col("_raw_j")).alias("jaccard"))
 
 
-# Auto-route threshold for the collapsed (dedup-first) verify path: above
-# this exact-duplicate rate the dup-clique O(Σd²) candidate blow-up of the
-# direct path outweighs the collapsed path's two extra membership joins.
-DUP_RATE_COLLAPSE = 0.05
-
-
 def minhash_verified_pairs(
-    docs: DataFrame,
-    k: int = 8,
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
-    threshold: float = 0.5,
-    materialize_candidates: bool = True,
-    dedup_first: bool | None = None,
+    docs: DataFrame, k: int = 8, threshold: float = 0.5
 ) -> DataFrame:
     """The full near-dup tier: MinHash-LSH candidates → exact Jaccard
     verification → pairs with jaccard ≥ threshold. This is the operator
@@ -366,127 +336,27 @@ def minhash_verified_pairs(
     semi-join, intersection fan-out, final pair join); without a
     materialization barrier Spark re-runs the whole
     shingle→minhash→band self-join per consumer (measured 2× wall at
-    sf0.1 / 312k candidates). ``materialize_candidates`` persists and
-    eagerly fills the (doc_a, doc_b) list — two longs per row, far
-    smaller than the corpus, and persist (unlike localCheckpoint, which
-    erases size statistics and costs the verify joins their broadcast
-    strategy) keeps accurate stats for the planner. The cache entry is
+    sf0.1 / 312k candidates). The (doc_a, doc_b) list is therefore
+    persisted and eagerly filled — two longs per row, far smaller than
+    the corpus, and persist (unlike localCheckpoint, which erases size
+    statistics and costs the verify joins their broadcast strategy)
+    keeps accurate stats for the planner. The cache entry is
     deliberately left for LRU eviction: the operator returns a lazy frame
     whose consumers still need it. A production pipeline makes this same
     boundary a table write between the LSH and verify jobs.
 
-    ``dedup_first=None`` (default) runs a one-aggregate dup-rate probe
-    and routes dup-heavy inputs (exact-dup rate > ``DUP_RATE_COLLAPSE``)
-    to the provably-equivalent collapsed path
-    (``minhash_verified_pairs_collapsed``) — on a crawl-style corpus the
-    dup cliques dominate the candidate volume and the collapsed ordering
-    wins; pass False/True to force a path (the collapsed path itself
-    forces False on the representatives to avoid re-probing)."""
-    if dedup_first is None:
-        probe = docs.agg(
-            F.count("text").alias("n"),
-            F.count_distinct(F.md5(F.col("text"))).alias("d"),
-        ).first()
-        n_docs = probe["n"] or 0
-        dedup_first = (
-            n_docs > 0 and (n_docs - probe["d"]) / n_docs > DUP_RATE_COLLAPSE
-        )
-    if dedup_first:
-        return minhash_verified_pairs_collapsed(
-            docs, k, n_hashes, n_bands, threshold
-        )
-    cand = minhash_lsh_pairs(docs, k, n_hashes, n_bands)
-    if materialize_candidates:
-        cand = cand.persist()
-        cand.count()
+    Exact duplicates go through the same path: identical texts share
+    every band bucket, so a text copied d× adds d·(d−1)/2 candidates,
+    each verified at jaccard 1.0. The exact-dup rate of the registry
+    corpora is ≤ 0.16%, so that term is negligible there; a crawl that
+    is dup-heavy runs ``exact_dedup`` first and near-dups the keepers."""
+    cand = minhash_lsh_pairs(docs, k).persist()
+    cand.count()
     # threshold is applied to the RAW jaccard inside the verifier (the
     # returned column is display-rounded; filtering it instead would
     # re-admit raw<t pairs that round up to t — a class the lossless
     # size prune has already discarded).
-    return ngram_jaccard_for_pairs(
-        docs, cand, k, prune_below=threshold, threshold=threshold
-    )
-
-
-def minhash_verified_pairs_collapsed(
-    docs: DataFrame,
-    k: int = 8,
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """``minhash_verified_pairs`` with the textbook scale ordering:
-    **exact-dedup first, near-dup on representatives, expand after.**
-
-    Identical texts have identical shingle sets, hence identical MinHash
-    signatures, band buckets, and Jaccard values — so running LSH+verify
-    on one representative per md5(text) group and expanding the results
-    over group members produces EXACTLY the same pair set as the direct
-    operator (same DuckDB oracle passes), while collapsing the dup-clique
-    blow-up: a text duplicated d× contributes d·(d−1)/2 candidate pairs
-    to the direct path but only 1 representative here. On a dup-heavy
-    crawl corpus this is the difference between O(Σ d_i²) and O(groups²)
-    candidate volume.
-
-    Expansion rules (proof of equivalence):
-    * docs shorter than k shingle to nothing → excluded from grouping,
-      exactly as they can never enter an LSH bucket in the direct path;
-    * within-group pairs: jaccard = 1.0 (identical text), emitted for
-      every unordered member pair — the direct path emits these because
-      identical signatures share every band bucket;
-    * cross-group pairs: (rep_a, rep_b, j) expands to all member pairs
-      with the same j, matching the direct path member-by-member.
-    """
-    eligible = docs.where(
-        F.col(text_col).isNotNull() & (F.length(text_col) >= F.lit(k))
-    )
-    groups = eligible.select(F.col(id_col), F.md5(F.col(text_col)).alias("_h"))
-    membership = (
-        groups.join(
-            groups.groupBy("_h").agg(F.min(id_col).alias("rep")), "_h"
-        )
-        .select(F.col(id_col).alias("member"), "rep")
-        .persist()
-    )
-    membership.count()
-    reps = eligible.join(
-        membership.where(F.col("member") == F.col("rep")).select(
-            F.col("member").alias(id_col)
-        ),
-        id_col,
-        "left_semi",
-    )
-    ver_rep = minhash_verified_pairs(
-        reps, k, n_hashes, n_bands, threshold, dedup_first=False
-    )
-
-    ma = membership.select(F.col("rep").alias("doc_a"), F.col("member").alias("da"))
-    mb = membership.select(F.col("rep").alias("doc_b"), F.col("member").alias("db"))
-    cross = (
-        ver_rep.join(ma, "doc_a")
-        .join(mb, "doc_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
-    )
-    g1 = membership.select("rep", F.col("member").alias("da"))
-    g2 = membership.select("rep", F.col("member").alias("db"))
-    within = (
-        g1.join(g2, "rep")
-        .where(F.col("da") < F.col("db"))
-        .select(
-            F.col("da").alias("doc_a"),
-            F.col("db").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    if threshold > 1.0:
-        within = within.where(F.lit(False))
-    return cross.unionByName(within)
+    return ngram_jaccard_for_pairs(docs, cand, k, threshold=threshold)
 
 
 def neardup_components(
@@ -632,100 +502,6 @@ def neardup_components(
         F.col("label").alias("cluster_id"),
         (F.col("doc_id") != F.col("label")).alias("is_dup"),
     )
-
-
-def simhash(docs: DataFrame, n_bits: int = 32) -> DataFrame:
-    """→ (doc_id, simhash): Charikar sign-random-projection over whitespace
-    tokens. Bit b of the fingerprint is 1 iff Σ_tokens (±1 per token,
-    sign = bit b of H(token)) > 0.
-
-    Plan: token explode → bit explode (n_bits rows per token) → one
-    partial-aggregatable sum per (doc, bit) → bit-pack per doc. All
-    integer arithmetic — bit-identical in the SQL oracle.
-
-    Measured alternative, rejected: a zero-shuffle formulation (project
-    the token-hash array once, then n_bits aggregate() folds) is ~2×
-    SLOWER at sf0.1 — Spark's higher-order folds run interpreted per
-    element × n_bits, while the explode's shuffles are tiny after
-    map-side combine. Fan-out ≠ slow when the agg is partial.
-    """
-    from .text import spread_small_scan
-
-    toks = spread_small_scan(docs).select(
-        "doc_id", F.explode(tokens_col(F.col("text"))).alias("tok")
-    )
-    h = portable_hash64(F.col("tok")).alias("h")
-    bits = toks.select("doc_id", h).select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(n_bits - 1))).alias("bit"),
-        F.col("h"),
-    )
-    contrib = bits.select(
-        "doc_id",
-        "bit",
-        (F.expr("shiftright(h, bit)").bitwiseAND(F.lit(1)) * 2 - 1).alias("s"),
-    )
-    per_bit = contrib.groupBy("doc_id", "bit").agg(F.sum("s").alias("v"))
-    packed = per_bit.groupBy("doc_id").agg(
-        F.sum(
-            F.when(
-                F.col("v") > 0, F.expr("shiftleft(cast(1 as bigint), bit)")
-            ).otherwise(F.lit(0).cast("bigint"))
-        ).alias("simhash")
-    )
-    return packed
-
-
-def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3, n_bits: int = 32) -> DataFrame:
-    """→ (doc_a, doc_b, hamming ≤ max_hamming) via 4-block prefix bucketing
-    (pigeonhole: any pair within Hamming 3 of a 32-bit hash agrees on at
-    least one of 4 disjoint 8-bit blocks → join per block, then verify).
-
-    Scale note: bucket population is n / 2^block_bits and the join is
-    bucket-quadratic — at corpus scale pass ``n_bits=64`` (16-bit
-    blocks, 65k buckets) so the candidate fan-out stays linear-ish; the
-    32-bit default matches the small-sf oracle fixtures.
-    """
-    s = simhash(docs, n_bits)
-    # the block self-join reads this frame on BOTH sides; without a
-    # materialization barrier each side re-runs the whole
-    # token-explode→bit-sum simhash DAG (measured 2× the fingerprint
-    # cost at 50k docs). (doc_id, simhash) is two longs per doc —
-    # persist + eager fill, LRU-evictable, same discipline as
-    # minhash_verified_pairs' candidate list
-    s = s.persist()
-    s.count()
-    block_bits = n_bits // 4
-    mask = (1 << block_bits) - 1
-    blocks = []
-    for blk in range(4):
-        key = F.shiftright(F.col("simhash"), blk * block_bits).bitwiseAND(F.lit(mask))
-        blocks.append(s.select("doc_id", "simhash", F.lit(blk).alias("blk"), key.alias("key")))
-    b = blocks[0]
-    for x in blocks[1:]:
-        b = b.unionByName(x)
-    l, r = b.alias("l"), b.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.blk") == F.col("r.blk"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))).alias("hamming"),
-        )
-        # filter BEFORE distinct: a pair agreeing on k blocks is emitted
-        # k times, so the dedup shuffle must only carry the pairs that
-        # SURVIVE the hamming cut (≈ the true near-dup count), not the
-        # full candidate fan-out (bucket-quadratic: ~20M rows at 50k
-        # docs with 8-bit blocks — measured 17 s of the 21 s total)
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-    return cand
 
 
 def cosine_expr(a: Column, b: Column) -> Column:

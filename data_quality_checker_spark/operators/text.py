@@ -11,8 +11,8 @@ codegen end to end, no Python on executors — so each one is a single
 parallel scan with partial aggregation where needed. Each has an exact
 ANSI-SQL oracle in ``queries.py`` (DuckDB cross-check).
 
-Cross-engine-portable hash primitive (used by fingerprints and the
-similarity family in simdedup.py):
+Cross-engine-portable hash primitive (used by fingerprints and the ANN
+index sample):
 
     H(s) = first 15 hex digits of md5(s), as a 60-bit non-negative bigint
 
@@ -131,40 +131,42 @@ def langid_heuristic(docs: DataFrame, min_ratio: float = 0.04) -> DataFrame:
 
 def spread_small_scan(df: DataFrame) -> DataFrame:
     """Round-robin respread before a CPU-heavy map stage — only when the
-    input is small enough that the shuffle is trivially cheap.
+    input is small enough that the shuffle is trivially cheap: its
+    estimated size is under cores × 128 MB (the scan-split size), or
+    Spark has no size estimate at all (an RDD-backed frame built on the
+    driver, e.g. ``createDataFrame``).
 
-    Two triggers:
-    * fewer scan partitions than cores (a small single-file input), and
-    * estimated input size under cores × 128 MB (the scan-split size).
-
-    The second trigger exists because the partition COUNT lies on
-    coarse-row-grouped parquet: Spark plans byte-range splits (e.g. 32
-    ~10 MB splits over a 311 MB file) but parquet rows go to the split
-    holding each ROW GROUP's midpoint, so a 5-row-group file feeds rows
-    to only 5 of the 32 tasks — `getNumPartitions()` reports 32 and the
-    old count-only heuristic skipped the respread, serializing a 250M-
-    shingle md5 stage onto 5 cores at the sf10 sweep (measured 141 s →
-    ~20 s respread). Below the size bound the repartition moves less
-    than one scan split per core — noise next to the map stage it
-    parallelizes; above it a sanely-ingested corpus (byte-bounded row
-    groups — the layout contract tools/gen_scale_tables and
-    corpus/generator now enforce) already has ≥ cores data-bearing
+    The trigger is the size, not the partition COUNT, for two reasons.
+    The count lies on coarse-row-grouped parquet: Spark plans byte-range
+    splits (e.g. 32 ~10 MB splits over a 311 MB file) but parquet rows go
+    to the split holding each ROW GROUP's midpoint, so a 5-row-group file
+    feeds rows to only 5 of the 32 tasks — the count reports 32, and a
+    count-only heuristic serialized a 250M-shingle md5 stage onto 5 cores
+    at the sf10 sweep (measured 141 s → ~20 s respread). And asking an
+    adaptive plan for its count (``df.rdd.getNumPartitions()``) runs the
+    shuffle stages below it while the caller is only building its plan
+    (2 Spark jobs for a semi join). Below the size bound the repartition
+    moves less than one scan split per core — noise next to the map
+    stage it parallelizes; above it a sanely-ingested corpus
+    (byte-bounded row groups — the layout contract tools/gen_scale_tables
+    and corpus/generator enforce) already has ≥ cores data-bearing
     splits, and no shuffle is added at real corpus scale.
 
     A frame already respread (its optimized plan a round-robin
     repartition under any filters and projections, e.g. the output of
     this function feeding a composed operator) is returned unchanged: a
     second round-robin shuffle moves every row again for nothing."""
-    plan = df._jdf.queryExecution().optimizedPlan()
+    qe = df._jdf.queryExecution()
+    plan = qe.optimizedPlan()
     root = plan
     while root.nodeName() in ("Project", "Filter"):
         root = root.child()
     if root.nodeName() == "Repartition" and root.shuffle():
         return df
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    if int(str(plan.stats().sizeInBytes())) < par * 128 * 2**20:
+    size = int(str(plan.stats().sizeInBytes()))
+    no_estimate = qe.sparkSession().sessionState().conf().defaultSizeInBytes()
+    if size < par * 128 * 2**20 or size >= no_estimate:
         return df.repartition(par)
     return df
 

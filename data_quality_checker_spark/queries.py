@@ -895,7 +895,7 @@ def q_dedup_exact_docs(spark, sf_dir):
     return simdedup.exact_dedup(d)
 
 
-def _minhash_sql(n_hashes: int) -> str:
+def _minhash_sql() -> str:
     # coefficients shared verbatim with the Spark expression — see
     # simdedup.minhash_coeffs (full-range multipliers; small ones
     # degenerate, see the note above simdedup.MINHASH_PRIME)
@@ -906,7 +906,7 @@ def _minhash_sql(n_hashes: int) -> str:
             p=simdedup.MINHASH_PRIME,
             i=i,
         )
-        for i in range(n_hashes)
+        for i in range(simdedup.N_HASHES)
     )
     return f"""
     WITH sh AS (
@@ -937,7 +937,7 @@ def _band_sql() -> str:
 @register(
     "minhash_lsh_pairs",
     f"""
-    WITH sig AS ({_minhash_sql(simdedup.N_HASHES)}),
+    WITH sig AS ({_minhash_sql()}),
     bands AS ({_band_sql()})
     SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
     FROM bands l JOIN bands r
@@ -958,7 +958,7 @@ def _verified_pairs_ctes() -> str:
     # reference would re-run the 26M-row shingle scan + band self-join;
     # at 50k docs the re-inlined tree spilled >55 GB before the hints
     return f"""
-    sig AS MATERIALIZED ({_minhash_sql(simdedup.N_HASHES)}),
+    sig AS MATERIALIZED ({_minhash_sql()}),
     bands AS ({_band_sql()}),
     cand AS MATERIALIZED (
       SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
@@ -1041,42 +1041,6 @@ def q_neardup_clusters(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     pairs = simdedup.minhash_verified_pairs(d, k=8, threshold=0.5)
     return simdedup.neardup_components(pairs)
-
-
-@register(
-    "simhash_neardup_pairs",
-    r"""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok FROM documents
-    ), h AS (
-      SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks
-    ), bits AS (
-      SELECT doc_id, unnest(generate_series(0, 31)) AS bit, h FROM h
-    ), per_bit AS (
-      SELECT doc_id, bit, sum(((h >> bit) & 1) * 2 - 1) AS v
-      FROM bits GROUP BY doc_id, bit
-    ), sh AS (
-      SELECT doc_id,
-             CAST(sum(CASE WHEN v > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT)
-               AS simhash
-      FROM per_bit GROUP BY doc_id
-    ), blocks AS (
-      SELECT doc_id, simhash, blk, (simhash >> (blk * 8)) & 255 AS key
-      FROM sh, generate_series(0, 3) t(blk)
-    )
-    SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-           CAST(bit_count(xor(l.simhash, r.simhash)) AS BIGINT) AS hamming
-    FROM blocks l JOIN blocks r
-      ON l.blk = r.blk AND l.key = r.key AND l.doc_id < r.doc_id
-    WHERE bit_count(xor(l.simhash, r.simhash)) <= 3
-    """,
-)
-def q_simhash_neardup_pairs(spark, sf_dir):
-    """SimHash near-dup pairs via 4-block pigeonhole bucketing —
-    operators/simdedup.simhash_neardup_pairs."""
-    d = _t(spark, sf_dir, "documents")
-    out = simdedup.simhash_neardup_pairs(d, max_hamming=3, n_bits=32)
-    return out.withColumn("hamming", F.col("hamming").cast("bigint"))
 
 
 @register(
@@ -2016,9 +1980,8 @@ def q_multimodal_video_frames(spark, sf_dir):
 # registry is kept ≤50 — every registered query gets a FRESH verdict
 # every round. The 15-row overshoot was removed by (a) deleting the
 # doubly-covered redundancies (topk_orders ← top_unshipped_orders;
-# simhash_docs ← simhash_neardup_pairs; ngram_jaccard ←
-# minhash_verified_pairs' exact-verify stage; nation_rollup ←
-# regional_revenue; minhash_sigs ← minhash_lsh_pairs;
+# ngram_jaccard ← minhash_verified_pairs' exact-verify stage;
+# nation_rollup ← regional_revenue; minhash_sigs ← minhash_lsh_pairs;
 # quantiles_price ← quantiles_price_scalable, identical oracle;
 # clips_decisions ← clips_decisions_labels, same pipeline) and
 # (b) merging the single-row same-table scalar aggregates into four

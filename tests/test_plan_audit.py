@@ -18,6 +18,8 @@ this audit stays plan-only so it runs in seconds.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from data_quality_checker_spark import queries as registry
@@ -94,3 +96,29 @@ def test_orders_profile_degenerate_column_matches_oracle(spark, tmp_path, price)
     res = con.execute(registry._ORACLES["orders_profile"])
     want = [dict(zip([d[0] for d in res.description], r)) for r in res.fetchall()]
     assert [r.asDict() for r in got] == want
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["dedup_exact_docs", "minhash_lsh_pairs", "minhash_verified_pairs", "neardup_clusters"],
+)
+def test_text_row_matches_oracle(spark, name):
+    """Each text dedup registry row returns its DuckDB oracle's rows at
+    the correctness sf: same columns, same row count, and the same value
+    multiset under the correctness gate's normalization."""
+    duckdb = pytest.importorskip("duckdb")
+    from tools.check_correctness import rows_multiset
+
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), registry.FIXTURE_SF_BASE)
+    sdf = registry.queries()[name](spark, sf_dir)
+    got = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
+    )
+    res = con.execute(registry._ORACLES[name])
+    cols = [d[0] for d in res.description]
+    want = res.fetchall()
+    assert sorted(sdf.columns) == sorted(cols), name
+    assert len(got) == len(want), name
+    assert rows_multiset(sdf.columns, got) == rows_multiset(cols, want), name

@@ -220,17 +220,29 @@ def test_fingerprints_plan_partial_aggregates(spark):
 def test_shingles_respreads_once(spark, count_jobs):
     """A frame that ``spread_small_scan`` already respread is not
     respread again by a composed operator: ``shingles`` over it plans
-    exactly one round-robin exchange, and building it runs no Spark job
+    exactly one round-robin exchange. Building either runs no Spark job
     (asking an adaptive plan with an exchange for its partition count
-    runs that exchange's shuffle stage)."""
+    runs that exchange's shuffle stage), also over a shuffled semi join
+    — the verifier's candidate-doc frame in simdedup."""
     from data_quality_checker_spark.operators.text import shingles, spread_small_scan
 
     docs = spark.createDataFrame(
         [(i, f"document {i} with text long enough to shingle") for i in range(40)],
         "doc_id bigint, text string",
     ).coalesce(1)
-    respread = spread_small_scan(docs)
-    built = []
-    assert count_jobs(lambda: built.append(shingles(respread))) == 0
-    plan = _executed_plan(built[0])
-    assert plan.count("RoundRobinPartitioning") == 1, plan
+    ids = spark.createDataFrame([(i,) for i in range(0, 40, 3)], "doc_id bigint")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for name, df in (
+            ("scan", docs),
+            ("semi_join", docs.join(ids, "doc_id", "left_semi")),
+        ):
+            built = []
+            assert count_jobs(lambda: built.append(spread_small_scan(df))) == 0, name
+            assert count_jobs(lambda: built.append(shingles(built[0]))) == 0, name
+            plan = _executed_plan(built[1])
+            assert plan.count("RoundRobinPartitioning") == 1, (name, plan)
+    finally:
+        spark.conf.set(key, prev)

@@ -82,16 +82,6 @@ def test_ngram_jaccard_exact_value(spark):
     assert rows[0]["jaccard"] == pytest.approx(0.5)
 
 
-def test_simhash_similar_docs_close(spark):
-    a = "the quick brown fox jumps over the lazy dog"
-    d = _docs(spark, [(1, a), (2, a + " today"), (3, "entirely unrelated words appear")])
-    h = {r["doc_id"]: r["simhash"] for r in simdedup.simhash(d).collect()}
-    ham12 = bin(h[1] ^ h[2]).count("1")
-    ham13 = bin(h[1] ^ h[3]).count("1")
-    assert ham12 < ham13
-    assert all(0 <= v < (1 << 32) for v in h.values())
-
-
 def _emb(spark, rows):
     return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
 
@@ -294,6 +284,10 @@ def test_ngram_jaccard_for_pairs_matches_corpuswide(spark):
 
 
 def test_minhash_verified_pairs_end_to_end(spark):
+    """Two inputs. Among unrelated docs, an identical pair verifies at
+    jaccard 1.0. On a corpus with an exact-dup clique, every member pair
+    of the clique verifies at 1.0 (identical texts share every band
+    bucket), and docs shorter than k never pair."""
     d = _docs(
         spark,
         [(i, f"unique document number {i} with its own distinct words {i*7}") for i in range(20)]
@@ -303,33 +297,23 @@ def test_minhash_verified_pairs_end_to_end(spark):
            simdedup.minhash_verified_pairs(d, k=8, threshold=0.9).collect()]
     assert (100, 101, 1.0) in out
 
-
-def test_minhash_verified_pairs_collapsed_equivalence(spark):
-    """The exact-dedup-first variant must produce EXACTLY the direct
-    operator's pair set on a corpus with duplicate cliques (identical
-    text => identical signatures/buckets/jaccard)."""
     base = [
         (i, f"some shared template text with variant number {i} appended here")
         for i in range(12)
     ]
     clique = [(100 + j, "exactly the same duplicated document body!") for j in range(5)]
     short = [(200, "tiny"), (201, "tiny")]  # < k: never LSH-eligible
-    d = _docs(spark, base + clique + short)
-    direct = {
+    out = {
         (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in simdedup.minhash_verified_pairs(d, k=8, threshold=0.3).collect()
+        for r in simdedup.minhash_verified_pairs(
+            _docs(spark, base + clique + short), k=8, threshold=0.3
+        ).collect()
     }
-    collapsed = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in simdedup.minhash_verified_pairs_collapsed(d, k=8, threshold=0.3).collect()
-    }
-    assert direct == collapsed
-    # the clique is fully connected at jaccard 1.0
     for x in range(100, 105):
         for y in range(x + 1, 105):
-            assert (x, y, 1.0) in collapsed
-    # short docs never pair
-    assert not any(a >= 200 or b >= 200 for a, b, _ in collapsed)
+            assert (x, y, 1.0) in out
+    assert not any(a >= 200 or b >= 200 for a, b, _ in out)
+    assert all(j >= 0.3 for _, _, j in out)
 
 
 # ---------------------------------------------------------------------------
